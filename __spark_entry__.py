@@ -48,10 +48,15 @@ def entry(spark: SparkSession) -> DataFrame:
 # demotion, each followed by a full-registry re-sweep: r14 set the AQE
 # coalesce floor to 64k (session.py; 441/441 re-swept) and reused
 # captured schemas in sink re-reads; r15 made per-query filtered
-# staged chains checkpoint eagerly (anti-convoy; emitted plans
-# byte-identical, family re-verified at sf0.01 + sf0.1) and added
-# one-time schema-drift guards.  Results are partition-count- and
-# timing-invariant by the repo's total-order/export discipline.
+# staged chains checkpoint eagerly (anti-convoy; plans identical
+# modulo RDD/plan-id instance counters (see plans/r15), family
+# re-verified at sf0.01 + sf0.1) and added
+# one-time schema-drift guards.  Every bounded stream run then moved
+# onto streaming/runners.run_bounded (one lifecycle: 4 state
+# partitions, state released after each run; plans identical modulo
+# instance counters, touched ids re-checked at sf0.001 + sf0.01).
+# Results are partition-count- and timing-invariant by the repo's
+# total-order/export discipline.
 #
 # Queries whose code
 # was rewritten after their green row are deliberately NOT listed —

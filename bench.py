@@ -55,10 +55,8 @@ def _detail_path(mode: str | None) -> str:
     every instrument's last record side by side.  Full-suite runs at a
     non-default core count get their own file too (VERDICT r14 #7: the
     driver's 8-core scaling run clobbered the 32-core per-query
-    detail) — BENCH_DETAIL-c8.json next to BENCH_DETAIL.json."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS")
-    if mode is None and cpus and cpus != "32":
-        mode = f"c{cpus}"
+    detail) — main() passes mode "c8" for BENCH_DETAIL-c8.json next to
+    BENCH_DETAIL.json."""
     name = f"BENCH_DETAIL-{mode}.json" if mode else "BENCH_DETAIL.json"
     return os.path.join(HERE, name)
 
@@ -243,8 +241,6 @@ def warm_session(spark, sf_dir: str) -> None:
     # streaming machinery (MicroBatchExecution, state-store provider,
     # memory sink) into setup, where the round-3 warmup rationale says
     # one-time machinery belongs.
-    import tempfile as _tf
-
     from maxscale_cdc_spark.sources.cdc_datasource import (
         SOURCE_NAME as _CDC_DS,
         register as _reg_cdc_ds,
@@ -252,12 +248,16 @@ def warm_session(spark, sf_dir: str) -> None:
     from maxscale_cdc_spark.sources.manifest_sink_ds import (
         register as _reg_sink_ds,
     )
-    from maxscale_cdc_spark.streaming.runners import run_to_memory as _rtm
+    from maxscale_cdc_spark.streaming.runners import (
+        run_bounded as _run_bounded,
+        run_to_memory as _rtm,
+    )
+    from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
 
     _reg_sink_ds(spark)
     _reg_cdc_ds(spark)
     _n = spark.sparkContext.defaultParallelism
-    _wdir = _tf.mkdtemp(prefix="bench_warm_pyds_sink_")
+    _wdir = _mkdtemp(prefix="bench_warm_pyds_sink_")
     (
         spark.range(_n)
         .repartition(_n)
@@ -266,7 +266,7 @@ def warm_session(spark, sf_dir: str) -> None:
         .mode("append")
         .save()
     )
-    _sdir = _tf.mkdtemp(prefix="bench_warm_pyds_src_")
+    _sdir = _mkdtemp(prefix="bench_warm_pyds_src_")
     with open(os.path.join(_sdir, "w.txt"), "w") as _fh:
         for _i in (1, 2):
             _fh.write(
@@ -287,26 +287,11 @@ def warm_session(spark, sf_dir: str) -> None:
     # runner that the batch write above does not start (measured:
     # str_pyds_stream_writer first-run 8.7 s vs a 4.5 s warm floor
     # with only the batch-write warmup).
-    _wdir2 = _tf.mkdtemp(prefix="bench_warm_pyds_ssink_")
-    _ckpt2 = _tf.mkdtemp(prefix="bench_warm_pyds_ckpt_")
-    _q = (
-        spark.readStream.format(_CDC_DS)
-        .option("path", _sdir)
-        .option("database", "warm")
-        .option("table", "warm")
-        .load()
-        .writeStream.format("manifest_parquet")
-        .option("path", _wdir2)
-        .option("checkpointLocation", _ckpt2)
-        .trigger(availableNow=True)
-        .start()
+    _run_bounded(
+        _warm_stream.writeStream.format("manifest_parquet").option(
+            "path", _mkdtemp(prefix="bench_warm_pyds_ssink_")
+        )
     )
-    _q.awaitTermination()
-    from maxscale_cdc_spark.streaming.runners import (
-        _release_stream_state as _rss,
-    )
-
-    _rss(spark)
 
 
 def main() -> None:
@@ -388,7 +373,12 @@ def main() -> None:
         "cold": cold,
         "n_queries": len(timings),
     }
-    detail_file = _detail_path("subset" if only else None)
+    # the core count get_spark() runs on: SPARK_GRAFT_CPUS, else local[*]
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or "*"
+    n_cpus = os.cpu_count() if cpus == "*" else int(cpus)
+    detail_file = _detail_path(
+        "subset" if only else (None if n_cpus == 32 else f"c{n_cpus}")
+    )
     with open(detail_file, "w") as f:
         json.dump(detail, f, indent=1, sort_keys=True)
 

@@ -295,21 +295,17 @@ def src_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def snk_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Append sink: stream → partitioned parquet files with a checkpoint
     (restart-safe, the durable event log), then read the files back."""
-    from maxscale_cdc_spark.streaming.runners import read_stream, stage_as_stream
+    from maxscale_cdc_spark.streaming.runners import (
+        read_stream,
+        run_bounded,
+        stage_as_stream,
+    )
 
     staged = stage_as_stream(table(spark, sf_dir, "events"), cache_key=f"events:{sf_dir}")
     stream = read_stream(spark, staged)
-    out_dir = _mkdtemp(prefix="snk_append_")
-    ckpt = os.path.join(out_dir, "_ckpt")
-    q = (
-        stream.writeStream.format("parquet")
-        .option("path", os.path.join(out_dir, "data"))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    back = spark.read.parquet(os.path.join(out_dir, "data"))
+    out_dir = os.path.join(_mkdtemp(prefix="snk_append_"), "data")
+    run_bounded(stream.writeStream.format("parquet").option("path", out_dir))
+    back = spark.read.parquet(out_dir)
     return back.groupBy("event_type").agg(F.count("*").alias("n"))
 
 
@@ -371,7 +367,11 @@ def snk_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import Window as W
 
-    from maxscale_cdc_spark.streaming.runners import read_stream, stage_as_stream
+    from maxscale_cdc_spark.streaming.runners import (
+        read_stream,
+        run_bounded,
+        stage_as_stream,
+    )
 
     staged = stage_as_stream(table(spark, sf_dir, "events"), n_files=4, cache_key=f"events:{sf_dir}")
     stream = read_stream(spark, staged, max_files_per_trigger=2)
@@ -411,15 +411,7 @@ def snk_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         for b in touched:
             gen_of[b] = gen_dir
 
-    ckpt = _mkdtemp(prefix="ckpt_")
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(merge)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_bounded(stream.writeStream.outputMode("append").foreachBatch(merge))
 
     if not gen_of:
         return spark.createDataFrame([], "pk bigint, last_seq bigint, last_value double")
@@ -1700,10 +1692,7 @@ def str_avro_tail_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     and resumes the recovered window state (see block comment)."""
     import hashlib
 
-    from maxscale_cdc_spark.streaming.runners import (
-        _few_state_partitions,
-        _release_stream_state,
-    )
+    from maxscale_cdc_spark.streaming.runners import run_bounded
 
     env = cdc_view(spark, sf_dir).select(
         "sequence",
@@ -1800,19 +1789,11 @@ def str_avro_tail_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("long").alias("n"),
             F.sum("value_cents").cast("long").alias("sum_value_cents"),
         )
-        with _few_state_partitions(spark):
-            q = (
-                agg.writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            prog = list(q.recentProgress)
-        _release_stream_state(spark)
-        return prog
+        q = run_bounded(
+            agg.writeStream.outputMode("append").format("parquet").option("path", out),
+            ckpt,
+        )
+        return q.recentProgress
 
     land(env.filter(F.col("ts_unix") <= mid), "h1")
     run_once()

@@ -13,7 +13,32 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_heap(mem_total_kib: int) -> tuple[str, str]:
+    """(spark.driver.memory, -Xms option) for a host with `mem_total_kib`
+    of RAM (/proc/meminfo MemTotal): two thirds of RAM, capped at 16g.
+    -Xms is pinned to the heap only where 8 GiB still stay for the OS
+    and the Python workers; elsewhere the heap starts at 2g, because a
+    pinned heap the host cannot commit stops the JVM at launch (a
+    15 GiB host without swap cannot start with -Xms16g)."""
+    total_gib = mem_total_kib / 2**20
+    heap = max(1, min(16, int(total_gib * 2 / 3)))
+    xms = heap if total_gib - heap >= 8 else min(heap, 2)
+    return f"{heap}g", f"-Xms{xms}g"
+
+
+def _host_mem_kib() -> int:
+    try:
+        with open("/proc/meminfo") as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1])
+    except OSError:
+        pass
+    return 64 * 2**20  # unknown host: size as a large one
+
+
 def get_spark(app_name: str = "maxscale-cdc-spark") -> SparkSession:
+    heap, xms = driver_heap(_host_mem_kib())
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     shuffle = os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32")
     builder = (
@@ -47,16 +72,17 @@ def get_spark(app_name: str = "maxscale-cdc-spark") -> SparkSession:
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", heap))
         # Pre-size the heap: in local mode the driver JVM IS the
         # cluster, and letting the heap grow from the JDK's small
         # default -Xms means the first memory-heavy query pays a
         # cascade of full GCs while the heap expands (measured: the
         # same self-join query 11-131 s cold vs 6.6 s warm).  -Xms at
-        # -Xmx removes heap-growth GCs entirely.
+        # -Xmx removes heap-growth GCs entirely (see driver_heap for
+        # where the host allows it).
         .config(
             "spark.driver.extraJavaOptions",
-            os.environ.get("SPARK_DRIVER_JAVA_OPTS", "-Xms16g"),
+            os.environ.get("SPARK_DRIVER_JAVA_OPTS", xms),
         )
     )
     # A/B instrument + ops escape hatch: `SPARK_EXTRA_CONF="k=v;k2=v2"`

@@ -836,6 +836,18 @@ _EMPTY_UPSERT_SCHEMA = (
 )
 
 
+def _live_upsert_state(sink: ManifestedUpsertSink) -> DataFrame:
+    """The sink's served latest state in the upsert oracle's shape:
+    keys whose last image is a delete are dropped; empty (typed) when
+    nothing was ever merged."""
+    state = sink.state()
+    if state is None:
+        return sink.spark.createDataFrame([], _EMPTY_UPSERT_SCHEMA)
+    return state.filter(F.col("last_dml") != "delete").select(
+        "pk", "last_seq", "last_value", "last_ts_unix"
+    )
+
+
 @register(
     "str_cdc_upsert_e2e",
     # Same materialized-state semantics as str_cdc_apply / snk_upsert:
@@ -869,10 +881,7 @@ def str_cdc_upsert_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     already reduced the stream to per-key state, so MERGE input is
     |changed keys| rows, not |events| — at 100 TB that difference is
     the sink's survival."""
-    from maxscale_cdc_spark.streaming.runners import (
-        _few_state_partitions,
-        _release_stream_state,
-    )
+    from maxscale_cdc_spark.streaming.runners import run_bounded
     from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
 
     staged = stage_as_stream(
@@ -882,24 +891,8 @@ def str_cdc_upsert_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = _cdc_update_agg(stream)
 
     sink = ManifestedUpsertSink(spark, _mkdtemp(prefix="str_upsert_tgt_"))
-    ckpt = _mkdtemp(prefix="ckpt_")
-    with _few_state_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("update")
-            .foreachBatch(sink.merge)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _release_stream_state(spark)
-
-    state = sink.state()
-    if state is None:
-        return spark.createDataFrame([], _EMPTY_UPSERT_SCHEMA)
-    return state.filter(F.col("last_dml") != "delete").select(
-        "pk", "last_seq", "last_value", "last_ts_unix"
-    )
+    run_bounded(agg.writeStream.outputMode("update").foreachBatch(sink.merge))
+    return _live_upsert_state(sink)
 
 
 @register("snk_upsert_compact", _UPSERT_STATE_ORACLE)
@@ -913,10 +906,7 @@ def snk_upsert_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     loud check below certifies it actually compacted.  At 100 TB this
     is the maintenance job that keeps merge-on-read scan cost O(state)
     instead of O(epochs)."""
-    from maxscale_cdc_spark.streaming.runners import (
-        _few_state_partitions,
-        _release_stream_state,
-    )
+    from maxscale_cdc_spark.streaming.runners import run_bounded
     from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
 
     staged = stage_as_stream(
@@ -925,17 +915,7 @@ def snk_upsert_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = read_stream(spark, staged, max_files_per_trigger=2)
     agg = _cdc_update_agg(stream)
     sink = ManifestedUpsertSink(spark, _mkdtemp(prefix="snk_compact_tgt_"))
-    ckpt = _mkdtemp(prefix="ckpt_")
-    with _few_state_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("update")
-            .foreachBatch(sink.merge)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _release_stream_state(spark)
+    run_bounded(agg.writeStream.outputMode("update").foreachBatch(sink.merge))
 
     orphaned = sink.compact()
     live = set(sink.gen_of.values())
@@ -944,12 +924,7 @@ def snk_upsert_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"compaction left {len(live)} live generations "
             f"(orphaned={orphaned})"
         )
-    state = sink.state()
-    if state is None:
-        return spark.createDataFrame([], _EMPTY_UPSERT_SCHEMA)
-    return state.filter(F.col("last_dml") != "delete").select(
-        "pk", "last_seq", "last_value", "last_ts_unix"
-    )
+    return _live_upsert_state(sink)
 
 
 _SCD2_STREAM_ORACLE = f"""
@@ -1156,18 +1131,12 @@ class Scd2HistorySink:
 
 def _run_scd2_stream(spark: SparkSession, src: str, sink: Scd2HistorySink,
                      ckpt: str) -> None:
-    from maxscale_cdc_spark.streaming.runners import _few_state_partitions
+    from maxscale_cdc_spark.streaming.runners import run_bounded
 
     stream = read_stream(spark, src, max_files_per_trigger=1)
-    with _few_state_partitions(spark):
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(sink.merge)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_bounded(
+        stream.writeStream.outputMode("append").foreachBatch(sink.merge), ckpt
+    )
 
 
 @register("str_cdc_scd2_stream", _SCD2_STREAM_ORACLE)
@@ -1180,10 +1149,7 @@ def str_cdc_scd2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     order (stage_as_stream_sequenced, maxFilesPerTrigger=1); the
     oracle is the full batch SCD2 over the whole log, so streaming
     maintenance must equal it bit-for-bit."""
-    from maxscale_cdc_spark.streaming.runners import (
-        _release_stream_state,
-        stage_as_stream_sequenced,
-    )
+    from maxscale_cdc_spark.streaming.runners import stage_as_stream_sequenced
     from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
 
     ev = table(spark, sf_dir, "events")
@@ -1192,7 +1158,6 @@ def str_cdc_scd2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sink = Scd2HistorySink(spark, _mkdtemp(prefix="scd2_hist_"))
     _run_scd2_stream(spark, staged, sink, _mkdtemp(prefix="scd2_ckpt_"))
-    _release_stream_state(spark)
     return sink.history()
 
 
@@ -1208,10 +1173,7 @@ def snk_scd2_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     history bit-exactly.  The commit-log-compaction role every
     merge-on-read table format runs; companion to snk_upsert_compact
     (the open-state half)."""
-    from maxscale_cdc_spark.streaming.runners import (
-        _release_stream_state,
-        stage_as_stream_sequenced,
-    )
+    from maxscale_cdc_spark.streaming.runners import stage_as_stream_sequenced
     from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
 
     ev = table(spark, sf_dir, "events")
@@ -1230,7 +1192,6 @@ def snk_scd2_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise AssertionError((before, after))
     if not (before < 2 or after < before):  # contract invariant; survives python -O
         raise AssertionError((before, after))
-    _release_stream_state(spark)
     return sink.history()
 
 
@@ -1247,10 +1208,6 @@ def str_cdc_scd2_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     ACROSS the process boundary (an open row installed before the
     crash is closed by the first post-restart image).  Reference
     contract: client.go:166-181 Stop(), client_test.go:169-266."""
-    from maxscale_cdc_spark.streaming.runners import (
-        _release_stream_state,
-        stage_as_stream_sequenced,
-    )
     from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
 
     ev = table(spark, sf_dir, "events")
@@ -1290,7 +1247,6 @@ def str_cdc_scd2_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     if sink2.open_sink.gen_of != committed:
         raise RuntimeError("open-sink manifest recovery diverged")
     _run_scd2_stream(spark, src, sink2, ckpt)
-    _release_stream_state(spark)
     return sink2.history()
 
 
@@ -1311,10 +1267,7 @@ def str_cdc_upsert_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     recovered manifest — must equal the batch latest-state oracle over
     the full corpus.  Reference contract: client.go:166-181 Stop(),
     client_test.go:169-266 reconnect-and-continue."""
-    from maxscale_cdc_spark.streaming.runners import (
-        _few_state_partitions,
-        _release_stream_state,
-    )
+    from maxscale_cdc_spark.streaming.runners import run_bounded
     from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
 
     ev = table(spark, sf_dir, "events")
@@ -1329,15 +1282,9 @@ def str_cdc_upsert_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     def run_once(sink: ManifestedUpsertSink) -> None:
         stream = read_stream(spark, src, max_files_per_trigger=2)
         agg = _cdc_update_agg(stream)
-        with _few_state_partitions(spark):
-            q = (
-                agg.writeStream.outputMode("update")
-                .foreachBatch(sink.merge)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        run_bounded(
+            agg.writeStream.outputMode("update").foreachBatch(sink.merge), ckpt
+        )
 
     # phase 1: even half lands, first sink object consumes it and stops
     halves[0].coalesce(2).write.mode("append").parquet(src)
@@ -1356,14 +1303,7 @@ def str_cdc_upsert_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{sink2.gen_of} != {committed}"
         )
     run_once(sink2)
-    _release_stream_state(spark)
-
-    state = sink2.state()
-    if state is None:
-        return spark.createDataFrame([], _EMPTY_UPSERT_SCHEMA)
-    return state.filter(F.col("last_dml") != "delete").select(
-        "pk", "last_seq", "last_value", "last_ts_unix"
-    )
+    return _live_upsert_state(sink2)
 
 
 @register(
@@ -1862,10 +1802,7 @@ def str_restart_continuation(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-corpus aggregate from recovered state + new files."""
     import uuid as _uuid
 
-    from maxscale_cdc_spark.streaming.runners import (
-        _few_state_partitions,
-        _release_stream_state,
-    )
+    from maxscale_cdc_spark.streaming.runners import run_bounded
     from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
 
     ev = table(spark, sf_dir, "events")
@@ -1884,16 +1821,10 @@ def str_restart_continuation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("sum_value_cents"),
         )
-        with _few_state_partitions(spark):
-            q = (
-                agg.writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        run_bounded(
+            agg.writeStream.outputMode("complete").format("memory").queryName(name),
+            ckpt,
+        )
 
     n1 = "snk_" + _uuid.uuid4().hex[:12]
     n2 = "snk_" + _uuid.uuid4().hex[:12]
@@ -1907,7 +1838,6 @@ def str_restart_continuation(spark: SparkSession, sf_dir: str) -> DataFrame:
     run_once(n2)
     out = spark.table(n2).localCheckpoint(eager=True)
     spark.catalog.dropTempView(n2)
-    _release_stream_state(spark)
     return out
 
 
@@ -2248,10 +2178,7 @@ def str_cdc_bootstrap_splice(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot bootstrap + streaming tail into one MERGE sink; final
     state must equal the whole-log batch latest-state (see block
     comment)."""
-    from maxscale_cdc_spark.streaming.runners import (
-        _few_state_partitions,
-        _release_stream_state,
-    )
+    from maxscale_cdc_spark.streaming.runners import run_bounded
     from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
 
     ev = table(spark, sf_dir, "events")
@@ -2268,23 +2195,8 @@ def str_cdc_bootstrap_splice(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     stream = read_stream(spark, staged, max_files_per_trigger=2)
     agg = _cdc_update_agg(stream)
-    ckpt = _mkdtemp(prefix="ckpt_splice_")
-    with _few_state_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("update")
-            .foreachBatch(sink.merge)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _release_stream_state(spark)
-    state = sink.state()
-    if state is None:
-        return spark.createDataFrame([], _EMPTY_UPSERT_SCHEMA)
-    return state.filter(F.col("last_dml") != "delete").select(
-        "pk", "last_seq", "last_value", "last_ts_unix"
-    )
+    run_bounded(agg.writeStream.outputMode("update").foreachBatch(sink.merge))
+    return _live_upsert_state(sink)
 
 
 # ---------------------------------------------------------------------------
@@ -4364,8 +4276,7 @@ def str_trigger_file_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from maxscale_cdc_spark.streaming.runners import (
-        _few_state_partitions,
-        _release_stream_state,
+        run_bounded,
         stage_as_stream_sequenced,
     )
     from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
@@ -4378,7 +4289,6 @@ def str_trigger_file_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     stream = read_stream(spark, staged, max_files_per_trigger=1)
     out_dir = _mkdtemp(prefix="snk_ledger_")
-    ckpt = _mkdtemp(prefix="ckpt_")
 
     def ledger(df: DataFrame, epoch_id: int) -> None:
         (
@@ -4398,15 +4308,7 @@ def str_trigger_file_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(os.path.join(out_dir, f"batch={epoch_id}"))
         )
 
-    with _few_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(ledger)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _release_stream_state(spark)
+    run_bounded(stream.writeStream.foreachBatch(ledger))
     parts = sorted(os.listdir(out_dir))
     back = spark.read.parquet(*[os.path.join(out_dir, p) for p in parts])
     rows = back.orderBy("batch_id").collect()  # O(batches) ledger rows
@@ -4962,13 +4864,16 @@ def str_pyds_stream_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming two-phase-commit sink: injected commit failure at
     epoch 2, restart from checkpoint, exactly-once visibility proven
     through the epoch-manifest union (see block comment)."""
+    from pyspark.errors import StreamingQueryException
+
+    from maxscale_cdc_spark.session import quiet_expected_failure
     from maxscale_cdc_spark.sources.manifest_sink_ds import (
         read_committed_epochs,
         register as reg_sink,
     )
     from maxscale_cdc_spark.streaming.runners import (
-        _few_state_partitions,
         read_stream,
+        run_bounded,
         stage_as_stream_sequenced,
     )
     from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
@@ -4983,46 +4888,30 @@ def str_pyds_stream_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink_dir = _mkdtemp(prefix="pyds_stream_sink_")
     ckpt = _mkdtemp(prefix="ckpt_pyds_")
 
-    def run(fail_epoch: int | None) -> Exception | None:
-        stream = read_stream(spark, staged, max_files_per_trigger=1).select(
-            "event_id", "event_type", "value"
-        )
-        writer = (
-            stream.writeStream.format("manifest_parquet")
+    def writer():
+        return (
+            read_stream(spark, staged, max_files_per_trigger=1)
+            .select("event_id", "event_type", "value")
+            .writeStream.format("manifest_parquet")
             .option("path", sink_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
         )
-        if fail_epoch is not None:
-            writer = writer.option("fail_epoch", str(fail_epoch))
-        q = writer.start()
+
+    # attempt 1: epochs 0,1 commit; epoch 2 dies between data write and
+    # manifest publish (logs quieted: the abort is the fixture's
+    # expected outcome, not a failure to grep for)
+    with quiet_expected_failure(spark):
         try:
-            q.awaitTermination()
-            return None
-        except Exception as exc:
-            return exc
-        finally:
-            if q.isActive:
-                q.stop()
-
-    from maxscale_cdc_spark.session import quiet_expected_failure
-
-    with _few_state_partitions(spark):
-        # attempt 1: epochs 0,1 commit; epoch 2 dies between data
-        # write and manifest publish (logs quieted: the abort is the
-        # fixture's expected outcome, not a failure to grep for)
-        with quiet_expected_failure(spark):
-            err = run(fail_epoch=2)
-        if err is None:
+            run_bounded(writer().option("fail_epoch", "2"), ckpt)
+        except StreamingQueryException:
+            pass
+        else:
             raise RuntimeError("injected epoch-2 failure did not surface")
-        _, mans = read_committed_epochs(spark, sink_dir)
-        if [m["epoch"] for m in mans] != [0, 1]:
-            raise RuntimeError(f"partial visibility wrong: {mans}")
-        # attempt 2: restart from the same checkpoint, no fixture —
-        # epoch 2 is re-delivered and committed, then epoch 3
-        err = run(fail_epoch=None)
-        if err is not None:
-            raise err
+    _, mans = read_committed_epochs(spark, sink_dir)
+    if [m["epoch"] for m in mans] != [0, 1]:
+        raise RuntimeError(f"partial visibility wrong: {mans}")
+    # attempt 2: restart from the same checkpoint, no fixture — epoch 2
+    # is re-delivered and committed, then epoch 3
+    run_bounded(writer(), ckpt)
 
     back, mans = read_committed_epochs(spark, sink_dir)
     epochs = [m["epoch"] for m in mans]
@@ -5113,10 +5002,7 @@ def str_cdc_e2e_native(spark: SparkSession, sf_dir: str) -> DataFrame:
         CDCTransport,
         FakeMaxScaleServer,
     )
-    from maxscale_cdc_spark.streaming.runners import (
-        _few_state_partitions,
-        _release_stream_state,
-    )
+    from maxscale_cdc_spark.streaming.runners import run_bounded
     from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
 
     # -- 1. wire: OCF bytes over the live socket, re-blocked to bursts
@@ -5179,17 +5065,7 @@ def str_cdc_e2e_native(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max_by("ts_unix", "sequence").alias("last_ts_unix"),
     )
     sink = ManifestedUpsertSink(spark, _mkdtemp(prefix="e2e_upsert_tgt_"))
-    ckpt = _mkdtemp(prefix="ckpt_e2e_")
-    with _few_state_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("update")
-            .foreachBatch(sink.merge)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _release_stream_state(spark)
+    run_bounded(agg.writeStream.outputMode("update").foreachBatch(sink.merge))
 
     state = sink.state()
     if state is None:
@@ -5405,8 +5281,7 @@ def str_mor_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from maxscale_cdc_spark.streaming.runners import (
-        _few_state_partitions,
-        _release_stream_state,
+        run_bounded,
         stage_as_stream_sequenced,
     )
     from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
@@ -5454,17 +5329,7 @@ def str_mor_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(data_dir, f"epoch={epoch_id}")
         )
 
-    ckpt = _mkdtemp(prefix="ckpt_mor_")
-    with _few_state_partitions(spark):
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(append_epoch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _release_stream_state(spark)
+    run_bounded(stream.writeStream.outputMode("append").foreachBatch(append_epoch))
 
     # in-order delivery contract: ascending DISJOINT sequence ranges
     seen.sort()
@@ -5546,10 +5411,7 @@ def str_mor_stream_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from maxscale_cdc_spark.streaming.runners import (
-        _few_state_partitions,
-        _release_stream_state,
-    )
+    from maxscale_cdc_spark.streaming.runners import run_bounded
     from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
 
     ev = table(spark, sf_dir, "events")
@@ -5620,15 +5482,10 @@ def str_mor_stream_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value",
             F.unix_timestamp("ts").alias("ts_unix"),
         )
-        with _few_state_partitions(spark):
-            q = (
-                stream.writeStream.outputMode("append")
-                .foreachBatch(append_epoch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        run_bounded(
+            stream.writeStream.outputMode("append").foreachBatch(append_epoch),
+            ckpt,
+        )
 
     # phase 1: quarters 1,2 land; run; "kill" (only disk survives)
     land(0)
@@ -5640,7 +5497,6 @@ def str_mor_stream_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     land(2)
     land(3)
     run_once()
-    _release_stream_state(spark)
     run2 = sorted(e for e, _, _ in seen if e not in run1)
 
     # epoch continuity: run 2 continues strictly after run 1 (the
@@ -5883,10 +5739,7 @@ def str_cdc_e2e_native_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
         CDCTransport,
         FakeMaxScaleServer,
     )
-    from maxscale_cdc_spark.streaming.runners import (
-        _few_state_partitions,
-        _release_stream_state,
-    )
+    from maxscale_cdc_spark.streaming.runners import run_bounded
     from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
 
     # -- wire: one full drain (the router's spool keeps growing in
@@ -5978,16 +5831,7 @@ def str_cdc_e2e_native_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max_by("value_cents", "sequence").alias("last_value_cents"),
             F.max_by("ts_unix", "sequence").alias("last_ts_unix"),
         )
-        with _few_state_partitions(spark):
-            q = (
-                agg.writeStream.outputMode("update")
-                .foreachBatch(merge)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        _release_stream_state(spark)
+        run_bounded(agg.writeStream.outputMode("update").foreachBatch(merge), ckpt)
 
     # phase 1: first half lands, consumer runs, "process stops"
     r1 = land_pass(half1)
@@ -6073,9 +5917,8 @@ def str_delete_vector_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from maxscale_cdc_spark.operators.sources import dv_base
     from maxscale_cdc_spark.streaming.runners import (
-        _few_state_partitions,
-        _release_stream_state,
         read_stream,
+        run_bounded,
         stage_as_stream_sequenced,
     )
     from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
@@ -6108,17 +5951,9 @@ def str_delete_vector_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(os.path.join(dv_dir, f"epoch={epoch_id}"))
         )
 
-    ckpt = _mkdtemp(prefix="ckpt_str_dv_")
-    with _few_state_partitions(spark):
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(apply_requests)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _release_stream_state(spark)
+    run_bounded(
+        stream.writeStream.outputMode("append").foreachBatch(apply_requests)
+    )
     if len(seen) != 3:
         raise RuntimeError(f"expected 3 delete epochs, saw {seen}")
 
@@ -6196,8 +6031,7 @@ def str_mor_compact_midstream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from maxscale_cdc_spark.streaming.runners import (
-        _few_state_partitions,
-        _release_stream_state,
+        run_bounded,
         stage_as_stream_sequenced,
     )
     from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
@@ -6257,17 +6091,7 @@ def str_mor_compact_midstream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("ts_unix").alias("last_ts_unix"),
         ).write.mode("append").parquet(os.path.join(data_dir, f"epoch={epoch_id}"))
 
-    ckpt = _mkdtemp(prefix="ckpt_mor_cmp_")
-    with _few_state_partitions(spark):
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(_append)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _release_stream_state(spark)
+    run_bounded(stream.writeStream.outputMode("append").foreachBatch(_append))
     if len(seen) != 4 or folded != [0, 1]:
         raise RuntimeError(f"epoch/compaction schedule violated: {seen} {folded}")
     gone = not any(
@@ -6355,8 +6179,7 @@ def str_two_sink_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from maxscale_cdc_spark.streaming.runners import (
-        _few_state_partitions,
-        _release_stream_state,
+        run_bounded,
         stage_as_stream_sequenced,
     )
     from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
@@ -6400,17 +6223,7 @@ def str_two_sink_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         last_batch_path.append(os.path.join(log_dir, f"epoch={epoch_id}"))
 
-    ckpt = _mkdtemp(prefix="ckpt_fan_")
-    with _few_state_partitions(spark):
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(fanout)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _release_stream_state(spark)
+    run_bounded(stream.writeStream.outputMode("append").foreachBatch(fanout))
     if len(seen) != 4:
         raise RuntimeError(f"expected 4 epochs, saw {seen}")
 

@@ -20,6 +20,7 @@ from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
 import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 EVENTS_DDL = (
     "event_id bigint, ts timestamp, user_id bigint, event_type string, "
@@ -159,6 +160,37 @@ def _release_stream_state(spark: SparkSession) -> None:
         pass  # non-JVM-backed session or internals moved: harmless
 
 
+def run_bounded(
+    writer: DataStreamWriter, ckpt: str | None = None
+) -> StreamingQuery:
+    """Run a bounded replay of a stream to completion: the one lifecycle
+    every registered stream and sink query goes through.  The caller
+    builds `writer` with Spark's own API (output mode, sink or
+    foreachBatch); this owns the rest — a fresh checkpoint dir unless
+    `ckpt` is given (restart queries pass their shared one),
+    availableNow, few state partitions while the query runs, and on the
+    way out (also on failure) a stop of a still-active query and a
+    release of the state-store providers.  A failed query's exception
+    propagates.  Returns the terminated query (for recentProgress)."""
+    spark = writer._spark  # noqa: SLF001 — the writer's own session
+    if ckpt is None:
+        ckpt = _mkdtemp(prefix="ckpt_")
+    q = None
+    try:
+        with _few_state_partitions(spark):
+            q = (
+                writer.option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+    finally:
+        if q is not None and q.isActive:
+            q.stop()
+        _release_stream_state(spark)
+    return q
+
+
 def run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
     """Run a streaming DataFrame to completion into a memory sink; return
     the sink contents as a batch DataFrame.
@@ -166,25 +198,18 @@ def run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
     For COMPLETE/UPDATE-mode bounded aggregates only (the sink holds the
     full result; fine when the result is an aggregate, wrong for raw
     append output — use run_to_files for that).  The sink's temp view is
-    dropped and stream state released before returning: the returned
-    DataFrame is an eager localCheckpoint, so it owns its data and the
-    session carries nothing over to the next query."""
+    dropped before returning: the returned DataFrame is an eager
+    localCheckpoint, so it owns its data and the session carries nothing
+    over to the next query."""
     spark = stream_df.sparkSession
     name = "snk_" + uuid.uuid4().hex[:12]
-    ckpt = _mkdtemp(prefix="ckpt_")
-    with _few_state_partitions(spark):
-        q = (
-            stream_df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_bounded(
+        stream_df.writeStream.outputMode(output_mode)
+        .format("memory")
+        .queryName(name)
+    )
     out = spark.table(name).localCheckpoint(eager=True)
     spark.catalog.dropTempView(name)
-    _release_stream_state(spark)
     return out
 
 
@@ -195,28 +220,18 @@ def run_to_files(
     parquet file sink and return a batch read of the output — the
     scale-safe path for queries whose streaming output is row-shaped
     (joins, dedup passes): rows go executor→disk, never through the
-    driver or a memory-sink table.  Releases stream state on the way
-    out, like run_to_memory.  With `progress_out`, the query's recent
-    StreamingQueryProgress dicts are appended to it (state-store row
-    evidence for the bench notes) — the default leaves behavior
-    unchanged."""
-    spark = stream_df.sparkSession
+    driver or a memory-sink table.  With `progress_out`, the query's
+    recent StreamingQueryProgress dicts are appended to it (state-store
+    row evidence for the bench notes)."""
     out_dir = _mkdtemp(prefix="snk_files_")
-    ckpt = _mkdtemp(prefix="ckpt_")
-    with _few_state_partitions(spark):
-        q = (
-            stream_df.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        if progress_out is not None:
-            progress_out.extend(q.recentProgress)
-    _release_stream_state(spark)
-    return spark.read.parquet(out_dir)
+    q = run_bounded(
+        stream_df.writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", out_dir)
+    )
+    if progress_out is not None:
+        progress_out.extend(q.recentProgress)
+    return stream_df.sparkSession.read.parquet(out_dir)
 
 
 def run_many_to_memory(

@@ -11,9 +11,11 @@ from pyspark.sql import functions as F
 
 from maxscale_cdc_spark.streaming.runners import (
     read_stream,
+    run_bounded,
     run_to_memory,
     stage_as_stream,
     stage_as_stream_ordered,
+    stage_as_stream_sequenced,
 )
 from maxscale_cdc_spark.tables import table
 
@@ -205,6 +207,55 @@ def test_update_mode_bucketed_merge_stop_resume(spark, sf_dir):
         .collect()
     }
     assert got == want
+
+
+def test_run_bounded_failure_then_resume(spark):
+    """run_bounded's lifecycle contract: a failing epoch's error
+    propagates out, the session's shuffle-partition setting comes back
+    and no stream is left running; a second run on the same checkpoint
+    commits exactly the epochs the first one did not."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    from maxscale_cdc_spark.session import quiet_expected_failure
+    from maxscale_cdc_spark.sources.manifest_sink_ds import (
+        read_committed_epochs,
+        register,
+    )
+    from maxscale_cdc_spark.tmputil import mkdtemp
+
+    register(spark)
+    staged = stage_as_stream_sequenced(
+        spark.range(40).withColumnRenamed("id", "seq"), "seq", n_batches=4
+    )
+    sink_dir = mkdtemp(prefix="runner_sink_")
+    ckpt = mkdtemp(prefix="runner_ckpt_")
+
+    def writer():
+        return (
+            read_stream(spark, staged, schema="seq bigint", max_files_per_trigger=1)
+            .writeStream.format("manifest_parquet")
+            .option("path", sink_dir)
+        )
+
+    key = "spark.sql.shuffle.partitions"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        with quiet_expected_failure(spark), pytest.raises(StreamingQueryException):
+            run_bounded(writer().option("fail_epoch", "2"), ckpt)
+        assert spark.conf.get(key) == "7"
+        assert not spark.streams.active
+    finally:
+        spark.conf.set(key, prior)
+    _, mans = read_committed_epochs(spark, sink_dir)
+    assert [m["epoch"] for m in mans] == [0, 1]
+
+    q = run_bounded(writer(), ckpt)
+    assert [p["batchId"] for p in q.recentProgress] == [2, 3]
+    back, mans = read_committed_epochs(spark, sink_dir)
+    assert [m["epoch"] for m in mans] == [0, 1, 2, 3]
+    assert sorted(r["seq"] for r in back.collect()) == list(range(40))
 
 
 def test_multi_table_registry_versions_side_by_side(spark, sf_dir):

@@ -31,46 +31,19 @@ def main() -> None:
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     os.environ.setdefault("SPARK_GRAFT_SF_DIR", sf_dir)
 
-    # UI must be on for the REST API; everything else matches bench.py.
-    os.environ["SPARK_PROFILE_UI"] = "1"
-    from maxscale_cdc_spark import session as sess_mod
+    # The bench session with the UI on (its REST API is read below).
+    os.environ["SPARK_EXTRA_CONF"] = ";".join(
+        kv
+        for kv in (
+            os.environ.get("SPARK_EXTRA_CONF", ""),
+            "spark.ui.enabled=true",
+            f"spark.ui.port={os.environ.get('SPARK_UI_PORT', '4040')}",
+        )
+        if kv
+    )
+    from maxscale_cdc_spark.session import get_spark
 
-    orig_get_spark = sess_mod.get_spark
-
-    def get_spark_ui(app_name: str = "maxscale-cdc-spark"):  # type: ignore[override]
-        from pyspark.sql import SparkSession
-
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        b = SparkSession.builder.master(f"local[{cpus}]").appName("profiler")
-        # replicate session.py confs, but UI on
-        for k, v in {
-            "spark.sql.shuffle.partitions": os.environ.get(
-                "SPARK_SHUFFLE_PARTITIONS", "32"
-            ),
-            "spark.sql.adaptive.enabled": "true",
-            "spark.sql.adaptive.coalescePartitions.enabled": "true",
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize": os.environ.get(
-                "SPARK_AQE_MIN_PARTITION_SIZE", "64k"
-            ),
-            "spark.sql.adaptive.skewJoin.enabled": "true",
-            "spark.sql.session.timeZone": "UTC",
-            "spark.sql.execution.arrow.pyspark.enabled": "true",
-            "spark.sql.legacy.parquet.nanosAsLong": "true",
-            "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-            "spark.ui.enabled": "true",
-            "spark.ui.port": os.environ.get("SPARK_UI_PORT", "4040"),
-            "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "16g"),
-            "spark.driver.extraJavaOptions": os.environ.get(
-                "SPARK_DRIVER_JAVA_OPTS", "-Xms16g"
-            ),
-        }.items():
-            b = b.config(k, v)
-        spark = b.getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
-        return spark
-
-    sess_mod.get_spark = get_spark_ui
-    spark = get_spark_ui("profiler")
+    spark = get_spark("profiler")
 
     import __spark_entry__ as entrymod
 

@@ -8,7 +8,6 @@ between "codegen compile" and "everything else" is measurable.
 
 Usage:
     TAIL_QUERIES=a,b,c python tools/tail_experiment.py
-    TAIL_QUERIES=@tail60 python tools/tail_experiment.py   # built-in list
 Env:
     SPARK_EXTRA_CONF="k=v;k2=v2"  — conf overrides to A/B
 """
