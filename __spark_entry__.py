@@ -55,6 +55,13 @@ def entry(spark: SparkSession) -> DataFrame:
 # onto streaming/runners.run_bounded (one lifecycle: 4 state
 # partitions, state released after each run; plans identical modulo
 # instance counters, touched ids re-checked at sf0.001 + sf0.01).
+# The sink and stream queries then moved onto streaming/ops.py's
+# shared change-log helpers (_cdc_log, _state_asof, the MoR writers and
+# reconcile, _same_rows; seven inner lineages now spell the DML mapping
+# as the oracles' CASE text instead of a value-identical F.when chain):
+# returned plans identical modulo instance counters and tmp paths by
+# `tools/capture_plans.py compare`, 25 touched ids re-checked at
+# sf0.001 + sf0.01 (snk_*/MoR also sf0.1).
 # Results are partition-count- and timing-invariant by the repo's
 # total-order/export discipline.
 #

@@ -59,8 +59,7 @@ def get_spark(app_name: str = "maxscale-cdc-spark") -> SparkSession:
         # genuinely tiny scalar stages fully coalesced while spreading
         # KB-per-row compute stages across cores.  Scale-adaptive: at
         # production volumes every partition exceeds any floor, so the
-        # knob is inert there (conf.py keeps the 128 MB advisory/1m
-        # profile); env-parameterised so the driver's lower-core bench
+        # knob is inert there; env-parameterised so a lower-core bench
         # run compares like with like.
         .config(
             "spark.sql.adaptive.coalescePartitions.minPartitionSize",

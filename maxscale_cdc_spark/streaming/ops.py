@@ -17,6 +17,8 @@ origin.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -426,24 +428,7 @@ def str_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     same plan runs update-mode into an upsert sink partitioned by pk."""
     staged = stage_as_stream(table(spark, sf_dir, "events"), cache_key=f"events:{sf_dir}")
     stream = read_stream(spark, staged)
-    cdc = stream.select(
-        F.col("event_id").alias("sequence"),
-        F.when(F.col("event_type").isin("signup", "purchase"), F.lit("insert"))
-        .when(F.col("event_type") == "view", F.lit("update_before"))
-        .when(F.col("event_type") == "click", F.lit("update_after"))
-        .otherwise(F.lit("delete"))
-        .alias("dml_type"),
-        F.col("user_id").alias("pk"),
-        F.col("value"),
-        F.unix_timestamp("ts").alias("ts_unix"),
-    )
-    agg = cdc.groupBy("pk").agg(
-        F.max("sequence").alias("last_seq"),
-        F.max_by("dml_type", "sequence").alias("last_dml"),
-        F.max_by("value", "sequence").alias("last_value"),
-        F.max_by("ts_unix", "sequence").alias("last_ts_unix"),
-    )
-    out = run_to_memory(agg, "complete")
+    out = run_to_memory(_latest_per_pk(_cdc_log(stream)), "complete")
     return out.filter(F.col("last_dml") != "delete").select(
         "pk", "last_seq", "last_value", "last_ts_unix"
     )
@@ -809,26 +794,61 @@ _UPSERT_STATE_ORACLE = f"""
     """
 
 
-def _cdc_update_agg(stream: DataFrame) -> DataFrame:
-    """events stream → update-mode per-pk latest-state aggregate (the
-    MERGE sink's input shape: one row per changed pk, full state)."""
-    cdc = stream.select(
+# ---------------------------------------------------------------------------
+# The change-log shape, written once.  Every sink and stream query in
+# this module reads the events table (or its replayed stream) as the
+# reference's one DMLEvent shape (event.go:167-212): `_cdc_log`
+# projects it, and the helpers below are the decisions built on that
+# shape — the latest state per key as of a sequence cut, the
+# merge-on-read (MoR) layout with its reconcile rule, and the
+# row-equality audit.  Queries compose these; none re-spells them.
+# ---------------------------------------------------------------------------
+
+
+def _cdc_log(df: DataFrame) -> DataFrame:
+    """events rows (batch or stream) → change-log rows `sequence,
+    dml_type, pk, value, ts_unix`; the DML mapping is
+    cdc._DML_CASE_SQL, the text every oracle interpolates."""
+    return df.select(
         F.col("event_id").alias("sequence"),
-        F.when(F.col("event_type").isin("signup", "purchase"), F.lit("insert"))
-        .when(F.col("event_type") == "view", F.lit("update_before"))
-        .when(F.col("event_type") == "click", F.lit("update_after"))
-        .otherwise(F.lit("delete"))
-        .alias("dml_type"),
+        F.expr(_DML_CASE_SQL).alias("dml_type"),
         F.col("user_id").alias("pk"),
-        F.col("value"),
+        "value",
         F.unix_timestamp("ts").alias("ts_unix"),
     )
+
+
+def _latest_per_pk(cdc: DataFrame) -> DataFrame:
+    """Change-log rows → one row per pk carrying its last image under
+    the sequence total order: `pk, last_seq, last_dml, last_value,
+    last_ts_unix` (the MERGE sink's input shape)."""
     return cdc.groupBy("pk").agg(
         F.max("sequence").alias("last_seq"),
         F.max_by("dml_type", "sequence").alias("last_dml"),
         F.max_by("value", "sequence").alias("last_value"),
         F.max_by("ts_unix", "sequence").alias("last_ts_unix"),
     )
+
+
+def _seq_cuts(cdc: DataFrame, n: int) -> list[tuple[int, int]]:
+    """`n` equal sequence ranges `(i*m//n, (i+1)*m//n]` covering
+    (0, m], m = max(sequence) — one scalar read."""
+    m = int(cdc.agg(F.max("sequence").alias("m")).collect()[0]["m"])
+    return [(i * m // n, (i + 1) * m // n) for i in range(n)]
+
+
+def _state_asof(cdc: DataFrame, lo: int, hi: int) -> DataFrame:
+    """The keys touched in (lo, hi] with their latest state as of `hi`
+    — what one merge of that sequence range hands the sink."""
+    seq = F.col("sequence")
+    touched = cdc.filter((seq > lo) & (seq <= hi)).select("pk").distinct()
+    return _latest_per_pk(cdc.filter(seq <= hi).join(touched, "pk"))
+
+
+def _cdc_update_agg(stream: DataFrame) -> DataFrame:
+    """events stream → update-mode per-pk latest-state aggregate (the
+    MERGE sink's input shape: one row per changed pk, full state)."""
+    return _latest_per_pk(_cdc_log(stream))
 
 
 _EMPTY_UPSERT_SCHEMA = (
@@ -846,6 +866,122 @@ def _live_upsert_state(sink: ManifestedUpsertSink) -> DataFrame:
     return state.filter(F.col("last_dml") != "delete").select(
         "pk", "last_seq", "last_value", "last_ts_unix"
     )
+
+
+# The MoR layout: `<root>/data/epoch=N` holds an epoch's live final
+# images, `<root>/deletes/epoch=N` the equality-delete file (every pk
+# the epoch touched).  The read reconciles: a data row (pk, epoch) is
+# alive iff no delete of that pk carries a LATER epoch — a same-epoch
+# delete supersedes only earlier copies (the Iceberg sequence-number
+# rule), and a pk whose final image is a CDC delete leaves a tombstone
+# with no data row.  One keyed aggregate over the tombstones + one
+# join; never a sort.
+
+
+def _final_image(df: DataFrame, *keys: str) -> DataFrame:
+    """The last row (highest sequence) per `keys`: a batch's final
+    image per pk, or per (pk, epoch) over an epoch-tagged log."""
+    w = W.partitionBy(*keys).orderBy(F.col("sequence").desc())
+    return (
+        df.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .drop("rn")
+    )
+
+
+def _live_images(images: DataFrame, *extra: str) -> DataFrame:
+    """Final images → served rows `pk, last_seq, last_value,
+    last_ts_unix` (+ `extra`): CDC deletes dropped."""
+    return images.filter(F.col("dml_type") != "delete").select(
+        "pk",
+        F.col("sequence").alias("last_seq"),
+        F.col("value").alias("last_value"),
+        F.col("ts_unix").alias("last_ts_unix"),
+        *extra,
+    )
+
+
+def _quarter_epochs(cdc: DataFrame) -> DataFrame:
+    """Tag change-log rows with MoR epoch 1..4 — the quarter of
+    (0, max(sequence)] they fall in, cut by a broadcast one-row table
+    of integer-div cut points (the `_seq_cuts(cdc, 4)` ranges)."""
+    cuts = cdc.agg(
+        F.expr("div(max(sequence) * 1, 4)").alias("m1"),
+        F.expr("div(max(sequence) * 2, 4)").alias("m2"),
+        F.expr("div(max(sequence) * 3, 4)").alias("m3"),
+    )
+    epoch = (
+        F.lit(1)
+        + (F.col("sequence") > F.col("m1")).cast("int")
+        + (F.col("sequence") > F.col("m2")).cast("int")
+        + (F.col("sequence") > F.col("m3")).cast("int")
+    )
+    return cdc.join(F.broadcast(cuts)).withColumn("epoch", epoch)
+
+
+def _mor_write_epoch(last: DataFrame, root: str, epoch_id: int) -> None:
+    """Write one epoch's MoR files from its final images.  Each epoch
+    dir is OVERWRITTEN, so a re-delivered epoch rewrites identical
+    content instead of doubling it: replay-idempotent by construction."""
+    last.select("pk").write.mode("overwrite").parquet(
+        os.path.join(root, "deletes", f"epoch={epoch_id}")
+    )
+    _live_images(last).write.mode("overwrite").parquet(
+        os.path.join(root, "data", f"epoch={epoch_id}")
+    )
+
+
+def _mor_ingest(root: str, seen: list[tuple[int, int, int]]):
+    """foreachBatch for a MoR stream: each non-empty micro-batch is one
+    epoch, written from its final image per pk; `seen` collects
+    (epoch, min_seq, max_seq) for the caller's delivery checks."""
+
+    def append_epoch(batch_df: DataFrame, epoch_id: int) -> None:
+        bounds = batch_df.agg(
+            F.min("sequence").alias("lo"), F.max("sequence").alias("hi")
+        ).collect()[0]
+        if bounds["lo"] is None:
+            return
+        seen.append((int(epoch_id), int(bounds["lo"]), int(bounds["hi"])))
+        _mor_write_epoch(_final_image(batch_df, "pk"), root, epoch_id)
+
+    return append_epoch
+
+
+def _mor_write_epochs(images: DataFrame, root: str) -> None:
+    """Write every epoch of an epoch-tagged final-image log at once
+    (one `partitionBy("epoch")` write per side)."""
+    for side, df in (
+        ("deletes", images.select("pk", "epoch")),
+        ("data", _live_images(images, "epoch")),
+    ):
+        df.repartition("epoch").write.mode("overwrite").partitionBy(
+            "epoch"
+        ).parquet(os.path.join(root, side))
+
+
+def _mor_read(spark: SparkSession, root: str) -> tuple[DataFrame, DataFrame]:
+    """(data, deletes) of the MoR tree, `epoch` from the dir names."""
+    return tuple(
+        spark.read.option("basePath", d).parquet(d)
+        for d in (os.path.join(root, "data"), os.path.join(root, "deletes"))
+    )
+
+
+def _mor_reconcile(data: DataFrame, dels: DataFrame) -> DataFrame:
+    """The MoR serving read: data rows no later-epoch delete hides."""
+    dmax = dels.groupBy("pk").agg(F.max("epoch").alias("dmax"))
+    return (
+        data.join(dmax, "pk", "left")
+        .filter(F.col("dmax").isNull() | (F.col("epoch") >= F.col("dmax")))
+        .select("pk", "last_seq", "last_value", "last_ts_unix")
+    )
+
+
+def _same_rows(a: DataFrame, b: DataFrame) -> bool:
+    """Multiset equality (positional columns) in ONE job: the symmetric
+    difference is empty."""
+    return a.exceptAll(b).unionAll(b.exceptAll(a)).count() == 0
 
 
 @register(
@@ -1208,6 +1344,7 @@ def str_cdc_scd2_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     ACROSS the process boundary (an open row installed before the
     crash is closed by the first post-restart image).  Reference
     contract: client.go:166-181 Stop(), client_test.go:169-266."""
+    from maxscale_cdc_spark.streaming.runners import land_ordered
     from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
 
     ev = table(spark, sf_dir, "events")
@@ -1216,33 +1353,16 @@ def str_cdc_scd2_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = _mkdtemp(prefix="scd2_restart_ckpt_")
     root = _mkdtemp(prefix="scd2_restart_hist_")
 
-    import os as _os
-    import shutil as _shutil
-
-    def land(half: DataFrame, idx: int) -> None:
-        # one sequence-ordered file per landing, mtime after the prior
-        # half so the file source keeps delivery order (batch staging
-        # is per-run here — a growing dir, not the cached replay set)
-        tmp = _mkdtemp(prefix="scd2_restart_part_")
-        half.orderBy("event_id").coalesce(1).write.mode("overwrite").parquet(tmp)
-        i = 0
-        for f in sorted(_os.listdir(tmp)):
-            if f.endswith(".parquet"):
-                dst = _os.path.join(src, f"part-{idx}-{i:05d}.parquet")
-                _shutil.copy(_os.path.join(tmp, f), dst)
-                _os.utime(dst, (1_000_000_000 + idx, 1_000_000_000 + idx))
-                i += 1
-        _shutil.rmtree(tmp)
-
     # phase 1: lower half lands; first sink object consumes it and dies
-    land(ev.filter(F.col("event_id") <= cut), 0)
+    # (staging is per-run here — a growing dir, not the cached replay set)
+    land_ordered(ev.filter(F.col("event_id") <= cut).orderBy("event_id"), src, 0)
     sink1 = Scd2HistorySink(spark, root)
     _run_scd2_stream(spark, src, sink1, ckpt)
     committed = dict(sink1.open_sink.gen_of)
     del sink1  # process death: only disk survives
 
     # phase 2: upper half lands AFTER the stop; a fresh sink recovers
-    land(ev.filter(F.col("event_id") > cut), 1)
+    land_ordered(ev.filter(F.col("event_id") > cut).orderBy("event_id"), src, 1)
     sink2 = Scd2HistorySink(spark, root)
     if sink2.open_sink.gen_of != committed:
         raise RuntimeError("open-sink manifest recovery diverged")
@@ -2692,39 +2812,10 @@ def snk_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     comment)."""
     from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
 
-    ev = table(spark, sf_dir, "events")
-    cdc = ev.select(
-        F.col("event_id").alias("sequence"),
-        F.when(F.col("event_type").isin("signup", "purchase"), F.lit("insert"))
-        .when(F.col("event_type") == "view", F.lit("update_before"))
-        .when(F.col("event_type") == "click", F.lit("update_after"))
-        .otherwise(F.lit("delete"))
-        .alias("dml_type"),
-        F.col("user_id").alias("pk"),
-        F.col("value"),
-        F.unix_timestamp("ts").alias("ts_unix"),
-    ).localCheckpoint(eager=False)
-    m = int(cdc.agg(F.max("sequence").alias("m")).collect()[0]["m"])
-    cuts = [(0, m // 3), (m // 3, (2 * m) // 3), ((2 * m) // 3, m)]
+    cdc = _cdc_log(table(spark, sf_dir, "events")).localCheckpoint(eager=False)
     sink = ManifestedUpsertSink(spark, _mkdtemp(prefix="snk_tt_"))
-    for k, (lo, hi) in enumerate(cuts):
-        touched = (
-            cdc.filter((F.col("sequence") > lo) & (F.col("sequence") <= hi))
-            .select("pk")
-            .distinct()
-        )
-        state = (
-            cdc.filter(F.col("sequence") <= hi)
-            .join(touched, "pk")
-            .groupBy("pk")
-            .agg(
-                F.max("sequence").alias("last_seq"),
-                F.max_by("dml_type", "sequence").alias("last_dml"),
-                F.max_by("value", "sequence").alias("last_value"),
-                F.max_by("ts_unix", "sequence").alias("last_ts_unix"),
-            )
-        )
-        sink.merge(state, epoch_id=k)
+    for k, (lo, hi) in enumerate(_seq_cuts(cdc, 3)):
+        sink.merge(_state_asof(cdc, lo, hi), epoch_id=k)
 
     def snapshot(seq: int, tag: int) -> DataFrame:
         return (
@@ -2810,35 +2901,10 @@ def snk_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     comment)."""
     from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
 
-    ev = table(spark, sf_dir, "events")
-    cdc = ev.select(
-        F.col("event_id").alias("sequence"),
-        F.expr(_DML_CASE_SQL).alias("dml_type"),
-        F.col("user_id").alias("pk"),
-        F.col("value"),
-        F.unix_timestamp("ts").alias("ts_unix"),
-    ).localCheckpoint(eager=False)
-    m = int(cdc.agg(F.max("sequence").alias("m")).collect()[0]["m"])
-    cuts = [(0, m // 3), (m // 3, (2 * m) // 3), ((2 * m) // 3, m)]
+    cdc = _cdc_log(table(spark, sf_dir, "events")).localCheckpoint(eager=False)
     sink = ManifestedUpsertSink(spark, _mkdtemp(prefix="snk_cdf_"))
-    for k, (lo, hi) in enumerate(cuts):
-        touched = (
-            cdc.filter((F.col("sequence") > lo) & (F.col("sequence") <= hi))
-            .select("pk")
-            .distinct()
-        )
-        state = (
-            cdc.filter(F.col("sequence") <= hi)
-            .join(touched, "pk")
-            .groupBy("pk")
-            .agg(
-                F.max("sequence").alias("last_seq"),
-                F.max_by("dml_type", "sequence").alias("last_dml"),
-                F.max_by("value", "sequence").alias("last_value"),
-                F.max_by("ts_unix", "sequence").alias("last_ts_unix"),
-            )
-        )
-        sink.merge(state, epoch_id=k)
+    for k, (lo, hi) in enumerate(_seq_cuts(cdc, 3)):
+        sink.merge(_state_asof(cdc, lo, hi), epoch_id=k)
 
     def alive_asof(seq: int) -> DataFrame:
         return (
@@ -2889,10 +2955,7 @@ def snk_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("after_value").alias("last_value"),
     )
     applied = kept.unionByName(added)
-    if (
-        applied.exceptAll(s2).count() != 0
-        or s2.exceptAll(applied).count() != 0
-    ):
+    if not _same_rows(applied, s2):
         raise RuntimeError("change feed applied to v1 did not reproduce v2")
     return feed
 
@@ -3163,46 +3226,16 @@ def snk_manifest_gc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge×3 → compact → GC the unreferenced generations → prove the
     surviving state byte-equal to the whole-log latest state (see
     block comment)."""
-    import os
     import shutil
 
     from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
 
-    ev = table(spark, sf_dir, "events")
-    cdc = ev.select(
-        F.col("event_id").alias("sequence"),
-        F.when(F.col("event_type").isin("signup", "purchase"), F.lit("insert"))
-        .when(F.col("event_type") == "view", F.lit("update_before"))
-        .when(F.col("event_type") == "click", F.lit("update_after"))
-        .otherwise(F.lit("delete"))
-        .alias("dml_type"),
-        F.col("user_id").alias("pk"),
-        F.col("value"),
-        F.unix_timestamp("ts").alias("ts_unix"),
-    ).localCheckpoint(eager=False)
-    m = int(cdc.agg(F.max("sequence").alias("m")).collect()[0]["m"])
-    cuts = [(0, m // 3), (m // 3, (2 * m) // 3), ((2 * m) // 3, m)]
+    cdc = _cdc_log(table(spark, sf_dir, "events")).localCheckpoint(eager=False)
     sink = ManifestedUpsertSink(
         spark, _mkdtemp(prefix="snk_gc_"), retain_manifests=1
     )
-    for k, (lo, hi) in enumerate(cuts):
-        touched = (
-            cdc.filter((F.col("sequence") > lo) & (F.col("sequence") <= hi))
-            .select("pk")
-            .distinct()
-        )
-        state = (
-            cdc.filter(F.col("sequence") <= hi)
-            .join(touched, "pk")
-            .groupBy("pk")
-            .agg(
-                F.max("sequence").alias("last_seq"),
-                F.max_by("dml_type", "sequence").alias("last_dml"),
-                F.max_by("value", "sequence").alias("last_value"),
-                F.max_by("ts_unix", "sequence").alias("last_ts_unix"),
-            )
-        )
-        sink.merge(state, epoch_id=k)
+    for k, (lo, hi) in enumerate(_seq_cuts(cdc, 3)):
+        sink.merge(_state_asof(cdc, lo, hi), epoch_id=k)
     gc_list = sink.compact()
     # the GC rule: collectible iff referenced by NO retained manifest
     referenced = set()
@@ -3854,52 +3887,20 @@ def snk_fenced_failover(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal the whole-log latest state (see block comment)."""
     from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
 
-    ev = table(spark, sf_dir, "events")
-    cdc = ev.select(
-        F.col("event_id").alias("sequence"),
-        F.when(F.col("event_type").isin("signup", "purchase"), F.lit("insert"))
-        .when(F.col("event_type") == "view", F.lit("update_before"))
-        .when(F.col("event_type") == "click", F.lit("update_after"))
-        .otherwise(F.lit("delete"))
-        .alias("dml_type"),
-        F.col("user_id").alias("pk"),
-        F.col("value"),
-        F.unix_timestamp("ts").alias("ts_unix"),
-    ).localCheckpoint(eager=False)
-    m = int(cdc.agg(F.max("sequence").alias("m")).collect()[0]["m"])
-    cuts = [(0, m // 3), (m // 3, (2 * m) // 3), ((2 * m) // 3, m)]
+    cdc = _cdc_log(table(spark, sf_dir, "events")).localCheckpoint(eager=False)
+    cuts = _seq_cuts(cdc, 3)
     root = _mkdtemp(prefix="snk_fence_")
 
-    def state_for(lo: int, hi: int) -> DataFrame:
-        touched = (
-            cdc.filter((F.col("sequence") > lo) & (F.col("sequence") <= hi))
-            .select("pk")
-            .distinct()
-        )
-        return (
-            cdc.filter(F.col("sequence") <= hi)
-            .join(touched, "pk")
-            .groupBy("pk")
-            .agg(
-                F.max("sequence").alias("last_seq"),
-                F.max_by("dml_type", "sequence").alias("last_dml"),
-                F.max_by("value", "sequence").alias("last_value"),
-                F.max_by("ts_unix", "sequence").alias("last_ts_unix"),
-            )
-        )
-
     writer_a = ManifestedUpsertSink(spark, root, fenced=True)
-    writer_a.merge(state_for(*cuts[0]), epoch_id=0)
+    writer_a.merge(_state_asof(cdc, *cuts[0]), epoch_id=0)
     # failover: B is promoted over the same root — fences A
     writer_b = ManifestedUpsertSink(spark, root, fenced=True)
     if not (writer_b.epoch == 2 and writer_a.epoch == 1):  # contract invariant; survives python -O
         raise AssertionError('writer_b.epoch == 2 and writer_a.epoch == 1')
-    writer_b.merge(state_for(*cuts[1]), epoch_id=1)
+    writer_b.merge(_state_asof(cdc, *cuts[1]), epoch_id=1)
     # the zombie wakes with a POISONED stale view and tries to publish
-    import os
-
     log_before = sorted(os.listdir(os.path.join(root, "_manifest")))
-    poison = state_for(*cuts[0]).withColumn(
+    poison = _state_asof(cdc, *cuts[0]).withColumn(
         "last_value", F.col("last_value") + F.lit(999.0)
     )
     n_fenced = 0
@@ -3911,7 +3912,7 @@ def snk_fenced_failover(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise AssertionError("zombie publish was NOT fenced")
     if not (sorted(os.listdir(os.path.join(root, "_manifest"))) == log_before):  # contract invariant; survives python -O
         raise AssertionError("zombie attempt mutated the manifest log")
-    writer_b.merge(state_for(*cuts[2]), epoch_id=3)
+    writer_b.merge(_state_asof(cdc, *cuts[2]), epoch_id=3)
     # disk is the only witness: a fresh recovery sink serves the reads
     recovered = ManifestedUpsertSink(spark, root)
     final = recovered.state()
@@ -4144,45 +4145,15 @@ def snk_vacuum_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     prove the surviving state equals the whole-log latest state (see
     block comment)."""
     import json
-    import os
     import shutil
     import time
 
     from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
 
-    ev = table(spark, sf_dir, "events")
-    cdc = ev.select(
-        F.col("event_id").alias("sequence"),
-        F.when(F.col("event_type").isin("signup", "purchase"), F.lit("insert"))
-        .when(F.col("event_type") == "view", F.lit("update_before"))
-        .when(F.col("event_type") == "click", F.lit("update_after"))
-        .otherwise(F.lit("delete"))
-        .alias("dml_type"),
-        F.col("user_id").alias("pk"),
-        F.col("value"),
-        F.unix_timestamp("ts").alias("ts_unix"),
-    ).localCheckpoint(eager=False)
-    m = int(cdc.agg(F.max("sequence").alias("m")).collect()[0]["m"])
-    cuts = [(0, m // 3), (m // 3, (2 * m) // 3), ((2 * m) // 3, m)]
+    cdc = _cdc_log(table(spark, sf_dir, "events")).localCheckpoint(eager=False)
     sink = ManifestedUpsertSink(spark, _mkdtemp(prefix="snk_vac_"))
-    for k, (lo, hi) in enumerate(cuts):
-        touched = (
-            cdc.filter((F.col("sequence") > lo) & (F.col("sequence") <= hi))
-            .select("pk")
-            .distinct()
-        )
-        state = (
-            cdc.filter(F.col("sequence") <= hi)
-            .join(touched, "pk")
-            .groupBy("pk")
-            .agg(
-                F.max("sequence").alias("last_seq"),
-                F.max_by("dml_type", "sequence").alias("last_dml"),
-                F.max_by("value", "sequence").alias("last_value"),
-                F.max_by("ts_unix", "sequence").alias("last_ts_unix"),
-            )
-        )
-        sink.merge(state, epoch_id=k)
+    for k, (lo, hi) in enumerate(_seq_cuts(cdc, 3)):
+        sink.merge(_state_asof(cdc, lo, hi), epoch_id=k)
 
     # two crashed writers: generation fully written, manifest never
     # published (the sink's crash-window case 1)
@@ -4388,7 +4359,6 @@ def snk_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     the count audit and aborted (manifest byte-identical), the correct
     stage publishes; exported state + audit ledger recomputed raw by
     the oracle (see block comment)."""
-    import os
     import shutil
     import uuid as _uuid
     from collections import defaultdict
@@ -4396,41 +4366,11 @@ def snk_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
 
-    ev = table(spark, sf_dir, "events")
-    cdc = ev.select(
-        F.col("event_id").alias("sequence"),
-        F.when(F.col("event_type").isin("signup", "purchase"), F.lit("insert"))
-        .when(F.col("event_type") == "view", F.lit("update_before"))
-        .when(F.col("event_type") == "click", F.lit("update_after"))
-        .otherwise(F.lit("delete"))
-        .alias("dml_type"),
-        F.col("user_id").alias("pk"),
-        F.col("value"),
-        F.unix_timestamp("ts").alias("ts_unix"),
-    ).localCheckpoint(eager=False)
-    m = int(cdc.agg(F.max("sequence").alias("m")).collect()[0]["m"])
-    m2, m3 = m // 2, (3 * m) // 4
+    cdc = _cdc_log(table(spark, sf_dir, "events")).localCheckpoint(eager=False)
+    cuts = _seq_cuts(cdc, 4)
+    m2, m3 = cuts[1][1], cuts[2][1]  # the 1/2 and 3/4 cut points
     sink = ManifestedUpsertSink(spark, _mkdtemp(prefix="snk_wap_"))
-
-    def state_batch(lo: int, hi: int) -> DataFrame:
-        touched = (
-            cdc.filter((F.col("sequence") > lo) & (F.col("sequence") <= hi))
-            .select("pk")
-            .distinct()
-        )
-        return (
-            cdc.filter(F.col("sequence") <= hi)
-            .join(touched, "pk")
-            .groupBy("pk")
-            .agg(
-                F.max("sequence").alias("last_seq"),
-                F.max_by("dml_type", "sequence").alias("last_dml"),
-                F.max_by("value", "sequence").alias("last_value"),
-                F.max_by("ts_unix", "sequence").alias("last_ts_unix"),
-            )
-        )
-
-    sink.merge(state_batch(0, m2), epoch_id=0)  # normal publish
+    sink.merge(_state_asof(cdc, 0, m2), epoch_id=0)  # normal publish
 
     def manifest_bytes() -> bytes:
         name = sink._manifest_names()[-1]
@@ -4471,8 +4411,8 @@ def snk_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise AssertionError('n_null_pk == 0')
         return n_new
 
-    n_expected = int(state_batch(m2, m3).count())
-    good = state_batch(m2, m3)
+    n_expected = int(_state_asof(cdc, m2, m3).count())
+    good = _state_asof(cdc, m2, m3)
     bad = good.filter(F.col("pk") % 5 != 2)  # the lost partition
 
     # WAP attempt A: stage corrupted → audit catches → ABORT
@@ -4545,63 +4485,14 @@ def snk_upsert_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Four append-only MoR epochs (equality-delete file + data file
     each) → reconciling read → compaction → the compacted state (see
     block comment).  Oracle: whole-log latest state."""
-    import os
-
     from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
 
-    ev = table(spark, sf_dir, "events")
-    cdc = ev.select(
-        F.col("event_id").alias("sequence"),
-        F.expr(_DML_CASE_SQL).alias("dml_type"),
-        F.col("user_id").alias("pk"),
-        "value",
-        F.unix_timestamp("ts").alias("ts_unix"),
-    )
-    cuts = cdc.agg(
-        F.expr("div(max(sequence) * 1, 4)").alias("m1"),
-        F.expr("div(max(sequence) * 2, 4)").alias("m2"),
-        F.expr("div(max(sequence) * 3, 4)").alias("m3"),
-    )
-    epoch = (
-        F.lit(1)
-        + (F.col("sequence") > F.col("m1")).cast("int")
-        + (F.col("sequence") > F.col("m2")).cast("int")
-        + (F.col("sequence") > F.col("m3")).cast("int")
-    )
-    staged = cdc.join(F.broadcast(cuts)).withColumn("epoch", epoch)
-    w = W.partitionBy("pk", "epoch").orderBy(F.col("sequence").desc())
-    batch_last = (
-        staged.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("pk", "epoch", "sequence", "dml_type", "value", "ts_unix")
-    )
+    staged = _quarter_epochs(_cdc_log(table(spark, sf_dir, "events")))
     root = _mkdtemp(prefix="snk_mor_")
-    data_dir = os.path.join(root, "data")
-    del_dir = os.path.join(root, "deletes")
-    # equality-delete file per epoch: every pk the batch touched
-    batch_last.select("pk", "epoch").repartition("epoch").write.mode(
-        "overwrite"
-    ).partitionBy("epoch").parquet(del_dir)
-    # data file per epoch: the batch's final non-delete images
-    batch_last.filter(F.col("dml_type") != "delete").select(
-        "pk",
-        F.col("sequence").alias("last_seq"),
-        F.col("value").alias("last_value"),
-        F.col("ts_unix").alias("last_ts_unix"),
-        "epoch",
-    ).repartition("epoch").write.mode("overwrite").partitionBy(
-        "epoch"
-    ).parquet(data_dir)
+    _mor_write_epochs(_final_image(staged, "pk", "epoch"), root)
 
     # -- reconciling read (the MoR scan) --
-    data = spark.read.parquet(data_dir)
-    dels = spark.read.parquet(del_dir)
-    dmax = dels.groupBy("pk").agg(F.max("epoch").alias("dmax"))
-    alive = (
-        data.join(dmax, "pk", "left")
-        .filter(F.col("dmax").isNull() | (F.col("epoch") >= F.col("dmax")))
-        .select("pk", "last_seq", "last_value", "last_ts_unix")
-    )
+    alive = _mor_reconcile(*_mor_read(spark, root))
     n_alive = alive.count()
     n_pks = alive.select("pk").distinct().count()
     if n_alive != n_pks:  # reconciliation invariant: one live row per pk
@@ -4611,10 +4502,7 @@ def snk_upsert_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     base_dir = os.path.join(root, "base")
     alive.repartition(4, "pk").write.mode("overwrite").parquet(base_dir)
     compacted = spark.read.parquet(base_dir)
-    if (
-        compacted.exceptAll(alive).count() != 0
-        or alive.exceptAll(compacted).count() != 0
-    ):
+    if not _same_rows(compacted, alive):
         raise RuntimeError("compaction changed the reconciled state")
     return compacted.select("pk", "last_seq", "last_value", "last_ts_unix")
 
@@ -4720,28 +4608,9 @@ def snk_upsert_mor_compact_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     eligibility rule → pick-K (see block comment).  Same staged
     lineage as snk_upsert_mor; no files written — the plan is
     metadata."""
-    ev = table(spark, sf_dir, "events")
-    cdc = ev.select(
-        F.col("event_id").alias("sequence"),
-        F.expr(_DML_CASE_SQL).alias("dml_type"),
-        F.col("user_id").alias("pk"),
-    )
-    cuts = cdc.agg(
-        F.expr("div(max(sequence) * 1, 4)").alias("m1"),
-        F.expr("div(max(sequence) * 2, 4)").alias("m2"),
-        F.expr("div(max(sequence) * 3, 4)").alias("m3"),
-    )
-    epoch = (
-        F.lit(1)
-        + (F.col("sequence") > F.col("m1")).cast("int")
-        + (F.col("sequence") > F.col("m2")).cast("int")
-        + (F.col("sequence") > F.col("m3")).cast("int")
-    )
-    staged = cdc.join(F.broadcast(cuts)).withColumn("epoch", epoch)
-    w = W.partitionBy("pk", "epoch").orderBy(F.col("sequence").desc())
+    staged = _quarter_epochs(_cdc_log(table(spark, sf_dir, "events")))
     bl = (
-        staged.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        _final_image(staged, "pk", "epoch")
         .select(
             "pk",
             "epoch",
@@ -5143,8 +5012,6 @@ def snk_upsert_mor_compact_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Apply the MoR compaction plan: fold the chosen buckets to a
     clean base, keep the rest merge-on-read, serve the hybrid read
     (see block comment).  Raises unless hybrid == full reconciliation."""
-    import os
-
     from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
 
     # -- the plan: same code object as the registered planning query --
@@ -5153,67 +5020,19 @@ def snk_upsert_mor_compact_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_dropped = sum(r["n_tombstones"] for r in plan_rows if r["chosen"])
 
     # -- the MoR layout (same epoch construction as snk_upsert_mor) --
-    ev = table(spark, sf_dir, "events")
-    cdc = ev.select(
-        F.col("event_id").alias("sequence"),
-        F.expr(_DML_CASE_SQL).alias("dml_type"),
-        F.col("user_id").alias("pk"),
-        "value",
-        F.unix_timestamp("ts").alias("ts_unix"),
-    )
-    cuts = cdc.agg(
-        F.expr("div(max(sequence) * 1, 4)").alias("m1"),
-        F.expr("div(max(sequence) * 2, 4)").alias("m2"),
-        F.expr("div(max(sequence) * 3, 4)").alias("m3"),
-    )
-    epoch = (
-        F.lit(1)
-        + (F.col("sequence") > F.col("m1")).cast("int")
-        + (F.col("sequence") > F.col("m2")).cast("int")
-        + (F.col("sequence") > F.col("m3")).cast("int")
-    )
-    staged = cdc.join(F.broadcast(cuts)).withColumn("epoch", epoch)
-    w = W.partitionBy("pk", "epoch").orderBy(F.col("sequence").desc())
-    batch_last = (
-        staged.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("pk", "epoch", "sequence", "dml_type", "value", "ts_unix")
-    )
+    staged = _quarter_epochs(_cdc_log(table(spark, sf_dir, "events")))
     root = _mkdtemp(prefix="snk_mor_apply_")
-    data_dir = os.path.join(root, "data")
-    del_dir = os.path.join(root, "deletes")
-    batch_last.select("pk", "epoch").repartition("epoch").write.mode(
-        "overwrite"
-    ).partitionBy("epoch").parquet(del_dir)
-    batch_last.filter(F.col("dml_type") != "delete").select(
-        "pk",
-        F.col("sequence").alias("last_seq"),
-        F.col("value").alias("last_value"),
-        F.col("ts_unix").alias("last_ts_unix"),
-        "epoch",
-    ).repartition("epoch").write.mode("overwrite").partitionBy(
-        "epoch"
-    ).parquet(data_dir)
-
-    def reconcile(data, dels):
-        dmax = dels.groupBy("pk").agg(F.max("epoch").alias("dmax"))
-        return (
-            data.join(dmax, "pk", "left")
-            .filter(F.col("dmax").isNull() | (F.col("epoch") >= F.col("dmax")))
-            .select("pk", "last_seq", "last_value", "last_ts_unix")
-        )
-
-    data = spark.read.parquet(data_dir)
-    dels = spark.read.parquet(del_dir)
-    full = reconcile(data, dels)
+    _mor_write_epochs(_final_image(staged, "pk", "epoch"), root)
+    data, dels = _mor_read(spark, root)
+    full = _mor_reconcile(data, dels)
 
     # -- apply: fold CHOSEN buckets to a clean base, keep the rest MoR --
     in_chosen = (F.col("pk") % 8).isin(chosen) if chosen else F.lit(False)
     base_dir = os.path.join(root, "base")
-    reconcile(
+    _mor_reconcile(
         data.filter(in_chosen), dels.filter(in_chosen)
     ).repartition(4, "pk").write.mode("overwrite").parquet(base_dir)
-    residual = reconcile(data.filter(~in_chosen), dels.filter(~in_chosen))
+    residual = _mor_reconcile(data.filter(~in_chosen), dels.filter(~in_chosen))
     hybrid = (
         spark.read.parquet(base_dir).unionByName(residual)
         if chosen
@@ -5221,10 +5040,7 @@ def snk_upsert_mor_compact_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # partial compaction must be invisible to readers (real raise)
-    if (
-        hybrid.exceptAll(full).count() != 0
-        or full.exceptAll(hybrid).count() != 0
-    ):
+    if not _same_rows(hybrid, full):
         raise RuntimeError("hybrid read diverged from full reconciliation")
     return hybrid.select(
         "pk",
@@ -5278,8 +5094,6 @@ def str_mor_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MoR ingest as a streaming query: per-micro-batch equality-delete
     + data appends (no state store), reconciling serving read equals
     the whole-log latest state (see block comment)."""
-    import os
-
     from maxscale_cdc_spark.streaming.runners import (
         run_bounded,
         stage_as_stream_sequenced,
@@ -5292,44 +5106,14 @@ def str_mor_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_batches=4,
         cache_key=f"events:{sf_dir}",
     )
-    stream = read_stream(spark, staged, max_files_per_trigger=1).select(
-        F.col("event_id").alias("sequence"),
-        F.expr(_DML_CASE_SQL).alias("dml_type"),
-        F.col("user_id").alias("pk"),
-        "value",
-        F.unix_timestamp("ts").alias("ts_unix"),
-    )
+    stream = _cdc_log(read_stream(spark, staged, max_files_per_trigger=1))
     root = _mkdtemp(prefix="str_mor_")
-    data_dir = os.path.join(root, "data")
-    del_dir = os.path.join(root, "deletes")
     seen: list[tuple[int, int, int]] = []  # (epoch, min_seq, max_seq)
-
-    def append_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        wb = W.partitionBy("pk").orderBy(F.col("sequence").desc())
-        last = (
-            batch_df.withColumn("rn", F.row_number().over(wb))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
+    run_bounded(
+        stream.writeStream.outputMode("append").foreachBatch(
+            _mor_ingest(root, seen)
         )
-        bounds = batch_df.agg(
-            F.min("sequence").alias("lo"), F.max("sequence").alias("hi")
-        ).collect()[0]
-        if bounds["lo"] is None:
-            return
-        seen.append((int(epoch_id), int(bounds["lo"]), int(bounds["hi"])))
-        last.select("pk").write.mode("append").parquet(
-            os.path.join(del_dir, f"epoch={epoch_id}")
-        )
-        last.filter(F.col("dml_type") != "delete").select(
-            "pk",
-            F.col("sequence").alias("last_seq"),
-            F.col("value").alias("last_value"),
-            F.col("ts_unix").alias("last_ts_unix"),
-        ).write.mode("append").parquet(
-            os.path.join(data_dir, f"epoch={epoch_id}")
-        )
-
-    run_bounded(stream.writeStream.outputMode("append").foreachBatch(append_epoch))
+    )
 
     # in-order delivery contract: ascending DISJOINT sequence ranges
     seen.sort()
@@ -5339,14 +5123,7 @@ def str_mor_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     if len(seen) != 4 or not disjoint:
         raise RuntimeError(f"epoch delivery violated the contract: {seen}")
 
-    data = spark.read.option("basePath", data_dir).parquet(data_dir)
-    dels = spark.read.option("basePath", del_dir).parquet(del_dir)
-    dmax = dels.groupBy("pk").agg(F.max("epoch").alias("dmax"))
-    alive = (
-        data.join(dmax, "pk", "left")
-        .filter(F.col("dmax").isNull() | (F.col("epoch") >= F.col("dmax")))
-        .select("pk", "last_seq", "last_value", "last_ts_unix")
-    )
+    alive = _mor_reconcile(*_mor_read(spark, root))
     return alive.select(
         "*",
         F.lit(len(seen)).cast("long").alias("n_epochs"),
@@ -5408,10 +5185,7 @@ def str_mor_stream_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MoR streaming ingest killed mid-log and resumed from the shared
     checkpoint, with epoch continuity and replayed-epoch idempotency
     both proven in-op (see block comment)."""
-    import os
-    import shutil
-
-    from maxscale_cdc_spark.streaming.runners import run_bounded
+    from maxscale_cdc_spark.streaming.runners import land_ordered, run_bounded
     from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
 
     ev = table(spark, sf_dir, "events")
@@ -5421,69 +5195,20 @@ def str_mor_stream_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _mkdtemp(prefix="mor_restart_src_")
     ckpt = _mkdtemp(prefix="mor_restart_ckpt_")
     root = _mkdtemp(prefix="mor_restart_")
-    data_dir = os.path.join(root, "data")
-    del_dir = os.path.join(root, "deletes")
 
     def land(idx: int) -> None:
-        # one sequence-ordered file per quarter, mtime after the prior
-        # quarter so the file source keeps delivery order
-        tmp = _mkdtemp(prefix="mor_restart_part_")
-        quarters.filter(F.col("__b") == idx + 1).drop("__b").orderBy(
-            "event_id"
-        ).coalesce(1).write.mode("overwrite").parquet(tmp)
-        i = 0
-        for f in sorted(os.listdir(tmp)):
-            if f.endswith(".parquet"):
-                dst = os.path.join(src, f"part-{idx}-{i:05d}.parquet")
-                shutil.copy(os.path.join(tmp, f), dst)
-                os.utime(dst, (1_000_000_000 + idx, 1_000_000_000 + idx))
-                i += 1
-        shutil.rmtree(tmp)
+        # one sequence-ordered file per quarter, in quarter order
+        quarter = quarters.filter(F.col("__b") == idx + 1).drop("__b")
+        land_ordered(quarter.orderBy("event_id"), src, idx)
 
     seen: list[tuple[int, int, int]] = []  # (epoch, min_seq, max_seq)
 
-    def write_epoch(last: DataFrame, epoch_id: int) -> None:
-        # replay-idempotent by construction: OVERWRITE the epoch dirs
-        last.select("pk").write.mode("overwrite").parquet(
-            os.path.join(del_dir, f"epoch={epoch_id}")
-        )
-        last.filter(F.col("dml_type") != "delete").select(
-            "pk",
-            F.col("sequence").alias("last_seq"),
-            F.col("value").alias("last_value"),
-            F.col("ts_unix").alias("last_ts_unix"),
-        ).write.mode("overwrite").parquet(
-            os.path.join(data_dir, f"epoch={epoch_id}")
-        )
-
-    def batch_image(batch_df: DataFrame) -> DataFrame:
-        wb = W.partitionBy("pk").orderBy(F.col("sequence").desc())
-        return (
-            batch_df.withColumn("rn", F.row_number().over(wb))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
-
-    def append_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        last = batch_image(batch_df)
-        bounds = batch_df.agg(
-            F.min("sequence").alias("lo"), F.max("sequence").alias("hi")
-        ).collect()[0]
-        if bounds["lo"] is None:
-            return
-        seen.append((int(epoch_id), int(bounds["lo"]), int(bounds["hi"])))
-        write_epoch(last, epoch_id)
-
     def run_once() -> None:
-        stream = read_stream(spark, src, max_files_per_trigger=1).select(
-            F.col("event_id").alias("sequence"),
-            F.expr(_DML_CASE_SQL).alias("dml_type"),
-            F.col("user_id").alias("pk"),
-            "value",
-            F.unix_timestamp("ts").alias("ts_unix"),
-        )
+        stream = _cdc_log(read_stream(spark, src, max_files_per_trigger=1))
         run_bounded(
-            stream.writeStream.outputMode("append").foreachBatch(append_epoch),
+            stream.writeStream.outputMode("append").foreachBatch(
+                _mor_ingest(root, seen)
+            ),
             ckpt,
         )
 
@@ -5515,38 +5240,17 @@ def str_mor_stream_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"seen={seen}"
         )
 
-    def reconcile() -> DataFrame:
-        data = spark.read.option("basePath", data_dir).parquet(data_dir)
-        dels = spark.read.option("basePath", del_dir).parquet(del_dir)
-        dmax = dels.groupBy("pk").agg(F.max("epoch").alias("dmax"))
-        return (
-            data.join(dmax, "pk", "left")
-            .filter(F.col("dmax").isNull() | (F.col("epoch") >= F.col("dmax")))
-            .select("pk", "last_seq", "last_value", "last_ts_unix")
-        )
-
-    before = reconcile().localCheckpoint()  # materialized pre-replay
+    before = _mor_reconcile(*_mor_read(spark, root)).localCheckpoint()  # pre-replay
 
     # replay arm: re-apply the LAST epoch's write out-of-band (the
     # crash-between-write-and-checkpoint-commit delivery)
     last_epoch, lo, hi = seen[-1]
-    replay_batch = (
-        spark.read.parquet(src)
-        .select(
-            F.col("event_id").alias("sequence"),
-            F.expr(_DML_CASE_SQL).alias("dml_type"),
-            F.col("user_id").alias("pk"),
-            "value",
-            F.unix_timestamp("ts").alias("ts_unix"),
-        )
-        .filter((F.col("sequence") >= lo) & (F.col("sequence") <= hi))
+    replay_batch = _cdc_log(spark.read.parquet(src)).filter(
+        (F.col("sequence") >= lo) & (F.col("sequence") <= hi)
     )
-    write_epoch(batch_image(replay_batch), last_epoch)
-    after = reconcile()
-    if (
-        after.exceptAll(before).count() != 0
-        or before.exceptAll(after).count() != 0
-    ):
+    _mor_write_epoch(_final_image(replay_batch, "pk"), root, last_epoch)
+    after = _mor_reconcile(*_mor_read(spark, root))
+    if not _same_rows(after, before):
         raise RuntimeError("replayed epoch changed the reconciling read")
 
     return after.select(
@@ -5596,39 +5300,13 @@ def snk_branch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     comment).  Oracle: whole-log latest state."""
     from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
 
-    ev = table(spark, sf_dir, "events")
-    cdc = ev.select(
-        F.col("event_id").alias("sequence"),
-        F.expr(_DML_CASE_SQL).alias("dml_type"),
-        F.col("user_id").alias("pk"),
-        F.col("value"),
-        F.unix_timestamp("ts").alias("ts_unix"),
-    ).localCheckpoint(eager=False)
-    m = int(cdc.agg(F.max("sequence").alias("m")).collect()[0]["m"])
-    cuts = [(0, m // 4), (m // 4, m // 2), (m // 2, (3 * m) // 4), ((3 * m) // 4, m)]
-
-    def epoch_state(lo: int, hi: int) -> DataFrame:
-        touched = (
-            cdc.filter((F.col("sequence") > lo) & (F.col("sequence") <= hi))
-            .select("pk")
-            .distinct()
-        )
-        return (
-            cdc.filter(F.col("sequence") <= hi)
-            .join(touched, "pk")
-            .groupBy("pk")
-            .agg(
-                F.max("sequence").alias("last_seq"),
-                F.max_by("dml_type", "sequence").alias("last_dml"),
-                F.max_by("value", "sequence").alias("last_value"),
-                F.max_by("ts_unix", "sequence").alias("last_ts_unix"),
-            )
-        )
+    cdc = _cdc_log(table(spark, sf_dir, "events")).localCheckpoint(eager=False)
+    cuts = _seq_cuts(cdc, 4)
 
     # main: epochs 1,2
     main = ManifestedUpsertSink(spark, _mkdtemp(prefix="snk_main_"))
     for k, (lo, hi) in enumerate(cuts[:2]):
-        main.merge(epoch_state(lo, hi), epoch_id=k)
+        main.merge(_state_asof(cdc, lo, hi), epoch_id=k)
 
     # fork; branch takes epochs 3,4 while main serves unchanged
     # (fork/ff_merge are sink methods — the branch contract lives next
@@ -5636,20 +5314,11 @@ def snk_branch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     fork_names = main.fork_point()
     branch = main.fork(_mkdtemp(prefix="snk_branch_"))
     for k, (lo, hi) in enumerate(cuts[2:], start=2):
-        branch.merge(epoch_state(lo, hi), epoch_id=k)
+        branch.merge(_state_asof(cdc, lo, hi), epoch_id=k)
 
     # isolation: main's state must still be the prefix latest-state
-    prefix = epoch_state(0, m // 2)
-    main_now = main.state().drop("b")
-    # one symmetric-difference job instead of two directional counts
-    # (each count is a full join-shaped job; the audit only needs
-    # "is the difference empty in either direction")
-    if (
-        main_now.exceptAll(prefix)
-        .unionAll(prefix.exceptAll(main_now))
-        .count()
-        != 0
-    ):
+    prefix = _state_asof(cdc, 0, cuts[1][1])
+    if not _same_rows(main.state().drop("b"), prefix):
         raise RuntimeError("branch writes leaked into main")
 
     # fast-forward: main unchanged since fork -> adopt the branch map
@@ -5660,7 +5329,7 @@ def snk_branch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # conflict arm: fork again, advance MAIN underneath, merge refuses
     fork2_names = main.fork_point()
     branch2 = main.fork(_mkdtemp(prefix="snk_branch_"))
-    main.merge(epoch_state(*cuts[3]), epoch_id=9)  # idempotent hotfix
+    main.merge(_state_asof(cdc, *cuts[3]), epoch_id=9)  # idempotent hotfix
     conflict_refused = not main.ff_merge(branch2, fork2_names)
     if not conflict_refused:
         raise RuntimeError("merge fast-forwarded over a diverged main")
@@ -6027,7 +5696,6 @@ def str_mor_compact_midstream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fold epochs 0-1 into a base while the MoR stream is still
     ingesting epochs 2-3; post-stream hybrid read == whole-log latest
     state, raised in-op and oracle-certified (see block comment)."""
-    import os
     import shutil
 
     from maxscale_cdc_spark.streaming.runners import (
@@ -6042,96 +5710,46 @@ def str_mor_compact_midstream(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_batches=4,
         cache_key=f"events:{sf_dir}",
     )
-    stream = read_stream(spark, staged, max_files_per_trigger=1).select(
-        F.col("event_id").alias("sequence"),
-        F.expr(_DML_CASE_SQL).alias("dml_type"),
-        F.col("user_id").alias("pk"),
-        "value",
-        F.unix_timestamp("ts").alias("ts_unix"),
-    )
+    stream = _cdc_log(read_stream(spark, staged, max_files_per_trigger=1))
     root = _mkdtemp(prefix="str_mor_cmp_")
-    data_dir = os.path.join(root, "data")
-    del_dir = os.path.join(root, "deletes")
     base_dir = os.path.join(root, "base")
+    folded_dirs = [
+        os.path.join(root, side, f"epoch={e}")
+        for e in (0, 1)
+        for side in ("data", "deletes")
+    ]
     seen: list[int] = []
     folded: list[int] = []
 
     def _append(batch_df: DataFrame, epoch_id: int) -> None:
         # mid-stream compaction fence: fold 0-1 when epoch 2 opens
         if int(epoch_id) == 2 and not folded:
-            data01 = spark.read.option("basePath", data_dir).parquet(data_dir)
-            dels01 = spark.read.option("basePath", del_dir).parquet(del_dir)
-            dmax01 = dels01.groupBy("pk").agg(F.max("epoch").alias("dmax"))
-            alive01 = (
-                data01.join(dmax01, "pk", "left")
-                .filter(F.col("dmax").isNull() | (F.col("epoch") >= F.col("dmax")))
-                .select("pk", "last_seq", "last_value", "last_ts_unix")
-            )
+            alive01 = _mor_reconcile(*_mor_read(spark, root))
             alive01.write.mode("overwrite").parquet(base_dir)
-            for e in (0, 1):
-                shutil.rmtree(os.path.join(data_dir, f"epoch={e}"), ignore_errors=True)
-                shutil.rmtree(os.path.join(del_dir, f"epoch={e}"), ignore_errors=True)
+            for d in folded_dirs:
+                shutil.rmtree(d, ignore_errors=True)
             folded.extend([0, 1])
-        wb = W.partitionBy("pk").orderBy(F.col("sequence").desc())
-        last = (
-            batch_df.withColumn("rn", F.row_number().over(wb))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
+        last = _final_image(batch_df, "pk")
         if last.isEmpty():
             return
         seen.append(int(epoch_id))
-        last.select("pk").write.mode("append").parquet(
-            os.path.join(del_dir, f"epoch={epoch_id}")
-        )
-        last.filter(F.col("dml_type") != "delete").select(
-            "pk",
-            F.col("sequence").alias("last_seq"),
-            F.col("value").alias("last_value"),
-            F.col("ts_unix").alias("last_ts_unix"),
-        ).write.mode("append").parquet(os.path.join(data_dir, f"epoch={epoch_id}"))
+        _mor_write_epoch(last, root, epoch_id)
 
     run_bounded(stream.writeStream.outputMode("append").foreachBatch(_append))
     if len(seen) != 4 or folded != [0, 1]:
         raise RuntimeError(f"epoch/compaction schedule violated: {seen} {folded}")
-    gone = not any(
-        os.path.exists(os.path.join(d, f"epoch={e}"))
-        for d in (data_dir, del_dir)
-        for e in (0, 1)
-    )
+    gone = not any(os.path.exists(d) for d in folded_dirs)
     if not gone:
         raise RuntimeError("folded epoch dirs survived GC")
 
     base = spark.read.parquet(base_dir).withColumn("epoch", F.lit(1))
-    resid = spark.read.option("basePath", data_dir).parquet(data_dir)
-    dels = spark.read.option("basePath", del_dir).parquet(del_dir)
-    datau = base.select(resid.columns).unionByName(resid)
-    dmax = dels.groupBy("pk").agg(F.max("epoch").alias("dmax"))
-    hybrid = (
-        datau.join(dmax, "pk", "left")
-        .filter(F.col("dmax").isNull() | (F.col("epoch") >= F.col("dmax")))
-        .select("pk", "last_seq", "last_value", "last_ts_unix")
-    )
+    resid, dels = _mor_read(spark, root)
+    hybrid = _mor_reconcile(base.select(resid.columns).unionByName(resid), dels)
     # in-op proof: hybrid == whole-log latest state from the spool
-    cdc = table(spark, sf_dir, "events").select(
-        F.col("event_id").alias("sequence"),
-        F.expr(_DML_CASE_SQL).alias("dml_type"),
-        F.col("user_id").alias("pk"),
-        "value",
-        F.unix_timestamp("ts").alias("ts_unix"),
+    full = _live_images(
+        _final_image(_cdc_log(table(spark, sf_dir, "events")), "pk")
     )
-    wfull = W.partitionBy("pk").orderBy(F.col("sequence").desc())
-    full = (
-        cdc.withColumn("rn", F.row_number().over(wfull))
-        .filter((F.col("rn") == 1) & (F.col("dml_type") != "delete"))
-        .select(
-            "pk",
-            F.col("sequence").alias("last_seq"),
-            F.col("value").alias("last_value"),
-            F.col("ts_unix").alias("last_ts_unix"),
-        )
-    )
-    if hybrid.exceptAll(full).count() != 0 or full.exceptAll(hybrid).count() != 0:
+    if not _same_rows(hybrid, full):
         raise RuntimeError("mid-stream compaction changed the serving state")
     return hybrid.select(
         "*",
@@ -6176,7 +5794,6 @@ def str_mor_compact_midstream(spark: SparkSession, sf_dir: str) -> DataFrame:
 def str_two_sink_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One stream, two epoch-idempotent sinks; torn-replay arm +
     cross-sink agreement raised in-op (see block comment)."""
-    import os
 
     from maxscale_cdc_spark.streaming.runners import (
         run_bounded,
@@ -6190,13 +5807,7 @@ def str_two_sink_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_batches=4,
         cache_key=f"events:{sf_dir}",
     )
-    stream = read_stream(spark, staged, max_files_per_trigger=1).select(
-        F.col("event_id").alias("sequence"),
-        F.expr(_DML_CASE_SQL).alias("dml_type"),
-        F.col("user_id").alias("pk"),
-        "value",
-        F.unix_timestamp("ts").alias("ts_unix"),
-    )
+    stream = _cdc_log(read_stream(spark, staged, max_files_per_trigger=1))
     root = _mkdtemp(prefix="str_fan_")
     log_dir = os.path.join(root, "log")       # sink A: append/audit log
     state_dir = os.path.join(root, "state")   # sink B: latest-state lane
@@ -6213,13 +5824,8 @@ def str_two_sink_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(log_dir, f"epoch={epoch_id}")
         )
         # sink B: the epoch's final image per pk
-        wb = W.partitionBy("pk").orderBy(F.col("sequence").desc())
-        (
-            staged_b.withColumn("rn", F.row_number().over(wb))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-            .write.mode("overwrite")
-            .parquet(os.path.join(state_dir, f"epoch={epoch_id}"))
+        _final_image(staged_b, "pk").write.mode("overwrite").parquet(
+            os.path.join(state_dir, f"epoch={epoch_id}")
         )
         last_batch_path.append(os.path.join(log_dir, f"epoch={epoch_id}"))
 
@@ -6243,34 +5849,13 @@ def str_two_sink_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # cross-sink agreement: log replayed whole == state lane reconciled
     log = spark.read.option("basePath", log_dir).parquet(log_dir)
-    wfull = W.partitionBy("pk").orderBy(F.col("sequence").desc())
-    from_log = (
-        log.withColumn("rn", F.row_number().over(wfull))
-        .filter((F.col("rn") == 1) & (F.col("dml_type") != "delete"))
-        .select(
-            "pk",
-            F.col("sequence").alias("last_seq"),
-            F.col("value").alias("last_value"),
-            F.col("ts_unix").alias("last_ts_unix"),
-        )
-    )
+    from_log = _live_images(_final_image(log, "pk"))
     st = spark.read.option("basePath", state_dir).parquet(state_dir)
     wst = W.partitionBy("pk").orderBy(F.col("epoch").desc())
-    from_state = (
-        st.withColumn("rn", F.row_number().over(wst))
-        .filter((F.col("rn") == 1) & (F.col("dml_type") != "delete"))
-        .select(
-            "pk",
-            F.col("sequence").alias("last_seq"),
-            F.col("value").alias("last_value"),
-            F.col("ts_unix").alias("last_ts_unix"),
-        )
+    from_state = _live_images(
+        st.withColumn("rn", F.row_number().over(wst)).filter(F.col("rn") == 1)
     )
-    consistent = (
-        from_log.exceptAll(from_state).count() == 0
-        and from_state.exceptAll(from_log).count() == 0
-    )
-    if not consistent:
+    if not _same_rows(from_log, from_state):
         raise RuntimeError("fan-out sinks diverged after torn replay")
     return from_log.select(
         "*",

@@ -47,25 +47,29 @@ def stage_as_stream(df: DataFrame, n_files: int = 4, cache_key: str | None = Non
     return out
 
 
+def land_ordered(df: DataFrame, flat: str, idx: int) -> None:
+    """Land `df` as ONE parquet file `part-<idx>-00000.parquet` in the
+    flat source dir `flat`, stamped with mtime 1_000_000_000 + idx.
+    The file source processes files oldest-first, so landings with
+    increasing `idx` are delivered in `idx` order — also when the dir
+    grows between runs of a restarted stream."""
+    tmp = _mkdtemp(prefix="cdc_stage_part_")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    (part,) = (f for f in os.listdir(tmp) if f.endswith(".parquet"))
+    dst = os.path.join(flat, f"part-{idx}-00000.parquet")
+    shutil.copy(os.path.join(tmp, part), dst)
+    os.utime(dst, (1_000_000_000 + idx, 1_000_000_000 + idx))
+    shutil.rmtree(tmp)
+
+
 def stage_as_stream_ordered(df: DataFrame, late: Column) -> str:
     """Stage two arrival batches with deterministic order: rows where
     `late` is false arrive first (older file mtime), late rows second.
     The file source processes files oldest-first, so batch boundaries —
     and therefore watermark advancement — are reproducible."""
-    tmp = _mkdtemp(prefix="cdc_stage_")
-    early_dir, late_dir = os.path.join(tmp, "b0"), os.path.join(tmp, "b1")
-    df.filter(~late).coalesce(1).write.mode("overwrite").parquet(early_dir)
-    df.filter(late).coalesce(1).write.mode("overwrite").parquet(late_dir)
     flat = _mkdtemp(prefix="cdc_stream_")
-    i = 0
-    for sub, mtime in ((early_dir, 1_000_000_000), (late_dir, 2_000_000_000)):
-        for f in sorted(os.listdir(sub)):
-            if f.endswith(".parquet"):
-                dst = os.path.join(flat, f"part-{i:05d}.parquet")
-                shutil.copy(os.path.join(sub, f), dst)
-                os.utime(dst, (mtime, mtime))
-                i += 1
-    shutil.rmtree(tmp)
+    land_ordered(df.filter(~late), flat, 0)
+    land_ordered(df.filter(late), flat, 1)
     return flat
 
 
@@ -93,19 +97,8 @@ def stage_as_stream_sequenced(
     ranked = df.withColumn(
         "__b", _F.ntile(n_batches).over(_W.orderBy(order_col))
     )
-    i = 0
     for b in range(1, n_batches + 1):
-        sub = _mkdtemp(prefix="cdc_stage_part_")
-        ranked.filter(_F.col("__b") == b).drop("__b").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(sub)
-        for f in sorted(os.listdir(sub)):
-            if f.endswith(".parquet"):
-                dst = os.path.join(flat, f"part-{i:05d}.parquet")
-                shutil.copy(os.path.join(sub, f), dst)
-                os.utime(dst, (1_000_000_000 + b, 1_000_000_000 + b))
-                i += 1
-        shutil.rmtree(sub)
+        land_ordered(ranked.filter(_F.col("__b") == b).drop("__b"), flat, b)
     if key is not None:
         _STAGE_CACHE[key] = flat
     return flat

@@ -11,6 +11,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from maxscale_cdc_spark.session import prune_dead_cache_entries
+
 TABLE_NAMES = [
     "region",
     "nation",
@@ -50,14 +52,8 @@ _SCAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 _WIDE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
-def _prune_dead(cache: dict, spark: SparkSession) -> None:
-    app = spark.sparkContext.applicationId
-    for k in [k for k in cache if k[0] != app]:
-        del cache[k]
-
-
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    _prune_dead(_SCAN_CACHE, spark)
+    prune_dead_cache_entries(_SCAN_CACHE, spark)
     key = (spark.sparkContext.applicationId, sf_dir, name)
     got = _SCAN_CACHE.get(key)
     if got is not None:
@@ -88,7 +84,7 @@ def wide_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     groups) the scan already carries >= cores splits and this returns
     the plain scan — NO added exchange; the check is plan-side only
     (no job is triggered)."""
-    _prune_dead(_WIDE_CACHE, spark)
+    prune_dead_cache_entries(_WIDE_CACHE, spark)
     key = (spark.sparkContext.applicationId, sf_dir, name)
     got = _WIDE_CACHE.get(key)
     if got is not None:

@@ -1,0 +1,49 @@
+"""The plan-identity check as a command: `tools/capture_plans.py
+compare` must call every committed before/after capture identical
+modulo instance counters and tmp paths, and must still see a real
+operator change."""
+
+from __future__ import annotations
+
+import importlib.util
+import os
+import shutil
+
+import pytest
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PLAN_DIRS = [os.path.join(ROOT, "plans", r) for r in ("r14", "r15")]
+
+
+def _capture_plans():
+    spec = importlib.util.spec_from_file_location(
+        "capture_plans", os.path.join(ROOT, "tools", "capture_plans.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+@pytest.mark.parametrize("plan_dir", PLAN_DIRS, ids=os.path.basename)
+def test_committed_plan_pairs_compare_identical(plan_dir):
+    result = _capture_plans().compare_dirs(plan_dir)
+    assert result, f"no capture pairs in {plan_dir}"
+    assert {qid: diff for qid, diff in result.items() if diff != []} == {}
+
+
+def test_changed_operator_compares_different(tmp_path):
+    cp = _capture_plans()
+    src = PLAN_DIRS[0]
+    qid = next(
+        name[: -len("_after.txt")]
+        for name in sorted(os.listdir(src))
+        if name.endswith("_after.txt")
+        and "BroadcastHashJoin" in open(os.path.join(src, name)).read()
+    )
+    shutil.copy(os.path.join(src, f"{qid}_before.txt"), tmp_path)
+    with open(os.path.join(src, f"{qid}_after.txt")) as fh:
+        after = fh.read().replace("BroadcastHashJoin", "SortMergeJoin", 1)
+    (tmp_path / f"{qid}_after.txt").write_text(after)
+    diff = cp.compare_dirs(str(tmp_path))[qid]
+    assert any("SortMergeJoin" in line for line in diff)
+    assert cp.compare_main(str(tmp_path)) == 1

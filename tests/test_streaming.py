@@ -287,3 +287,119 @@ def test_multi_table_registry_versions_side_by_side(spark, sf_dir):
     assert out[out.tbl == "users"]["sum_qty"].isna().all()
     assert out[out.tbl == "orders"]["sum_qty"].notna().all()
     assert (out[out.tbl == "orders"]["schema_version"] == 2).all()
+
+
+# -- the change-log helpers of streaming/ops.py, on hand-built frames --
+
+_CDC_DDL = "sequence bigint, dml_type string, pk bigint, value double, ts_unix bigint"
+_MOR_DATA_DDL = (
+    "pk bigint, last_seq bigint, last_value double, last_ts_unix bigint, "
+    "epoch int"
+)
+
+
+def test_cdc_log_matches_the_when_chain_spelling(spark):
+    """`_cdc_log`'s CASE text gives the same dml_type as the F.when
+    chain it replaced, for every event_type including NULL."""
+    import datetime
+
+    from maxscale_cdc_spark.streaming.ops import _cdc_log
+
+    types = ["signup", "purchase", "view", "click", "error", "refund", None]
+    ts = datetime.datetime(2024, 1, 1)
+    ev = spark.createDataFrame(
+        [(i, ts, i, t, 1.0) for i, t in enumerate(types)],
+        "event_id bigint, ts timestamp, user_id bigint, event_type string, "
+        "value double",
+    )
+    when = (
+        F.when(F.col("event_type").isin("signup", "purchase"), F.lit("insert"))
+        .when(F.col("event_type") == "view", F.lit("update_before"))
+        .when(F.col("event_type") == "click", F.lit("update_after"))
+        .otherwise(F.lit("delete"))
+    )
+    got = dict(_cdc_log(ev).select("sequence", "dml_type").collect())
+    want = dict(ev.select("event_id", when).collect())
+    assert got == want
+    assert got[len(types) - 1] == "delete"  # NULL event_type
+
+
+def test_state_asof_touched_keys_latest_image(spark):
+    """Only keys touched in (lo, hi], each with its last image as of
+    `hi` — later events and untouched keys stay out."""
+    from maxscale_cdc_spark.streaming.ops import _seq_cuts, _state_asof
+
+    cdc = spark.createDataFrame(
+        [
+            (1, "insert", 40, 0.5, 50),
+            (2, "insert", 10, 1.0, 100),
+            (3, "insert", 20, 2.0, 200),
+            (4, "update_after", 10, 3.0, 300),
+            (5, "insert", 30, 4.0, 400),
+            (6, "update_after", 20, 5.0, 500),
+            (7, "delete", 10, 6.0, 600),
+        ],
+        _CDC_DDL,
+    )
+    assert _seq_cuts(cdc, 3) == [(0, 2), (2, 4), (4, 7)]
+    got = {tuple(r) for r in _state_asof(cdc, 3, 5).collect()}
+    assert got == {
+        (10, 4, "update_after", 3.0, 300),
+        (30, 5, "insert", 4.0, 400),
+    }
+
+
+def test_mor_reconcile_epoch_rule(spark):
+    """A delete in a later epoch hides an earlier data row; a row
+    written in the same epoch as its delete marker survives."""
+    from maxscale_cdc_spark.streaming.ops import _mor_reconcile
+
+    data = spark.createDataFrame(
+        [(1, 1, 1.0, 10, 1), (2, 2, 2.0, 20, 2), (3, 3, 3.0, 30, 1)],
+        _MOR_DATA_DDL,
+    )
+    dels = spark.createDataFrame(
+        [(1, 1), (1, 2), (2, 2), (3, 1)], "pk bigint, epoch int"
+    )
+    alive = sorted(r["pk"] for r in _mor_reconcile(data, dels).collect())
+    assert alive == [2, 3]
+
+
+def test_same_rows_is_multiset_equality(spark):
+    from maxscale_cdc_spark.streaming.ops import _same_rows
+
+    a = spark.createDataFrame([(1, "x"), (2, "y")], "k bigint, v string")
+    assert _same_rows(a, a.select("k", "v"))
+    assert not _same_rows(a, a.unionAll(a))
+    assert not _same_rows(a.unionAll(a), a)
+
+
+def test_mor_epoch_writer_is_replay_idempotent(spark, tmp_path):
+    """Writing the same epoch twice (a replayed micro-batch) leaves the
+    reconciled read unchanged — overwrite per epoch dir, no doubling."""
+    from maxscale_cdc_spark.streaming.ops import (
+        _final_image,
+        _mor_read,
+        _mor_reconcile,
+        _mor_write_epoch,
+    )
+
+    batch = spark.createDataFrame(
+        [
+            (1, "insert", 10, 1.0, 100),
+            (2, "update_after", 10, 2.0, 200),
+            (3, "insert", 20, 3.0, 300),
+            (4, "delete", 30, 4.0, 400),
+        ],
+        _CDC_DDL,
+    )
+    root = str(tmp_path / "mor")
+
+    def served():
+        return sorted(tuple(r) for r in _mor_reconcile(*_mor_read(spark, root)).collect())
+
+    _mor_write_epoch(_final_image(batch, "pk"), root, 0)
+    once = served()
+    assert once == [(10, 2, 2.0, 200), (20, 3, 3.0, 300)]
+    _mor_write_epoch(_final_image(batch, "pk"), root, 0)
+    assert served() == once
