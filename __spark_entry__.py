@@ -61,7 +61,12 @@ def entry(spark: SparkSession) -> DataFrame:
 # as the oracles' CASE text instead of a value-identical F.when chain):
 # returned plans identical modulo instance counters and tmp paths by
 # `tools/capture_plans.py compare`, 25 touched ids re-checked at
-# sf0.001 + sf0.01 (snk_*/MoR also sf0.1).
+# sf0.001 + sf0.01 (snk_*/MoR also sf0.1).  The LLM/retrieval/CDC
+# operators then moved onto the functions/ kernels (minhash_sig,
+# nearest_centroid, first_per, q30_mean_arrays): returned and raw
+# pre-checkpoint plans identical modulo instance counters and lambda
+# numbering, 25 touched ids re-checked at sf0.001 + sf0.01 (LLM and
+# retrieval ids also sf0.1).
 # Results are partition-count- and timing-invariant by the repo's
 # total-order/export discipline.
 #

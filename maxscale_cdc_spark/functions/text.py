@@ -38,10 +38,24 @@ def char_ngrams_md5_min(text: Column, n: int = 4) -> Column:
     )
 
 
-def minhash(shingle: Column, perm: int) -> Column:
-    """MinHash for permutation `perm`: min(md5(perm || ':' || shingle))
-    — aggregate with F.min after grouping."""
-    return F.md5(F.concat(F.lit(str(perm)), F.lit(":"), shingle))
+def minhash_sig(shs: Column | str, k: int) -> list[Column]:
+    """The k-permutation MinHash signature of a shingle-set ARRAY
+    column, as columns `m0..m{k-1}`: `m{j}` = min(md5('j:'||sh)) over
+    the set, per row (no explode, no shuffle).  The DuckDB mirror is
+    `list_aggregate(list_transform(shs, x -> md5('j:' || x)), 'min')`.
+
+    The permutation index j is bound through this closure, never as a
+    lambda parameter: a two-parameter `transform` lambda (`lambda s,
+    j=j: ...`) binds (element, array-index), so j would silently become
+    the index Column (the two-parameter-lambda gotcha)."""
+
+    def perm(j: int) -> Column:
+        pref = f"{j}:"
+        return F.array_min(
+            F.transform(shs, lambda s: F.md5(F.concat(F.lit(pref), s)))
+        ).alias(f"m{j}")
+
+    return [perm(j) for j in range(k)]
 
 
 SQL_WORDS = "string_split({col}, ' ')"

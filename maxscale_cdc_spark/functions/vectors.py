@@ -8,8 +8,10 @@ absorbs any sub-ulp accumulation-order difference between engines.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from maxscale_cdc_spark.functions.window import first_per
 
 
 def as_double(v: Column | str) -> Column:
@@ -45,26 +47,38 @@ def sql_cosine(a: str, b: str, dim: int = 64, decimals: int = 6) -> str:
     )
 
 
-def q30_mean_arrays(df, key: str, vec: str = "v", out: str = "cv"):
-    """Elementwise mean of double arrays per `key`, Q1.30 fixed-point
-    exact: quantize each element with floor(x·2³⁰) BEFORE summation
-    (power-of-two multiply never rounds; floor has no ties), sum as
-    longs (order-invariant), divide once.  This is the repo's core
-    cross-engine-exact prototype/centroid primitive — the DuckDB mirror
-    is the flat/m/cent CTE triple in llm._sql_kmeans_ctes and
-    llm_embed_outliers' oracle.  llm._kmeans_cells.update predates this
-    helper and keeps its own identical inline copy (its queries are
-    driver-green; see the demotion rule in __spark_entry__.py)."""
-    flat = df.select(key, F.posexplode(F.col(vec)).alias("dim0", "val")).select(
-        key,
+def nearest_centroid(df: DataFrame, cents: DataFrame) -> DataFrame:
+    """Assign each `(vec_id, v)` row to its most cosine-similar centroid
+    of `cents` `(cid, cv)`: one broadcast crossJoin (centroid tables are
+    KB-sized) and a first-per-`vec_id` window.  Returns `(vec_id, v,
+    cid)`; an exact cosine tie goes to the smallest `cid`, the total
+    order the oracles' `ORDER BY sim DESC, cid` mirrors."""
+    scored = df.crossJoin(F.broadcast(cents)).select(
+        "vec_id", "v", "cid", cosine(F.col("v"), F.col("cv")).alias("sim")
+    )
+    return first_per(scored, "vec_id", F.col("sim").desc(), "cid").select(
+        "vec_id", "v", "cid"
+    )
+
+
+def q30_mean_arrays(df: DataFrame, *keys: str) -> DataFrame:
+    """Elementwise mean of the double arrays `v` per `keys`, as `cv`,
+    Q1.30 fixed-point exact: quantize each element with floor(x·2³⁰)
+    BEFORE summation (power-of-two multiply never rounds; floor has no
+    ties), sum as longs (order-invariant), divide once.  This is the
+    repo's core cross-engine-exact prototype/centroid primitive — the
+    DuckDB mirror is the flat/m/cent CTE triple in
+    llm._sql_kmeans_ctes and llm_embed_outliers' oracle."""
+    flat = df.select(*keys, F.posexplode(F.col("v")).alias("dim0", "val")).select(
+        *keys,
         (F.col("dim0") + 1).alias("dim"),
         F.floor(F.col("val") * 1073741824.0).cast("long").alias("q30"),
     )
-    m = flat.groupBy(key, "dim").agg(
+    m = flat.groupBy(*keys, "dim").agg(
         (F.sum("q30").cast("double") / (F.count("*") * F.lit(1073741824.0))).alias("m")
     )
-    return m.groupBy(key).agg(
+    return m.groupBy(*keys).agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("dim", "m"))), lambda s: s["m"]
-        ).alias(out)
+        ).alias("cv")
     )

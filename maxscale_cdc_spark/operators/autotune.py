@@ -51,6 +51,7 @@ from maxscale_cdc_spark.functions.sample import (
     hash_sample,
     sql_hash_sample_expr,
 )
+from maxscale_cdc_spark.functions.text import minhash_sig
 from maxscale_cdc_spark.operators import banding
 from maxscale_cdc_spark.operators.banding import (
     chooser_prefix_sql,  # noqa: F401 — re-exported for family oracles
@@ -58,7 +59,6 @@ from maxscale_cdc_spark.operators.banding import (
 from maxscale_cdc_spark.operators.llm import (
     _JACCARD_MIN,
     _intra_class_pairs,
-    _mh_over_set,
     class_band_pairs,
     class_pair_jaccard,
     trigram_sets,
@@ -125,7 +125,7 @@ def trigram_classes16(
         "n_docs",
         "shs",
         F.size("shs").cast("long").alias("sz"),
-        *[_mh_over_set(F.col("shs"), j).alias(f"m{j}") for j in range(_K16)],
+        *minhash_sig("shs", _K16),
     )
     if stage:
         # Filtered (per-query) chains materialize EAGERLY: they are not

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from maxscale_cdc_spark.functions.window import first_per
 from maxscale_cdc_spark.registry import oracle_splice, register
 from maxscale_cdc_spark.sources.envelope import gtid_col
 from maxscale_cdc_spark.sources.schema_registry import decode_ddl
@@ -338,14 +339,15 @@ def cdc_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def latest_state(cdc: DataFrame) -> DataFrame:
     """Reusable CDC-apply over any envelope-shaped DataFrame."""
-    w = W.partitionBy("pk").orderBy(
+    last = first_per(
+        cdc,
+        "pk",
         F.col("domain").desc(),
         F.col("server_id").desc(),
         F.col("sequence").desc(),
         F.col("event_number").desc(),
     )
-    ranked = cdc.withColumn("rn", F.row_number().over(w))
-    return ranked.filter((F.col("rn") == 1) & (F.col("dml_type") != "delete")).select(
+    return last.filter(F.col("dml_type") != "delete").select(
         "pk",
         F.col("sequence").alias("last_seq"),
         F.col("value").alias("last_value"),
@@ -457,20 +459,16 @@ WHERE rn = 1 AND dml_type <> 'delete'
 def cdc_snapshot_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     cdc = cdc_view(spark, sf_dir)
     snap_events = cdc.filter(F.col("sequence") < _CUTOVER)
-    w = W.partitionBy("pk").orderBy(F.col("sequence").desc())
-    snapshot = (
-        snap_events.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("pk", "sequence", "dml_type", "value")
+    snapshot = first_per(snap_events, "pk", F.col("sequence").desc()).select(
+        "pk", "sequence", "dml_type", "value"
     )
     tail = cdc.filter(F.col("sequence") >= _CUTOVER).select(
         "pk", "sequence", "dml_type", "value"
     )
     merged = snapshot.unionByName(tail)
-    w2 = W.partitionBy("pk").orderBy(F.col("sequence").desc())
     return (
-        merged.withColumn("rn", F.row_number().over(w2))
-        .filter((F.col("rn") == 1) & (F.col("dml_type") != "delete"))
+        first_per(merged, "pk", F.col("sequence").desc())
+        .filter(F.col("dml_type") != "delete")
         .select(
             "pk",
             F.col("sequence").alias("last_seq"),
@@ -1175,10 +1173,9 @@ def cdc_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     value compare uses the repo's decimal discipline: equality over
     exact decimals, never raw-double equality."""
     cdc = cdc_view(spark, sf_dir)
-    w = W.partitionBy("pk").orderBy(F.col("sequence").desc())
     state = (
-        cdc.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("dml_type") != "delete"))
+        first_per(cdc, "pk", F.col("sequence").desc())
+        .filter(F.col("dml_type") != "delete")
         .select("pk", "value")
     )
     cust = table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
@@ -3107,10 +3104,9 @@ def cdc_replay_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("sequence") >= F.col("lo")) & (F.col("sequence") <= F.col("hi")),
     ).drop("lo", "hi")
     recovered = delivered.unionByName(replayed)
-    wpk = W.partitionBy("pk").orderBy(F.col("sequence").desc())
     return (
-        recovered.withColumn("rn", F.row_number().over(wpk))
-        .filter((F.col("rn") == 1) & (F.col("dml_type") != "delete"))
+        first_per(recovered, "pk", F.col("sequence").desc())
+        .filter(F.col("dml_type") != "delete")
         .select(
             "pk",
             F.col("sequence").alias("last_seq"),
@@ -3191,10 +3187,9 @@ def cdc_cascade_delete_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("dml_type"),
         F.col("user_id").alias("pk"),
     )
-    w = W.partitionBy("pk").orderBy(F.col("sequence").desc())
     deleted = (
-        cdc.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("dml_type") == "delete"))
+        first_per(cdc, "pk", F.col("sequence").desc())
+        .filter(F.col("dml_type") == "delete")
         .select("pk")
     )
     o = table(spark, sf_dir, "orders")
@@ -3294,10 +3289,9 @@ def cdc_replay_idempotence(spark: SparkSession, sf_dir: str) -> DataFrame:
     dup = cdc.unionByName(redeliver)
 
     def latest(df: DataFrame) -> DataFrame:
-        w = W.partitionBy("pk").orderBy(F.col("sequence").desc())
         return (
-            df.withColumn("rn", F.row_number().over(w))
-            .filter((F.col("rn") == 1) & (F.col("dml_type") != "delete"))
+            first_per(df, "pk", F.col("sequence").desc())
+            .filter(F.col("dml_type") != "delete")
             .select(
                 "pk",
                 F.col("sequence").alias("last_seq"),
@@ -3694,10 +3688,8 @@ def cdc_backfill_chunk_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_cov = int(key_chunks.count())
     if n_cov != n_src:
         raise RuntimeError(f"coverage hole: {n_cov} of {n_src} pks chunked")
-    w = W.partitionBy("pk").orderBy(F.col("sequence").desc())
-    state = (
-        tagged.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("dml_type") != "delete"))
+    state = first_per(tagged, "pk", F.col("sequence").desc()).filter(
+        F.col("dml_type") != "delete"
     )
     return state.select(
         "pk",

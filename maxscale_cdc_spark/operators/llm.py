@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from maxscale_cdc_spark.functions.text import (
     char_ngrams_md5_min,
+    minhash_sig,
     word_bigrams,
     word_trigrams,
     words,
@@ -36,9 +37,12 @@ from maxscale_cdc_spark.functions.vectors import (
     as_double,
     cosine,
     dot,
+    nearest_centroid,
     norm_sq,
+    q30_mean_arrays,
     sql_cosine,
 )
+from maxscale_cdc_spark.functions.window import first_per
 from maxscale_cdc_spark.operators import banding
 from maxscale_cdc_spark.registry import oracle_splice, register
 from maxscale_cdc_spark.session import (
@@ -169,17 +173,6 @@ WHERE CAST(n_common AS DOUBLE) / (sz_sum - n_common) >= {_JACCARD_MIN}
 # ---------------------------------------------------------------------------
 
 
-def _mh_over_set(shs: F.Column, j: int) -> F.Column:
-    """MinHash j over a shingle-set ARRAY column, per row: identical
-    values to min(md5('j:'||sh)) over the exploded set.  The permutation
-    index is bound via the enclosing scope — a two-parameter HOF lambda
-    would bind (element, array-index), the CLAUDE.md transform gotcha."""
-    pref = f"{j}:"
-    return F.array_min(
-        F.transform(shs, lambda s: F.md5(F.concat(F.lit(pref), s)))
-    )
-
-
 # Four queries consume the unfiltered staged lineage in one session
 # (llm_dedup_near / llm_dedup_horizon_profile / llm_lsh_tuning /
 # llm_dedup_threshold_curve) — cache it per (session, sf_dir), the
@@ -246,7 +239,7 @@ def shingle_classes(
         # chooser can pick splits a prefix of it, so ONE staged class
         # table serves the measured config AND the fixed-config knob
         # tables (which band the first 8)
-        *[_mh_over_set(F.col("shs"), j).alias(f"m{j}") for j in range(_K16)],
+        *minhash_sig("shs", _K16),
     )
     if stage:
         # eager for filtered (per-query, non-cached) chains — the
@@ -1003,38 +996,10 @@ def _kmeans_cells(
         F.col("vec_id").alias("cid"), as_double("embedding").alias("cv")
     )
 
-    def assign(cents_df: DataFrame) -> DataFrame:
-        scored = vecs.crossJoin(F.broadcast(cents_df)).select(
-            "vec_id", "v", "cid", cosine(F.col("v"), F.col("cv")).alias("sim")
-        )
-        w = W.partitionBy("vec_id").orderBy(F.col("sim").desc(), "cid")
-        return (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("vec_id", "v", "cid")
-        )
-
-    def update(assigned_df: DataFrame) -> DataFrame:
-        flat = assigned_df.select(
-            "cid", F.posexplode("v").alias("dim0", "val")
-        ).select(
-            "cid",
-            (F.col("dim0") + 1).alias("dim"),
-            F.floor(F.col("val") * 1073741824.0).cast("long").alias("q30"),
-        )
-        m = flat.groupBy("cid", "dim").agg(
-            (F.sum("q30").cast("double") / (F.count("*") * F.lit(1073741824.0))).alias("m")
-        )
-        return m.groupBy("cid").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "m"))), lambda s: s["m"]
-            ).alias("cv")
-        )
-
-    assigned = assign(cents)
+    assigned = nearest_centroid(vecs, cents)
     for _ in range(_KMEANS_ITERS):
-        cents = update(assigned)
-        assigned = assign(cents)
+        cents = q30_mean_arrays(assigned, "cid")
+        assigned = nearest_centroid(vecs, cents)
     return cents, assigned
 
 
@@ -2733,7 +2698,7 @@ def llm_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measured 6× footgun, CLAUDE.md rule 5)
     sigs = tset.select(
         "doc_id",
-        *[_mh_over_set(F.col("shs"), j).alias(f"m{j}") for j in range(_K16)],
+        *minhash_sig("shs", _K16),
     ).localCheckpoint(eager=False)
     bands = None
     for b in range(nb):
@@ -3749,16 +3714,7 @@ def llm_dedup_rep_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     info = comp.join(d.select("doc_id", "n_tok"), "doc_id").select(
         F.col("cluster_rep").alias("cid"), "doc_id", "n_tok"
     )
-    pick = (
-        info.withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy("cid").orderBy(F.col("n_tok").desc(), "doc_id")
-            ),
-        )
-        .filter(F.col("rn") == 1)
-        .select("doc_id")
-    )
+    pick = first_per(info, "cid", F.col("n_tok").desc(), "doc_id").select("doc_id")
     verd = (
         d.join(
             comp.select("doc_id", F.lit(True).alias("clustered")), "doc_id", "left"

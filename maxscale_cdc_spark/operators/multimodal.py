@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from maxscale_cdc_spark.functions.window import first_per
 from maxscale_cdc_spark.registry import register
 from maxscale_cdc_spark.tables import table
 
@@ -1348,22 +1349,19 @@ def mm_resolution_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(i, bw, bh) for i, (bw, bh) in enumerate(_MMRB_LADDER)],
         "idx long, bw long, bh long",
     )
-    wsnap = W.partitionBy("doc_id").orderBy(
-        F.abs(F.col("w") * F.col("bh") - F.col("h") * F.col("bw")), "idx"
-    )
-    assigned = (
-        dims.crossJoin(F.broadcast(ladder))
-        .withColumn("rn", F.row_number().over(wsnap))
-        .filter(F.col("rn") == 1)
-        .select(
-            "doc_id",
-            "bw",
-            "bh",
-            (
-                F.expr(f"div(w + {_MMRB_PATCH - 1}, {_MMRB_PATCH})")
-                * F.expr(f"div(h + {_MMRB_PATCH - 1}, {_MMRB_PATCH})")
-            ).alias("patches"),
-        )
+    assigned = first_per(
+        dims.crossJoin(F.broadcast(ladder)),
+        "doc_id",
+        F.abs(F.col("w") * F.col("bh") - F.col("h") * F.col("bw")),
+        "idx",
+    ).select(
+        "doc_id",
+        "bw",
+        "bh",
+        (
+            F.expr(f"div(w + {_MMRB_PATCH - 1}, {_MMRB_PATCH})")
+            * F.expr(f"div(h + {_MMRB_PATCH - 1}, {_MMRB_PATCH})")
+        ).alias("patches"),
     )
     wpack = (
         W.partitionBy("bw", "bh")
@@ -1448,22 +1446,17 @@ def mm_tiling_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("height").cast("long").alias("h"),
     )
     grids = spark.createDataFrame(_TILE_GRIDS, "c long, r long")
-    scored = dims.crossJoin(F.broadcast(grids)).withColumn(
-        "rn",
-        F.row_number().over(
-            W.partitionBy("doc_id").orderBy(
-                (
-                    F.abs(F.col("c") * F.col("h") - F.col("r") * F.col("w")).cast(
-                        "double"
-                    )
-                    / F.col("r")
-                ),
-                (F.col("c") * F.col("r")).desc(),
-                "c",
-            )
+    best = first_per(
+        dims.crossJoin(F.broadcast(grids)),
+        "doc_id",
+        (
+            F.abs(F.col("c") * F.col("h") - F.col("r") * F.col("w")).cast("double")
+            / F.col("r")
         ),
+        (F.col("c") * F.col("r")).desc(),
+        "c",
     )
-    return scored.filter(F.col("rn") == 1).select(
+    return best.select(
         "doc_id",
         F.col("w").alias("width"),
         F.col("h").alias("height"),

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from maxscale_cdc_spark.functions.text import word_trigrams, words
+from maxscale_cdc_spark.functions.text import minhash_sig, word_trigrams, words
 from maxscale_cdc_spark.registry import register
 from maxscale_cdc_spark.tables import table, wide_table
 
@@ -431,21 +431,13 @@ def _minhash_accuracy_frame(spark: SparkSession, sf_dir: str, stage: bool) -> Da
             )
         ).alias("shs"),
     )
-    def _mh(j: int):
-        # NB: a two-parameter lambda (`lambda x, j=j: ...`) would be
-        # treated by transform() as (element, index) and silently rebind
-        # j to the index Column — bind the permutation via this closure.
-        return F.array_min(
-            F.transform(F.col("shs"), lambda x: F.md5(F.concat(F.lit(f"{j}:"), x)))
-        ).alias(f"m{j}")
-
     # the signature lineage is consumed FOUR times (two band selects in
     # the union, then both sides of the candidate join-back) — pin it
     # once so the 8×|shingles| MD5 pass runs once, not four times
     # (A/B at sf0.1: 28.1 s → 2.1 s min-of-3).  stage=False keeps the
     # full lineage visible for plan gates (a checkpoint hides upstream
     # operators behind a LogicalRDD scan).
-    sig = docw.select("doc_id", "shs", *[_mh(j) for j in range(_MH_K)])
+    sig = docw.select("doc_id", "shs", *minhash_sig("shs", _MH_K))
     if stage:
         sig = sig.localCheckpoint(eager=False)
     bands = None
@@ -579,17 +571,11 @@ def llm_minhash_bbit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("shs"),
     )
 
-    def _mh(j: int):
-        # closure-bound permutation (the 2-param-HOF-lambda gotcha)
-        return F.array_min(
-            F.transform(F.col("shs"), lambda x: F.md5(F.concat(F.lit(f"{j}:"), x)))
-        ).alias(f"m{j}")
-
     # signature lineage consumed four times (two band selects + both
     # join-back sides) — staged once, the llm_minhash_accuracy rule
-    sig = docw.select(
-        "doc_id", "shs", *[_mh(j) for j in range(_MH_K)]
-    ).localCheckpoint(eager=False)
+    sig = docw.select("doc_id", "shs", *minhash_sig("shs", _MH_K)).localCheckpoint(
+        eager=False
+    )
     bands = None
     for b in range(2):
         cols = [f"m{j}" for j in range(b * 4, b * 4 + 4)]

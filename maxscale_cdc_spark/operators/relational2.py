@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from maxscale_cdc_spark.functions.numeric import dec
+from maxscale_cdc_spark.functions.window import first_per
 from maxscale_cdc_spark.registry import register
 from maxscale_cdc_spark.tables import table
 
@@ -321,15 +322,10 @@ def rel_agg_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = li.groupBy("l_returnflag", F.col("l_quantity").alias("v")).agg(
         F.count("*").alias("cnt")
     )
-    w = W.partitionBy("l_returnflag").orderBy(F.col("cnt").desc(), "v")
-    return (
-        counts.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "l_returnflag",
-            F.col("v").alias("mode_qty"),
-            F.col("cnt").alias("mode_count"),
-        )
+    return first_per(counts, "l_returnflag", F.col("cnt").desc(), "v").select(
+        "l_returnflag",
+        F.col("v").alias("mode_qty"),
+        F.col("cnt").alias("mode_count"),
     )
 
 

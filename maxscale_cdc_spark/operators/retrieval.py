@@ -35,10 +35,12 @@ from maxscale_cdc_spark.functions.vectors import (
     as_double,
     cosine,
     dot,
+    nearest_centroid,
     norm_sq,
     q30_mean_arrays,
     sql_cosine,
 )
+from maxscale_cdc_spark.functions.window import first_per
 from maxscale_cdc_spark.operators.llm import _KMEANS_ITERS, _sql_kmeans_ctes
 from maxscale_cdc_spark.registry import register
 from maxscale_cdc_spark.tables import table, wide_table
@@ -235,11 +237,8 @@ def _sd_kmeans_cells(e: DataFrame) -> DataFrame:
         scored = vecs.crossJoin(F.broadcast(cents_df)).select(
             "vec_id", "v", "nsq", "cid", sim.alias("sim")
         )
-        w = W.partitionBy("vec_id").orderBy(F.col("sim").desc(), "cid")
-        return (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("vec_id", "v", "nsq", "cid")
+        return first_per(scored, "vec_id", F.col("sim").desc(), "cid").select(
+            "vec_id", "v", "nsq", "cid"
         )
 
     def update(assigned_df: DataFrame) -> DataFrame:
@@ -1008,16 +1007,21 @@ def _ivf_batch_state(spark: SparkSession, sf_dir: str):
     newv = e.filter(F.col("vec_id") > cut).select(
         "vec_id", as_double("embedding").alias("v")
     )
-    scored = newv.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "v", "cid", cosine(F.col("v"), F.col("cv")).alias("sim")
+    return cents, assigned, nearest_centroid(newv, cents)
+
+
+def _nearest_other_cell(cents: DataFrame) -> DataFrame:
+    """(cid, other): each cell's most cosine-similar OTHER centroid, ties
+    to the smallest `other` — the merge target of the IVF maintenance
+    plans."""
+    a = cents.select("cid", "cv")
+    b = cents.select(F.col("cid").alias("other"), F.col("cv").alias("cv_b"))
+    pair = a.join(F.broadcast(b), F.col("cid") != F.col("other")).select(
+        "cid", "other", cosine(F.col("cv"), F.col("cv_b")).alias("sim")
     )
-    w = W.partitionBy("vec_id").orderBy(F.col("sim").desc(), "cid")
-    nassign = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "v", "cid")
+    return first_per(pair, "cid", F.col("sim").desc(), "other").select(
+        "cid", F.col("other").cast("long").alias("other")
     )
-    return cents, assigned, nassign
 
 
 def _ivf_cells(assigned: DataFrame, nassign: DataFrame) -> DataFrame:
@@ -1151,17 +1155,7 @@ def llm_ivf_rebalance_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("n_seed") + F.col("n_new")).cast("long").alias("n"),
         F.count("*").cast("long").alias("k"),
     )
-    a = cents.select(F.col("cid"), F.col("cv"))
-    b = cents.select(F.col("cid").alias("other"), F.col("cv").alias("cv_b"))
-    pair = a.join(F.broadcast(b), F.col("cid") != F.col("other")).select(
-        "cid", "other", cosine(F.col("cv"), F.col("cv_b")).alias("sim")
-    )
-    w = W.partitionBy("cid").orderBy(F.col("sim").desc(), "other")
-    nearest = (
-        pair.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("cid", F.col("other").cast("long").alias("other"))
-    )
+    nearest = _nearest_other_cell(cents)
     n_total = F.col("n_seed") + F.col("n_new")
     out = cells.crossJoin(F.broadcast(tot)).join(
         F.broadcast(nearest), "cid", "left"
@@ -1363,34 +1357,14 @@ def _split_cells_lloyd(sm: DataFrame) -> DataFrame:
             "cid", "vec_id", "v", "sub",
             cosine(F.col("v"), F.col("cv")).alias("sim"),
         )
-        w = W.partitionBy("cid", "vec_id").orderBy(F.col("sim").desc(), "sub")
-        return (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("cid", "vec_id", "v", "sub")
-        )
-
-    def update(a: DataFrame) -> DataFrame:
-        flat = a.select(
-            "cid", "sub", F.posexplode("v").alias("dim0", "val")
-        ).select(
-            "cid", "sub",
-            (F.col("dim0") + 1).alias("dim"),
-            F.floor(F.col("val") * 1073741824.0).cast("long").alias("q30"),
-        )
-        m = flat.groupBy("cid", "sub", "dim").agg(
-            (F.sum("q30").cast("double") / (F.count("*") * F.lit(1073741824.0))).alias("m")
-        )
-        return m.groupBy("cid", "sub").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "m"))), lambda s: s["m"]
-            ).alias("cv")
-        )
+        return first_per(
+            scored, ["cid", "vec_id"], F.col("sim").desc(), "sub"
+        ).select("cid", "vec_id", "v", "sub")
 
     cents = seeds
     a = assign(cents)
     for _ in range(_SPLIT_ITERS):
-        cents = update(a)
+        cents = q30_mean_arrays(a, "cid", "sub")
         a = assign(cents)
     return cents
 
@@ -1420,24 +1394,12 @@ def llm_ivf_rebalance_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.agg(F.expr("div(max(vec_id) * 4, 5)").alias("c")).collect()[0]["c"]
     )
     vecs = e.select("vec_id", as_double("embedding").alias("v"))
-
-    def bassign(df: DataFrame) -> DataFrame:
-        scored = df.crossJoin(F.broadcast(cents)).select(
-            "vec_id", "v", "cid", cosine(F.col("v"), F.col("cv")).alias("sim")
-        )
-        w = W.partitionBy("vec_id").orderBy(F.col("sim").desc(), "cid")
-        return (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("vec_id", "v", "cid")
-        )
-
-    assigned = bassign(vecs.filter(F.col("vec_id") <= cut)).localCheckpoint(
-        eager=True
-    )
-    nassign = bassign(vecs.filter(F.col("vec_id") > cut)).localCheckpoint(
-        eager=True
-    )
+    assigned = nearest_centroid(
+        vecs.filter(F.col("vec_id") <= cut), cents
+    ).localCheckpoint(eager=True)
+    nassign = nearest_centroid(
+        vecs.filter(F.col("vec_id") > cut), cents
+    ).localCheckpoint(eager=True)
     cells = _ivf_cells(assigned, nassign)
     tot = cells.agg(
         F.sum(F.col("n_seed") + F.col("n_new")).cast("long").alias("n"),
@@ -1484,11 +1446,8 @@ def llm_ivf_rebalance_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", "cid_out", cosine(F.col("v"), F.col("cv")).alias("sim")
         )
     )
-    wp = W.partitionBy("vec_id").orderBy(F.col("sim").desc(), "cid_out")
-    post = (
-        post.withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cid_out")
+    post = first_per(post, "vec_id", F.col("sim").desc(), "cid_out").select(
+        "vec_id", "cid_out"
     )
     members = post.groupBy("cid_out").agg(
         F.count("*").cast("long").alias("n_members")
@@ -1726,17 +1685,7 @@ def llm_ivf_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_after").cast("long").alias("n"),
         F.count("*").cast("long").alias("k"),
     )
-    a = cents.select("cid", "cv")
-    b = cents.select(F.col("cid").alias("other"), F.col("cv").alias("cv_b"))
-    pair = a.join(F.broadcast(b), F.col("cid") != F.col("other")).select(
-        "cid", "other", cosine(F.col("cv"), F.col("cv_b")).alias("sim")
-    )
-    wn = W.partitionBy("cid").orderBy(F.col("sim").desc(), "other")
-    nearest = (
-        pair.withColumn("rn", F.row_number().over(wn))
-        .filter(F.col("rn") == 1)
-        .select("cid", F.col("other").cast("long").alias("other"))
-    )
+    nearest = _nearest_other_cell(cents)
     merge_pred = 4 * F.col("n_after") * F.col("k") < F.col("n")
     return (
         cells.crossJoin(F.broadcast(tot))
@@ -1897,10 +1846,8 @@ def llm_ivf_forget_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cid",
         cosine(F.col("v"), F.col("cv")).alias("sim"),
     )
-    wr = W.partitionBy("vec_id").orderBy(F.col("sim").desc(), "cid")
     reass = (
-        scored.withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") == 1)
+        first_per(scored, "vec_id", F.col("sim").desc(), "cid")
         .select("vec_id", "pre_cid", "cid")
         .localCheckpoint(eager=True)
     )
@@ -2085,15 +2032,7 @@ def llm_ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # assign(final cents); CLAUDE.md rule 5: the chain was otherwise
     # re-run by qcells and cand separately)
     cents, _ = kmeans_cells_cached(spark, sf_dir)  # staged by the cache
-    scored0 = vecs.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "v", "cid", cosine(F.col("v"), F.col("cv")).alias("sim")
-    )
-    w0 = W.partitionBy("vec_id").orderBy(F.col("sim").desc(), "cid")
-    assigned = (
-        scored0.withColumn("rn", F.row_number().over(w0))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "v", "cid")
-    )
+    assigned = nearest_centroid(vecs, cents)
     q = vecs.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
     qcells = (
         cents.crossJoin(F.broadcast(q))
@@ -2345,15 +2284,7 @@ def llm_ann_join_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         eager=False
     )
     cents, _ = kmeans_cells_cached(spark, sf_dir)  # staged by the cache
-    scored0 = vecs.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "v", "cid", cosine(F.col("v"), F.col("cv")).alias("sim")
-    )
-    w0 = W.partitionBy("vec_id").orderBy(F.col("sim").desc(), "cid")
-    assigned = (
-        scored0.withColumn("rn", F.row_number().over(w0))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "v", "cid")
-    )
+    assigned = nearest_centroid(vecs, cents)
     qset = vecs.filter(F.col("vec_id") % _ANNJ_QMOD == 0).select(
         F.col("vec_id").alias("qid"), F.col("v").alias("qv")
     )
@@ -2997,27 +2928,16 @@ def llm_drift_reindex_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents, _, cut = kmeans_cells_cached_cut(spark, sf_dir)
     vecs = e.select("vec_id", as_double("embedding").alias("v"))
 
-    def bassign(df: DataFrame) -> DataFrame:
-        scored = df.crossJoin(F.broadcast(cents)).select(
-            "vec_id", "v", "cid", cosine(F.col("v"), F.col("cv")).alias("sim")
-        )
-        w = W.partitionBy("vec_id").orderBy(F.col("sim").desc(), "cid")
-        return (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("vec_id", "v", "cid")
-        )
-
     # eager: assigned/nassign feed the displacement aggs, allv's four
     # consumers (rm / post / qs / brute) and the recall joins — lazy,
     # those AQE stages raced to materialize the same parent (the r15
     # anti-convoy rule, see autotune.trigram_classes16)
-    assigned = bassign(vecs.filter(F.col("vec_id") <= cut)).localCheckpoint(
-        eager=True
-    )
-    nassign = bassign(vecs.filter(F.col("vec_id") > cut)).localCheckpoint(
-        eager=True
-    )
+    assigned = nearest_centroid(
+        vecs.filter(F.col("vec_id") <= cut), cents
+    ).localCheckpoint(eager=True)
+    nassign = nearest_centroid(
+        vecs.filter(F.col("vec_id") > cut), cents
+    ).localCheckpoint(eager=True)
 
     # per-cell displacement (the llm_ivf_incremental integers)
     def flat(df: DataFrame) -> DataFrame:
@@ -3109,21 +3029,7 @@ def llm_drift_reindex_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(plan.filter(F.col("action") == "recluster").select("cid")),
         "cid",
     ).select("vec_id", "v", "cid")
-    rflat = rm.select("cid", F.posexplode("v").alias("dim0", "val")).select(
-        "cid",
-        (F.col("dim0") + 1).alias("dim"),
-        F.floor(F.col("val") * 1073741824.0).cast("long").alias("q30"),
-    )
-    rmean = rflat.groupBy("cid", "dim").agg(
-        (F.sum("q30").cast("double") / (F.count("*") * F.lit(1073741824.0))).alias(
-            "m"
-        )
-    )
-    rcent = rmean.groupBy("cid").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("dim", "m"))), lambda s: s["m"]
-        ).alias("cv")
-    )
+    rcent = q30_mean_arrays(rm, "cid")
     newcent = (
         cents.join(F.broadcast(plan.filter(F.col("action") != "recluster")), "cid")
         .select(F.col("cid").cast("long").alias("cid"), "action", "cv")
@@ -3143,10 +3049,8 @@ def llm_drift_reindex_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(newcent.select("cid", "cv")))
         .select("vec_id", "cid", cosine(F.col("v"), F.col("cv")).alias("sim"))
     )
-    wp = W.partitionBy("vec_id").orderBy(F.col("sim").desc(), "cid")
     post = (
-        post.withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") == 1)
+        first_per(post, "vec_id", F.col("sim").desc(), "cid")
         .select("vec_id", "cid")
         # eager: consumed by members + both recall joins (anti-convoy)
         .localCheckpoint(eager=True)
@@ -3759,15 +3663,8 @@ def llm_centroid_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = test.crossJoin(F.broadcast(cent)).select(
         "vec_id", "tlabel", F.col("label").alias("pred"), cos.alias("cos")
     )
-    best = (
-        scored.withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy("vec_id").orderBy(F.col("cos").desc(), "pred")
-            ),
-        )
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "tlabel", "pred")
+    best = first_per(scored, "vec_id", F.col("cos").desc(), "pred").select(
+        "vec_id", "tlabel", "pred"
     )
     tot = best.groupBy("tlabel").agg(F.count("*").cast("long").alias("n_label"))
     return (

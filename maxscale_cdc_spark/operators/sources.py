@@ -365,8 +365,7 @@ def snk_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections import defaultdict
     from functools import reduce
 
-    from pyspark.sql import Window as W
-
+    from maxscale_cdc_spark.functions.window import first_per
     from maxscale_cdc_spark.streaming.runners import (
         read_stream,
         run_bounded,
@@ -381,10 +380,9 @@ def snk_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     gen_of: dict[int, str] = {}  # bucket -> generation dir holding its state
 
     def merge(batch_df: DataFrame, epoch_id: int) -> None:
-        w = W.partitionBy("user_id").orderBy(F.col("event_id").desc())
+        order = F.col("event_id").desc()
         latest = (
-            batch_df.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
+            first_per(batch_df, "user_id", order)
             .select("user_id", "event_id", "value", "event_type")
             .withColumn("b", F.pmod(F.hash("user_id"), F.lit(n_buckets)))
         )
@@ -401,11 +399,7 @@ def snk_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             for g, bs in by_gen.items()
         ]
         merged = reduce(lambda a, x: a.unionByName(x), sides)
-        merged = (
-            merged.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
+        merged = first_per(merged, "user_id", order)
         gen_dir = os.path.join(root, f"gen_{epoch_id}")
         merged.write.mode("overwrite").partitionBy("b").parquet(gen_dir)
         for b in touched:

@@ -24,6 +24,9 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from maxscale_cdc_spark.functions.numeric import dec
+from maxscale_cdc_spark.functions.text import minhash_sig
+from maxscale_cdc_spark.functions.vectors import nearest_centroid, q30_mean_arrays
+from maxscale_cdc_spark.functions.window import first_per
 from maxscale_cdc_spark.operators.cdc import _DML_CASE_SQL
 from maxscale_cdc_spark.registry import oracle_splice, register
 from maxscale_cdc_spark.streaming.runners import (
@@ -881,12 +884,7 @@ def _live_upsert_state(sink: ManifestedUpsertSink) -> DataFrame:
 def _final_image(df: DataFrame, *keys: str) -> DataFrame:
     """The last row (highest sequence) per `keys`: a batch's final
     image per pk, or per (pk, epoch) over an epoch-tagged log."""
-    w = W.partitionBy(*keys).orderBy(F.col("sequence").desc())
-    return (
-        df.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
+    return first_per(df, keys, F.col("sequence").desc())
 
 
 def _live_images(images: DataFrame, *extra: str) -> DataFrame:
@@ -1579,16 +1577,6 @@ def _nearwin_result(
     d = wide_table(spark, sf_dir, "documents")
     base_ts = "timestamp'2024-01-01 00:00:00'"
     shs = F.array_distinct(word_bigrams(words("text")))
-    def _mh(j):
-        # single-param lambda via enclosing closure: a `lambda s, j=j`
-        # would be a TWO-param HOF lambda, which Spark binds as
-        # (element, array-index) — the CLAUDE.md transform gotcha.
-        return F.array_min(
-            F.transform(
-                F.col("shs"), lambda s: F.md5(F.concat(F.lit(f"{j}:"), s))
-            )
-        ).alias(f"m{j}")
-
     sig = d.select(
         "doc_id",
         # doc_id % 2^20: keeps the synthetic clock inside the harness's
@@ -1599,7 +1587,7 @@ def _nearwin_result(
         # str_ivf_assign_stream precedent, CLAUDE.md rule 4)
         F.expr(f"{base_ts} + make_dt_interval(0, 0, doc_id % 1048576, 0)").alias("ts"),
         shs.alias("shs"),
-    ).select("doc_id", "ts", *[_mh(j) for j in range(K16)])
+    ).select("doc_id", "ts", *minhash_sig("shs", K16))
     bands = sig.select(
         "doc_id",
         "ts",
@@ -1731,22 +1719,13 @@ def _nearwin_prefiltered_result(
     base_ts = "timestamp'2024-01-01 00:00:00'"
     shs = F.array_distinct(word_bigrams(words("text")))
 
-    def _mh(j):
-        # single-param lambda via enclosing closure (the CLAUDE.md
-        # two-param-HOF-lambda gotcha)
-        return F.array_min(
-            F.transform(
-                F.col("shs"), lambda s: F.md5(F.concat(F.lit(f"{j}:"), s))
-            )
-        ).alias(f"m{j}")
-
     sig = d.select(
         "doc_id",
         # doc_id % 2^20: the nanosecond-range clock cap (see
         # _nearwin_result; no-op at oracle-checked scales)
         F.expr(f"{base_ts} + make_dt_interval(0, 0, doc_id % 1048576, 0)").alias("ts"),
         shs.alias("shs"),
-    ).select("doc_id", "ts", *[_mh(j) for j in range(K16)])
+    ).select("doc_id", "ts", *minhash_sig("shs", K16))
     # at-least-once delivery: identical payload, identical event time
     staged = stage_as_stream(
         sig.unionAll(sig), cache_key=f"nearwin2x:{sf_dir}"
@@ -2496,25 +2475,11 @@ def str_ivf_swap_splice(spark: SparkSession, sf_dir: str) -> DataFrame:
     if _cut != cut:  # same expr both reads; survives python -O
         raise RuntimeError(f"cut drift: {_cut} != {cut}")
     vecs = e.select("vec_id", as_double("embedding").alias("v"))
-
-    def bassign(df: DataFrame) -> DataFrame:
-        scored = df.crossJoin(F.broadcast(cents)).select(
-            "vec_id", "v", "cid", cosine(F.col("v"), F.col("cv")).alias("sim")
-        )
-        w = F.row_number().over(
-            W.partitionBy("vec_id").orderBy(F.col("sim").desc(), "cid")
-        )
-        return (
-            scored.withColumn("rn", w)
-            .filter(F.col("rn") == 1)
-            .select("vec_id", "v", "cid")
-        )
-
-    assigned = bassign(vecs.filter(F.col("vec_id") <= cut)).localCheckpoint(
-        eager=False
-    )
-    npre = bassign(
-        vecs.filter((F.col("vec_id") > cut) & (F.col("vec_id") <= swap))
+    assigned = nearest_centroid(
+        vecs.filter(F.col("vec_id") <= cut), cents
+    ).localCheckpoint(eager=False)
+    npre = nearest_centroid(
+        vecs.filter((F.col("vec_id") > cut) & (F.col("vec_id") <= swap)), cents
     ).localCheckpoint(eager=False)
     # surgery over the swap-time state (seed + pre-swap arrivals)
     cells = _ivf_cells(assigned, npre)
@@ -3456,25 +3421,11 @@ def str_drift_swap_splice(spark: SparkSession, sf_dir: str) -> DataFrame:
     if _cut != cut:  # same expr both reads; survives python -O
         raise RuntimeError(f"cut drift: {_cut} != {cut}")
     vecs = e.select("vec_id", as_double("embedding").alias("v"))
-
-    def bassign(df: DataFrame) -> DataFrame:
-        scored = df.crossJoin(F.broadcast(cents)).select(
-            "vec_id", "v", "cid", cosine(F.col("v"), F.col("cv")).alias("sim")
-        )
-        w = F.row_number().over(
-            W.partitionBy("vec_id").orderBy(F.col("sim").desc(), "cid")
-        )
-        return (
-            scored.withColumn("rn", w)
-            .filter(F.col("rn") == 1)
-            .select("vec_id", "v", "cid")
-        )
-
-    assigned = bassign(vecs.filter(F.col("vec_id") <= cut)).localCheckpoint(
-        eager=False
-    )
-    npre = bassign(
-        vecs.filter((F.col("vec_id") > cut) & (F.col("vec_id") <= swap))
+    assigned = nearest_centroid(
+        vecs.filter(F.col("vec_id") <= cut), cents
+    ).localCheckpoint(eager=False)
+    npre = nearest_centroid(
+        vecs.filter((F.col("vec_id") > cut) & (F.col("vec_id") <= swap)), cents
     ).localCheckpoint(eager=False)
 
     def flat(df: DataFrame) -> DataFrame:
@@ -3566,21 +3517,7 @@ def str_drift_swap_splice(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(plan.filter(F.col("action") == "recluster").select("cid")),
         "cid",
     ).select("vec_id", "v", "cid")
-    rflat = rm.select("cid", F.posexplode("v").alias("dim0", "val")).select(
-        "cid",
-        (F.col("dim0") + 1).alias("dim"),
-        F.floor(F.col("val") * 1073741824.0).cast("long").alias("q30"),
-    )
-    rmean = rflat.groupBy("cid", "dim").agg(
-        (F.sum("q30").cast("double") / (F.count("*") * F.lit(1073741824.0))).alias(
-            "m"
-        )
-    )
-    rcent = rmean.groupBy("cid").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("dim", "m"))), lambda s: s["m"]
-        ).alias("cv")
-    )
+    rcent = q30_mean_arrays(rm, "cid")
     newcent = (
         cents.join(F.broadcast(plan.filter(F.col("action") != "recluster")), "cid")
         .select(F.col("cid").cast("long").alias("cell"), "cv")
@@ -3744,15 +3681,6 @@ def str_banding_swap_splice(spark: SparkSession, sf_dir: str) -> DataFrame:
     base_ts = "timestamp'2024-01-01 00:00:00'"
     shs = F.array_distinct(word_bigrams(words("text")))
 
-    def _mh(j):
-        # single-param lambda via enclosing closure (the CLAUDE.md
-        # two-param-HOF-lambda gotcha)
-        return F.array_min(
-            F.transform(
-                F.col("shs"), lambda x: F.md5(F.concat(F.lit(f"{j}:"), x))
-            )
-        ).alias(f"m{j}")
-
     sig = (
         d.select(
             "doc_id",
@@ -3762,7 +3690,7 @@ def str_banding_swap_splice(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("ts"),
             shs.alias("shs"),
         )
-        .select("doc_id", "ts", *[_mh(j) for j in range(K16)])
+        .select("doc_id", "ts", *minhash_sig("shs", K16))
         .select(
             "doc_id",
             "ts",
@@ -5851,10 +5779,7 @@ def str_two_sink_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     log = spark.read.option("basePath", log_dir).parquet(log_dir)
     from_log = _live_images(_final_image(log, "pk"))
     st = spark.read.option("basePath", state_dir).parquet(state_dir)
-    wst = W.partitionBy("pk").orderBy(F.col("epoch").desc())
-    from_state = _live_images(
-        st.withColumn("rn", F.row_number().over(wst)).filter(F.col("rn") == 1)
-    )
+    from_state = _live_images(first_per(st, "pk", F.col("epoch").desc()))
     if not _same_rows(from_log, from_state):
         raise RuntimeError("fan-out sinks diverged after torn replay")
     return from_log.select(

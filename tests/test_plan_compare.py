@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import importlib.util
 import os
+import re
 import shutil
 
 import pytest
@@ -46,4 +47,43 @@ def test_changed_operator_compares_different(tmp_path):
     (tmp_path / f"{qid}_after.txt").write_text(after)
     diff = cp.compare_dirs(str(tmp_path))[qid]
     assert any("SortMergeJoin" in line for line in diff)
+    assert cp.compare_main(str(tmp_path)) == 1
+
+
+def _lambda_pair(tmp_path, edit):
+    """A committed capture with HOF lambdas as `before`, and `edit` of it
+    with every lambda variable renumbered (as a second JVM session
+    numbers them) as `after`; returns (module, qid)."""
+    cp = _capture_plans()
+    src = PLAN_DIRS[0]
+    qid = next(
+        name[: -len("_before.txt")]
+        for name in sorted(os.listdir(src))
+        if name.endswith("_before.txt")
+        and "lambda y_" in open(os.path.join(src, name)).read()
+    )
+    shutil.copy(os.path.join(src, f"{qid}_before.txt"), tmp_path)
+    with open(os.path.join(src, f"{qid}_before.txt")) as fh:
+        before = fh.read()
+    after = re.sub(
+        r"lambda ([xyz])_(\d+)",
+        lambda m: f"lambda {m.group(1)}_{int(m.group(2)) + 8}",
+        edit(before),
+    )
+    assert after != before
+    (tmp_path / f"{qid}_after.txt").write_text(after)
+    return cp, qid
+
+
+def test_lambda_counters_compare_identical(tmp_path):
+    cp, qid = _lambda_pair(tmp_path, lambda text: text)
+    assert cp.compare_dirs(str(tmp_path))[qid] == []
+    assert cp.compare_main(str(tmp_path)) == 0
+
+
+def test_changed_lambda_body_compares_different(tmp_path):
+    body = re.compile(r"\((lambda x_\d+#\d+L?) \* (lambda y_\d+#\d+L?)\)")
+    cp, qid = _lambda_pair(tmp_path, lambda text: body.sub(r"(\1 + \2)", text, 1))
+    diff = cp.compare_dirs(str(tmp_path))[qid]
+    assert any(line.startswith("+") and " + lambda y_N" in line for line in diff)
     assert cp.compare_main(str(tmp_path)) == 1

@@ -15,9 +15,10 @@ the bench warmup, so the plan reflects the bench path.
 `compare` pairs every `<id>_before.txt` in `before_dir` with
 `<id>_after.txt` in `after_dir` (default: the same dir), diffs them
 after normalizing the per-instance counters (expression ids `#12L`,
-`RDD[34]`, `plan_id=5`) and `/tmp/...` paths, prints one line per id
-(plus the diff when they differ) and exits 1 if any pair differs or an
-after capture is missing.
+`RDD[34]`, `plan_id=5`, the per-JVM numbering of higher-order-function
+lambda variables `lambda x_175`) and `/tmp/...` paths, prints one line
+per id (plus the diff when they differ) and exits 1 if any pair
+differs or an after capture is missing.
 """
 
 from __future__ import annotations
@@ -33,6 +34,7 @@ _COUNTERS = (
     (re.compile(r"#\d+L?"), "#N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"lambda ([xyz])_\d+"), r"lambda \1_N"),
     (re.compile(r"/tmp/[^\s,\]]*"), "/tmp/..."),
 )
 
