@@ -66,7 +66,12 @@ def entry(spark: SparkSession) -> DataFrame:
 # nearest_centroid, first_per, q30_mean_arrays): returned and raw
 # pre-checkpoint plans identical modulo instance counters and lambda
 # numbering, 25 touched ids re-checked at sf0.001 + sf0.01 (LLM and
-# retrieval ids also sf0.1).
+# retrieval ids also sf0.1).  The CDC wire lanes then moved onto one
+# codec each (Avro/protobuf encode+decode kernels, one JSON wire line,
+# one atomic landing, one envelope spec): returned plans identical by
+# `tools/capture_plans.py compare` at sf0.1 and every fixture spool's
+# records identical at sf0.01, 18 touched ids re-checked at sf0.001 +
+# sf0.01 + sf0.1.
 # Results are partition-count- and timing-invariant by the repo's
 # total-order/export discipline.
 #

@@ -11,16 +11,36 @@ from __future__ import annotations
 import os
 from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from maxscale_cdc_spark.operators.cdc import CDC_SQL, cdc_view
 from maxscale_cdc_spark.registry import register
+from maxscale_cdc_spark.sources import avro_ocf, proto_wire
 from maxscale_cdc_spark.sources.cdc_source import classify_lines, parse_dml
 from maxscale_cdc_spark.streaming.runners import run_to_memory
 from maxscale_cdc_spark.tables import table
 
 _PAYLOAD_DDL = "pk bigint, value double"
+
+
+def _wire_line(table_name: str = "events", *payload: Column) -> Column:
+    """A CDC-view row as one reference-wire-format JSON line: the
+    envelope with `domain` as the FIRST key (the DML dispatch prefix
+    rule, client.go:410-412), then the payload (default `pk, value`)."""
+    return F.to_json(
+        F.struct(
+            F.col("domain"),
+            F.col("server_id"),
+            F.col("sequence"),
+            F.col("event_number"),
+            F.col("ts_unix").alias("timestamp"),
+            F.col("dml_type").alias("event_type"),
+            F.lit(table_name).alias("table_name"),
+            F.lit("app").alias("table_schema"),
+            *(payload or (F.col("pk"), F.col("value"))),
+        )
+    )
 
 
 _WIRE_CACHE: dict[tuple[str, int | None], str] = {}
@@ -42,24 +62,10 @@ def _render_wire_lines(
     cdc = cdc_view(spark, sf_dir)
     if seq_cap is not None:
         cdc = cdc.filter(F.col("sequence") < seq_cap)
-    line = F.to_json(
-        F.struct(
-            F.col("domain"),
-            F.col("server_id"),
-            F.col("sequence"),
-            F.col("event_number"),
-            F.col("ts_unix").alias("timestamp"),
-            F.col("dml_type").alias("event_type"),
-            F.lit("events").alias("table_name"),
-            F.lit("app").alias("table_schema"),
-            F.col("pk"),
-            F.col("value"),
-        )
-    )
     out = _mkdtemp(prefix="cdc_wire_")
     # 16 files → 16-way parallel decode in the readers (the Python
     # data source maps one partition per burst file)
-    cdc.select(line.alias("value")).repartition(16).write.mode("overwrite").text(out)
+    cdc.select(_wire_line().alias("value")).repartition(16).write.mode("overwrite").text(out)
     _WIRE_CACHE[key] = out
     return out
 
@@ -185,22 +191,13 @@ def src_tcp_transport(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallelism comes from the burst files, so N tables = N transports
     feeding one partitioned spool."""
     from maxscale_cdc_spark.sources.cdc_datasource import SOURCE_NAME, register as reg
-    from maxscale_cdc_spark.sources.transport import CDCTransport, FakeMaxScaleServer
+    from maxscale_cdc_spark.sources.transport import serve_and_drain
     from maxscale_cdc_spark.streaming.runners import run_to_memory
 
     reg(spark)
     wire_dir = _render_wire_lines(spark, sf_dir)
-    server = FakeMaxScaleServer(
-        "cdcuser", "cdcpw", file_tables={"app.events": wire_dir}
-    )
     spool = _mkdtemp(prefix="tcp_spool_")
-    transport = CDCTransport(server.address, "cdcuser", "cdcpw", "engine-uuid")
-    try:
-        transport.request_data("app", "events", spool_dir=spool)
-        transport.drain(timeout_s=120)
-        transport.stop()
-    finally:
-        server.close()
+    serve_and_drain(spool, file_tables={"app.events": wire_dir})
     stream = (
         spark.readStream.format(SOURCE_NAME)
         .option("path", spool)
@@ -598,19 +595,7 @@ def _render_multi_wire(spark: SparkSession, sf_dir: str) -> dict[str, str]:
         payload = [F.col("pk"), F.col("value")]
         if tbl == "orders":
             payload.append((F.col("sequence") % 7).alias("qty"))
-        line = F.to_json(
-            F.struct(
-                F.col("domain"),
-                F.col("server_id"),
-                F.col("sequence"),
-                F.col("event_number"),
-                F.col("ts_unix").alias("timestamp"),
-                F.col("dml_type").alias("event_type"),
-                F.lit(tbl).alias("table_name"),
-                F.lit("app").alias("table_schema"),
-                *payload,
-            )
-        )
+        line = _wire_line(tbl, *payload)
         sub.select(line.alias("value")).repartition(8).write.mode(
             "overwrite"
         ).text(out)
@@ -896,20 +881,7 @@ def _render_dead_letter_wire(spark: SparkSession, sf_dir: str) -> str:
     from maxscale_cdc_spark.sources.envelope import MAX_EVENT_BYTES
 
     cdc = cdc_view(spark, sf_dir)
-    normal = F.to_json(
-        F.struct(
-            F.col("domain"),
-            F.col("server_id"),
-            F.col("sequence"),
-            F.col("event_number"),
-            F.col("ts_unix").alias("timestamp"),
-            F.col("dml_type").alias("event_type"),
-            F.lit("events").alias("table_name"),
-            F.lit("app").alias("table_schema"),
-            F.col("pk"),
-            F.col("value"),
-        )
-    )
+    normal = _wire_line()
     line = (
         F.when(
             F.col("sequence") % _DL_OVERSIZE_MOD == 0,
@@ -1285,13 +1257,11 @@ def src_csv_badrecords(spark: SparkSession, sf_dir: str) -> DataFrame:
 # losslessness (counts, cents sums, null-union counts, max sequence).
 # ---------------------------------------------------------------------------
 
-_AVRO_CACHE: dict[str, str] = {}
-
-
-def _spool_avro_files(spark: SparkSession, sf_dir: str) -> str:
-    if sf_dir in _AVRO_CACHE:
-        return _AVRO_CACHE[sf_dir]
-    env = cdc_view(spark, sf_dir).select(
+def _binary_envelope(df: DataFrame, *extra: Column | str) -> DataFrame:
+    """The CDC envelope the binary-lane spools encode: integer cents,
+    and a `note` that is NULL for two pks in three (the nullable
+    branch), then the caller's own columns."""
+    return df.select(
         "sequence",
         "dml_type",
         "pk",
@@ -1300,47 +1270,19 @@ def _spool_avro_files(spark: SparkSession, sf_dir: str) -> str:
         F.when(F.col("pk") % 3 == 0, (F.col("pk") % 7).cast("string")).alias(
             "note"
         ),
-    ).repartition(8, "sequence")
+        *extra,
+    )
+
+
+_AVRO_CACHE: dict[str, str] = {}
+
+
+def _spool_avro_files(spark: SparkSession, sf_dir: str) -> str:
+    if sf_dir in _AVRO_CACHE:
+        return _AVRO_CACHE[sf_dir]
+    env = _binary_envelope(cdc_view(spark, sf_dir)).repartition(8, "sequence")
     out = _mkdtemp(prefix="src_avro_")
-
-    def encode(batches):
-        import hashlib
-
-        import pandas as pd
-        from pyspark import TaskContext
-
-        from maxscale_cdc_spark.sources.avro_ocf import (
-            CDC_AVRO_SCHEMA,
-            write_ocf,
-        )
-
-        rows: list[dict] = []
-        for pdf in batches:
-            for seq, dml, pk, vc, ts, note in zip(
-                pdf["sequence"], pdf["dml_type"], pdf["pk"],
-                pdf["value_cents"], pdf["ts_unix"], pdf["note"],
-            ):
-                rows.append(
-                    {
-                        "sequence": int(seq),
-                        "dml_type": str(dml),
-                        "pk": int(pk),
-                        "value_cents": int(vc),
-                        "ts_unix": int(ts),
-                        "note": None if note is None or pd.isna(note) else str(note),
-                    }
-                )
-        if rows:
-            pid = TaskContext.get().partitionId()
-            codec = "deflate" if pid % 2 else "null"
-            sync = hashlib.md5(f"avro:{pid}".encode()).digest()
-            blob = write_ocf(CDC_AVRO_SCHEMA, rows, codec=codec, sync=sync)
-            tmp = os.path.join(out, f".part-{pid:05d}.tmp")
-            with open(tmp, "wb") as fh:
-                fh.write(blob)
-            os.replace(tmp, os.path.join(out, f"part-{pid:05d}.avro"))
-        yield pd.DataFrame({"n": [len(rows)]})
-
+    encode = avro_ocf.encoder(out, "avro:", "part-{pid:05d}.avro")
     env.mapInPandas(encode, "n long").collect()  # force the writes
     _AVRO_CACHE[sf_dir] = out
     return out
@@ -1368,27 +1310,11 @@ def src_avro_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from each file's own metadata; losslessness proven by the per-dml
     ledger against the raw envelope (see block comment)."""
     spool = _spool_avro_files(spark, sf_dir)
-
-    def decode(batches):
-        import pandas as pd
-
-        from maxscale_cdc_spark.sources.avro_ocf import read_ocf
-
-        for pdf in batches:
-            for content in pdf["content"]:
-                _, recs = read_ocf(bytes(content))
-                if recs:
-                    yield pd.DataFrame(recs)
-
     back = (
         spark.read.format("binaryFile")
         .load(spool)
         .select("content")
-        .mapInPandas(
-            decode,
-            "sequence long, dml_type string, pk long, value_cents long, "
-            "ts_unix long, note string",
-        )
+        .mapInPandas(avro_ocf.decoder(), avro_ocf.CDC_AVRO_DDL)
     )
     return back.groupBy("dml_type").agg(
         F.count("*").cast("long").alias("n"),
@@ -1442,18 +1368,6 @@ def str_avro_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     from maxscale_cdc_spark.streaming.runners import run_to_memory as _rtm
 
     spool = _spool_avro_files(spark, sf_dir)
-
-    def decode(batches):
-        import pandas as pd
-
-        from maxscale_cdc_spark.sources.avro_ocf import read_ocf
-
-        for pdf in batches:
-            for content in pdf["content"]:
-                _, recs = read_ocf(bytes(content))
-                if recs:
-                    yield pd.DataFrame(recs)
-
     stream = (
         spark.readStream.format("binaryFile")
         .schema(
@@ -1462,11 +1376,7 @@ def str_avro_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .load(spool)
         .select("content")
-        .mapInPandas(
-            decode,
-            "sequence long, dml_type string, pk long, value_cents long, "
-            "ts_unix long, note string",
-        )
+        .mapInPandas(avro_ocf.decoder(), avro_ocf.CDC_AVRO_DDL)
         .withColumn("ts", F.timestamp_seconds("ts_unix"))
     )
     agg = stream.groupBy(
@@ -1504,65 +1414,13 @@ def _spool_avro_evo_files(spark: SparkSession, sf_dir: str) -> str:
         return _AVRO_EVO_CACHE[sf_dir]
     cdc = cdc_view(spark, sf_dir)
     cut = cdc.agg(F.expr("div(max(sequence) * 3, 5)").alias("cutoff"))
-    env = cdc.join(F.broadcast(cut)).select(
-        "sequence",
-        "dml_type",
-        "pk",
-        F.round(F.col("value") * 100, 0).cast("long").alias("value_cents"),
-        "ts_unix",
-        F.when(F.col("pk") % 3 == 0, (F.col("pk") % 7).cast("string")).alias(
-            "note"
-        ),
+    env = _binary_envelope(
+        cdc.join(F.broadcast(cut)),
         (F.col("sequence") > F.col("cutoff")).alias("v2"),
         (F.col("pk") % 7).cast("int").alias("extra"),
     )
     out = _mkdtemp(prefix="src_avro_evo_")
-
-    def encode(batches):
-        import hashlib
-
-        import pandas as pd
-        from pyspark import TaskContext
-
-        from maxscale_cdc_spark.sources.avro_ocf import (
-            CDC_AVRO_SCHEMA,
-            CDC_AVRO_SCHEMA_V2,
-            write_ocf,
-        )
-
-        rows: list[dict] = []
-        is_v2 = False
-        for pdf in batches:
-            for seq, dml, pk, vc, ts, note, v2, extra in zip(
-                pdf["sequence"], pdf["dml_type"], pdf["pk"],
-                pdf["value_cents"], pdf["ts_unix"], pdf["note"],
-                pdf["v2"], pdf["extra"],
-            ):
-                is_v2 = bool(v2)
-                rec = {
-                    "sequence": int(seq),
-                    "dml_type": str(dml),
-                    "pk": int(pk),
-                    "value_cents": int(vc),
-                    "ts_unix": int(ts),
-                    "note": None if note is None or pd.isna(note) else str(note),
-                }
-                if is_v2:
-                    rec["extra"] = int(extra)
-                rows.append(rec)
-        if rows:
-            pid = TaskContext.get().partitionId()
-            schema = CDC_AVRO_SCHEMA_V2 if is_v2 else CDC_AVRO_SCHEMA
-            sync = hashlib.md5(f"avro_evo:{pid}".encode()).digest()
-            blob = write_ocf(
-                schema, rows, codec="deflate" if pid % 2 else "null", sync=sync
-            )
-            tag = "v2" if is_v2 else "v1"
-            tmp = os.path.join(out, f".part-{tag}-{pid:05d}.tmp")
-            with open(tmp, "wb") as fh:
-                fh.write(blob)
-            os.replace(tmp, os.path.join(out, f"part-{tag}-{pid:05d}.avro"))
-        yield pd.DataFrame({"n": [len(rows)]})
+    encode = avro_ocf.encoder(out, "avro_evo:", "part-{gen}-{pid:05d}.avro")
 
     # one schema generation per file: partition WITHIN each generation
     for flag in (False, True):
@@ -1684,20 +1542,9 @@ def str_avro_tail_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two availableNow runs over a growing Avro spool, one shared
     checkpoint: run 2 decodes only the newly landed container files
     and resumes the recovered window state (see block comment)."""
-    import hashlib
-
     from maxscale_cdc_spark.streaming.runners import run_bounded
 
-    env = cdc_view(spark, sf_dir).select(
-        "sequence",
-        "dml_type",
-        "pk",
-        F.round(F.col("value") * 100, 0).cast("long").alias("value_cents"),
-        "ts_unix",
-        F.when(F.col("pk") % 3 == 0, (F.col("pk") % 7).cast("string")).alias(
-            "note"
-        ),
-    ).localCheckpoint(eager=False)
+    env = _binary_envelope(cdc_view(spark, sf_dir)).localCheckpoint(eager=False)
     row = env.agg(
         F.min("ts_unix").alias("lo"), F.max("ts_unix").alias("hi")
     ).collect()[0]
@@ -1707,60 +1554,11 @@ def str_avro_tail_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = _mkdtemp(prefix="avro_restart_ckpt_")
 
     def land(half_df, tag: str) -> None:
-        def encode(batches):
-            import pandas as pd
-            from pyspark import TaskContext
-
-            from maxscale_cdc_spark.sources.avro_ocf import (
-                CDC_AVRO_SCHEMA,
-                write_ocf,
-            )
-
-            rows: list[dict] = []
-            for pdf in batches:
-                for seq, dml, pk, vc, ts, note in zip(
-                    pdf["sequence"], pdf["dml_type"], pdf["pk"],
-                    pdf["value_cents"], pdf["ts_unix"], pdf["note"],
-                ):
-                    rows.append(
-                        {
-                            "sequence": int(seq),
-                            "dml_type": str(dml),
-                            "pk": int(pk),
-                            "value_cents": int(vc),
-                            "ts_unix": int(ts),
-                            "note": None
-                            if note is None or pd.isna(note)
-                            else str(note),
-                        }
-                    )
-            if rows:
-                pid = TaskContext.get().partitionId()
-                sync = hashlib.md5(f"avro_rs:{tag}:{pid}".encode()).digest()
-                blob = write_ocf(
-                    CDC_AVRO_SCHEMA, rows,
-                    codec="deflate" if pid % 2 else "null", sync=sync,
-                )
-                tmp = os.path.join(spool, f".part-{tag}-{pid:05d}.tmp")
-                with open(tmp, "wb") as fh:
-                    fh.write(blob)
-                os.replace(tmp, os.path.join(spool, f"part-{tag}-{pid:05d}.avro"))
-            yield pd.DataFrame({"n": [len(rows)]})
-
+        name = f"part-{tag}-{{pid:05d}}.avro"
+        encode = avro_ocf.encoder(spool, f"avro_rs:{tag}:", name)
         half_df.repartition(4, "sequence").mapInPandas(encode, "n long").collect()
 
     def run_once():
-        def decode(batches):
-            import pandas as pd
-
-            from maxscale_cdc_spark.sources.avro_ocf import read_ocf
-
-            for pdf in batches:
-                for content in pdf["content"]:
-                    _, recs = read_ocf(bytes(content))
-                    if recs:
-                        yield pd.DataFrame(recs)
-
         stream = (
             spark.readStream.format("binaryFile")
             .schema(
@@ -1769,11 +1567,7 @@ def str_avro_tail_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .load(spool)
             .select("content")
-            .mapInPandas(
-                decode,
-                "sequence long, dml_type string, pk long, value_cents long, "
-                "ts_unix long, note string",
-            )
+            .mapInPandas(avro_ocf.decoder(), avro_ocf.CDC_AVRO_DDL)
             .withColumn("ts", F.timestamp_seconds("ts_unix"))
             .withWatermark("ts", "1 hour")
         )
@@ -1836,60 +1630,11 @@ _PROTO_CACHE: dict[str, str] = {}
 def _spool_proto_files(spark: SparkSession, sf_dir: str) -> str:
     if sf_dir in _PROTO_CACHE:
         return _PROTO_CACHE[sf_dir]
-    env = cdc_view(spark, sf_dir).select(
-        "sequence",
-        "dml_type",
-        "pk",
-        F.round(F.col("value") * 100, 0).cast("long").alias("value_cents"),
-        ((F.col("pk") % 7) - 3).alias("drift"),
-        "ts_unix",
-        F.when(F.col("pk") % 3 == 0, (F.col("pk") % 7).cast("string")).alias(
-            "note"
-        ),
+    env = _binary_envelope(
+        cdc_view(spark, sf_dir), ((F.col("pk") % 7) - 3).alias("drift")
     ).repartition(8, "sequence")
     out = _mkdtemp(prefix="src_proto_")
-
-    def encode(batches):
-        import pandas as pd
-        from pyspark import TaskContext
-
-        from maxscale_cdc_spark.sources.proto_wire import (
-            append_unknown_varint,
-            encode_message,
-            write_delimited,
-        )
-
-        msgs: list[bytes] = []
-        pid = TaskContext.get().partitionId()
-        for pdf in batches:
-            for seq, dml, pk, vc, dr, ts, note in zip(
-                pdf["sequence"], pdf["dml_type"], pdf["pk"],
-                pdf["value_cents"], pdf["drift"], pdf["ts_unix"], pdf["note"],
-            ):
-                m = encode_message(
-                    {
-                        "sequence": int(seq),
-                        "dml_type": str(dml),
-                        "pk": int(pk),
-                        "value_cents": int(vc),
-                        "drift": int(dr),
-                        "ts_unix": int(ts),
-                        "note": None
-                        if note is None or pd.isna(note)
-                        else str(note),
-                        "tags": [int(pk) % 3, int(pk) % 5],
-                    }
-                )
-                if pid % 2:  # newer producer: a field this spec lacks
-                    m = append_unknown_varint(m, 15, int(seq) % 1000)
-                msgs.append(m)
-        if msgs:
-            tmp = os.path.join(out, f".part-{pid:05d}.tmp")
-            with open(tmp, "wb") as fh:
-                fh.write(write_delimited(msgs))
-            os.replace(tmp, os.path.join(out, f"part-{pid:05d}.pb"))
-        yield pd.DataFrame({"n": [len(msgs)]})
-
+    encode = proto_wire.encoder(out, "part-{pid:05d}.pb", unknown_on_odd=True)
     env.mapInPandas(encode, "n long").collect()  # force the writes
     _PROTO_CACHE[sf_dir] = out
     return out
@@ -1919,43 +1664,11 @@ def src_protobuf_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     binaryFile + Arrow-batched decode; losslessness proven by the
     per-dml ledger (see block comment)."""
     spool = _spool_proto_files(spark, sf_dir)
-
-    def decode(batches):
-        import pandas as pd
-
-        from maxscale_cdc_spark.sources.proto_wire import (
-            decode_message,
-            read_delimited,
-        )
-
-        for pdf in batches:
-            for content in pdf["content"]:
-                recs = [
-                    decode_message(m) for m in read_delimited(bytes(content))
-                ]
-                if recs:
-                    yield pd.DataFrame(
-                        {
-                            "sequence": [r["sequence"] for r in recs],
-                            "dml_type": [r["dml_type"] for r in recs],
-                            "pk": [r["pk"] for r in recs],
-                            "value_cents": [r["value_cents"] for r in recs],
-                            "drift": [r["drift"] for r in recs],
-                            "ts_unix": [r["ts_unix"] for r in recs],
-                            "note": [r.get("note") for r in recs],
-                            "tags": [r["tags"] for r in recs],
-                        }
-                    )
-
     back = (
         spark.read.format("binaryFile")
         .load(spool)
         .select("content")
-        .mapInPandas(
-            decode,
-            "sequence long, dml_type string, pk long, value_cents long, "
-            "drift long, ts_unix long, note string, tags array<long>",
-        )
+        .mapInPandas(proto_wire.decoder(), proto_wire.proto_ddl())
     )
     return back.groupBy("dml_type").agg(
         F.count("*").cast("long").alias("n"),
@@ -2011,31 +1724,7 @@ def str_protobuf_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     from maxscale_cdc_spark.streaming.runners import run_to_memory as _rtm
 
     spool = _spool_proto_files(spark, sf_dir)
-
-    def decode(batches):
-        import pandas as pd
-
-        from maxscale_cdc_spark.sources.proto_wire import (
-            decode_message,
-            read_delimited,
-        )
-
-        for pdf in batches:
-            for content in pdf["content"]:
-                recs = [
-                    decode_message(m) for m in read_delimited(bytes(content))
-                ]
-                if recs:
-                    yield pd.DataFrame(
-                        {
-                            "sequence": [r["sequence"] for r in recs],
-                            "dml_type": [r["dml_type"] for r in recs],
-                            "value_cents": [r["value_cents"] for r in recs],
-                            "drift": [r["drift"] for r in recs],
-                            "ts_unix": [r["ts_unix"] for r in recs],
-                        }
-                    )
-
+    cols = ("sequence", "dml_type", "value_cents", "drift", "ts_unix")
     stream = (
         spark.readStream.format("binaryFile")
         .schema(
@@ -2044,11 +1733,7 @@ def str_protobuf_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .load(spool)
         .select("content")
-        .mapInPandas(
-            decode,
-            "sequence long, dml_type string, value_cents long, "
-            "drift long, ts_unix long",
-        )
+        .mapInPandas(proto_wire.decoder(cols), proto_wire.proto_ddl(cols))
         .withColumn("ts", F.timestamp_seconds("ts_unix"))
     )
     agg = stream.groupBy(
@@ -2091,9 +1776,9 @@ def str_protobuf_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
 #      (MapInPandas / ArrowEvalPython / BatchEvalPython) appears.
 #      `downstream_python_free` exports the gate's verdict.
 #
-# The Avro lane is the same shape with read_ocf in place of
-# read_delimited/decode_message (src_avro_events's decode): one
-# mapInPandas swap, nothing downstream changes.  If spark-protobuf /
+# The Avro lane is the same shape with avro_ocf.decoder in place of
+# proto_wire.decoder (str_cdc_e2e_native runs it): one mapInPandas
+# swap, nothing downstream changes.  If spark-protobuf /
 # spark-avro ever appear in-env, the JVM decode replaces step 1's
 # mapInPandas with a from_protobuf/from_avro select and steps 2-3 are
 # unchanged — the landing discipline is codec-independent.
@@ -2134,44 +1819,12 @@ def snk_land_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     (see block comment)."""
     spool = _spool_proto_files(spark, sf_dir)
     land = _mkdtemp(prefix="snk_land_")
-
-    def decode(batches):
-        import pandas as pd
-
-        from maxscale_cdc_spark.sources.proto_wire import (
-            decode_message,
-            read_delimited,
-        )
-
-        for pdf in batches:
-            for path, content in zip(pdf["path"], pdf["content"]):
-                recs = [
-                    decode_message(m) for m in read_delimited(bytes(content))
-                ]
-                if recs:
-                    yield pd.DataFrame(
-                        {
-                            "src_path": [str(path)] * len(recs),
-                            "sequence": [r["sequence"] for r in recs],
-                            "dml_type": [r["dml_type"] for r in recs],
-                            "pk": [r["pk"] for r in recs],
-                            "value_cents": [r["value_cents"] for r in recs],
-                            "drift": [r["drift"] for r in recs],
-                            "ts_unix": [r["ts_unix"] for r in recs],
-                            "note": [r.get("note") for r in recs],
-                            "tags": [r["tags"] for r in recs],
-                        }
-                    )
-
     listing = (
         spark.read.format("binaryFile").load(spool).select("path", "content")
     )
     # step 1 — the single codec invocation, landing to parquet
     listing.mapInPandas(
-        decode,
-        "src_path string, sequence long, dml_type string, pk long, "
-        "value_cents long, drift long, ts_unix long, note string, "
-        "tags array<long>",
+        proto_wire.decoder(with_path=True), proto_wire.proto_ddl(with_path=True)
     ).write.mode("overwrite").parquet(land)
 
     # step 2 — the landing zone's lineage column is the manifest:
@@ -2264,46 +1917,16 @@ def src_tcp_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes over a live socket, re-blocked to an Avro burst spool by the
     transport, decoded distributed; lossless iff the per-dml ledger
     matches the direct aggregation oracle (see block comment)."""
-    from maxscale_cdc_spark.sources.transport import (
-        CDCTransport,
-        FakeMaxScaleServer,
-    )
+    from maxscale_cdc_spark.sources.transport import serve_and_drain
 
     ocf_dir = _spool_avro_files(spark, sf_dir)
-    server = FakeMaxScaleServer(
-        "cdcuser", "cdcpw", avro_tables={"app.events": ocf_dir}
-    )
     spool = _mkdtemp(prefix="tcp_avro_spool_")
-    transport = CDCTransport(server.address, "cdcuser", "cdcpw", "engine-uuid")
-    try:
-        transport.request_data(
-            "app", "events", spool_dir=spool, data_format="AVRO"
-        )
-        transport.drain(timeout_s=120)
-        transport.stop()
-    finally:
-        server.close()
-
-    def decode(batches):
-        import pandas as pd
-
-        from maxscale_cdc_spark.sources.avro_ocf import read_ocf
-
-        for pdf in batches:
-            for content in pdf["content"]:
-                _, recs = read_ocf(bytes(content))
-                if recs:
-                    yield pd.DataFrame(recs)
-
+    serve_and_drain(spool, avro_tables={"app.events": ocf_dir})
     back = (
         spark.read.format("binaryFile")
         .load(spool)
         .select("content")
-        .mapInPandas(
-            decode,
-            "sequence long, dml_type string, pk long, value_cents long, "
-            "ts_unix long, note string",
-        )
+        .mapInPandas(avro_ocf.decoder(), avro_ocf.CDC_AVRO_DDL)
     )
     return back.groupBy("dml_type").agg(
         F.count("*").cast("long").alias("n"),
@@ -2347,62 +1970,13 @@ def _spool_proto_evo_files(spark: SparkSession, sf_dir: str) -> str:
         return _PROTO_EVO_CACHE[sf_dir]
     cdc = cdc_view(spark, sf_dir)
     cut = cdc.agg(F.expr("div(max(sequence) * 3, 5)").alias("cutoff"))
-    env = cdc.join(F.broadcast(cut)).select(
-        "sequence",
-        "dml_type",
-        "pk",
-        F.round(F.col("value") * 100, 0).cast("long").alias("value_cents"),
+    env = _binary_envelope(
+        cdc.join(F.broadcast(cut)),
         ((F.col("pk") % 7) - 3).alias("drift"),
-        "ts_unix",
-        F.when(F.col("pk") % 3 == 0, (F.col("pk") % 7).cast("string")).alias(
-            "note"
-        ),
         (F.col("sequence") > F.col("cutoff")).alias("v2"),
     )
     out = _mkdtemp(prefix="src_proto_evo_")
-
-    def encode(batches):
-        import pandas as pd
-        from pyspark import TaskContext
-
-        from maxscale_cdc_spark.sources.proto_wire import (
-            CDC_PROTO_FIELDS,
-            encode_message,
-            write_delimited,
-        )
-
-        v1_fields = {k: v for k, v in CDC_PROTO_FIELDS.items() if k != 8}
-        msgs: list[bytes] = []
-        is_v2 = False
-        for pdf in batches:
-            for seq, dml, pk, vc, dr, ts, note, v2 in zip(
-                pdf["sequence"], pdf["dml_type"], pdf["pk"],
-                pdf["value_cents"], pdf["drift"], pdf["ts_unix"],
-                pdf["note"], pdf["v2"],
-            ):
-                is_v2 = bool(v2)
-                rec = {
-                    "sequence": int(seq),
-                    "dml_type": str(dml),
-                    "pk": int(pk),
-                    "value_cents": int(vc),
-                    "drift": int(dr),
-                    "ts_unix": int(ts),
-                    "note": None if note is None or pd.isna(note) else str(note),
-                }
-                if is_v2:
-                    rec["tags"] = [int(pk) % 3, int(pk) % 5]
-                    msgs.append(encode_message(rec))
-                else:
-                    msgs.append(encode_message(rec, v1_fields))
-        if msgs:
-            pid = TaskContext.get().partitionId()
-            tag = "v2" if is_v2 else "v1"
-            tmp = os.path.join(out, f".part-{tag}-{pid:05d}.tmp")
-            with open(tmp, "wb") as fh:
-                fh.write(write_delimited(msgs))
-            os.replace(tmp, os.path.join(out, f"part-{tag}-{pid:05d}.pb"))
-        yield pd.DataFrame({"n": [len(msgs)]})
+    encode = proto_wire.encoder(out, "part-{gen}-{pid:05d}.pb", unknown_on_odd=False)
 
     # one producer generation per file: partition WITHIN each generation
     for flag in (False, True):

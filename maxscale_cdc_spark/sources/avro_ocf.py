@@ -253,3 +253,93 @@ CDC_AVRO_SCHEMA_V2 = {
     "fields": CDC_AVRO_SCHEMA["fields"]
     + [{"name": "extra", "type": ["null", "int"]}],
 }
+
+#: The Spark schema of `decoder()`'s output: CDC_AVRO_SCHEMA's fields.
+CDC_AVRO_DDL = (
+    "sequence long, dml_type string, pk long, value_cents long, "
+    "ts_unix long, note string"
+)
+
+
+# ---------------------------------------------------------------------------
+# mapInPandas kernels — the Avro lane's one encoder and one decoder.  The
+# returned functions keep the names `encode` / `decode`: MapInPandas
+# prints the function name in the plan.
+# ---------------------------------------------------------------------------
+
+
+def encoder(out: str, salt: str, name: str):
+    """mapInPandas kernel writing ONE container file per partition to
+    `out` (atomically) and yielding its record count as `n long`.
+
+    Input columns: `sequence, dml_type, pk, value_cents, ts_unix, note`;
+    an optional `v2` flag (+ `extra`) writes the partition with
+    CDC_AVRO_SCHEMA_V2 instead (one generation per partition).  Odd
+    partitions use the deflate codec, even ones null.  The sync marker
+    is md5(f"{salt}{pid}"); the file name is `name` formatted with
+    `pid` and `gen` ("v1"/"v2")."""
+
+    def encode(batches):
+        import hashlib
+
+        import pandas as pd
+        from pyspark import TaskContext
+
+        from maxscale_cdc_spark.tmputil import land_atomic
+
+        rows: list[dict] = []
+        is_v2 = False
+        for pdf in batches:
+            evo = "v2" in pdf.columns
+            for seq, dml, pk, vc, ts, note, v2, extra in zip(
+                pdf["sequence"], pdf["dml_type"], pdf["pk"],
+                pdf["value_cents"], pdf["ts_unix"], pdf["note"],
+                pdf["v2"] if evo else [False] * len(pdf),
+                pdf["extra"] if evo else [None] * len(pdf),
+            ):
+                is_v2 = bool(v2)
+                rec = {
+                    "sequence": int(seq),
+                    "dml_type": str(dml),
+                    "pk": int(pk),
+                    "value_cents": int(vc),
+                    "ts_unix": int(ts),
+                    "note": None if note is None or pd.isna(note) else str(note),
+                }
+                if is_v2:
+                    rec["extra"] = int(extra)
+                rows.append(rec)
+        if rows:
+            pid = TaskContext.get().partitionId()
+            blob = write_ocf(
+                CDC_AVRO_SCHEMA_V2 if is_v2 else CDC_AVRO_SCHEMA,
+                rows,
+                codec="deflate" if pid % 2 else "null",
+                sync=hashlib.md5(f"{salt}{pid}".encode()).digest(),
+            )
+            land_atomic(out, name.format(pid=pid, gen="v2" if is_v2 else "v1"), blob)
+        yield pd.DataFrame({"n": [len(rows)]})
+
+    return encode
+
+
+def decoder(with_path: bool = False):
+    """mapInPandas kernel over a binaryFile scan (`content`, plus `path`
+    first when `with_path`): each container file decodes against its
+    own embedded schema into CDC_AVRO_DDL rows, preceded by
+    `src_path string` when `with_path`."""
+
+    def decode(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            paths = pdf["path"] if with_path else [None] * len(pdf)
+            for path, content in zip(paths, pdf["content"]):
+                _, recs = read_ocf(bytes(content))
+                if recs:
+                    out = pd.DataFrame(recs)
+                    if with_path:
+                        out.insert(0, "src_path", str(path))
+                    yield out
+
+    return decode

@@ -72,29 +72,54 @@ pickled class graph must not reference module globals.
 
 from __future__ import annotations
 
+from maxscale_cdc_spark.sources.envelope import ENVELOPE_FIELDS, WIRE_TYPES
+
 SOURCE_NAME = "maxscale_cdc"
 
-SOURCE_SCHEMA = (
-    "domain INT, server_id INT, sequence BIGINT, event_number INT, "
-    "timestamp BIGINT, event_type STRING, table_name STRING, "
-    "table_schema STRING, payload STRING"
-)
+#: Envelope columns (upper-case Spark DDL) — the prefix of every schema
+#: this source reports.
+_ENVELOPE_DDL = ", ".join(f"{n} {t.upper()}" for n, t in ENVELOPE_FIELDS)
+
+#: The generic-mode schema: envelope + the payload as a JSON string.
+SOURCE_SCHEMA = _ENVELOPE_DDL + ", payload STRING"
 
 
 def build_cdc_datasource():
     """Create the DataSource class, fully self-contained (no references
-    to this module's globals — see IMPLEMENTATION NOTE above)."""
+    to this module's globals — see IMPLEMENTATION NOTE above).  The
+    envelope spec and the wire-type table are bound here as plain
+    tuples, strings and dicts."""
     from pyspark.sql.datasource import (
         DataSource,
         DataSourceStreamReader,
         InputPartition,
     )
 
-    source_schema = (
-        "domain INT, server_id INT, sequence BIGINT, event_number INT, "
-        "timestamp BIGINT, event_type STRING, table_name STRING, "
-        "table_schema STRING, payload STRING"
-    )
+    envelope = ENVELOPE_FIELDS  # (("domain", "int"), ...)
+    envelope_names = tuple(n for n, _ in envelope)
+    envelope_ddl = _ENVELOPE_DDL
+    source_schema = SOURCE_SCHEMA
+    wire_types = dict(WIRE_TYPES)  # wire type -> (spark ddl, pyarrow type)
+
+    def _spool_files(path):
+        """The sorted burst listing — the offset space."""
+        import os
+
+        try:
+            return sorted(
+                f for f in os.listdir(path) if f.endswith((".jsonl", ".txt"))
+            )
+        except FileNotFoundError:
+            return []
+
+    def _report_skipped(skipped, path):
+        """skip-mode's dead-letter metric: the count per burst, on stderr."""
+        import sys
+
+        print(
+            f"maxscale_cdc: skipped {skipped} malformed line(s) in {path}",
+            file=sys.stderr,
+        )
 
     class _FileSlice(InputPartition):
         def __init__(self, path, start_gtid):
@@ -109,11 +134,6 @@ def build_cdc_datasource():
         not mid-micro-batch."""
         import re
 
-        known = {
-            "int", "integer", "bigint", "long", "double", "float", "real",
-            "string", "varchar", "text", "boolean", "bool",
-            "double precision",
-        }
         # split on top-level commas only — decimal(18,4) carries one
         items, depth, cur = [], 0, []
         for ch in ddl:
@@ -138,14 +158,14 @@ def build_cdc_datasource():
                     f"payloadSchema item {item!r}: expected 'name type'"
                 )
             name, typ = bits[0], " ".join(bits[1].lower().split())
-            if typ in known or re.fullmatch(
+            if typ in wire_types or re.fullmatch(
                 r"decimal\s*\(\s*\d+\s*,\s*\d+\s*\)|varchar\s*\(\s*\d+\s*\)", typ
             ):
                 out.append((name, typ))
             else:
                 raise ValueError(
                     f"payloadSchema: unsupported type {typ!r} for column "
-                    f"{name!r} (supported: {sorted(known)}, decimal(p,s), "
+                    f"{name!r} (supported: {sorted(wire_types)}, decimal(p,s), "
                     "varchar(n))"
                 )
         return out
@@ -156,25 +176,20 @@ def build_cdc_datasource():
         rows → exactly-once under checkpoint recovery."""
 
         def __init__(self, options):
+            # `options` has lower-case keys (CDCDataSource._options)
             self.path = options["path"]
             self.database = options.get("database")
             self.table = options.get("table")
-            self.payload_ddl = options.get("payloadschema") or options.get(
-                "payloadSchema"
-            )
+            self.payload_ddl = options.get("payloadschema")
             # fail fast on a bad schema string (reader construction, not
             # mid-batch on an executor)
             self.payload_fields = (
                 _parse_payload_ddl(self.payload_ddl) if self.payload_ddl else []
             )
-            self.bad_records = (
-                options.get("badrecords") or options.get("badRecords") or "fail"
-            ).lower()
+            self.bad_records = (options.get("badrecords") or "fail").lower()
             if self.bad_records not in ("fail", "skip"):
                 raise ValueError("badRecords must be 'fail' or 'skip'")
-            mft = options.get("maxfilespertrigger") or options.get(
-                "maxFilesPerTrigger"
-            )
+            mft = options.get("maxfilespertrigger")
             # '0' must be a loud error, not a silent "uncapped": a user
             # asking for the tightest bound would otherwise lose all
             # backpressure (Spark's own maxFilesPerTrigger requires >=1)
@@ -192,30 +207,18 @@ def build_cdc_datasource():
             # a capped first window could regress below a checkpointed
             # start the planner cannot see and re-deliver data).
             self._planned_files: int | None = None
-            start = options.get("startinggtid") or options.get("startingGtid")
+            start = options.get("startinggtid")
             if start:
                 d, sv, q = start.split("-")
                 self.start_gtid = (int(d), int(sv), int(q))
             else:
                 self.start_gtid = (-1, -1, -1)
 
-        def _spool_files(self):
-            import os
-
-            try:
-                return sorted(
-                    f
-                    for f in os.listdir(self.path)
-                    if f.endswith((".jsonl", ".txt"))
-                )
-            except FileNotFoundError:
-                return []
-
         def initialOffset(self):
             return {"gtid": list(self.start_gtid), "files": 0}
 
         def latestOffset(self):
-            avail = len(self._spool_files())
+            avail = len(_spool_files(self.path))
             if self.max_files:
                 # backpressure: advance at most maxFilesPerTrigger per
                 # planned batch (cap-1 channel analogue, client.go:220);
@@ -232,7 +235,7 @@ def build_cdc_datasource():
         def partitions(self, start, end):
             import os
 
-            files = self._spool_files()
+            files = _spool_files(self.path)
             lo, hi = start.get("files", 0), end.get("files", 0)
             # the checkpointed start is the true committed floor —
             # fast-forward the rate-limit window so it never plans
@@ -267,39 +270,21 @@ def build_cdc_datasource():
             import pyarrow.compute as pc
             import pyarrow.json as pj
 
-            type_map = {
-                "int": pa.int32(), "integer": pa.int32(),
-                "bigint": pa.int64(), "long": pa.int64(),
-                "double": pa.float64(), "double precision": pa.float64(),
-                "float": pa.float32(), "real": pa.float32(),
-                "string": pa.string(), "varchar": pa.string(),
-                "text": pa.string(),
-                "boolean": pa.bool_(), "bool": pa.bool_(),
-            }
-
             def to_arrow(typ):
                 m = re.fullmatch(r"decimal\s*\(\s*(\d+)\s*,\s*(\d+)\s*\)", typ)
                 if m:
                     return pa.decimal128(int(m.group(1)), int(m.group(2)))
                 if re.fullmatch(r"varchar\s*\(\s*\d+\s*\)", typ):
                     return pa.string()
-                return type_map[typ]  # validated at construction
+                # validated at construction
+                return getattr(pa, wire_types[typ][1])()
 
-            payload_fields = [
-                pa.field(name, to_arrow(typ))
-                for name, typ in self.payload_fields
-            ]
-            envelope_fields = [
-                pa.field("domain", pa.int32()),
-                pa.field("server_id", pa.int32()),
-                pa.field("sequence", pa.int64()),
-                pa.field("event_number", pa.int32()),
-                pa.field("timestamp", pa.int64()),
-                pa.field("event_type", pa.string()),
-                pa.field("table_name", pa.string()),
-                pa.field("table_schema", pa.string()),
-            ]
-            explicit = pa.schema(envelope_fields + payload_fields)
+            explicit = pa.schema(
+                [
+                    pa.field(name, to_arrow(typ))
+                    for name, typ in envelope + tuple(self.payload_fields)
+                ]
+            )
 
             max_bytes = 1 << 20
             keep = []
@@ -329,8 +314,6 @@ def build_cdc_datasource():
                     raise ValueError(
                         f"malformed CDC line in {partition.path}: {exc}"
                     ) from exc
-                import sys as _sys
-
                 # skip mode: find the bad records by parsing each line
                 # individually — a line can be valid JSON yet still fail
                 # the Arrow schema conversion (e.g. a string where the
@@ -347,11 +330,7 @@ def build_cdc_datasource():
                     except pa.ArrowInvalid:
                         skipped += 1
                 if skipped:
-                    print(
-                        f"maxscale_cdc: skipped {skipped} malformed line(s) "
-                        f"in {partition.path}",
-                        file=_sys.stderr,
-                    )
+                    _report_skipped(skipped, partition.path)
                 if not good_tables:
                     return
                 tbl = pa.concat_tables(good_tables)
@@ -387,25 +366,11 @@ def build_cdc_datasource():
 
             import pyarrow as pa
 
-            envelope_keys = (
-                "domain",
-                "server_id",
-                "sequence",
-                "event_number",
-                "timestamp",
-                "event_type",
-                "table_name",
-                "table_schema",
-            )
+            envelope_keys = envelope_names
             arrow_types = [
-                pa.int32(), pa.int32(), pa.int64(), pa.int32(), pa.int64(),
-                pa.string(), pa.string(), pa.string(), pa.string(),
-            ]
-            names = [
-                "domain", "server_id", "sequence", "event_number",
-                "timestamp", "event_type", "table_name", "table_schema",
-                "payload",
-            ]
+                getattr(pa, wire_types[t][1])() for _, t in envelope
+            ] + [pa.string()]
+            names = list(envelope_names) + ["payload"]
             max_bytes = 1 << 20
             batch_rows = 20_000
             start = tuple(partition.start_gtid)
@@ -471,13 +436,7 @@ def build_cdc_datasource():
                         yield flush()
                         cols = [[] for _ in names]
             if skipped:
-                import sys as _sys
-
-                print(
-                    f"maxscale_cdc: skipped {skipped} malformed line(s) "
-                    f"in {partition.path}",
-                    file=_sys.stderr,
-                )
+                _report_skipped(skipped, partition.path)
             if cols[0]:
                 yield flush()
 
@@ -492,28 +451,8 @@ def build_cdc_datasource():
         import json
         import os
 
-        envelope = {
-            "domain", "server_id", "sequence", "event_number",
-            "timestamp", "event_type", "table_name", "table_schema",
-        }
-        wire_to_ddl = {
-            "int": "int", "integer": "int", "tinyint": "int",
-            "smallint": "int", "mediumint": "int",
-            "bigint": "bigint", "long": "bigint",
-            "double": "double", "float": "float",
-            "decimal": "double",  # wire JSON renders decimals as numbers
-            "string": "string", "varchar": "string", "char": "string",
-            "text": "string", "bytes": "string",
-            "boolean": "boolean", "bool": "boolean",
-        }
         best = None  # (version, fields)
-        try:
-            files = sorted(
-                f for f in os.listdir(path) if f.endswith((".jsonl", ".txt"))
-            )
-        except FileNotFoundError:
-            files = []
-        for fname in files:
+        for fname in _spool_files(path):
             if best is not None and version is not None:
                 break  # pinned version found — no need to scan further
             with open(os.path.join(path, fname), "rb") as fh:
@@ -556,7 +495,7 @@ def build_cdc_datasource():
         cols = []
         for f in best[1]:
             name = f.get("name", "")
-            if not name or name in envelope:
+            if not name or name in envelope_names:
                 continue
             t = f.get("type")
             if isinstance(t, str):          # plain string type
@@ -568,21 +507,14 @@ def build_cdc_datasource():
                 )
             else:                           # enum object (or unknown)
                 wire = "string"
-            cols.append((name, wire_to_ddl.get(str(wire).lower(), "string")))
+            spark_ddl = wire_types.get(str(wire).lower(), ("string",))[0]
+            cols.append((name, spark_ddl))
         return ", ".join(f"{n} {t}" for n, t in cols) or None
 
     def _normalize_spark_ddl(pairs):
         """(name, normalized type) pairs → Spark-parseable DDL.  Wire
         types Spark's DDL parser lacks ('double precision', 'text',
         'long', 'real') map to their Spark equivalents."""
-        spark_type = {
-            "int": "int", "integer": "int",
-            "bigint": "bigint", "long": "bigint",
-            "double": "double", "double precision": "double",
-            "float": "float", "real": "float",
-            "string": "string", "text": "string", "varchar": "string",
-            "boolean": "boolean", "bool": "boolean",
-        }
         cols = []
         for name, typ in pairs:
             t = "".join(typ.split()) if typ.startswith(("decimal", "varchar")) else typ
@@ -592,7 +524,7 @@ def build_cdc_datasource():
             else:
                 # bare 'varchar' (no length) is NOT valid Spark DDL —
                 # it maps to string like 'text' does
-                cols.append(f"{name} {spark_type[typ]}")
+                cols.append(f"{name} {wire_types[typ][0]}")
         return ", ".join(cols)
 
     class CDCDataSource(DataSource):
@@ -600,28 +532,26 @@ def build_cdc_datasource():
         def name(cls):
             return "maxscale_cdc"
 
+        def _options(self):
+            """The options with lower-case keys.  Spark hands a
+            case-insensitive dict that already lower-cases them; a plain
+            dict from a direct caller is lower-cased here, once."""
+            return {k.lower(): v for k, v in self.options.items()}
+
         def _payload_ddl(self):
-            pds = self.options.get("payloadschema") or self.options.get(
-                "payloadSchema"
-            )
+            opts = self._options()
+            pds = opts.get("payloadschema")
             if pds:
                 return pds
-            discover = (
-                self.options.get("schemafromspool")
-                or self.options.get("schemaFromSpool")
-                or ""
-            ).lower()
-            if discover in ("true", "1"):
+            if (opts.get("schemafromspool") or "").lower() in ("true", "1"):
                 # cache: schema() and streamReader() both need this, and
                 # discovery scans spool files on the driver
                 if not hasattr(self, "_discovered_ddl"):
-                    ver = self.options.get("schemaversion") or self.options.get(
-                        "schemaVersion"
-                    )
+                    ver = opts.get("schemaversion")
                     self._discovered_ddl = _discover_payload_ddl(
-                        self.options["path"],
-                        self.options.get("database"),
-                        self.options.get("table"),
+                        opts["path"],
+                        opts.get("database"),
+                        opts.get("table"),
                         int(ver) if ver else None,
                     )
                 return self._discovered_ddl
@@ -631,15 +561,14 @@ def build_cdc_datasource():
             pds = self._payload_ddl()
             if pds:
                 return (
-                    "domain INT, server_id INT, sequence BIGINT, "
-                    "event_number INT, timestamp BIGINT, event_type STRING, "
-                    "table_name STRING, table_schema STRING, "
+                    envelope_ddl
+                    + ", "
                     + _normalize_spark_ddl(_parse_payload_ddl(pds))
                 )
             return source_schema
 
         def streamReader(self, schema):
-            opts = dict(self.options)
+            opts = self._options()
             pds = self._payload_ddl()
             if pds:
                 # pass the (possibly discovered) schema to the reader so

@@ -29,6 +29,7 @@ from pyspark.sql import types as T
 from maxscale_cdc_spark.sources.envelope import (
     ENVELOPE_SCHEMA,
     MAX_EVENT_BYTES,
+    envelope_schema_with_payload,
     is_dml_line,
     is_error_line,
 )
@@ -231,7 +232,7 @@ def parse_dml(
     """
     schema = ENVELOPE_SCHEMA
     if payload_schema is not None:
-        schema = T.StructType(list(ENVELOPE_SCHEMA.fields) + list(payload_schema.fields))
+        schema = envelope_schema_with_payload(payload_schema)
     parsed = lines.withColumn("_e", F.from_json(F.col(raw_col), schema))
     cols = [F.col(f"_e.{f.name}").alias(f.name) for f in schema.fields]
     return parsed.select(*cols, F.col(raw_col).alias("raw"))

@@ -13,25 +13,9 @@ string to be parsed with `from_json`.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-#: The 8 envelope keys stripped by the reference's TableData()
-#: (event.go:220-236).
-ENVELOPE_COLS = [
-    "domain",
-    "server_id",
-    "sequence",
-    "event_number",
-    "timestamp",
-    "event_type",
-    "table_name",
-    "table_schema",
-]
-
-#: DML event types (event.go:167-183).
-DML_EVENT_TYPES = ["insert", "update_before", "update_after", "delete"]
 
 #: Max event size honored by the reference scanner (client.go:17).
 MAX_EVENT_BYTES = 1 << 20
@@ -39,6 +23,8 @@ MAX_EVENT_BYTES = 1 << 20
 #: Error-line prefix (client.go:25).
 ERR_PREFIX = "ERR"
 
+#: The 8 envelope keys stripped by the reference's TableData()
+#: (event.go:220-236), with their Spark types — the one envelope spec.
 ENVELOPE_SCHEMA = T.StructType(
     [
         T.StructField("domain", T.IntegerType()),
@@ -51,6 +37,35 @@ ENVELOPE_SCHEMA = T.StructType(
         T.StructField("table_schema", T.StringType()),
     ]
 )
+
+ENVELOPE_COLS = [f.name for f in ENVELOPE_SCHEMA.fields]
+
+#: The spec as plain `(name, spark type)` pairs — `(("domain", "int"),
+#: ...)` — for code that is pickled by value and may not import this
+#: package (the `maxscale_cdc` DataSource binds it at factory time).
+ENVELOPE_FIELDS = tuple(
+    (f.name, f.dataType.simpleString()) for f in ENVELOPE_SCHEMA.fields
+)
+
+#: Wire type → (Spark DDL type, `pyarrow` type factory): the payload
+#: types the DataSource accepts in `payloadSchema` and the ones its
+#: schema discovery reads off the DDL events (event.go:58-137, reduced
+#: to what the avrorouter emits), and the envelope's own Spark types.
+#: Plain strings for the same reason.
+#: The wire JSON renders decimals as numbers, hence `decimal` → double.
+WIRE_TYPES = {
+    "int": ("int", "int32"), "integer": ("int", "int32"),
+    "tinyint": ("int", "int32"), "smallint": ("int", "int32"),
+    "mediumint": ("int", "int32"),
+    "bigint": ("bigint", "int64"), "long": ("bigint", "int64"),
+    "double": ("double", "float64"), "double precision": ("double", "float64"),
+    "decimal": ("double", "float64"),
+    "float": ("float", "float32"), "real": ("float", "float32"),
+    "string": ("string", "string"), "varchar": ("string", "string"),
+    "char": ("string", "string"), "text": ("string", "string"),
+    "bytes": ("string", "string"),
+    "boolean": ("boolean", "bool_"), "bool": ("boolean", "bool_"),
+}
 
 
 def envelope_schema_with_payload(payload: T.StructType) -> T.StructType:
@@ -67,35 +82,13 @@ def gtid_col(
 
     Uses concat (not concat_ws): concat_ws silently skips NULL
     components, so a null sequence would yield a malformed "0-3000"
-    that then misparses in gtid_struct-based resume compares.  With
-    concat, any null component propagates to a NULL GTID."""
+    that then misparses in resume compares.  With concat, any null
+    component propagates to a NULL GTID."""
     d = F.col(domain) if isinstance(domain, str) else domain
     s = F.col(server_id) if isinstance(server_id, str) else server_id
     q = F.col(sequence) if isinstance(sequence, str) else sequence
     return F.concat(
         d.cast("string"), F.lit("-"), s.cast("string"), F.lit("-"), q.cast("string")
-    )
-
-
-def gtid_struct(gtid: Column) -> Column:
-    """Parse a GTID string into a sortable struct<domain,server_id,sequence>.
-
-    Catalyst orders structs lexicographically by field, which is exactly
-    the GTID total order — no custom comparator needed.
-    """
-    parts = F.split(gtid, "-")
-    return F.struct(
-        parts.getItem(0).cast("int").alias("domain"),
-        parts.getItem(1).cast("int").alias("server_id"),
-        parts.getItem(2).cast("long").alias("sequence"),
-    )
-
-
-def position_col(df_or_prefix: DataFrame | None = None) -> Column:
-    """Sortable stream-position struct (domain, server_id, sequence,
-    event_number) — the total order of the stream (event.go:189-200)."""
-    return F.struct(
-        F.col("domain"), F.col("server_id"), F.col("sequence"), F.col("event_number")
     )
 
 

@@ -53,24 +53,38 @@ def _build_datasource_class():
         fname: str | None
         n_rows: int
 
-    class ManifestParquetWriter(DataSourceArrowWriter):
-        def __init__(self, path: str, inject_fail: bool) -> None:
+    class _TwoPhaseFiles:
+        """The protocol both writers share.  Tasks write hidden tmp
+        files named with this writer's id; the driver renames the
+        committed ones visible and publishes a manifest, or aborts.
+
+        Per-writer attempt id: the commit/abort sweep removes ONLY this
+        writer's tmp files, so a second concurrent writer appending to
+        the same path keeps its in-flight tmps (ADVICE r13).  Assigned
+        on the driver; executors see the same id via the pickled
+        writer.
+
+        Abort vs. late tasks: `abort` publishes `.abort-<wid>` BEFORE
+        it sweeps, and a task checks for that marker AFTER its tmp is
+        on disk.  A tmp either exists when the sweep lists the
+        directory, or its task sees the marker and removes it — a
+        sibling task that finishes after the abort leaves no file."""
+
+        def _init_files(self, path: str) -> None:
             import uuid
 
             self.path = path
-            self.inject_fail = inject_fail
-            # Per-writer attempt id, embedded in every tmp name: the
-            # commit/abort orphan sweep removes ONLY this writer's tmp
-            # files, so a second concurrent writer appending to the
-            # same path can never have its in-flight tmps deleted by
-            # this writer's commit (ADVICE r13).  Assigned on the
-            # driver; executors see the same id via the pickled writer.
             self.wid = uuid.uuid4().hex[:12]
 
         def _tmp_prefix(self) -> str:
             return f".tmp-{self.wid}-part-"
 
-        def write(self, iterator):  # executor-side
+        def _abort_marker(self) -> str:
+            import os
+
+            return os.path.join(self.path, f".abort-{self.wid}")
+
+        def _write_tmp(self, batches) -> "_FileMsg":  # executor-side
             import os
             import uuid
 
@@ -78,20 +92,26 @@ def _build_datasource_class():
             import pyarrow.parquet as pq
             from pyspark import TaskContext
 
-            pid = TaskContext.get().partitionId()
-            batches = list(iterator)
-            if self.inject_fail and pid == 0:
-                # the crash fixture: fail AFTER consuming input so the
-                # abort path has real work to prove it cleans up
-                raise RuntimeError("injected task failure (fixture)")
             if not batches:
                 return _FileMsg(None, 0)
+            pid = TaskContext.get().partitionId()
             tbl = pa.Table.from_batches(batches)
             fname = f"{self._tmp_prefix()}{pid:05d}-{uuid.uuid4().hex}.parquet"
-            pq.write_table(tbl, os.path.join(self.path, fname))
+            tmp = os.path.join(self.path, fname)
+            pq.write_table(tbl, tmp)
+            if os.path.exists(self._abort_marker()):
+                try:
+                    os.remove(tmp)
+                except OSError:
+                    pass
             return _FileMsg(fname, tbl.num_rows)
 
-        def commit(self, messages):  # driver-side: the commit point
+        def _publish(self, messages, manifest: str, doc: dict) -> None:
+            """Driver-side commit point: rename every committed tmp
+            visible, then atomically publish `manifest` (doc + file
+            list), then sweep this writer's orphans — any own-id tmp
+            left is by construction uncommitted (a retried or
+            speculative attempt; ADVICE r12)."""
             import json
             import os
 
@@ -105,15 +125,10 @@ def _build_datasource_class():
                     os.path.join(self.path, visible),
                 )
                 files.append({"file": visible, "n_rows": m.n_rows})
-            tmp = os.path.join(self.path, f".{MANIFEST}.tmp")
+            tmp = os.path.join(self.path, f".{manifest}.tmp")
             with open(tmp, "w") as fh:
-                json.dump({"files": files}, fh)
-            os.replace(tmp, os.path.join(self.path, MANIFEST))
-            # Sweep orphaned tmp files from retried/speculative first
-            # attempts OF THIS WRITER: every committed tmp was just
-            # renamed, so any survivor with this writer's id is by
-            # construction uncommitted (ADVICE r12); other writers'
-            # tmps are left alone (ADVICE r13).
+                json.dump({**doc, "files": files}, fh)
+            os.replace(tmp, os.path.join(self.path, manifest))
             self._sweep_own_tmps()
 
         def _sweep_own_tmps(self) -> None:
@@ -126,12 +141,35 @@ def _build_datasource_class():
                     except OSError:
                         pass
 
-        def abort(self, messages):  # driver-side: leave no trace
+        def _abort(self) -> None:  # driver-side: leave no trace
+            with open(self._abort_marker(), "w"):
+                pass
             self._sweep_own_tmps()
+
+    class ManifestParquetWriter(_TwoPhaseFiles, DataSourceArrowWriter):
+        def __init__(self, path: str, inject_fail: bool) -> None:
+            self._init_files(path)
+            self.inject_fail = inject_fail
+
+        def write(self, iterator):  # executor-side
+            from pyspark import TaskContext
+
+            batches = list(iterator)
+            if self.inject_fail and TaskContext.get().partitionId() == 0:
+                # the crash fixture: fail AFTER consuming input so the
+                # abort path has real work to prove it cleans up
+                raise RuntimeError("injected task failure (fixture)")
+            return self._write_tmp(batches)
+
+        def commit(self, messages):  # driver-side: the commit point
+            self._publish(messages, MANIFEST, {})
+
+        def abort(self, messages):
+            self._abort()
 
     from pyspark.sql.datasource import DataSourceStreamArrowWriter
 
-    class ManifestParquetStreamWriter(DataSourceStreamArrowWriter):
+    class ManifestParquetStreamWriter(_TwoPhaseFiles, DataSourceStreamArrowWriter):
         """The streaming twin: one manifest PER EPOCH
         (`_manifest-<batchId>.json`), each published atomically at
         commit(batchId) — committed epochs stay readable across a
@@ -139,80 +177,30 @@ def _build_datasource_class():
         re-publishes its manifest so only ITS files are referenced
         (orphaned tmp data from the failed attempt is never resolved
         by a reader) — exactly-once visibility from at-least-once
-        execution."""
+        execution.  One writer id per streaming query run; its epochs
+        are sequential, so the sweep after an epoch's renames only
+        removes residue of a failed prior attempt."""
 
         def __init__(self, path: str, fail_epoch: int | None) -> None:
-            import uuid
-
-            self.path = path
+            self._init_files(path)
             self.fail_epoch = fail_epoch
-            # Same per-writer tmp scoping as the batch writer: one id
-            # per streaming query run; a concurrent writer to the same
-            # path keeps its in-flight tmps (ADVICE r13).
-            self.wid = uuid.uuid4().hex[:12]
-
-        def _tmp_prefix(self) -> str:
-            return f".tmp-{self.wid}-part-"
-
-        def _sweep_own_tmps(self) -> None:
-            import os
-
-            for f in os.listdir(self.path):
-                if f.startswith(self._tmp_prefix()):
-                    try:
-                        os.remove(os.path.join(self.path, f))
-                    except OSError:
-                        pass
 
         def write(self, iterator):  # executor-side, same as batch
-            import os
-            import uuid
-
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-            from pyspark import TaskContext
-
-            pid = TaskContext.get().partitionId()
-            batches = list(iterator)
-            if not batches:
-                return _FileMsg(None, 0)
-            tbl = pa.Table.from_batches(batches)
-            fname = f"{self._tmp_prefix()}{pid:05d}-{uuid.uuid4().hex}.parquet"
-            pq.write_table(tbl, os.path.join(self.path, fname))
-            return _FileMsg(fname, tbl.num_rows)
+            return self._write_tmp(list(iterator))
 
         def commit(self, messages, batchId: int) -> None:
-            import json
-            import os
-
             if self.fail_epoch is not None and batchId == self.fail_epoch:
                 # crash fixture: die BETWEEN write and manifest publish
                 # (the worst spot — data written, commit point not)
                 raise RuntimeError(
                     f"injected commit failure at epoch {batchId}"
                 )
-            files = []
-            for m in messages:
-                if m is None or m.fname is None:
-                    continue
-                visible = "part-" + m.fname[len(self._tmp_prefix()) :]
-                os.replace(
-                    os.path.join(self.path, m.fname),
-                    os.path.join(self.path, visible),
-                )
-                files.append({"file": visible, "n_rows": m.n_rows})
-            tmp = os.path.join(self.path, f".manifest-{batchId}.tmp")
-            with open(tmp, "w") as fh:
-                json.dump({"epoch": batchId, "files": files}, fh)
-            os.replace(tmp, os.path.join(self.path, f"_manifest-{batchId}.json"))
-            # Same orphan sweep as the batch commit, scoped to THIS
-            # writer's id: this query's epochs are sequential, so after
-            # this epoch's renames any remaining own-id tmp is residue
-            # of a failed prior attempt.
-            self._sweep_own_tmps()
+            self._publish(
+                messages, f"_manifest-{batchId}.json", {"epoch": batchId}
+            )
 
         def abort(self, messages, batchId: int) -> None:
-            self._sweep_own_tmps()
+            self._abort()
 
     class ManifestParquetSink(DataSource):
         @classmethod

@@ -185,3 +185,109 @@ def read_delimited(blob: bytes) -> list[bytes]:
         msgs.append(blob[pos : pos + ln])
         pos += ln
     return msgs
+
+
+#: The decoded columns in field-number order, and their Spark types.
+CDC_PROTO_COLS = tuple(name for _, (name, _) in sorted(CDC_PROTO_FIELDS.items()))
+_DDL_OF_KIND = {
+    "int64": "long",
+    "sint64": "long",
+    "string": "string",
+    "packed_int64": "array<long>",
+}
+
+
+def proto_ddl(cols=CDC_PROTO_COLS, with_path: bool = False) -> str:
+    """The Spark schema of `decoder(cols, with_path)`'s output."""
+    kinds = {name: kind for name, kind in CDC_PROTO_FIELDS.values()}
+    return ", ".join(
+        (["src_path string"] if with_path else [])
+        + [f"{c} {_DDL_OF_KIND[kinds[c]]}" for c in cols]
+    )
+
+
+# ---------------------------------------------------------------------------
+# mapInPandas kernels — the protobuf lane's one encoder and one decoder.
+# The returned functions keep the names `encode` / `decode`: MapInPandas
+# prints the function name in the plan.
+# ---------------------------------------------------------------------------
+
+
+def encoder(out: str, name: str, unknown_on_odd: bool):
+    """mapInPandas kernel writing ONE delimited-stream file per
+    partition to `out` (atomically) and yielding its message count as
+    `n long`.
+
+    Input columns: `sequence, dml_type, pk, value_cents, drift, ts_unix,
+    note`; `tags` is `[pk % 3, pk % 5]`.  An optional `v2` flag marks
+    the producer generation: v1 rows carry no `tags` (the field a
+    newer spec added).  With `unknown_on_odd`, odd partitions append
+    field 15, which the spec lacks (a newer producer).  The file name
+    is `name` formatted with `pid` and `gen` ("v1"/"v2")."""
+
+    def encode(batches):
+        import pandas as pd
+        from pyspark import TaskContext
+
+        from maxscale_cdc_spark.tmputil import land_atomic
+
+        msgs: list[bytes] = []
+        pid = TaskContext.get().partitionId()
+        is_v2 = False
+        for pdf in batches:
+            evo = "v2" in pdf.columns
+            for seq, dml, pk, vc, dr, ts, note, v2 in zip(
+                pdf["sequence"], pdf["dml_type"], pdf["pk"],
+                pdf["value_cents"], pdf["drift"], pdf["ts_unix"],
+                pdf["note"], pdf["v2"] if evo else [True] * len(pdf),
+            ):
+                is_v2 = bool(v2)
+                m = encode_message(
+                    {
+                        "sequence": int(seq),
+                        "dml_type": str(dml),
+                        "pk": int(pk),
+                        "value_cents": int(vc),
+                        "drift": int(dr),
+                        "ts_unix": int(ts),
+                        "note": None
+                        if note is None or pd.isna(note)
+                        else str(note),
+                        "tags": [int(pk) % 3, int(pk) % 5] if is_v2 else None,
+                    }
+                )
+                if unknown_on_odd and pid % 2:
+                    m = append_unknown_varint(m, 15, int(seq) % 1000)
+                msgs.append(m)
+        if msgs:
+            land_atomic(
+                out,
+                name.format(pid=pid, gen="v2" if is_v2 else "v1"),
+                write_delimited(msgs),
+            )
+        yield pd.DataFrame({"n": [len(msgs)]})
+
+    return encode
+
+
+def decoder(cols=CDC_PROTO_COLS, with_path: bool = False):
+    """mapInPandas kernel over a binaryFile scan (`content`, plus `path`
+    first when `with_path`): every message decodes with the newest spec
+    into the `cols` columns (absent fields → null), preceded by
+    `src_path` when `with_path` — the schema `proto_ddl(cols,
+    with_path)`."""
+
+    def decode(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            paths = pdf["path"] if with_path else [None] * len(pdf)
+            for path, content in zip(paths, pdf["content"]):
+                recs = [decode_message(m) for m in read_delimited(bytes(content))]
+                if recs:
+                    out = {"src_path": [str(path)] * len(recs)} if with_path else {}
+                    for c in cols:
+                        out[c] = [r.get(c) for r in recs]
+                    yield pd.DataFrame(out)
+
+    return decode

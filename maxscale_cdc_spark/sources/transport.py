@@ -34,14 +34,30 @@ import re
 import socket
 import threading
 
+from maxscale_cdc_spark.sources.avro_ocf import zigzag_encode
 from maxscale_cdc_spark.sources.cdc_source import (
     TransportOptions,
     format_authentication_command,
     format_register_command,
     format_request_data_command,
 )
+from maxscale_cdc_spark.tmputil import land_atomic
 
 MAX_EVENT_BYTES = 1 << 20  # maxScanTokenSize (client.go:17)
+
+
+def next_burst(spool_dir: str, ext: str) -> int:
+    """The number after the highest existing `burst-NNNNNNNNN.<ext>`
+    (0 for none).  A restarted transport (or a second one) against a
+    non-empty spool must append, never os.replace() an existing burst —
+    overwriting would replay different rows under a committed
+    DataSource offset range."""
+    existing = [
+        int(m.group(1))
+        for f in os.listdir(spool_dir)
+        if (m := re.fullmatch(rf"burst-(\d{{9}})\.{ext}", f))
+    ]
+    return max(existing, default=-1) + 1
 
 
 class NotConnectedError(RuntimeError):
@@ -169,36 +185,25 @@ class CDCTransport:
         assert self._sock is not None
         self._sock.settimeout(None)
         os.makedirs(spool_dir, exist_ok=True)
-        target = self._pump_avro if data_format == "AVRO" else self._pump
-        self._thread = threading.Thread(
-            target=target, args=(spool_dir, burst_lines), daemon=True
-        )
+        if data_format == "AVRO":
+            target, args = self._pump_avro, (spool_dir,)
+        else:
+            target, args = self._pump, (spool_dir, burst_lines)
+        self._thread = threading.Thread(target=target, args=args, daemon=True)
         self._thread.start()
 
     # -- pump (client.go:253-287) --------------------------------------------
 
     def _pump(self, spool_dir: str, burst_lines: int) -> None:
         buf: list[bytes] = []
-        # resume AFTER any existing bursts: a restarted transport (or a
-        # second one) against a non-empty spool must append, never
-        # os.replace() burst-000000000.jsonl — overwriting would replay
-        # different rows under a committed DataSource offset range
-        existing = [
-            int(m.group(1))
-            for f in os.listdir(spool_dir)
-            if (m := re.fullmatch(r"burst-(\d{9})\.jsonl", f))
-        ]
-        burst_no = max(existing, default=-1) + 1
+        burst_no = next_burst(spool_dir, "jsonl")
 
         def flush() -> None:
             nonlocal burst_no, buf
             if not buf:
                 return
-            tmp = os.path.join(spool_dir, f".burst-{burst_no:09d}.tmp")
-            dst = os.path.join(spool_dir, f"burst-{burst_no:09d}.jsonl")
-            with open(tmp, "wb") as f:
-                f.write(b"\n".join(buf) + b"\n")
-            os.replace(tmp, dst)  # atomic: readers never see partial bursts
+            data = b"\n".join(buf) + b"\n"
+            land_atomic(spool_dir, f"burst-{burst_no:09d}.jsonl", data)
             burst_no += 1
             buf = []
 
@@ -246,7 +251,7 @@ class CDCTransport:
 
     # -- Avro pump: incremental OCF stream → standalone block files ----------
 
-    def _pump_avro(self, spool_dir: str, burst_lines: int) -> None:
+    def _pump_avro(self, spool_dir: str) -> None:
         """Consume a TYPE=AVRO stream: a concatenation of Avro Object
         Container Files (the avrorouter rotates files, so a new OCF
         header — magic "Obj\\x01" — may appear mid-stream; on rotation
@@ -256,8 +261,7 @@ class CDCTransport:
         header + block), atomically renamed — so bursts land as blocks
         arrive and every spool file is independently decodable by
         read_ocf / a future spark-avro swap, the exact contract of the
-        file-based Avro lane.  ``burst_lines`` is unused (the block is
-        the burst unit); kept for thread-target symmetry.
+        file-based Avro lane.  The block is the burst unit.
 
         Disambiguation after a block's trailing sync: the next 4 bytes
         are either the OCF magic (rotation), a varint block count
@@ -265,13 +269,7 @@ class CDCTransport:
         negative (size-prefixed) block counts are not produced by any
         OCF writer this engine speaks and are rejected loudly.
         """
-        del burst_lines
-        existing = [
-            int(m.group(1))
-            for f in os.listdir(spool_dir)
-            if (m := re.fullmatch(r"burst-(\d{9})\.avro", f))
-        ]
-        burst_no = max(existing, default=-1) + 1
+        burst_no = next_burst(spool_dir, "avro")
         rfile = self._rfile
         assert rfile is not None
         pending = b""  # lookahead pushback
@@ -307,31 +305,19 @@ class CDCTransport:
             hdr = bytearray(magic)
             while True:
                 count = read_zigzag()
-                hdr += _zz(count)
+                hdr += zigzag_encode(count)
                 if count == 0:
                     break
                 if count < 0:
                     size = read_zigzag()
-                    hdr += _zz(size)
+                    hdr += zigzag_encode(size)
                     count = -count
                 for _ in range(count):
                     for _field in range(2):  # key string, value bytes
                         ln = read_zigzag()
-                        hdr += _zz(ln) + read_exact(ln)
+                        hdr += zigzag_encode(ln) + read_exact(ln)
             hdr += read_exact(16)  # sync marker
             return bytes(hdr)
-
-        def _zz(n: int) -> bytes:
-            z = (n << 1) ^ (n >> 63) if n < 0 else (n << 1)
-            out = bytearray()
-            while True:
-                b = z & 0x7F
-                z >>= 7
-                if z:
-                    out.append(b | 0x80)
-                else:
-                    out.append(b)
-                    return bytes(out)
 
         try:
             header: bytes | None = None
@@ -372,11 +358,11 @@ class CDCTransport:
                 sync = read_exact(16)
                 if sync != header[-16:]:
                     raise ValueError("sync marker mismatch mid-stream")
-                tmp = os.path.join(spool_dir, f".burst-{burst_no:09d}.tmp")
-                dst = os.path.join(spool_dir, f"burst-{burst_no:09d}.avro")
-                with open(tmp, "wb") as f:
-                    f.write(header + _zz(n_recs) + _zz(size) + block + sync)
-                os.replace(tmp, dst)
+                land_atomic(
+                    spool_dir,
+                    f"burst-{burst_no:09d}.avro",
+                    header + zigzag_encode(n_recs) + zigzag_encode(size) + block + sync,
+                )
                 burst_no += 1
                 self.events_pumped += n_recs
         except (OSError, ValueError) as exc:
@@ -623,3 +609,29 @@ class FakeMaxScaleServer:
             pass
         for t in self._threads:
             t.join(timeout=5)
+
+
+def serve_and_drain(
+    spool_dir: str,
+    file_tables: dict[str, str] | None = None,
+    avro_tables: dict[str, str] | None = None,
+) -> None:
+    """One whole fixture session: a FakeMaxScaleServer serving the given
+    directories, one CDCTransport that requests `app.events` (TYPE=AVRO
+    iff `avro_tables`), drains it into `spool_dir` and stops; the
+    server is closed whatever happens."""
+    server = FakeMaxScaleServer(
+        "cdcuser", "cdcpw", file_tables=file_tables, avro_tables=avro_tables
+    )
+    try:
+        transport = CDCTransport(server.address, "cdcuser", "cdcpw", "engine-uuid")
+        transport.request_data(
+            "app",
+            "events",
+            spool_dir=spool_dir,
+            data_format="AVRO" if avro_tables else "JSON",
+        )
+        transport.drain(timeout_s=120)
+        transport.stop()
+    finally:
+        server.close()

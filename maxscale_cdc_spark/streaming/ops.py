@@ -29,6 +29,7 @@ from maxscale_cdc_spark.functions.vectors import nearest_centroid, q30_mean_arra
 from maxscale_cdc_spark.functions.window import first_per
 from maxscale_cdc_spark.operators.cdc import _DML_CASE_SQL
 from maxscale_cdc_spark.registry import oracle_splice, register
+from maxscale_cdc_spark.sources import avro_ocf
 from maxscale_cdc_spark.streaming.runners import (
     read_stream,
     run_to_files,
@@ -4761,10 +4762,7 @@ def str_pyds_stream_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
 # but the glue.
 # ---------------------------------------------------------------------------
 
-_LANDED_AVRO_DDL = (
-    "src_path string, sequence long, dml_type string, pk long, "
-    "value_cents long, ts_unix long, note string"
-)
+_LANDED_AVRO_DDL = "src_path string, " + avro_ocf.CDC_AVRO_DDL
 
 
 @register(
@@ -4795,50 +4793,23 @@ def str_cdc_e2e_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     latest-state MERGE into the manifested sink → serving read from
     disk, Python-free past landing (see block comment)."""
     from maxscale_cdc_spark.operators.sources import _spool_avro_files
-    from maxscale_cdc_spark.sources.transport import (
-        CDCTransport,
-        FakeMaxScaleServer,
-    )
+    from maxscale_cdc_spark.sources.transport import serve_and_drain
     from maxscale_cdc_spark.streaming.runners import run_bounded
     from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
 
     # -- 1. wire: OCF bytes over the live socket, re-blocked to bursts
     ocf_dir = _spool_avro_files(spark, sf_dir)
-    server = FakeMaxScaleServer(
-        "cdcuser", "cdcpw", avro_tables={"app.events": ocf_dir}
-    )
     spool = _mkdtemp(prefix="e2e_avro_spool_")
-    transport = CDCTransport(server.address, "cdcuser", "cdcpw", "engine-uuid")
-    try:
-        transport.request_data(
-            "app", "events", spool_dir=spool, data_format="AVRO"
-        )
-        transport.drain(timeout_s=120)
-        transport.stop()
-    finally:
-        server.close()
+    serve_and_drain(spool, avro_tables={"app.events": ocf_dir})
 
     # -- 2. land: the single codec invocation, parquet with lineage
-    def decode(batches):
-        import pandas as pd
-
-        from maxscale_cdc_spark.sources.avro_ocf import read_ocf
-
-        for pdf in batches:
-            for path, content in zip(pdf["path"], pdf["content"]):
-                _, recs = read_ocf(bytes(content))
-                if recs:
-                    out = pd.DataFrame(recs)
-                    out.insert(0, "src_path", str(path))
-                    yield out
-
     listing = (
         spark.read.format("binaryFile").load(spool).select("path", "content")
     )
     land = _mkdtemp(prefix="e2e_land_")
-    listing.mapInPandas(decode, _LANDED_AVRO_DDL).write.mode(
-        "overwrite"
-    ).parquet(land)
+    listing.mapInPandas(
+        avro_ocf.decoder(with_path=True), _LANDED_AVRO_DDL
+    ).write.mode("overwrite").parquet(land)
     manifest = (
         spark.read.parquet(land)
         .select(F.col("src_path").alias("path"))
@@ -5332,29 +5303,15 @@ def str_cdc_e2e_native_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from maxscale_cdc_spark.operators.sources import _spool_avro_files
-    from maxscale_cdc_spark.sources.transport import (
-        CDCTransport,
-        FakeMaxScaleServer,
-    )
+    from maxscale_cdc_spark.sources.transport import serve_and_drain
     from maxscale_cdc_spark.streaming.runners import run_bounded
     from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
 
     # -- wire: one full drain (the router's spool keeps growing in
     # production; here both halves come from one drain, split below)
     ocf_dir = _spool_avro_files(spark, sf_dir)
-    server = FakeMaxScaleServer(
-        "cdcuser", "cdcpw", avro_tables={"app.events": ocf_dir}
-    )
     spool = _mkdtemp(prefix="e2e_rs_spool_")
-    transport = CDCTransport(server.address, "cdcuser", "cdcpw", "engine-uuid")
-    try:
-        transport.request_data(
-            "app", "events", spool_dir=spool, data_format="AVRO"
-        )
-        transport.drain(timeout_s=120)
-        transport.stop()
-    finally:
-        server.close()
+    serve_and_drain(spool, avro_tables={"app.events": ocf_dir})
     bursts = sorted(
         os.path.join(spool, f)
         for f in os.listdir(spool)
@@ -5366,19 +5323,7 @@ def str_cdc_e2e_native_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     land = _mkdtemp(prefix="e2e_rs_land_")
     os.makedirs(land, exist_ok=True)
-
-    def decode(batches):
-        import pandas as pd
-
-        from maxscale_cdc_spark.sources.avro_ocf import read_ocf
-
-        for pdf in batches:
-            for path, content in zip(pdf["path"], pdf["content"]):
-                _, recs = read_ocf(bytes(content))
-                if recs:
-                    out = pd.DataFrame(recs)
-                    out.insert(0, "src_path", str(path))
-                    yield out
+    decode = avro_ocf.decoder(with_path=True)
 
     def land_pass(paths: list[str]) -> int:
         """Decode-once: anti-join the lineage manifest, convert only

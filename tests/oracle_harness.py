@@ -136,6 +136,11 @@ def check_query(spark, name: str, sf_dir: str) -> list[str]:
     q = entrymod.queries()[name]
     oracles = entrymod.oracle_sql()
     sdf = q(spark, sf_dir)
+    # the driver's compare sorts columns BY NAME before hashing, so a
+    # repeated or missing output name is a silent failure there
+    cols = sdf.columns
+    if len(cols) != len(set(cols)) or not cols:
+        return [f"output columns must be >= 1 distinct names: {cols}"]
     spark_pdf = sdf.toPandas()
     if name not in oracles:
         return [] if len(spark_pdf) >= 0 else ["spark query failed"]

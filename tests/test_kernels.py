@@ -145,7 +145,8 @@ _INLINE_CENTROID_SCAN = {
 
 def _sites(pattern: str) -> dict[tuple[str, str], int]:
     """{(path under the package, outermost enclosing def): count} for
-    every source line matching `pattern`."""
+    every match of `pattern` in the package source (matches may span
+    lines)."""
     rx = re.compile(pattern)
     found: dict[tuple[str, str], int] = {}
     for base, _, files in os.walk(PKG):
@@ -154,8 +155,7 @@ def _sites(pattern: str) -> dict[tuple[str, str], int]:
                 continue
             path = os.path.join(base, name)
             src = open(path).read()
-            lines = src.splitlines()
-            hits = [i + 1 for i, line in enumerate(lines) if rx.search(line)]
+            hits = [src.count("\n", 0, m.start()) + 1 for m in rx.finditer(src)]
             if not hits:
                 continue
             defs = [

@@ -308,3 +308,43 @@ def test_read_gen_same_schema_gen_passes_drift_check(spark):
         2: (11, "insert", 2.0),
     }
     shutil.rmtree(root)
+
+
+class _TaskCtx:
+    def __init__(self, pid: int) -> None:
+        self.pid = pid
+
+    def partitionId(self) -> int:
+        return self.pid
+
+
+def test_manifest_parquet_task_after_abort_leaves_no_file(tmp_path, monkeypatch):
+    """A sibling task that finishes AFTER the driver's abort (the
+    snk_pyds_writer race) must not leave its file behind: the abort
+    marker is published before the sweep, and the task removes its own
+    tmp once it sees it.  Both writers, deterministically."""
+    import pyarrow as pa
+    from pyspark import TaskContext
+
+    from maxscale_cdc_spark.sources.manifest_sink_ds import (
+        MANIFEST,
+        _build_datasource_class,
+    )
+
+    monkeypatch.setattr(TaskContext, "get", staticmethod(lambda: _TaskCtx(3)))
+    batch = pa.record_batch({"x": pa.array([1, 2, 3], pa.int64())})
+    ds = _build_datasource_class()
+    for kind in ("batch", "stream"):
+        path = str(tmp_path / kind)
+        src = ds({"path": path})
+        if kind == "batch":
+            w = src.writer(None, False)
+            w.abort([])
+        else:
+            w = src.streamWriter(None, False)
+            w.abort([], 0)
+        msg = w.write(iter([batch]))
+        assert msg.n_rows == 3  # the task did write, then cleaned up
+        left = os.listdir(path)
+        assert not [f for f in left if f.endswith(".parquet") or "manifest" in f], left
+        assert MANIFEST not in left
