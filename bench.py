@@ -12,8 +12,9 @@ Each query materializes fully through the `noop` sink (forces every
 operator to execute; no output-write cost).  Set BENCH_QUERIES=a,b,c to
 bench a subset; BENCH_REPEAT=n to take the min of n runs (use 3 when
 recording baselines — host load makes single runs vary 94-157s on
-identical code); BENCH_COLD=1 to clear the family compute caches
-before every attempt (cache-honest per-query floors);
+identical code); BENCH_COLD=1 to drop the family compute lineage (the
+`cold=True` entries of session.memo) before every attempt
+(cache-honest per-query floors);
 BENCH_ISOLATE=a,b,c to run each listed id in its own fresh process
 (suite-order-immune floors — the mover adjudicator; see
 _run_isolated).  Shuffle partitions are pinned by session.get_spark()
@@ -330,9 +331,11 @@ def main() -> None:
 
     from maxscale_cdc_spark.streaming.runners import _release_stream_state
 
-    # BENCH_COLD=1 clears the per-(session, sf_dir) compute caches
-    # (shingle/trigram lineage, CC components, BPE merges, chooser
-    # curve) BEFORE EVERY ATTEMPT, so min-of-N prices each query's own
+    # BENCH_COLD=1 drops the cold=True session.memo entries
+    # (shingle/trigram lineage, CC components, k-means chains, BPE
+    # merges, chooser curve and choice) BEFORE EVERY ATTEMPT, while
+    # fixture spools and scan handles stay (cold=False); min-of-N then
+    # prices each query's own
     # lineage instead of a suite-amortized floor (the r10 instrument
     # finding: llm_banding_recall_curve recorded 0.02 s warm vs 12.2 s
     # in the driver's cold sequential run).  JVM/JIT/parquet-footer

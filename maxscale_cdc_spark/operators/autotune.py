@@ -64,11 +64,7 @@ from maxscale_cdc_spark.operators.llm import (
     trigram_sets,
 )
 from maxscale_cdc_spark.registry import register
-from maxscale_cdc_spark.session import (
-    prune_dead_cache_entries,
-    register_family_cache,
-    session_cache_key,
-)
+from maxscale_cdc_spark.session import memo
 
 # Constants + oracle-SQL builders live in operators/banding.py (a leaf
 # module, so llm.py's family oracles can embed the chooser without an
@@ -88,10 +84,6 @@ _CAND_BUDGET_PER_DOC = banding.CAND_BUDGET_PER_DOC
 # over the SHARED staged trigram sets.
 # ---------------------------------------------------------------------------
 
-_TCLASS_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = (
-    register_family_cache({})
-)
-
 
 def trigram_classes16(
     spark: SparkSession,
@@ -105,43 +97,43 @@ def trigram_classes16(
     checkpoint-staged (16 minhash transforms consumed by every band
     config and both verify sides); the unfiltered lineage is cached per
     (session, sf_dir)."""
-    prune_dead_cache_entries(_TCLASS_CACHE, spark)
-    cache_key = session_cache_key(spark, sf_dir)
-    if stage and doc_filter is None and cache_key in _TCLASS_CACHE:
-        return _TCLASS_CACHE[cache_key]
-    base = trigram_sets(spark, sf_dir, stage=stage, doc_filter=doc_filter)
-    keyed = base.select(
-        "doc_id", "shs", F.md5(F.concat_ws("\x1f", "shs")).alias("ckey")
-    )
-    doc_map = keyed.select("doc_id", "ckey")
-    classes = keyed.groupBy("ckey").agg(
-        F.min("doc_id").alias("rep"),
-        F.count("*").cast("long").alias("n_docs"),
-        F.min_by("shs", "doc_id").alias("shs"),
-    )
-    classes = classes.select(
-        "ckey",
-        "rep",
-        "n_docs",
-        "shs",
-        F.size("shs").cast("long").alias("sz"),
-        *minhash_sig("shs", _K16),
-    )
-    if stage:
-        # Filtered (per-query) chains materialize EAGERLY: they are not
-        # family-cached, and a lazy checkpoint here is consumed by many
-        # CONCURRENT AQE query stages (truth prefix join + one band join
-        # per chooser config), which then race to materialize the same
-        # parent — measured r15 on llm_dedup_containment_pairwise as a
-        # convoy of 16-task stages blocked with runTime >> cpuTime and
-        # 6.8-19.7 s attempt swings; eager build serializes the staged
-        # table once (~2 s) and the consumers read cached blocks.  The
-        # unfiltered family chain stays lazy (first consumer pays under
-        # BENCH_COLD attribution, CLAUDE.md rule 6).
-        classes = classes.localCheckpoint(eager=doc_filter is not None)
+
+    def build():
+        base = trigram_sets(spark, sf_dir, stage=stage, doc_filter=doc_filter)
+        keyed = base.select(
+            "doc_id", "shs", F.md5(F.concat_ws("\x1f", "shs")).alias("ckey")
+        )
+        doc_map = keyed.select("doc_id", "ckey")
+        classes = keyed.groupBy("ckey").agg(
+            F.min("doc_id").alias("rep"),
+            F.count("*").cast("long").alias("n_docs"),
+            F.min_by("shs", "doc_id").alias("shs"),
+        )
+        classes = classes.select(
+            "ckey",
+            "rep",
+            "n_docs",
+            "shs",
+            F.size("shs").cast("long").alias("sz"),
+            *minhash_sig("shs", _K16),
+        )
+        if stage:
+            # Filtered (per-query) chains materialize EAGERLY: they are not
+            # family-cached, and a lazy checkpoint here is consumed by many
+            # CONCURRENT AQE query stages (truth prefix join + one band join
+            # per chooser config), which then race to materialize the same
+            # parent — measured r15 on llm_dedup_containment_pairwise as a
+            # convoy of 16-task stages blocked with runTime >> cpuTime and
+            # 6.8-19.7 s attempt swings; eager build serializes the staged
+            # table once (~2 s) and the consumers read cached blocks.  The
+            # unfiltered family chain stays lazy (first consumer pays under
+            # BENCH_COLD attribution, working rule 6).
+            classes = classes.localCheckpoint(eager=doc_filter is not None)
+        return doc_map, classes
+
     if stage and doc_filter is None:
-        _TCLASS_CACHE[cache_key] = (doc_map, classes)
-    return doc_map, classes
+        return memo(spark, ("trigram_classes16", sf_dir), build, cold=True)
+    return build()
 
 
 def _class_exact_pairs(classes: DataFrame) -> DataFrame:
@@ -216,28 +208,20 @@ def _class_exact_pairs(classes: DataFrame) -> DataFrame:
     return ver.filter(jac >= _JACCARD_MIN).select("ckey_a", "ckey_b")
 
 
-_CURVE_CACHE: dict[tuple[str, str], DataFrame] = register_family_cache({})
-
 # Corpus-size-capped tuning-sample percentage (banding.CAP_DOCS): the
 # ONE extra scalar read the estimator needs to stay corpus-size-flat
 # (the cut-point-collect precedent).  Identical to the old fixed 40%
 # at every oracle-checked scale (n ≤ 50k ⇒ pct = 40).
-_PCT_CACHE: dict[tuple[str, str], int] = register_family_cache({})
-
-
 def tuning_sample_pct(spark: SparkSession, sf_dir: str) -> int:
-    prune_dead_cache_entries(_PCT_CACHE, spark)
-    cache_key = session_cache_key(spark, sf_dir)
-    if cache_key in _PCT_CACHE:
-        return _PCT_CACHE[cache_key]
-    from maxscale_cdc_spark.tables import table
+    def build():
+        from maxscale_cdc_spark.tables import table
 
-    n = table(spark, sf_dir, "documents").count()
-    pct = min(
-        banding.SAMPLE_PCT, max(1, (100 * banding.CAP_DOCS + n - 1) // n)
-    )
-    _PCT_CACHE[cache_key] = pct
-    return pct
+        n = table(spark, sf_dir, "documents").count()
+        return min(
+            banding.SAMPLE_PCT, max(1, (100 * banding.CAP_DOCS + n - 1) // n)
+        )
+
+    return memo(spark, ("tuning_sample_pct", sf_dir), build, cold=True)
 
 
 def _banding_curve_frame(
@@ -250,93 +234,94 @@ def _banding_curve_frame(
     config with Jaccard exactly 1, so including them only inflates
     recall).  Staged + cached: both registered queries consume it in
     one session."""
-    prune_dead_cache_entries(_CURVE_CACHE, spark)
-    cache_key = session_cache_key(spark, sf_dir)
-    if stage and cache_key in _CURVE_CACHE:
-        return _CURVE_CACHE[cache_key]
-    _, classes = trigram_classes16(
-        spark,
-        sf_dir,
-        stage=stage,
-        doc_filter=hash_sample("doc_id", tuning_sample_pct(spark, sf_dir)),
-    )
-    truth = _class_exact_pairs(classes)
-    if stage:
-        # eager: consumed by one recall join PER CONFIG — concurrent
-        # AQE stages raced to materialize it (the r14 convoy, still
-        # measured r15 at 8.3-15.1 s attempt swings when lazy)
-        truth = truth.localCheckpoint(eager=True)
-    n_true = truth.agg(F.count("*").cast("long").alias("n_true"))
-    # PRODUCTION-space (bigram class) lineage on the SAME sampled docs
-    # — each config's candidate cost is counted where the dedup family
-    # actually bands (the round-9 sf10 finding: trigram-space counts
-    # under-priced the bigram verify bill by 1000× at 8×2)
-    from maxscale_cdc_spark.operators.llm import shingle_classes
 
-    bdoc_map, bclasses = shingle_classes(
-        spark,
-        sf_dir,
-        stage=stage,
-        doc_filter=hash_sample("doc_id", tuning_sample_pct(spark, sf_dir)),
-    )
-    n_docs = bdoc_map.agg(F.count("*").cast("long").alias("n_docs"))
-    out = None
-    for nb, rpb in _AUTOTUNE_CONFIGS:
-        cand = class_band_pairs(classes, nb, rpb).select("ckey_a", "ckey_b")
+    def build():
+        _, classes = trigram_classes16(
+            spark,
+            sf_dir,
+            stage=stage,
+            doc_filter=hash_sample("doc_id", tuning_sample_pct(spark, sf_dir)),
+        )
+        truth = _class_exact_pairs(classes)
         if stage:
-            # consumed twice below (cost count + recall join); eager
-            # for the same anti-convoy reason as `truth`
-            cand = cand.localCheckpoint(eager=True)
-        counts = cand.agg(
-            F.count("*").cast("long").alias("n_candidates")
-        ).crossJoin(
-            truth.join(cand, ["ckey_a", "ckey_b"]).agg(
-                F.count("*").cast("long").alias("n_caught")
+            # eager: consumed by one recall join PER CONFIG — concurrent
+            # AQE stages raced to materialize it (the r14 convoy, still
+            # measured r15 at 8.3-15.1 s attempt swings when lazy)
+            truth = truth.localCheckpoint(eager=True)
+        n_true = truth.agg(F.count("*").cast("long").alias("n_true"))
+        # PRODUCTION-space (bigram class) lineage on the SAME sampled docs
+        # — each config's candidate cost is counted where the dedup family
+        # actually bands (the round-9 sf10 finding: trigram-space counts
+        # under-priced the bigram verify bill by 1000× at 8×2)
+        from maxscale_cdc_spark.operators.llm import shingle_classes
+
+        bdoc_map, bclasses = shingle_classes(
+            spark,
+            sf_dir,
+            stage=stage,
+            doc_filter=hash_sample("doc_id", tuning_sample_pct(spark, sf_dir)),
+        )
+        n_docs = bdoc_map.agg(F.count("*").cast("long").alias("n_docs"))
+        out = None
+        for nb, rpb in _AUTOTUNE_CONFIGS:
+            cand = class_band_pairs(classes, nb, rpb).select("ckey_a", "ckey_b")
+            if stage:
+                # consumed twice below (cost count + recall join); eager
+                # for the same anti-convoy reason as `truth`
+                cand = cand.localCheckpoint(eager=True)
+            counts = cand.agg(
+                F.count("*").cast("long").alias("n_candidates")
+            ).crossJoin(
+                truth.join(cand, ["ckey_a", "ckey_b"]).agg(
+                    F.count("*").cast("long").alias("n_caught")
+                )
+            ).crossJoin(
+                class_band_pairs(bclasses, nb, rpb).agg(
+                    F.count("*").cast("long").alias("n_cand_prod")
+                )
             )
-        ).crossJoin(
-            class_band_pairs(bclasses, nb, rpb).agg(
-                F.count("*").cast("long").alias("n_cand_prod")
+            row = counts.select(
+                F.lit(nb).cast("long").alias("bands"),
+                F.lit(rpb).cast("long").alias("rows_per_band"),
+                F.lit(nb * rpb).cast("long").alias("k_hashes"),
+                "n_caught",
+                "n_candidates",
+                "n_cand_prod",
+            )
+            out = row if out is None else out.unionByName(row)
+        curve = (
+            out.crossJoin(F.broadcast(n_true))
+            .crossJoin(F.broadcast(n_docs))
+            .select(
+                "bands",
+                "rows_per_band",
+                "k_hashes",
+                "n_true",
+                "n_caught",
+                "n_candidates",
+                "n_cand_prod",
+                "n_docs",
+                F.when(
+                    F.col("n_true") > 0,
+                    F.col("n_caught").cast("double") / F.col("n_true"),
+                ).alias("recall"),
+                (
+                    F.lit(_FLOOR_DEN) * F.col("n_caught")
+                    >= F.lit(_FLOOR_NUM) * F.col("n_true")
+                ).alias("meets_floor"),
+                (
+                    F.col("n_cand_prod")
+                    <= F.lit(_CAND_BUDGET_PER_DOC) * F.col("n_docs")
+                ).alias("within_budget"),
             )
         )
-        row = counts.select(
-            F.lit(nb).cast("long").alias("bands"),
-            F.lit(rpb).cast("long").alias("rows_per_band"),
-            F.lit(nb * rpb).cast("long").alias("k_hashes"),
-            "n_caught",
-            "n_candidates",
-            "n_cand_prod",
-        )
-        out = row if out is None else out.unionByName(row)
-    curve = (
-        out.crossJoin(F.broadcast(n_true))
-        .crossJoin(F.broadcast(n_docs))
-        .select(
-            "bands",
-            "rows_per_band",
-            "k_hashes",
-            "n_true",
-            "n_caught",
-            "n_candidates",
-            "n_cand_prod",
-            "n_docs",
-            F.when(
-                F.col("n_true") > 0,
-                F.col("n_caught").cast("double") / F.col("n_true"),
-            ).alias("recall"),
-            (
-                F.lit(_FLOOR_DEN) * F.col("n_caught")
-                >= F.lit(_FLOOR_NUM) * F.col("n_true")
-            ).alias("meets_floor"),
-            (
-                F.col("n_cand_prod")
-                <= F.lit(_CAND_BUDGET_PER_DOC) * F.col("n_docs")
-            ).alias("within_budget"),
-        )
-    )
+        if stage:
+            curve = curve.localCheckpoint(eager=False)
+        return curve
+
     if stage:
-        curve = curve.localCheckpoint(eager=False)
-        _CURVE_CACHE[cache_key] = curve
-    return curve
+        return memo(spark, ("banding_curve", sf_dir), build, cold=True)
+    return build()
 
 
 # ---------------------------------------------------------------------------
@@ -476,38 +461,32 @@ FROM allp
 # bands at.  ONE driver read (the str_dedup_horizon_autosized
 # pattern); the chooser is the same total integer order as the SQL
 # `chosen` CTE (_chosen_cte), so both engines pick identically.
-_CHOSEN_CACHE: dict[tuple[str, str], tuple[int, int]] = register_family_cache({})
-
-
 def chosen_banding(spark: SparkSession, sf_dir: str) -> tuple[int, int]:
-    prune_dead_cache_entries(_CHOSEN_CACHE, spark)
-    cache_key = session_cache_key(spark, sf_dir)
-    if cache_key in _CHOSEN_CACHE:
-        return _CHOSEN_CACHE[cache_key]
-    curve = _banding_curve_frame(spark, sf_dir)
-    meets = F.col("meets_floor")
-    budget = F.col("within_budget")
-    # degradation ladder mirrors banding.chosen_cte (floor+budget →
-    # cheapest; else max recall WITHIN budget; else cheapest) — see
-    # the sf10 finding documented there
-    pick = (
-        curve.orderBy(
-            (meets & budget).desc(),
-            budget.desc(),
-            F.when(meets & budget, F.col("n_cand_prod"))
-            .when(budget, -F.col("n_caught"))
-            .otherwise(F.col("n_cand_prod"))
-            .asc(),
-            F.col("bands").asc(),
-            F.col("rows_per_band").asc(),
+    def build():
+        curve = _banding_curve_frame(spark, sf_dir)
+        meets = F.col("meets_floor")
+        budget = F.col("within_budget")
+        # degradation ladder mirrors banding.chosen_cte (floor+budget →
+        # cheapest; else max recall WITHIN budget; else cheapest) — see
+        # the sf10 finding documented there
+        pick = (
+            curve.orderBy(
+                (meets & budget).desc(),
+                budget.desc(),
+                F.when(meets & budget, F.col("n_cand_prod"))
+                .when(budget, -F.col("n_caught"))
+                .otherwise(F.col("n_cand_prod"))
+                .asc(),
+                F.col("bands").asc(),
+                F.col("rows_per_band").asc(),
+            )
+            .select("bands", "rows_per_band")
+            .limit(1)
+            .collect()[0]
         )
-        .select("bands", "rows_per_band")
-        .limit(1)
-        .collect()[0]
-    )
-    cfg = (int(pick["bands"]), int(pick["rows_per_band"]))
-    _CHOSEN_CACHE[cache_key] = cfg
-    return cfg
+        return (int(pick["bands"]), int(pick["rows_per_band"]))
+
+    return memo(spark, ("chosen_banding", sf_dir), build, cold=True)
 
 
 @register("llm_dedup_near_autotuned", _autotuned_oracle())

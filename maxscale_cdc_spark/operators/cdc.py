@@ -19,7 +19,7 @@ aggregations.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from maxscale_cdc_spark.functions.window import first_per
@@ -347,11 +347,18 @@ def latest_state(cdc: DataFrame) -> DataFrame:
         F.col("sequence").desc(),
         F.col("event_number").desc(),
     )
-    return last.filter(F.col("dml_type") != "delete").select(
+    return _live_images(last)
+
+
+def _live_images(images: DataFrame, *extra: str | Column) -> DataFrame:
+    """Final images → served rows `pk, last_seq, last_value,
+    last_ts_unix` (+ `extra`): CDC deletes dropped."""
+    return images.filter(F.col("dml_type") != "delete").select(
         "pk",
         F.col("sequence").alias("last_seq"),
         F.col("value").alias("last_value"),
         F.col("ts_unix").alias("last_ts_unix"),
+        *extra,
     )
 
 
@@ -3104,16 +3111,7 @@ def cdc_replay_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("sequence") >= F.col("lo")) & (F.col("sequence") <= F.col("hi")),
     ).drop("lo", "hi")
     recovered = delivered.unionByName(replayed)
-    return (
-        first_per(recovered, "pk", F.col("sequence").desc())
-        .filter(F.col("dml_type") != "delete")
-        .select(
-            "pk",
-            F.col("sequence").alias("last_seq"),
-            F.col("value").alias("last_value"),
-            F.col("ts_unix").alias("last_ts_unix"),
-        )
-    )
+    return _live_images(first_per(recovered, "pk", F.col("sequence").desc()))
 
 
 # ---------------------------------------------------------------------------
@@ -3688,14 +3686,8 @@ def cdc_backfill_chunk_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_cov = int(key_chunks.count())
     if n_cov != n_src:
         raise RuntimeError(f"coverage hole: {n_cov} of {n_src} pks chunked")
-    state = first_per(tagged, "pk", F.col("sequence").desc()).filter(
-        F.col("dml_type") != "delete"
-    )
-    return state.select(
-        "pk",
-        F.col("sequence").alias("last_seq"),
-        F.col("value").alias("last_value"),
-        F.col("ts_unix").alias("last_ts_unix"),
+    return _live_images(
+        first_per(tagged, "pk", F.col("sequence").desc()),
         F.col("chunk_id").cast("long").alias("chunk_id"),
         F.lit(True).alias("chunks_key_atomic"),
         F.lit(True).alias("coverage_complete"),

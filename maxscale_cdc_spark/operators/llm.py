@@ -45,11 +45,7 @@ from maxscale_cdc_spark.functions.vectors import (
 from maxscale_cdc_spark.functions.window import first_per
 from maxscale_cdc_spark.operators import banding
 from maxscale_cdc_spark.registry import oracle_splice, register
-from maxscale_cdc_spark.session import (
-    prune_dead_cache_entries,
-    register_family_cache,
-    session_cache_key,
-)
+from maxscale_cdc_spark.session import memo
 from maxscale_cdc_spark.tables import table, wide_table
 
 # ---------------------------------------------------------------------------
@@ -175,13 +171,9 @@ WHERE CAST(n_common AS DOUBLE) / (sz_sum - n_common) >= {_JACCARD_MIN}
 
 # Four queries consume the unfiltered staged lineage in one session
 # (llm_dedup_near / llm_dedup_horizon_profile / llm_lsh_tuning /
-# llm_dedup_threshold_curve) — cache it per (session, sf_dir), the
-# _LEARN_CACHE pattern, so the shingling + class aggregation runs once.
-_SHINGLE_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = (
-    register_family_cache({})
-)
-
-
+# llm_dedup_threshold_curve) — memoize it per (session, sf_dir), the
+# bpe._learn_merges pattern, so the shingling + class aggregation runs
+# once.
 def shingle_classes(
     spark: SparkSession,
     sf_dir: str,
@@ -201,53 +193,53 @@ def shingle_classes(
     and both verify sides).  `stage=False` exposes the full lineage for
     plan gates.  `doc_filter` pre-filters documents (the deterministic
     hash-sample knob tables).  The staged unfiltered lineage is cached
-    per (session, sf_dir) — see _SHINGLE_CACHE."""
-    prune_dead_cache_entries(_SHINGLE_CACHE, spark)
-    cache_key = session_cache_key(spark, sf_dir)
-    if stage and doc_filter is None and cache_key in _SHINGLE_CACHE:
-        return _SHINGLE_CACHE[cache_key]
-    d = wide_table(spark, sf_dir, "documents")
-    if doc_filter is not None:
-        d = d.filter(doc_filter)
-    # cheap guard (≥2 words ⇒ ≥1 bigram) so the filter pushes to the
-    # scan side instead of re-evaluating the shingle lambda below the
-    # repartition (CLAUDE.md footgun 4, last bullet)
-    base = d.filter(F.size(words("text")) >= 2).select(
-        "doc_id",
-        F.array_sort(F.array_distinct(word_bigrams(words("text")))).alias("shs"),
-    )
-    base = base.select(
-        "doc_id", "shs", F.md5(F.concat_ws("\x1f", "shs")).alias("ckey")
-    )
-    if stage:
-        # eager for filtered (per-query, non-cached) chains — the
-        # anti-convoy rule, see trigram_classes16 in autotune.py
-        base = base.localCheckpoint(eager=doc_filter is not None)
-    doc_map = base.select("doc_id", "ckey")
-    classes = base.groupBy("ckey").agg(
-        F.min("doc_id").alias("rep"),
-        F.count("*").cast("long").alias("n_docs"),
-        F.min_by("shs", "doc_id").alias("shs"),
-    )
-    classes = classes.select(
-        "ckey",
-        "rep",
-        "n_docs",
-        "shs",
-        F.size("shs").cast("long").alias("sz"),
-        # full K=16 signature (m0..m15): every banding config the
-        # chooser can pick splits a prefix of it, so ONE staged class
-        # table serves the measured config AND the fixed-config knob
-        # tables (which band the first 8)
-        *minhash_sig("shs", _K16),
-    )
-    if stage:
-        # eager for filtered (per-query, non-cached) chains — the
-        # anti-convoy rule, see trigram_classes16 in autotune.py
-        classes = classes.localCheckpoint(eager=doc_filter is not None)
+    per (session, sf_dir) — see the comment above."""
+
+    def build():
+        d = wide_table(spark, sf_dir, "documents")
+        if doc_filter is not None:
+            d = d.filter(doc_filter)
+        # cheap guard (≥2 words ⇒ ≥1 bigram) so the filter pushes to the
+        # scan side instead of re-evaluating the shingle lambda below the
+        # repartition (working-rules footgun 4, last bullet)
+        base = d.filter(F.size(words("text")) >= 2).select(
+            "doc_id",
+            F.array_sort(F.array_distinct(word_bigrams(words("text")))).alias("shs"),
+        )
+        base = base.select(
+            "doc_id", "shs", F.md5(F.concat_ws("\x1f", "shs")).alias("ckey")
+        )
+        if stage:
+            # eager for filtered (per-query, non-cached) chains — the
+            # anti-convoy rule, see trigram_classes16 in autotune.py
+            base = base.localCheckpoint(eager=doc_filter is not None)
+        doc_map = base.select("doc_id", "ckey")
+        classes = base.groupBy("ckey").agg(
+            F.min("doc_id").alias("rep"),
+            F.count("*").cast("long").alias("n_docs"),
+            F.min_by("shs", "doc_id").alias("shs"),
+        )
+        classes = classes.select(
+            "ckey",
+            "rep",
+            "n_docs",
+            "shs",
+            F.size("shs").cast("long").alias("sz"),
+            # full K=16 signature (m0..m15): every banding config the
+            # chooser can pick splits a prefix of it, so ONE staged class
+            # table serves the measured config AND the fixed-config knob
+            # tables (which band the first 8)
+            *minhash_sig("shs", _K16),
+        )
+        if stage:
+            # eager for filtered (per-query, non-cached) chains — the
+            # anti-convoy rule, see trigram_classes16 in autotune.py
+            classes = classes.localCheckpoint(eager=doc_filter is not None)
+        return doc_map, classes
+
     if stage and doc_filter is None:
-        _SHINGLE_CACHE[cache_key] = (doc_map, classes)
-    return doc_map, classes
+        return memo(spark, ("shingle_classes", sf_dir), build, cold=True)
+    return build()
 
 
 def class_band_pairs(classes: DataFrame, nb: int, rpb: int) -> DataFrame:
@@ -510,12 +502,9 @@ FROM reps
 # The fixed-point closure is iterative (per-round collect-based
 # convergence checks re-execute on every call), and llm_dedup_savings
 # composes on llm_dedup_cluster in the same session — cache the final
-# component table per (session, sf_dir), the _LEARN_CACHE pattern
-# (bpe.py): the paired query reads the staged result instead of
+# component table per (session, sf_dir), the bpe._learn_merges
+# pattern: the paired query reads the staged result instead of
 # re-running the loop.
-_CLUSTER_CACHE: dict[tuple[str, str], DataFrame] = register_family_cache({})
-
-
 @register("llm_dedup_cluster", _CLUSTER_ORACLE)
 def llm_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup cluster assignment to a FIXED POINT: min-label propagation
@@ -531,41 +520,35 @@ def llm_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc-level collision graph (signatures are class functions, so a
     doc-pair collision ⟺ its class pair collides), with edge count
     linear in classes instead of quadratic in duplicate mass."""
-    prune_dead_cache_entries(_CLUSTER_CACHE, spark)
-    cache_key = session_cache_key(spark, sf_dir)
-    if cache_key in _CLUSTER_CACHE:
-        reps = _CLUSTER_CACHE[cache_key]
-        return reps.select(
-            "doc_id",
-            "cluster_rep",
-            (F.col("doc_id") == F.col("cluster_rep")).alias("is_keeper"),
-        )
-    from maxscale_cdc_spark.operators.autotune import chosen_banding
 
-    nb, rpb = chosen_banding(spark, sf_dir)
-    doc_map, classes = shingle_classes(spark, sf_dir)
-    # one edge per colliding CLASS pair, anchored at the class reps
-    cross = class_band_pairs(classes, nb, rpb).select(
-        F.col("ckey_a"), F.col("ckey_b")
-    )
-    reps_a = classes.select(F.col("ckey").alias("ckey_a"), F.col("rep").alias("doc_a"))
-    reps_b = classes.select(F.col("ckey").alias("ckey_b"), F.col("rep").alias("doc_b"))
-    cross_e = cross.join(reps_a, "ckey_a").join(reps_b, "ckey_b").select(
-        "doc_a", "doc_b"
-    )
-    # (member, rep) star inside each multi-doc class: same component as
-    # the oracle's all-pairs intra edges, linearly many
-    star = (
-        doc_map.join(classes.select("ckey", "rep"), "ckey")
-        .filter(F.col("doc_id") != F.col("rep"))
-        .select(F.col("rep").alias("doc_a"), F.col("doc_id").alias("doc_b"))
-    )
-    cand = cross_e.unionByName(star)
-    neighbors = cand.select(
-        F.col("doc_a").alias("doc_id"), F.col("doc_b").alias("nb")
-    ).unionByName(cand.select(F.col("doc_b").alias("doc_id"), F.col("doc_a").alias("nb")))
-    reps = min_label_closure(spark, neighbors)
-    _CLUSTER_CACHE[cache_key] = reps
+    def build():
+        from maxscale_cdc_spark.operators.autotune import chosen_banding
+
+        nb, rpb = chosen_banding(spark, sf_dir)
+        doc_map, classes = shingle_classes(spark, sf_dir)
+        # one edge per colliding CLASS pair, anchored at the class reps
+        cross = class_band_pairs(classes, nb, rpb).select(
+            F.col("ckey_a"), F.col("ckey_b")
+        )
+        reps_a = classes.select(F.col("ckey").alias("ckey_a"), F.col("rep").alias("doc_a"))
+        reps_b = classes.select(F.col("ckey").alias("ckey_b"), F.col("rep").alias("doc_b"))
+        cross_e = cross.join(reps_a, "ckey_a").join(reps_b, "ckey_b").select(
+            "doc_a", "doc_b"
+        )
+        # (member, rep) star inside each multi-doc class: same component as
+        # the oracle's all-pairs intra edges, linearly many
+        star = (
+            doc_map.join(classes.select("ckey", "rep"), "ckey")
+            .filter(F.col("doc_id") != F.col("rep"))
+            .select(F.col("rep").alias("doc_a"), F.col("doc_id").alias("doc_b"))
+        )
+        cand = cross_e.unionByName(star)
+        neighbors = cand.select(
+            F.col("doc_a").alias("doc_id"), F.col("doc_b").alias("nb")
+        ).unionByName(cand.select(F.col("doc_b").alias("doc_id"), F.col("doc_a").alias("nb")))
+        return min_label_closure(spark, neighbors)
+
+    reps = memo(spark, ("llm_dedup_cluster", sf_dir), build, cold=True)
     return reps.select(
         "doc_id",
         "cluster_rep",
@@ -1008,11 +991,6 @@ def _kmeans_cells(
 # alone runs two; at sf10 that tier cost 280 s/op, VERDICT r11 ask
 # #5) — one chain now feeds the family, the trigram/BPE cache
 # precedent.  BENCH_COLD clears it so per-query floors stay honest.
-_KMEANS_CACHE: dict[tuple[str, str, int], tuple[DataFrame, DataFrame]] = (
-    register_family_cache({})
-)
-
-
 def kmeans_cells_cached(
     spark: SparkSession, sf_dir: str, n_cells: int = _N_CELLS
 ) -> tuple[DataFrame, DataFrame]:
@@ -1023,30 +1001,22 @@ def kmeans_cells_cached(
     deterministic tie-breaks), so every consumer's oracle row is
     unchanged.  Filtered-slice chains (drift/incremental cut
     lineages) must NOT use this — their input is not the full table."""
-    key = (*session_cache_key(spark, sf_dir), n_cells)
-    hit = _KMEANS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    prune_dead_cache_entries(_KMEANS_CACHE, spark)
-    e = wide_table(spark, sf_dir, "embeddings")
-    cents, assigned = _kmeans_cells(e, n_cells)
-    pair = (
-        cents.localCheckpoint(eager=False),
-        assigned.localCheckpoint(eager=False),
-    )
-    _KMEANS_CACHE[key] = pair
-    return pair
+
+    def build():
+        e = wide_table(spark, sf_dir, "embeddings")
+        cents, assigned = _kmeans_cells(e, n_cells)
+        return (
+            cents.localCheckpoint(eager=False),
+            assigned.localCheckpoint(eager=False),
+        )
+
+    return memo(spark, ("kmeans_cells", sf_dir, n_cells), build, cold=True)
 
 
 # The 80%-cut twin: every incremental/drift/stream-splice op seeds its
 # "stored index" from the SAME slice — vec_id ≤ div(max(vec_id)·4, 5)
 # — so one staged cut-chain feeds that family too.  Keyed separately
-# from the full-table cache; BENCH_COLD clears both.
-_KMEANS_CUT_CACHE: dict[
-    tuple[str, str, int], tuple[DataFrame, DataFrame, int]
-] = register_family_cache({})
-
-
+# from the full-table chain; BENCH_COLD clears both.
 def kmeans_cells_cached_cut(
     spark: SparkSession, sf_dir: str, n_cells: int = _N_CELLS
 ) -> tuple[DataFrame, DataFrame, int]:
@@ -1054,25 +1024,22 @@ def kmeans_cells_cached_cut(
     div(max·4, 5)), memoized per (session, sf_dir, n_cells) and
     staged; returns (centroids, assignment, cut).  Values bitwise
     identical to a fresh chain — see kmeans_cells_cached."""
-    key = (*session_cache_key(spark, sf_dir), n_cells)
-    hit = _KMEANS_CUT_CACHE.get(key)
-    if hit is not None:
-        return hit
-    prune_dead_cache_entries(_KMEANS_CUT_CACHE, spark)
-    e = wide_table(spark, sf_dir, "embeddings")
-    cut = int(
-        e.agg(F.expr("div(max(vec_id) * 4, 5)").alias("c")).collect()[0]["c"]
-    )
-    cents, assigned = _kmeans_cells(
-        e.filter(F.col("vec_id") <= cut), n_cells
-    )
-    trio = (
-        cents.localCheckpoint(eager=False),
-        assigned.localCheckpoint(eager=False),
-        cut,
-    )
-    _KMEANS_CUT_CACHE[key] = trio
-    return trio
+
+    def build():
+        e = wide_table(spark, sf_dir, "embeddings")
+        cut = int(
+            e.agg(F.expr("div(max(vec_id) * 4, 5)").alias("c")).collect()[0]["c"]
+        )
+        cents, assigned = _kmeans_cells(
+            e.filter(F.col("vec_id") <= cut), n_cells
+        )
+        return (
+            cents.localCheckpoint(eager=False),
+            assigned.localCheckpoint(eager=False),
+            cut,
+        )
+
+    return memo(spark, ("kmeans_cells_cut", sf_dir, n_cells), build, cold=True)
 
 
 @register("llm_sim_ivf", _IVF_ORACLE)
@@ -1628,9 +1595,6 @@ WHERE CAST(n_common AS DOUBLE) / (sz_sum - n_common) >= {_JACCARD_MIN}
 # the LSH recall audit, and the autotune family (operators/autotune.py)
 # — the r7 verdict's shared-lineage ask: one shingling pass per
 # (session, sf_dir), one place for the trigram definition to live.
-_TRIGRAM_CACHE: dict[tuple[str, str], DataFrame] = register_family_cache({})
-
-
 def trigram_sets(
     spark: SparkSession,
     sf_dir: str,
@@ -1646,28 +1610,28 @@ def trigram_sets(
     the split + trigram lambda is scan-speed but its OUTPUT feeds
     hash-heavy lineage (16 minhash transforms, df joins) consumed by
     several registered queries."""
-    prune_dead_cache_entries(_TRIGRAM_CACHE, spark)
-    cache_key = session_cache_key(spark, sf_dir)
-    if stage and doc_filter is None and cache_key in _TRIGRAM_CACHE:
-        return _TRIGRAM_CACHE[cache_key]
-    d = wide_table(spark, sf_dir, "documents")
-    if doc_filter is not None:
-        d = d.filter(doc_filter)
-    out = (
-        d.select("doc_id", words("text").alias("w0"))
-        .filter(F.size("w0") >= 3)
-        .select(
-            "doc_id",
-            F.array_sort(F.array_distinct(word_trigrams(F.col("w0")))).alias("shs"),
+
+    def build():
+        d = wide_table(spark, sf_dir, "documents")
+        if doc_filter is not None:
+            d = d.filter(doc_filter)
+        out = (
+            d.select("doc_id", words("text").alias("w0"))
+            .filter(F.size("w0") >= 3)
+            .select(
+                "doc_id",
+                F.array_sort(F.array_distinct(word_trigrams(F.col("w0")))).alias("shs"),
+            )
         )
-    )
-    if stage:
-        # eager for filtered (per-query, non-cached) chains — the
-        # anti-convoy rule, see trigram_classes16 in autotune.py
-        out = out.localCheckpoint(eager=doc_filter is not None)
+        if stage:
+            # eager for filtered (per-query, non-cached) chains — the
+            # anti-convoy rule, see trigram_classes16 in autotune.py
+            out = out.localCheckpoint(eager=doc_filter is not None)
+        return out
+
     if stage and doc_filter is None:
-        _TRIGRAM_CACHE[cache_key] = out
-    return out
+        return memo(spark, ("trigram_sets", sf_dir), build, cold=True)
+    return build()
 
 
 @register("llm_dedup_jaccard_prefix", _JP_ORACLE)
@@ -2743,8 +2707,8 @@ def llm_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the numbers that decide whether dedup output needs the transitive
 # closure at all (mostly 2-cliques) or hits the giant-component
 # pathology (one template page chaining half the corpus).  Composes
-# the REGISTERED llm_dedup_cluster (the _CLUSTER_CACHE makes this a
-# read of the staged component table).
+# the REGISTERED llm_dedup_cluster (its memo makes this a read of
+# the staged component table).
 # ---------------------------------------------------------------------------
 
 _CLUSTER_PROFILE_ORACLE = oracle_splice(

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from maxscale_cdc_spark.functions.numeric import dec
 from maxscale_cdc_spark.functions.window import first_per
 from maxscale_cdc_spark.registry import register
+from maxscale_cdc_spark.session import memo
 from maxscale_cdc_spark.tables import table
 
 DEC12 = "decimal(12,4)"
@@ -2979,11 +2980,6 @@ def rel_join_bloom_runtime(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sf_dir).
 # ---------------------------------------------------------------------------
 
-# (session id, sf_dir) → (orders table name, lineitem table name,
-# pre-stats plan had a broadcast join) — the bool records the
-# calibration observation (see block comment: at tiny scales the
-# pruned raw size already broadcasts) for the plan gate's use.
-_CBO_CACHE: dict[tuple[str, str], tuple[str, str, bool]] = {}
 _CBO_CONFS = {
     "spark.sql.autoBroadcastJoinThreshold": "2MB",
     "spark.sql.adaptive.autoBroadcastJoinThreshold": "2MB",
@@ -3005,7 +3001,7 @@ def cbo_join_result(spark: SparkSession, sf_dir: str):
         except Exception:
             saved[k] = None
 
-    def build_join():
+    def build_join(ot: str, lt: str) -> DataFrame:
         f = spark.table(ot).filter(
             (F.col("o_orderpriority") == "1-URGENT")
             & (F.col("o_totalprice") < 2000)
@@ -3022,28 +3018,34 @@ def cbo_join_result(spark: SparkSession, sf_dir: str):
             )
         )
 
+    def build_tables() -> tuple[str, str, bool]:
+        suffix = uuid.uuid4().hex[:8]
+        ot, lt = f"cbo_orders_{suffix}", f"cbo_lineitem_{suffix}"
+        root = _mkdtemp(prefix="cbo_tbl_")
+        import os
+
+        table(spark, sf_dir, "orders").write.option(
+            "path", os.path.join(root, "orders")
+        ).mode("overwrite").saveAsTable(ot)
+        table(spark, sf_dir, "lineitem").write.option(
+            "path", os.path.join(root, "lineitem")
+        ).mode("overwrite").saveAsTable(lt)
+        pre = build_join(ot, lt)._jdf.queryExecution().executedPlan().toString()
+        spark.sql(f"ANALYZE TABLE {ot} COMPUTE STATISTICS FOR ALL COLUMNS")
+        spark.sql(f"ANALYZE TABLE {lt} COMPUTE STATISTICS")
+        return ot, lt, "BroadcastHashJoin" in pre
+
     try:
         for k, v in _CBO_CONFS.items():
             spark.conf.set(k, v)
-        key = (spark.sparkContext.applicationId, sf_dir)
-        if key not in _CBO_CACHE:
-            suffix = uuid.uuid4().hex[:8]
-            ot, lt = f"cbo_orders_{suffix}", f"cbo_lineitem_{suffix}"
-            root = _mkdtemp(prefix="cbo_tbl_")
-            import os
-
-            table(spark, sf_dir, "orders").write.option(
-                "path", os.path.join(root, "orders")
-            ).mode("overwrite").saveAsTable(ot)
-            table(spark, sf_dir, "lineitem").write.option(
-                "path", os.path.join(root, "lineitem")
-            ).mode("overwrite").saveAsTable(lt)
-            pre = build_join()._jdf.queryExecution().executedPlan().toString()
-            spark.sql(f"ANALYZE TABLE {ot} COMPUTE STATISTICS FOR ALL COLUMNS")
-            spark.sql(f"ANALYZE TABLE {lt} COMPUTE STATISTICS")
-            _CBO_CACHE[key] = (ot, lt, "BroadcastHashJoin" in pre)
-        ot, lt, _pre_broadcast = _CBO_CACHE[key]
-        j = build_join()
+        # (session, sf_dir) → (orders table name, lineitem table name,
+        # pre-stats plan had a broadcast join) — the bool records the
+        # calibration observation (see block comment: at tiny scales
+        # the pruned raw size already broadcasts) for the plan gate's use.
+        ot, lt, _pre_broadcast = memo(
+            spark, ("cbo_tables", sf_dir), build_tables, cold=False
+        )
+        j = build_join(ot, lt)
         plan = j._jdf.queryExecution().executedPlan().toString()
         # the production claim: WITH stats, the selective side
         # broadcasts.  A real exception, not `assert` — this is the

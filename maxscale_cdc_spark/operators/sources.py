@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from maxscale_cdc_spark.operators.cdc import CDC_SQL, cdc_view
 from maxscale_cdc_spark.registry import register
+from maxscale_cdc_spark.session import memo
 from maxscale_cdc_spark.sources import avro_ocf, proto_wire
 from maxscale_cdc_spark.sources.cdc_source import classify_lines, parse_dml
 from maxscale_cdc_spark.streaming.runners import run_to_memory
@@ -43,9 +44,6 @@ def _wire_line(table_name: str = "events", *payload: Column) -> Column:
     )
 
 
-_WIRE_CACHE: dict[tuple[str, int | None], str] = {}
-
-
 def _render_wire_lines(
     spark: SparkSession, sf_dir: str, seq_cap: int | None = None
 ) -> str:
@@ -56,18 +54,18 @@ def _render_wire_lines(
     Memoized per (sf_dir, seq_cap) — the spool is immutable input
     shared by every wire-format operator.  `seq_cap` bounds the spool
     to sequences below it (the src_cdc_datasource bench fixture)."""
-    key = (sf_dir, seq_cap)
-    if key in _WIRE_CACHE:
-        return _WIRE_CACHE[key]
-    cdc = cdc_view(spark, sf_dir)
-    if seq_cap is not None:
-        cdc = cdc.filter(F.col("sequence") < seq_cap)
-    out = _mkdtemp(prefix="cdc_wire_")
-    # 16 files → 16-way parallel decode in the readers (the Python
-    # data source maps one partition per burst file)
-    cdc.select(_wire_line().alias("value")).repartition(16).write.mode("overwrite").text(out)
-    _WIRE_CACHE[key] = out
-    return out
+
+    def build():
+        cdc = cdc_view(spark, sf_dir)
+        if seq_cap is not None:
+            cdc = cdc.filter(F.col("sequence") < seq_cap)
+        out = _mkdtemp(prefix="cdc_wire_")
+        # 16 files → 16-way parallel decode in the readers (the Python
+        # data source maps one partition per burst file)
+        cdc.select(_wire_line().alias("value")).repartition(16).write.mode("overwrite").text(out)
+        return out
+
+    return memo(spark, ("wire", sf_dir, seq_cap), build, cold=False)
 
 
 _SRC_ORACLE = f"""
@@ -564,8 +562,6 @@ def snk_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
 # serialized through the driver except the DDL lines (rare by nature).
 # ---------------------------------------------------------------------------
 
-_MULTI_CACHE: dict[str, dict[str, str]] = {}
-
 _MULTI_SPECS: dict[str, dict] = {
     # table -> (pk parity split, registered versions, current version)
     "users": {"parity": 0, "versions": (1,), "fields": [("pk", "bigint"), ("value", "double")]},
@@ -583,36 +579,37 @@ def _render_multi_wire(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     users = even pks at v1; orders = odd pks at v2 with the extra
     post-ALTER `qty` column (qty = sequence % 7, deterministic so the
     oracle rebuilds it)."""
-    if sf_dir in _MULTI_CACHE:
-        return _MULTI_CACHE[sf_dir]
-    from maxscale_cdc_spark.sources.cdc_source import render_ddl_line
 
-    cdc = cdc_view(spark, sf_dir)
-    dirs: dict[str, str] = {}
-    for tbl, spec in _MULTI_SPECS.items():
-        out = _mkdtemp(prefix=f"cdc_multi_{tbl}_")
-        sub = cdc.filter(F.col("pk") % 2 == spec["parity"])
-        payload = [F.col("pk"), F.col("value")]
-        if tbl == "orders":
-            payload.append((F.col("sequence") % 7).alias("qty"))
-        line = _wire_line(tbl, *payload)
-        sub.select(line.alias("value")).repartition(8).write.mode(
-            "overwrite"
-        ).text(out)
-        # DDL lines AFTER the DML write (mode=overwrite clears the dir)
-        # but with an OLDER mtime so the file stream sees schema first —
-        # mirroring the reference, which always receives DDL before the
-        # DML it types (client.go:316-322).
-        ddl_path = os.path.join(out, "00000-ddl.jsonl")
-        with open(ddl_path, "w") as fh:
-            for v in spec["versions"]:
-                # v1 of orders lacks the ALTER-added qty column
-                fields = [f for f in spec["fields"] if not (tbl == "orders" and v == 1 and f[0] == "qty")]
-                fh.write(render_ddl_line("app", tbl, v, f"0-3000-{v}", fields) + "\n")
-        os.utime(ddl_path, (1_000_000_000, 1_000_000_000))
-        dirs[tbl] = out
-    _MULTI_CACHE[sf_dir] = dirs
-    return dirs
+    def build():
+        from maxscale_cdc_spark.sources.cdc_source import render_ddl_line
+
+        cdc = cdc_view(spark, sf_dir)
+        dirs: dict[str, str] = {}
+        for tbl, spec in _MULTI_SPECS.items():
+            out = _mkdtemp(prefix=f"cdc_multi_{tbl}_")
+            sub = cdc.filter(F.col("pk") % 2 == spec["parity"])
+            payload = [F.col("pk"), F.col("value")]
+            if tbl == "orders":
+                payload.append((F.col("sequence") % 7).alias("qty"))
+            line = _wire_line(tbl, *payload)
+            sub.select(line.alias("value")).repartition(8).write.mode(
+                "overwrite"
+            ).text(out)
+            # DDL lines AFTER the DML write (mode=overwrite clears the dir)
+            # but with an OLDER mtime so the file stream sees schema first —
+            # mirroring the reference, which always receives DDL before the
+            # DML it types (client.go:316-322).
+            ddl_path = os.path.join(out, "00000-ddl.jsonl")
+            with open(ddl_path, "w") as fh:
+                for v in spec["versions"]:
+                    # v1 of orders lacks the ALTER-added qty column
+                    fields = [f for f in spec["fields"] if not (tbl == "orders" and v == 1 and f[0] == "qty")]
+                    fh.write(render_ddl_line("app", tbl, v, f"0-3000-{v}", fields) + "\n")
+            os.utime(ddl_path, (1_000_000_000, 1_000_000_000))
+            dirs[tbl] = out
+        return dirs
+
+    return memo(spark, ("multi_wire", sf_dir), build, cold=False)
 
 
 _SRC_MULTI_ORACLE = f"""
@@ -872,35 +869,32 @@ def src_tcp_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DL_ERR_MOD = 101
 _DL_OVERSIZE_MOD = 4999
 
-_DL_CACHE: dict[str, str] = {}
-
-
 def _render_dead_letter_wire(spark: SparkSession, sf_dir: str) -> str:
-    if sf_dir in _DL_CACHE:
-        return _DL_CACHE[sf_dir]
-    from maxscale_cdc_spark.sources.envelope import MAX_EVENT_BYTES
+    def build():
+        from maxscale_cdc_spark.sources.envelope import MAX_EVENT_BYTES
 
-    cdc = cdc_view(spark, sf_dir)
-    normal = _wire_line()
-    line = (
-        F.when(
-            F.col("sequence") % _DL_OVERSIZE_MOD == 0,
-            # oversize: a DML-shaped line padded past the 1 MiB cap —
-            # the size guard must win over shape dispatch
-            F.concat(normal, F.repeat(F.lit("x"), MAX_EVENT_BYTES + 1)),
+        cdc = cdc_view(spark, sf_dir)
+        normal = _wire_line()
+        line = (
+            F.when(
+                F.col("sequence") % _DL_OVERSIZE_MOD == 0,
+                # oversize: a DML-shaped line padded past the 1 MiB cap —
+                # the size guard must win over shape dispatch
+                F.concat(normal, F.repeat(F.lit("x"), MAX_EVENT_BYTES + 1)),
+            )
+            .when(
+                F.col("sequence") % _DL_ERR_MOD == 0,
+                F.concat(F.lit("ERR mid-stream failure at "), F.col("sequence")),
+            )
+            .otherwise(normal)
         )
-        .when(
-            F.col("sequence") % _DL_ERR_MOD == 0,
-            F.concat(F.lit("ERR mid-stream failure at "), F.col("sequence")),
-        )
-        .otherwise(normal)
-    )
-    out = _mkdtemp(prefix="cdc_dl_wire_")
-    cdc.select(line.alias("value")).repartition(8).write.mode(
-        "overwrite"
-    ).text(out)
-    _DL_CACHE[sf_dir] = out
-    return out
+        out = _mkdtemp(prefix="cdc_dl_wire_")
+        cdc.select(line.alias("value")).repartition(8).write.mode(
+            "overwrite"
+        ).text(out)
+        return out
+
+    return memo(spark, ("dead_letter_wire", sf_dir), build, cold=False)
 
 
 _DL_ORACLE = f"""
@@ -1274,18 +1268,15 @@ def _binary_envelope(df: DataFrame, *extra: Column | str) -> DataFrame:
     )
 
 
-_AVRO_CACHE: dict[str, str] = {}
-
-
 def _spool_avro_files(spark: SparkSession, sf_dir: str) -> str:
-    if sf_dir in _AVRO_CACHE:
-        return _AVRO_CACHE[sf_dir]
-    env = _binary_envelope(cdc_view(spark, sf_dir)).repartition(8, "sequence")
-    out = _mkdtemp(prefix="src_avro_")
-    encode = avro_ocf.encoder(out, "avro:", "part-{pid:05d}.avro")
-    env.mapInPandas(encode, "n long").collect()  # force the writes
-    _AVRO_CACHE[sf_dir] = out
-    return out
+    def build():
+        env = _binary_envelope(cdc_view(spark, sf_dir)).repartition(8, "sequence")
+        out = _mkdtemp(prefix="src_avro_")
+        encode = avro_ocf.encoder(out, "avro:", "part-{pid:05d}.avro")
+        env.mapInPandas(encode, "n long").collect()  # force the writes
+        return out
+
+    return memo(spark, ("avro", sf_dir), build, cold=False)
 
 
 @register(
@@ -1406,29 +1397,26 @@ def str_avro_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
 # AND the fill.
 # ---------------------------------------------------------------------------
 
-_AVRO_EVO_CACHE: dict[str, str] = {}
-
-
 def _spool_avro_evo_files(spark: SparkSession, sf_dir: str) -> str:
-    if sf_dir in _AVRO_EVO_CACHE:
-        return _AVRO_EVO_CACHE[sf_dir]
-    cdc = cdc_view(spark, sf_dir)
-    cut = cdc.agg(F.expr("div(max(sequence) * 3, 5)").alias("cutoff"))
-    env = _binary_envelope(
-        cdc.join(F.broadcast(cut)),
-        (F.col("sequence") > F.col("cutoff")).alias("v2"),
-        (F.col("pk") % 7).cast("int").alias("extra"),
-    )
-    out = _mkdtemp(prefix="src_avro_evo_")
-    encode = avro_ocf.encoder(out, "avro_evo:", "part-{gen}-{pid:05d}.avro")
+    def build():
+        cdc = cdc_view(spark, sf_dir)
+        cut = cdc.agg(F.expr("div(max(sequence) * 3, 5)").alias("cutoff"))
+        env = _binary_envelope(
+            cdc.join(F.broadcast(cut)),
+            (F.col("sequence") > F.col("cutoff")).alias("v2"),
+            (F.col("pk") % 7).cast("int").alias("extra"),
+        )
+        out = _mkdtemp(prefix="src_avro_evo_")
+        encode = avro_ocf.encoder(out, "avro_evo:", "part-{gen}-{pid:05d}.avro")
 
-    # one schema generation per file: partition WITHIN each generation
-    for flag in (False, True):
-        env.filter(F.col("v2") == flag).repartition(4, "sequence").mapInPandas(
-            encode, "n long"
-        ).collect()
-    _AVRO_EVO_CACHE[sf_dir] = out
-    return out
+        # one schema generation per file: partition WITHIN each generation
+        for flag in (False, True):
+            env.filter(F.col("v2") == flag).repartition(4, "sequence").mapInPandas(
+                encode, "n long"
+            ).collect()
+        return out
+
+    return memo(spark, ("avro_evo", sf_dir), build, cold=False)
 
 
 @register(
@@ -1624,20 +1612,17 @@ def str_avro_tail_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
 # file count = partition count is the knob.
 # ---------------------------------------------------------------------------
 
-_PROTO_CACHE: dict[str, str] = {}
-
-
 def _spool_proto_files(spark: SparkSession, sf_dir: str) -> str:
-    if sf_dir in _PROTO_CACHE:
-        return _PROTO_CACHE[sf_dir]
-    env = _binary_envelope(
-        cdc_view(spark, sf_dir), ((F.col("pk") % 7) - 3).alias("drift")
-    ).repartition(8, "sequence")
-    out = _mkdtemp(prefix="src_proto_")
-    encode = proto_wire.encoder(out, "part-{pid:05d}.pb", unknown_on_odd=True)
-    env.mapInPandas(encode, "n long").collect()  # force the writes
-    _PROTO_CACHE[sf_dir] = out
-    return out
+    def build():
+        env = _binary_envelope(
+            cdc_view(spark, sf_dir), ((F.col("pk") % 7) - 3).alias("drift")
+        ).repartition(8, "sequence")
+        out = _mkdtemp(prefix="src_proto_")
+        encode = proto_wire.encoder(out, "part-{pid:05d}.pb", unknown_on_odd=True)
+        env.mapInPandas(encode, "n long").collect()  # force the writes
+        return out
+
+    return memo(spark, ("proto", sf_dir), build, cold=False)
 
 
 @register(
@@ -1962,29 +1947,26 @@ def src_tcp_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sequence cutover ground truth.
 # ---------------------------------------------------------------------------
 
-_PROTO_EVO_CACHE: dict[str, str] = {}
-
-
 def _spool_proto_evo_files(spark: SparkSession, sf_dir: str) -> str:
-    if sf_dir in _PROTO_EVO_CACHE:
-        return _PROTO_EVO_CACHE[sf_dir]
-    cdc = cdc_view(spark, sf_dir)
-    cut = cdc.agg(F.expr("div(max(sequence) * 3, 5)").alias("cutoff"))
-    env = _binary_envelope(
-        cdc.join(F.broadcast(cut)),
-        ((F.col("pk") % 7) - 3).alias("drift"),
-        (F.col("sequence") > F.col("cutoff")).alias("v2"),
-    )
-    out = _mkdtemp(prefix="src_proto_evo_")
-    encode = proto_wire.encoder(out, "part-{gen}-{pid:05d}.pb", unknown_on_odd=False)
+    def build():
+        cdc = cdc_view(spark, sf_dir)
+        cut = cdc.agg(F.expr("div(max(sequence) * 3, 5)").alias("cutoff"))
+        env = _binary_envelope(
+            cdc.join(F.broadcast(cut)),
+            ((F.col("pk") % 7) - 3).alias("drift"),
+            (F.col("sequence") > F.col("cutoff")).alias("v2"),
+        )
+        out = _mkdtemp(prefix="src_proto_evo_")
+        encode = proto_wire.encoder(out, "part-{gen}-{pid:05d}.pb", unknown_on_odd=False)
 
-    # one producer generation per file: partition WITHIN each generation
-    for flag in (False, True):
-        env.filter(F.col("v2") == flag).repartition(4, "sequence").mapInPandas(
-            encode, "n long"
-        ).collect()
-    _PROTO_EVO_CACHE[sf_dir] = out
-    return out
+        # one producer generation per file: partition WITHIN each generation
+        for flag in (False, True):
+            env.filter(F.col("v2") == flag).repartition(4, "sequence").mapInPandas(
+                encode, "n long"
+            ).collect()
+        return out
+
+    return memo(spark, ("proto_evo", sf_dir), build, cold=False)
 
 
 @register(

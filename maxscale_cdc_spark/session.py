@@ -9,6 +9,7 @@ timestamp semantics match the DuckDB oracle.
 from __future__ import annotations
 
 import os
+from typing import Callable, TypeVar
 
 from pyspark.sql import SparkSession
 
@@ -100,45 +101,50 @@ def get_spark(app_name: str = "maxscale-cdc-spark") -> SparkSession:
     return spark
 
 
-# Central registry of the per-(session, sf_dir) COMPUTE caches
-# (staged shingle/trigram lineage, CC components, BPE merge tables,
-# the chooser curve/choice …).  The r10 verdict's instrument finding:
-# min-of-3-in-one-session amortizes these, turning the per-query floor
-# for cached-family queries into a suite floor (0.02 s recorded for a
-# 12 s query).  bench.py's BENCH_COLD=1 clears them before every
-# attempt via reset_family_caches(), so the recorded floor prices each
-# query's own lineage.  Registration is a no-op wrapper at declaration
-# (the dict object is unchanged) — emitted plans/SQL are identical.
-FAMILY_CACHES: list[dict] = []
+# One memo for every cached build, keyed (applicationId, *key).  Keyed
+# by the SparkContext applicationId, NOT id(spark): a stopped-and-GC'd
+# session's id can be reused by a new SparkSession, which would return
+# DataFrames bound to a dead SparkContext.  One context lives per
+# process, so the first call that sees a new applicationId drops every
+# entry.  Two policies, chosen per call by `cold`:
+# * cold=True — compute lineage of the shared operator families (staged
+#   shingle/trigram sets, CC components, k-means chains, BPE merges,
+#   the chooser curve and choice).  The r10 verdict's instrument
+#   finding: min-of-3 in one session amortizes these, turning the
+#   per-query floor of a cached-family query into a suite floor (0.02 s
+#   recorded for a 12 s query).  bench.py's BENCH_COLD=1 clears them
+#   before every attempt via reset_family_caches(), so the recorded
+#   floor prices each query's own lineage.
+# * cold=False — immutable fixture spools, scan plan handles and catalog
+#   state: setup the query does not own, kept across BENCH_COLD resets.
+_COLD: dict[tuple, object] = {}
+_KEPT: dict[tuple, object] = {}
+_memo_app: str | None = None
+_MISS = object()
+T = TypeVar("T")
 
 
-def register_family_cache(cache: dict) -> dict:
-    FAMILY_CACHES.append(cache)
-    return cache
+def memo(spark: SparkSession, key: tuple, build: Callable[[], T], *, cold: bool) -> T:
+    """`build()` memoized under (applicationId, *key).  The value is
+    stored only after `build()` returns (a raise stores nothing), and no
+    lock is held across it: a build may call `memo` again."""
+    global _memo_app
+    app = spark.sparkContext.applicationId
+    if app != _memo_app:
+        _COLD.clear()
+        _KEPT.clear()
+        _memo_app = app
+    entries = _COLD if cold else _KEPT
+    full = (app, *key)
+    got = entries.get(full, _MISS)
+    if got is _MISS:
+        got = entries[full] = build()
+    return got
 
 
 def reset_family_caches() -> None:
-    """Clear every registered compute cache (BENCH_COLD instrument)."""
-    for c in FAMILY_CACHES:
-        c.clear()
-
-
-def session_cache_key(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Key for the per-(session, sf_dir) staged-DataFrame caches
-    (_SHINGLE_CACHE / _CLUSTER_CACHE / _LEARN_CACHE).  Keyed by the
-    SparkContext applicationId, NOT id(spark): a stopped-and-GC'd
-    session's id can be reused by a new SparkSession, which would
-    return checkpointed DataFrames bound to a dead SparkContext."""
-    return (spark.sparkContext.applicationId, sf_dir)
-
-
-def prune_dead_cache_entries(cache: dict, spark: SparkSession) -> None:
-    """Evict cache entries keyed to any OTHER application id — they
-    reference lineage owned by a context that no longer exists (one
-    live context per process), so they can never be read again."""
-    app = spark.sparkContext.applicationId
-    for k in [k for k in cache if k[0] != app]:
-        del cache[k]
+    """Drop every `cold=True` memo entry (BENCH_COLD instrument)."""
+    _COLD.clear()
 
 
 import contextlib

@@ -27,7 +27,7 @@ from maxscale_cdc_spark.functions.numeric import dec
 from maxscale_cdc_spark.functions.text import minhash_sig
 from maxscale_cdc_spark.functions.vectors import nearest_centroid, q30_mean_arrays
 from maxscale_cdc_spark.functions.window import first_per
-from maxscale_cdc_spark.operators.cdc import _DML_CASE_SQL
+from maxscale_cdc_spark.operators.cdc import _DML_CASE_SQL, _live_images
 from maxscale_cdc_spark.registry import oracle_splice, register
 from maxscale_cdc_spark.sources import avro_ocf
 from maxscale_cdc_spark.streaming.runners import (
@@ -886,18 +886,6 @@ def _final_image(df: DataFrame, *keys: str) -> DataFrame:
     """The last row (highest sequence) per `keys`: a batch's final
     image per pk, or per (pk, epoch) over an epoch-tagged log."""
     return first_per(df, keys, F.col("sequence").desc())
-
-
-def _live_images(images: DataFrame, *extra: str) -> DataFrame:
-    """Final images → served rows `pk, last_seq, last_value,
-    last_ts_unix` (+ `extra`): CDC deletes dropped."""
-    return images.filter(F.col("dml_type") != "delete").select(
-        "pk",
-        F.col("sequence").alias("last_seq"),
-        F.col("value").alias("last_value"),
-        F.col("ts_unix").alias("last_ts_unix"),
-        *extra,
-    )
 
 
 def _quarter_epochs(cdc: DataFrame) -> DataFrame:

@@ -1,7 +1,8 @@
 """The shared operator kernels in `maxscale_cdc_spark/functions/`
 (`minhash_sig`, `nearest_centroid`, `first_per`, `q30_mean_arrays`) on
-≤10-row frames, and a source scan that pins one definition of each so
-hand-written copies cannot grow back."""
+≤10-row frames, and a source scan that pins one definition of each (and
+of the CDC served-row projection) so hand-written copies cannot grow
+back."""
 
 from __future__ import annotations
 
@@ -126,6 +127,14 @@ _INLINE_FIRST_ROW = {
         "before first_per swaps the two Window operators in the plan"
     ),
 }
+_INLINE_SERVED_ROWS = {
+    ("operators/cdc.py", "cdc_snapshot_tail"): (
+        "serves no ts column: its export is pk, last_seq, last_value"
+    ),
+    ("operators/cdc.py", "cdc_replay_idempotence"): (
+        "exports the ts column as last_ts and joins on that name"
+    ),
+}
 _INLINE_CENTROID_SCAN = {
     ("operators/retrieval.py", "_sd_kmeans_cells"): (
         "scores with a rounded dot / sqrt(nsq * cnsq) over precomputed "
@@ -143,13 +152,13 @@ _INLINE_CENTROID_SCAN = {
 }
 
 
-def _sites(pattern: str) -> dict[tuple[str, str], int]:
-    """{(path under the package, outermost enclosing def): count} for
-    every match of `pattern` in the package source (matches may span
-    lines)."""
+def _sites(pattern: str, root: str = PKG) -> dict[tuple[str, str], int]:
+    """{(path under `root`, outermost enclosing def): count} for every
+    match of `pattern` in the Python source under `root` (default: the
+    package; matches may span lines)."""
     rx = re.compile(pattern)
     found: dict[tuple[str, str], int] = {}
-    for base, _, files in os.walk(PKG):
+    for base, _, files in os.walk(root):
         for name in files:
             if not name.endswith(".py"):
                 continue
@@ -163,7 +172,7 @@ def _sites(pattern: str) -> dict[tuple[str, str], int]:
                 for n in ast.walk(ast.parse(src))
                 if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
             ]
-            rel = os.path.relpath(path, PKG)
+            rel = os.path.relpath(path, root)
             for ln in hits:
                 inner = [d for d in defs if d[0] <= ln <= d[1]]
                 fn = min(inner)[2] if inner else "<module>"
@@ -185,6 +194,12 @@ def test_first_row_window_written_once():
     sites = _sites(r'F\.col\("rn"\) == 1')
     assert sites.pop(("functions/window.py", "first_per")) == 1
     assert set(sites) == set(_INLINE_FIRST_ROW)
+
+
+def test_served_row_projection_written_once():
+    sites = _sites(r'F\.col\("sequence"\)\.alias\("last_seq"\)')
+    assert sites.pop(("operators/cdc.py", "_live_images")) == 1
+    assert set(sites) == set(_INLINE_SERVED_ROWS)
 
 
 def test_centroid_scan_written_once():

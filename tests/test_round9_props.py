@@ -65,12 +65,17 @@ def test_nearwin_stream_bands_at_chosen_config(spark, sf_dir):
     # one verified near-dup run flows through _nearwin_result; its
     # banding is observable from the staged parquet's band domain
     _q("str_dedup_near_windowed", spark, sf_dir).collect()
-    from maxscale_cdc_spark.streaming.runners import _STAGE_CACHE
+    from maxscale_cdc_spark.session import _KEPT
 
-    key = next((k for k in _STAGE_CACHE if k.startswith("nearwin:")), None)
+    staged = {
+        k[2]: v
+        for k, v in _KEPT.items()
+        if k[1] == "stage_as_stream" and k[2].startswith("nearwin:")
+    }
+    key = next(iter(staged), None)
     assert key is not None, "nearwin staging must be cache-keyed"
     assert key == f"nearwin:{nb}x{_rpb}:{sf_dir}"
-    staged_dir = _STAGE_CACHE[key]
+    staged_dir = staged[key]
     bands = spark.read.parquet(staged_dir).select("band").distinct().collect()
     assert sorted(r["band"] for r in bands) == list(range(nb))
 
