@@ -100,7 +100,7 @@ _DRIVER_GREEN = {
     "llm_rag_rank_fusion", "mm_resolution_buckets", "rel_observe_metrics",
     "snk_upsert_mor_compact_apply",
     "snk_upsert_mor_compact_plan", "str_cdc_e2e_native",
-    "str_cdc_e2e_native_restart", "str_mor_stream",
+    "str_mor_stream",
     # (snk_branch_merge, snk_pyds_writer and str_pyds_stream_writer
     # were r13-green but are demoted below: ADVICE r13 fixes touched
     # their code this round.)
@@ -134,7 +134,7 @@ _DRIVER_GREEN = {
     "llm_dedup_two_stage", "llm_license_propagation", "llm_optout_purge", "mm_dedup_audio_fp",
     "mm_pack_interleaved", "rel_hll_rollup_union", "rel_join_bloom_runtime",
     "rel_join_cbo_stats", "snk_fenced_failover", "snk_vacuum_orphans",
-    "snk_wap_publish", "src_avro_events", "src_avro_schema_evolution",
+    "src_avro_events", "src_avro_schema_evolution",
     "src_protobuf_events", "str_avro_tail", "str_avro_tail_restart",
     "str_banding_swap_splice", "str_chained_stateful",
     "str_join_outer_watermarked", "str_protobuf_tail",
@@ -145,7 +145,7 @@ _DRIVER_GREEN = {
     "cdc_cascade_delete_apply", "cdc_replay_idempotence",
     "llm_dedup_containment_sampled", "llm_dedup_rep_apply",
     "llm_dedup_store_migrate", "mm_modality_budget_apply", "rel_dist_drift", "rel_ivm_topk",
-    "snk_manifest_gc", "snk_time_travel", "src_csv_badrecords",
+    "snk_manifest_gc", "src_csv_badrecords",
     "str_embed_drift_stream",
     "str_session_dynamic",
     # round-9 sweep greens (CORRECTNESS_r09.json, all 50 — 20 new ids,
@@ -162,7 +162,7 @@ _DRIVER_GREEN = {
     "llm_lsh_tuning_sampled", "llm_mmr_rerank", "llm_token_budget_apply",
     "llm_vocab_drift", "mm_caption_align", "mm_modality_budget_plan",
     "rel_graph_khop", "rel_rollup_refresh", "snk_partition_evolution",
-    "snk_scd2_compact", "src_xml_roundtrip",
+    "src_xml_roundtrip",
     "str_cdc_bootstrap_splice", "str_dedup_horizon_autosized",
     "str_dedup_near_prefiltered", "str_dedup_near_windowed",
     "str_quality_gate",
@@ -188,8 +188,6 @@ _DRIVER_GREEN = {
     "llm_signal_agreement", "llm_token_budget_plan", "llm_word_entropy",
     "rel_ewma_dyadic", "rel_ivm_join",
     "rel_outlier_mad", "rel_referential_integrity", "snk_upsert_compact",
-    "str_cdc_scd2_restart", "str_cdc_scd2_stream", "str_cdc_upsert_e2e",
-    "str_cdc_upsert_restart",
     # round-6 sweep greens (CORRECTNESS_r06.json, all 50 — 38 new ids,
     # 3 honest demotions re-certified, 9 re-certifications of ids
     # already listed below), code unchanged since:
@@ -314,9 +312,21 @@ _DEFERRED: set[str] = set()
 #    cores when the filtered scan arrives single-partition (r14
 #    optimization round — 6.3-7.1 s serial dir creation vs 1.2 s
 #    spread; aggregation and order-deterministic digest unchanged).
+#  - the 8 sink ids below: ManifestedUpsertSink now appends each
+#    merge as a delta generation and reconciles base + deltas on read
+#    (folding a bucket once its deltas reach its base), so the served
+#    state of a sink that ends with deltas plans the MoR reconcile.
+#    The other 8 ids that reach the sink (snk_upsert_compact,
+#    snk_manifest_gc, snk_vacuum_orphans, snk_fenced_failover,
+#    snk_change_feed, str_cdc_bootstrap_splice, str_cdc_e2e_native,
+#    snk_branch_merge) return plans identical by
+#    `tools/capture_plans.py compare` at sf0.1 and sf0.01.
 _DEMOTED: set[str] = {
     "rel_join_broadcast", "snk_branch_merge", "snk_pyds_writer",
     "src_binary_files", "str_pyds_stream_writer",
+    "snk_scd2_compact", "snk_time_travel", "snk_wap_publish",
+    "str_cdc_e2e_native_restart", "str_cdc_scd2_restart",
+    "str_cdc_scd2_stream", "str_cdc_upsert_e2e", "str_cdc_upsert_restart",
 }
 
 # Long-pole queries (streaming setup / Python DataSource cold start /

@@ -3018,7 +3018,7 @@ def cbo_join_result(spark: SparkSession, sf_dir: str):
             )
         )
 
-    def build_tables() -> tuple[str, str, bool]:
+    def build_tables() -> tuple[str, str]:
         suffix = uuid.uuid4().hex[:8]
         ot, lt = f"cbo_orders_{suffix}", f"cbo_lineitem_{suffix}"
         root = _mkdtemp(prefix="cbo_tbl_")
@@ -3030,19 +3030,15 @@ def cbo_join_result(spark: SparkSession, sf_dir: str):
         table(spark, sf_dir, "lineitem").write.option(
             "path", os.path.join(root, "lineitem")
         ).mode("overwrite").saveAsTable(lt)
-        pre = build_join(ot, lt)._jdf.queryExecution().executedPlan().toString()
         spark.sql(f"ANALYZE TABLE {ot} COMPUTE STATISTICS FOR ALL COLUMNS")
         spark.sql(f"ANALYZE TABLE {lt} COMPUTE STATISTICS")
-        return ot, lt, "BroadcastHashJoin" in pre
+        return ot, lt
 
     try:
         for k, v in _CBO_CONFS.items():
             spark.conf.set(k, v)
-        # (session, sf_dir) → (orders table name, lineitem table name,
-        # pre-stats plan had a broadcast join) — the bool records the
-        # calibration observation (see block comment: at tiny scales
-        # the pruned raw size already broadcasts) for the plan gate's use.
-        ot, lt, _pre_broadcast = memo(
+        # (session, sf_dir) → (orders table name, lineitem table name)
+        ot, lt = memo(
             spark, ("cbo_tables", sf_dir), build_tables, cold=False
         )
         j = build_join(ot, lt)

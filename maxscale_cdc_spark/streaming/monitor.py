@@ -13,27 +13,38 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def progress_frame(spark: SparkSession, query) -> DataFrame:
-    """recentProgress → one row per micro-batch."""
+    """recentProgress → one row per (micro-batch, state operator).
+
+    `state_op` is the operator's index in the batch's `stateOperators`
+    (a chained aggregation reports one entry per stateful operator); a
+    batch without state operators keeps one row with `state_op` NULL
+    and zero state counts.  The batch-level columns repeat on each of a
+    batch's rows — `summarize` counts them once per batch."""
     rows = []
     for p in query.recentProgress:
-        state = (p.get("stateOperators") or [{}])[0]
-        rows.append(
-            (
-                int(p.get("batchId", -1)),
-                float(p.get("inputRowsPerSecond") or 0.0),
-                float(p.get("processedRowsPerSecond") or 0.0),
-                int(p.get("numInputRows") or 0),
-                int(p.get("batchDuration") or 0),
-                (p.get("eventTime") or {}).get("watermark"),
-                int(state.get("numRowsTotal") or 0),
-                int(state.get("numRowsUpdated") or 0),
-            )
+        batch = (
+            int(p.get("batchId", -1)),
+            float(p.get("inputRowsPerSecond") or 0.0),
+            float(p.get("processedRowsPerSecond") or 0.0),
+            int(p.get("numInputRows") or 0),
+            int(p.get("batchDuration") or 0),
+            (p.get("eventTime") or {}).get("watermark"),
         )
+        ops = p.get("stateOperators") or []
+        for i, state in enumerate(ops or [{}]):
+            rows.append(
+                batch
+                + (
+                    i if ops else None,
+                    int(state.get("numRowsTotal") or 0),
+                    int(state.get("numRowsUpdated") or 0),
+                )
+            )
     return spark.createDataFrame(
         rows,
         "batch_id int, input_rows_per_sec double, processed_rows_per_sec double, "
         "num_input_rows bigint, batch_duration_ms bigint, watermark string, "
-        "state_rows_total bigint, state_rows_updated bigint",
+        "state_op int, state_rows_total bigint, state_rows_updated bigint",
     )
 
 
@@ -61,12 +72,15 @@ def transport_frame(spark: SparkSession, transport) -> DataFrame:
 
 
 def summarize(progress_df: DataFrame) -> DataFrame:
-    """Per-query health summary (throughput, latency, state growth)."""
+    """Per-query health summary (throughput, latency, state growth).
+    Batch-level sums read each batch's first row only (`state_op` 0 or
+    NULL); the state maximum reads every operator's rows."""
     from pyspark.sql import functions as F
 
+    first = F.coalesce(F.col("state_op"), F.lit(0)) == 0
     return progress_df.agg(
-        F.count("*").alias("n_batches"),
-        F.sum("num_input_rows").alias("total_rows"),
+        F.count(F.when(first, 1)).alias("n_batches"),
+        F.sum(F.when(first, F.col("num_input_rows"))).alias("total_rows"),
         F.max("batch_duration_ms").alias("max_batch_ms"),
         F.max("state_rows_total").alias("max_state_rows"),
         F.max("watermark").alias("last_watermark"),

@@ -145,6 +145,105 @@ def test_recovery_after_truncation(spark):
 
 
 # ---------------------------------------------------------------------------
+# The base + delta layout: the append, fold and publish windows
+# ---------------------------------------------------------------------------
+
+
+def _gen_rows(gen_dir):
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.read_metadata(os.path.join(d, f)).num_rows
+        for d, _, files in os.walk(gen_dir)
+        for f in files
+        if f.endswith(".parquet")
+    )
+
+
+def test_delta_written_without_manifest_is_invisible(spark):
+    """An appending merge that dies after its write, before its publish,
+    leaves a delta dir no manifest references: recovery serves the
+    pre-batch state and never names the dir."""
+    root = tempfile.mkdtemp(prefix="msink_delta_crash_")
+    s1 = ManifestedUpsertSink(spark, root, n_buckets=4)
+    s1.merge(_batch(spark, [(1, 10, "insert", 1.0), (2, 11, "insert", 2.0)]), 0)
+    pre = _state_dict(s1)
+    orphan, roles = s1.stage(_batch(spark, [(1, 99, "update_after", 9.9)]), 1)
+    assert roles and not any(roles.values())  # an append, not a base
+    s2 = ManifestedUpsertSink(spark, root, n_buckets=4)
+    assert orphan not in s2.referenced()
+    assert s2.deltas == {}
+    assert _state_dict(s2) == pre
+    shutil.rmtree(root)
+
+
+def test_fold_written_without_manifest_keeps_base_and_deltas(spark):
+    """A folding merge that dies before its publish: the previous base
+    and deltas are untouched (the fold wrote a fresh dir) and serve the
+    same rows after recovery."""
+    root = tempfile.mkdtemp(prefix="msink_fold_crash_")
+    s1 = ManifestedUpsertSink(spark, root, n_buckets=1)
+    s1.merge(_batch(spark, [(1, 10, "insert", 1.0), (2, 11, "insert", 2.0)]), 0)
+    s1.merge(_batch(spark, [(1, 12, "update_after", 1.5), (3, 13, "insert", 3.0)]), 1)
+    assert len(s1.deltas[0]) == 1  # the deltas now match the base's size
+    pre, pre_layout = _state_dict(s1), (dict(s1.gen_of), dict(s1.deltas))
+    orphan, roles = s1.stage(_batch(spark, [(2, 14, "delete", 2.0)]), 2)
+    assert roles == {0: True}  # the bucket folds into the new dir
+    assert _gen_rows(orphan) == 3  # pks 1, 2, 3 reconciled with the batch
+    s2 = ManifestedUpsertSink(spark, root, n_buckets=1)
+    assert (s2.gen_of, s2.deltas) == pre_layout
+    assert orphan not in s2.referenced()
+    assert _state_dict(s2) == pre
+    assert pre[1] == (12, "update_after", 1.5)
+    shutil.rmtree(root)
+
+
+def test_replay_of_appended_epoch_leaves_state_unchanged(spark):
+    """An appended epoch replayed after its publish lands as one more
+    delta holding the rows already served: the state is unchanged."""
+    root = tempfile.mkdtemp(prefix="msink_delta_replay_")
+    s1 = ManifestedUpsertSink(spark, root, n_buckets=4)
+    s1.merge(
+        _batch(spark, [(k, 10 + k, "insert", float(k)) for k in range(1, 9)]), 0
+    )
+    batch = [(2, 20, "update_after", 2.5), (5, 21, "delete", 5.0)]
+    s1.merge(_batch(spark, batch), 1)
+    assert s1.deltas  # the epoch appended
+    after_first = _state_dict(s1)
+    s2 = ManifestedUpsertSink(spark, root, n_buckets=4)
+    s2.merge(_batch(spark, batch), 1)
+    assert _state_dict(s2) == after_first
+    assert after_first[2] == (20, "update_after", 2.5)
+    shutil.rmtree(root)
+
+
+def test_appending_merge_is_one_job_writing_the_batch(spark):
+    """An appending merge reads nothing: exactly one Spark job, and its
+    generation dir holds exactly the batch's rows."""
+    import uuid
+
+    root = tempfile.mkdtemp(prefix="msink_one_job_")
+    s = ManifestedUpsertSink(spark, root, n_buckets=4)
+    s.merge(
+        _batch(spark, [(k, 10 + k, "insert", float(k)) for k in range(1, 41)]), 0
+    )
+    batch = _batch(spark, [(k, 100 + k, "update_after", 0.5) for k in range(1, 8)])
+    sc = spark.sparkContext
+    group = f"msink_one_job_{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "appending merge")
+    try:
+        s.merge(batch, 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    (gen,) = {ds[-1] for ds in s.deltas.values()}
+    assert _gen_rows(gen) == 7
+    assert _state_dict(s)[3] == (103, "update_after", 0.5)
+    shutil.rmtree(root)
+
+
+# ---------------------------------------------------------------------------
 # Scd2HistorySink — interval-maintenance recovery semantics
 # ---------------------------------------------------------------------------
 

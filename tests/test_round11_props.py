@@ -87,12 +87,7 @@ def test_fenced_failure_leaves_only_orphan_dirs(spark):
     ManifestedUpsertSink(spark, root, n_buckets=4, fenced=True)  # fences A
     with pytest.raises(StaleWriterError):
         a.merge(_batch(spark, [(2, 11, "insert", 2.0)]), 1)
-    mdir = os.path.join(root, "_manifest")
-    referenced = set()
-    for n in sorted(os.listdir(mdir)):
-        if n.startswith("manifest_"):
-            with open(os.path.join(mdir, n)) as fh:
-                referenced |= set(json.load(fh).values())
+    referenced = ManifestedUpsertSink(spark, root, n_buckets=4).referenced()
     all_gens = {
         os.path.join(root, d) for d in os.listdir(root) if d.startswith("gen_")
     }
@@ -121,12 +116,12 @@ def test_unfenced_layout_unchanged(spark):
 
 def _gc_unreferenced(root: str, retained_seqs: list[int]) -> list[str]:
     """The snk_manifest_gc rule, replicated: a generation dir is
-    collectible iff NO retained manifest references it."""
-    mdir = os.path.join(root, "_manifest")
-    referenced: set[str] = set()
-    for seq in retained_seqs:
-        with open(os.path.join(mdir, f"manifest_{seq:08d}.json")) as fh:
-            referenced |= set(json.load(fh).values())
+    collectible iff NO retained manifest references it (the sink reads
+    the manifests)."""
+    from pyspark.sql import SparkSession
+
+    sink = ManifestedUpsertSink(SparkSession.getActiveSession(), root)
+    referenced = sink.referenced(retained_seqs)
     deleted = []
     for d in sorted(os.listdir(root)):
         p = os.path.join(root, d)
