@@ -803,7 +803,7 @@ def src_tcp_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
         for t in dirs:
             spool = _mkdtemp(prefix=f"tcp_multi_{t}_")
             tr = CDCTransport(server.address, "cdcuser", "cdcpw", f"uuid-{t}")
-            tr.request_data("app", t, spool_dir=spool)
+            tr.request_data("app", t, spool_dir=spool, burst_lines=10_000)
             transports.append(tr)
             spools[t] = spool
         for tr in transports:

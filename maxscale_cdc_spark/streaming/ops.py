@@ -22,6 +22,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from maxscale_cdc_spark.functions.numeric import dec
 from maxscale_cdc_spark.functions.text import minhash_sig
@@ -438,6 +439,16 @@ def str_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _read_back_schema(df: DataFrame) -> T.StructType:
+    """The schema a `partitionBy("b")` parquet write of `df` reads back
+    with, inferred: the data columns as written, every field nullable,
+    then the partition column `b` as an int."""
+    import json
+
+    data = df.drop("b")._jdf.schema().asNullable()
+    return T.StructType.fromJson(json.loads(data.json())).add("b", T.IntegerType())
+
+
 class StaleWriterError(RuntimeError):
     """A fenced-out writer attempted to publish: a newer writer epoch
     exists (or a concurrent publish already claimed this manifest
@@ -470,11 +481,14 @@ class ManifestedUpsertSink:
     the touched buckets.  Per bucket the dir becomes:
       - the BASE, when the bucket has none yet (the bootstrap merge and
         every merge into an empty sink write exactly the batch);
-      - the new BASE, when the bucket is FOLDED: its deltas had reached
-        its base's row count (parquet footers, no Spark job), so the
-        write also carries the bucket's reconciled old state minus the
-        batch's pks — the copy-on-write rewrite, paid once per base's
-        worth of deltas.  A read scans about 2× the base at most
+      - the new BASE, when the bucket is FOLDED: the sink folds every
+        bucket holding deltas once, summed over those buckets, the
+        deltas' rows reach their bases' (parquet footers, no Spark
+        job) — one decision per merge, so buckets whose bases differ by
+        a few rows fold together instead of on consecutive merges.  The
+        write then also carries the folded buckets' reconciled old state
+        minus the batch's pks — the copy-on-write rewrite, paid once per
+        base's worth of deltas.  A read scans about 2× the base at most
         (deltas stay under base + one batch), and a fold writes about
         2× the rows its deltas absorbed, so writes stay O(batch)
         amortized (the size-tiered argument);
@@ -545,14 +559,14 @@ class ManifestedUpsertSink:
         os.makedirs(self.mdir, exist_ok=True)
         if fenced:
             self.epoch = self._acquire_epoch()
-        # Generation-read schema, captured from the first read-back:
-        # every generation is written by the same pipeline (unionByName
-        # merges would fail otherwise), and schema inference costs
-        # ~97 ms of driver-side footer work per read vs ~15 ms with an
-        # explicit schema (measured r14) — merge/state re-read
-        # generations several times per lifecycle op.  The provided
-        # schema equals the inferred one, so plans are byte-identical.
-        # _read_gen re-infers ONE post-capture dir as a drift guard.
+        # Generation-read schema: every generation is written by the same
+        # pipeline (unionByName merges would fail otherwise), and schema
+        # inference is a Spark job (~0.1-0.5 s) per read.  `stage` takes
+        # it from the frame it writes (`_read_back_schema`, equal to the
+        # inferred one, so plans are byte-identical) and checks every
+        # later write against it; only a sink that starts on existing
+        # generations infers, from one dir, and _read_gen re-infers ONE
+        # other dir it did not write as a drift guard.
         self._gen_schema = None
         self._gen_schema_dir = None
         self._gen_schema_checked = False
@@ -715,12 +729,16 @@ class ManifestedUpsertSink:
         new = batch_df.withColumn(
             "b", F.pmod(F.hash("pk"), F.lit(self.n_buckets))
         )
-        fold = sorted(
-            b
-            for b, ds in self.deltas.items()
-            if sum(self._bucket_rows(g, b) for g in ds)
-            >= self._bucket_rows(self.gen_of[b], b)
+        gen_dir = os.path.join(
+            self.root, f"gen_{epoch_id}_{uuid.uuid4().hex[:8]}"
         )
+        self._check_schema(_read_back_schema(new), gen_dir)
+        fold = sorted(self.deltas)
+        delta_rows = sum(
+            self._bucket_rows(g, b) for b in fold for g in self.deltas[b]
+        )
+        if delta_rows < sum(self._bucket_rows(self.gen_of[b], b) for b in fold):
+            fold = []
         if fold:
             old = self._read_state(
                 {b: self.gen_of[b] for b in fold},
@@ -729,9 +747,6 @@ class ManifestedUpsertSink:
             merged = old.join(new.select("pk"), "pk", "left_anti").unionByName(new)
         else:
             merged = new
-        gen_dir = os.path.join(
-            self.root, f"gen_{epoch_id}_{uuid.uuid4().hex[:8]}"
-        )
         merged.write.mode("overwrite").partitionBy("b").parquet(gen_dir)
         written = sorted(
             int(n[2:]) for n in os.listdir(gen_dir) if n.startswith("b=")
@@ -799,16 +814,35 @@ class ManifestedUpsertSink:
         )
         return _mor_alive(data, dels, "_g").select(*cols)
 
+    def _check_schema(self, schema: T.StructType, gen_dir: str) -> None:
+        """Write-time drift guard: the generation about to be written to
+        `gen_dir` reads back with `schema`, which must be the one every
+        served generation has.  The first write of a sink over no
+        generation sets it; a sink started on existing generations
+        infers it from one of them first."""
+        if self._gen_schema is None and self.gen_of:
+            self._read_gen(next(iter(self.gen_of.values())))
+        if self._gen_schema is None:
+            self._gen_schema, self._gen_schema_dir = schema, gen_dir
+        elif schema != self._gen_schema:
+            raise RuntimeError(
+                f"generation schema drifted in {gen_dir}: "
+                f"{schema.simpleString()} != {self._gen_schema.simpleString()}"
+            )
+        else:
+            self._gen_schema_checked = True
+
     def _read_gen(self, gen_dir: str) -> DataFrame:
-        """Read one generation dir (base or delta), skipping schema
-        inference after the first read (see __init__ — byte-identical
-        plans, ~82 ms less driver work per read).
+        """Read one generation dir (base or delta) with the sink's
+        schema (see __init__ — byte-identical plans, no inference job),
+        inferring it from the first dir read if no write set it.
 
         Drift guard (VERDICT r14 #4): an explicit read schema silently
-        null-fills / drops columns if a later generation's schema ever
+        null-fills / drops columns if a generation's schema ever
         drifted, where inference + unionByName used to fail loudly.
-        The FIRST read of a dir other than the capture dir re-infers
-        once and compares — one inference total, loud failure kept."""
+        Writes are checked in `_check_schema`; until one was, the FIRST
+        read of a dir other than the capture dir re-infers once and
+        compares — loud failure kept."""
         if self._gen_schema is None:
             df = self.spark.read.parquet(gen_dir)
             self._gen_schema = df.schema

@@ -243,6 +243,91 @@ def test_appending_merge_is_one_job_writing_the_batch(spark):
     shutil.rmtree(root)
 
 
+def _jobs(spark, fn):
+    """The number of Spark jobs `fn()` runs."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"msink_jobs_{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "counted")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_back_schema_equals_inferred(spark, tmp_path):
+    """The schema `stage` derives from the frame it writes is the one
+    parquet inference reads back from the written dir."""
+    from maxscale_cdc_spark.streaming.ops import _read_back_schema
+
+    from decimal import Decimal
+
+    df = spark.createDataFrame(
+        [(1, Decimal("2.5"), "x", [1, None], {"k": 1.0}, (3, "y"), 0)],
+        "pk bigint not null, d decimal(18,4), s string not null, "
+        "a array<int>, m map<string,double>, st struct<x:int,y:string>, b int",
+    ).withColumn("ts", F.current_timestamp())
+    df.write.partitionBy("b").parquet(str(tmp_path / "g"))
+    assert _read_back_schema(df) == spark.read.parquet(str(tmp_path / "g")).schema
+
+
+def test_live_sink_reads_without_schema_inference(spark):
+    """A sink that wrote its generations builds its state without a
+    Spark job (each parquet inference is one); a restarted sink infers."""
+    root = tempfile.mkdtemp(prefix="msink_no_infer_")
+    s = ManifestedUpsertSink(spark, root, n_buckets=4)
+    s.merge(_batch(spark, [(k, k, "insert", 1.0) for k in range(20)]), 0)
+    s.merge(_batch(spark, [(k, 50 + k, "update_after", 2.0) for k in range(5)]), 1)
+    assert s.deltas
+    assert _jobs(spark, s.state) == 0
+    s2 = ManifestedUpsertSink(spark, root, n_buckets=4)
+    assert _jobs(spark, s2.state) > 0
+    assert s2._gen_schema == s._gen_schema
+    s2.merge(_batch(spark, [(99, 99, "insert", 3.0)]), 2)  # checked, no drift
+    assert _state_dict(s2)[99] == (99, "insert", 3.0)
+    shutil.rmtree(root)
+
+
+def test_drifted_batch_fails_before_writing(spark):
+    import pytest
+
+    root = tempfile.mkdtemp(prefix="msink_write_drift_")
+    s = ManifestedUpsertSink(spark, root, n_buckets=4)
+    s.merge(_batch(spark, [(1, 10, "insert", 1.0)]), 0)
+    dirs = sorted(os.listdir(root))
+    wide = _batch(spark, [(2, 11, "insert", 2.0)]).withColumn("extra", F.lit(1))
+    with pytest.raises(RuntimeError, match="schema drifted"):
+        s.merge(wide, 1)
+    assert sorted(os.listdir(root)) == dirs
+    shutil.rmtree(root)
+
+
+def test_fold_is_one_decision_for_the_whole_sink(spark):
+    """An 8-bucket probe: bases of unequal size, then batches of fresh
+    keys.  Per bucket, the deltas would reach the base on different
+    merges; the sink folds every bucket on one merge."""
+    root = tempfile.mkdtemp(prefix="msink_fold_once_")
+    s = ManifestedUpsertSink(spark, root, n_buckets=8)
+    s.merge(_batch(spark, [(k, 1, "insert", 1.0) for k in range(400)]), 0)
+    bases = [s._bucket_rows(s.gen_of[b], b) for b in range(8)]
+    assert len(set(bases)) > 1
+    rebased = {}  # merge → buckets it gave a new base
+    for i in range(1, 12):
+        keys = range(1000 * i, 1000 * i + 50)
+        before = dict(s.gen_of)
+        s.merge(_batch(spark, [(k, i, "insert", 1.0) for k in keys]), i)
+        moved = sorted(b for b in before if s.gen_of[b] != before[b])
+        if moved:
+            rebased[i] = moved
+    # 8 batches of 50 rows reach the 400 rows of the bases
+    assert rebased == {9: list(range(8))}
+    assert len(_state_dict(s)) == 400 + 11 * 50
+    shutil.rmtree(root)
+
+
 # ---------------------------------------------------------------------------
 # Scd2HistorySink — interval-maintenance recovery semantics
 # ---------------------------------------------------------------------------
