@@ -9,7 +9,6 @@ timestamp semantics match the DuckDB oracle.
 from __future__ import annotations
 
 import os
-import warnings
 from typing import Callable, TypeVar
 
 from pyspark.sql import SparkSession
@@ -20,23 +19,10 @@ from pyspark.sql import SparkSession
 # stock classes fork `chmod` for every file or dir they create and
 # `readlink` twice per FileContext rename: ~120-150 forks per streaming
 # micro-batch, which the state-store commit and the offset/commit logs
-# wait on.
+# wait on.  The jar is committed, so a checkout always has it.
 LOCALFS_JAR = os.path.join(
     os.path.dirname(os.path.abspath(__file__)), "jvm", "forkfree-localfs.jar"
 )
-
-
-def _localfs_conf() -> dict[str, str]:
-    """The conf that registers the fork-free `file:` classes, or {} (the
-    stock classes) if the jar is missing."""
-    if not os.path.exists(LOCALFS_JAR):
-        warnings.warn(f"{LOCALFS_JAR} missing: stock local filesystem (forks per file)")
-        return {}
-    return {
-        "spark.driver.extraClassPath": LOCALFS_JAR,
-        "spark.hadoop.fs.file.impl": "maxscale.cdc.fs.ForkFreeLocalFileSystem",
-        "spark.hadoop.fs.AbstractFileSystem.file.impl": "maxscale.cdc.fs.ForkFreeLocalFs",
-    }
 
 
 def driver_heap(mem_total_kib: int) -> tuple[str, str]:
@@ -109,9 +95,14 @@ def get_spark(app_name: str = "maxscale-cdc-spark") -> SparkSession:
             "spark.driver.extraJavaOptions",
             os.environ.get("SPARK_DRIVER_JAVA_OPTS", xms),
         )
+        # the fork-free `file:` classes (LOCALFS_JAR above)
+        .config("spark.driver.extraClassPath", LOCALFS_JAR)
+        .config("spark.hadoop.fs.file.impl", "maxscale.cdc.fs.ForkFreeLocalFileSystem")
+        .config(
+            "spark.hadoop.fs.AbstractFileSystem.file.impl",
+            "maxscale.cdc.fs.ForkFreeLocalFs",
+        )
     )
-    for k, v in _localfs_conf().items():
-        builder = builder.config(k, v)
     # A/B instrument + ops escape hatch: `SPARK_EXTRA_CONF="k=v;k2=v2"`
     # applies arbitrary conf overrides at session build.  Unset (the
     # driver default) this is a no-op, so the bench contract is

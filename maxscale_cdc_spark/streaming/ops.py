@@ -439,14 +439,25 @@ def str_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _nullable(t: T.DataType) -> T.DataType:
+    """`t` with every struct field, array element and map value
+    nullable, recursively (what a parquet write reads back as)."""
+    if isinstance(t, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t]
+        )
+    if isinstance(t, T.ArrayType):
+        return T.ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, T.MapType):
+        return T.MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
 def _read_back_schema(df: DataFrame) -> T.StructType:
     """The schema a `partitionBy("b")` parquet write of `df` reads back
     with, inferred: the data columns as written, every field nullable,
     then the partition column `b` as an int."""
-    import json
-
-    data = df.drop("b")._jdf.schema().asNullable()
-    return T.StructType.fromJson(json.loads(data.json())).add("b", T.IntegerType())
+    return _nullable(df.drop("b").schema).add("b", T.IntegerType())
 
 
 class StaleWriterError(RuntimeError):
@@ -561,12 +572,11 @@ class ManifestedUpsertSink:
             self.epoch = self._acquire_epoch()
         # Generation-read schema: every generation is written by the same
         # pipeline (unionByName merges would fail otherwise), and schema
-        # inference is a Spark job (~0.1-0.5 s) per read.  `stage` takes
-        # it from the frame it writes (`_read_back_schema`, equal to the
-        # inferred one, so plans are byte-identical) and checks every
-        # later write against it; only a sink that starts on existing
-        # generations infers, from one dir, and _read_gen re-infers ONE
-        # other dir it did not write as a drift guard.
+        # inference is a Spark job (~0.1-0.5 s) per read.  `_expect`
+        # keeps it: the first schema seen (the frame `stage` writes, via
+        # `_read_back_schema` — equal to the inferred one, so plans are
+        # byte-identical — or one dir inferred by `_read_gen`) is the
+        # read schema of every generation.
         self._gen_schema = None
         self._gen_schema_dir = None
         self._gen_schema_checked = False
@@ -732,7 +742,7 @@ class ManifestedUpsertSink:
         gen_dir = os.path.join(
             self.root, f"gen_{epoch_id}_{uuid.uuid4().hex[:8]}"
         )
-        self._check_schema(_read_back_schema(new), gen_dir)
+        self._expect(_read_back_schema(new), gen_dir)
         fold = sorted(self.deltas)
         delta_rows = sum(
             self._bucket_rows(g, b) for b in fold for g in self.deltas[b]
@@ -814,14 +824,14 @@ class ManifestedUpsertSink:
         )
         return _mor_alive(data, dels, "_g").select(*cols)
 
-    def _check_schema(self, schema: T.StructType, gen_dir: str) -> None:
-        """Write-time drift guard: the generation about to be written to
-        `gen_dir` reads back with `schema`, which must be the one every
-        served generation has.  The first write of a sink over no
-        generation sets it; a sink started on existing generations
-        infers it from one of them first."""
-        if self._gen_schema is None and self.gen_of:
-            self._read_gen(next(iter(self.gen_of.values())))
+    def _expect(self, schema: T.StructType, gen_dir: str) -> None:
+        """The drift guard (VERDICT r14 #4): an explicit read schema
+        silently null-fills / drops columns if a generation's schema
+        ever drifted, where inference + unionByName used to fail
+        loudly.  Every schema seen — of each frame `stage` writes, and
+        of a dir `_read_gen` infers — passes here: the first one sets
+        the sink's read schema, every later one must equal it.  Once a
+        second dir matched, reads stop inferring."""
         if self._gen_schema is None:
             self._gen_schema, self._gen_schema_dir = schema, gen_dir
         elif schema != self._gen_schema:
@@ -829,36 +839,20 @@ class ManifestedUpsertSink:
                 f"generation schema drifted in {gen_dir}: "
                 f"{schema.simpleString()} != {self._gen_schema.simpleString()}"
             )
-        else:
+        elif gen_dir != self._gen_schema_dir:
             self._gen_schema_checked = True
 
     def _read_gen(self, gen_dir: str) -> DataFrame:
         """Read one generation dir (base or delta) with the sink's
-        schema (see __init__ — byte-identical plans, no inference job),
-        inferring it from the first dir read if no write set it.
-
-        Drift guard (VERDICT r14 #4): an explicit read schema silently
-        null-fills / drops columns if a generation's schema ever
-        drifted, where inference + unionByName used to fail loudly.
-        Writes are checked in `_check_schema`; until one was, the FIRST
-        read of a dir other than the capture dir re-infers once and
-        compares — loud failure kept."""
-        if self._gen_schema is None:
-            df = self.spark.read.parquet(gen_dir)
-            self._gen_schema = df.schema
-            self._gen_schema_dir = gen_dir
-            return df
-        if not self._gen_schema_checked and gen_dir != self._gen_schema_dir:
-            inferred = self.spark.read.parquet(gen_dir)
-            if inferred.schema != self._gen_schema:
-                raise RuntimeError(
-                    f"generation schema drifted in {gen_dir}: "
-                    f"{inferred.schema.simpleString()} != "
-                    f"{self._gen_schema.simpleString()}"
-                )
-            self._gen_schema_checked = True
-            return inferred
-        return self.spark.read.schema(self._gen_schema).parquet(gen_dir)
+        schema (see __init__ — byte-identical plans, no inference job).
+        Until a second dir matched the schema, any other dir is read by
+        inference and checked (`_expect`): a live sink checks its own
+        writes, a sink started on existing generations infers two."""
+        if self._gen_schema_checked or gen_dir == self._gen_schema_dir:
+            return self.spark.read.schema(self._gen_schema).parquet(gen_dir)
+        df = self.spark.read.parquet(gen_dir)
+        self._expect(df.schema, gen_dir)
+        return df
 
     def compact(self) -> list[str]:
         """Fold every bucket: rewrite the reconciled state into ONE new

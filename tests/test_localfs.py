@@ -235,8 +235,3 @@ def test_committed_jar_matches_source(tmp_path):
         committed = {n: jar.read(n) for n in jar.namelist() if n.endswith(".class")}
     assert built == committed
 
-
-def test_missing_jar_falls_back_to_stock(monkeypatch, tmp_path):
-    monkeypatch.setattr(session, "LOCALFS_JAR", str(tmp_path / "absent.jar"))
-    with pytest.warns(UserWarning, match="absent.jar"):
-        assert session._localfs_conf() == {}

@@ -217,32 +217,6 @@ def test_replay_of_appended_epoch_leaves_state_unchanged(spark):
     shutil.rmtree(root)
 
 
-def test_appending_merge_is_one_job_writing_the_batch(spark):
-    """An appending merge reads nothing: exactly one Spark job, and its
-    generation dir holds exactly the batch's rows."""
-    import uuid
-
-    root = tempfile.mkdtemp(prefix="msink_one_job_")
-    s = ManifestedUpsertSink(spark, root, n_buckets=4)
-    s.merge(
-        _batch(spark, [(k, 10 + k, "insert", float(k)) for k in range(1, 41)]), 0
-    )
-    batch = _batch(spark, [(k, 100 + k, "update_after", 0.5) for k in range(1, 8)])
-    sc = spark.sparkContext
-    group = f"msink_one_job_{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, "appending merge")
-    try:
-        s.merge(batch, 1)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
-    (gen,) = {ds[-1] for ds in s.deltas.values()}
-    assert _gen_rows(gen) == 7
-    assert _state_dict(s)[3] == (103, "update_after", 0.5)
-    shutil.rmtree(root)
-
-
 def _jobs(spark, fn):
     """The number of Spark jobs `fn()` runs."""
     import uuid
@@ -256,6 +230,22 @@ def _jobs(spark, fn):
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_appending_merge_is_one_job_writing_the_batch(spark):
+    """An appending merge reads nothing: exactly one Spark job, and its
+    generation dir holds exactly the batch's rows."""
+    root = tempfile.mkdtemp(prefix="msink_one_job_")
+    s = ManifestedUpsertSink(spark, root, n_buckets=4)
+    s.merge(
+        _batch(spark, [(k, 10 + k, "insert", float(k)) for k in range(1, 41)]), 0
+    )
+    batch = _batch(spark, [(k, 100 + k, "update_after", 0.5) for k in range(1, 8)])
+    assert _jobs(spark, lambda: s.merge(batch, 1)) == 1
+    (gen,) = {ds[-1] for ds in s.deltas.values()}
+    assert _gen_rows(gen) == 7
+    assert _state_dict(s)[3] == (103, "update_after", 0.5)
+    shutil.rmtree(root)
 
 
 def test_read_back_schema_equals_inferred(spark, tmp_path):
@@ -288,6 +278,10 @@ def test_live_sink_reads_without_schema_inference(spark):
     assert s2._gen_schema == s._gen_schema
     s2.merge(_batch(spark, [(99, 99, "insert", 3.0)]), 2)  # checked, no drift
     assert _state_dict(s2)[99] == (99, "insert", 3.0)
+    s3 = ManifestedUpsertSink(spark, root, n_buckets=4)
+    batch = _batch(spark, [(98, 98, "insert", 4.0)])
+    assert _jobs(spark, lambda: s3.merge(batch, 3)) == 1  # restarted: no inference
+    assert _state_dict(s3)[98] == (98, "insert", 4.0)  # old dirs checked on read
     shutil.rmtree(root)
 
 
