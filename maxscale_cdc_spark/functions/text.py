@@ -9,7 +9,7 @@ ASCII hex identically).
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -56,6 +56,91 @@ def minhash_sig(shs: Column | str, k: int) -> list[Column]:
         ).alias(f"m{j}")
 
     return [perm(j) for j in range(k)]
+
+
+def band_keys(df: DataFrame, nb: int, rpb: int, *keep: Column | str) -> DataFrame:
+    """The LSH band keys of the signature columns `m0..m{nb*rpb-1}`:
+    rows `(*keep, band, key)`, one per band `b < nb`, `key` the concat
+    of `m{b*rpb}..m{(b+1)*rpb-1}`.  One explode of a struct array (one
+    pass over `df`, not one scan per band); the DuckDB mirror is the
+    per-band UNION ALL of `banding.bands_sql`."""
+    banded = df.select(
+        *keep,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        F.concat(
+                            *[f"m{j}" for j in range(b * rpb, (b + 1) * rpb)]
+                        ).alias("key"),
+                    )
+                    for b in range(nb)
+                ]
+            )
+        ).alias("bk"),
+    )
+    return banded.select(
+        *banded.columns[:-1],
+        F.col("bk.band").alias("band"),
+        F.col("bk.key").alias("key"),
+    )
+
+
+def band_pairs(a: DataFrame, b: DataFrame, order: str, **out: str) -> DataFrame:
+    """Distinct candidate pairs of band-key rows: a row of `a` and a row
+    of `b` that share a `(band, key)` bucket, with the strict tie rule
+    `a.<order> < b.<order>` (no self pairs, one orientation).  Each
+    output column `name=src` selects the qualified `a.<col>` / `b.<col>`
+    named by `src`.  The DuckDB mirror is `banding.cand_sql`."""
+    return (
+        a.alias("a")
+        .join(
+            b.alias("b"),
+            (F.col("a.key") == F.col("b.key"))
+            & (F.col("a.band") == F.col("b.band"))
+            & (F.col(f"a.{order}") < F.col(f"b.{order}")),
+        )
+        .select(*[F.col(src).alias(name) for name, src in out.items()])
+        .distinct()
+    )
+
+
+def set_overlap(
+    pairs: DataFrame, sets: DataFrame, key: str, a: str, b: str, *keep: Column | str
+) -> DataFrame:
+    """The exact set-overlap verify of candidate pairs: `pairs` names
+    its members in columns `a` and `b`, `sets` holds each member's
+    shingle set `shs` under `key` (and its size `sz`, when precomputed).
+    Returns `(a, b, *keep, n_common, sz_sum)` per pair, the last two
+    BIGINT `|A ∩ B|` and `|A| + |B|` — Jaccard is `n_common / (sz_sum -
+    n_common)`.  The DuckDB mirror is `len(list_intersect(a, b))` and
+    `len(a) + len(b)`."""
+    has_sz = "sz" in sets.columns
+
+    def side(member: str, s: str) -> DataFrame:
+        return sets.select(
+            F.col(key).alias(member),
+            F.col("shs").alias(f"shs_{s}"),
+            *([F.col("sz").alias(f"sz_{s}")] if has_sz else []),
+        )
+
+    sz = (
+        F.col("sz_a") + F.col("sz_b")
+        if has_sz
+        else F.size("shs_a") + F.size("shs_b")
+    )
+    return (
+        pairs.join(side(a, "a"), a)
+        .join(side(b, "b"), b)
+        .select(
+            a,
+            b,
+            *keep,
+            F.size(F.array_intersect("shs_a", "shs_b")).cast("long").alias("n_common"),
+            sz.cast("long").alias("sz_sum"),
+        )
+    )
 
 
 SQL_WORDS = "string_split({col}, ' ')"

@@ -82,3 +82,79 @@ def q30_mean_arrays(df: DataFrame, *keys: str) -> DataFrame:
             F.array_sort(F.collect_list(F.struct("dim", "m"))), lambda s: s["m"]
         ).alias("cv")
     )
+
+
+
+def _q30_flat(df: DataFrame, key: Column | str, v: Column | str) -> DataFrame:
+    """`(key, dim, q)`: one row per element of the double array `v`,
+    1-based `dim`, `q` = floor(x·2³⁰) as a long (the Q1.30 quantum)."""
+    pos = df.select(key, F.posexplode(v).alias("dim0", "val"))
+    return pos.select(
+        pos.columns[0],
+        (F.col("dim0") + 1).alias("dim"),
+        F.floor(F.col("val") * 1073741824.0).cast("long").alias("q"),
+    )
+
+
+def q30_cell_displacement(seed: DataFrame, new: DataFrame) -> DataFrame:
+    """Per-cell centroid displacement when the `(cid, v)` rows of `new`
+    join the cells of `seed`, in pure integer Q1.30 space: per `cid`,
+    `disp_l1_num` = Σ_dim |S_seed·n_all − S_all·n_seed| and `disp_den`
+    = n_seed·n_all, so `disp_l1_num / disp_den` is the L1 distance
+    between the seed and the grown Q1.30 centroids (in units of 2⁻³⁰).
+    Cells `new` does not touch read 0; cells only `new` fills are
+    absent (no seed centroid to move)."""
+    seed_flat = _q30_flat(seed, "cid", "v")
+    seed_dim = seed_flat.groupBy("cid", "dim").agg(
+        F.sum("q").cast("long").alias("snum"),
+        F.count("*").cast("long").alias("n_old"),
+    )
+    all_dim = (
+        seed_flat.unionByName(_q30_flat(new, "cid", "v"))
+        .groupBy("cid", "dim")
+        .agg(
+            F.sum("q").cast("long").alias("cnum"),
+            F.count("*").cast("long").alias("n_all"),
+        )
+    )
+    return (
+        seed_dim.join(all_dim, ["cid", "dim"])
+        .groupBy("cid")
+        .agg(
+            F.sum(
+                F.abs(F.col("snum") * F.col("n_all") - F.col("cnum") * F.col("n_old"))
+            )
+            .cast("long")
+            .alias("disp_l1_num"),
+            F.max(F.col("n_old") * F.col("n_all")).cast("long").alias("disp_den"),
+        )
+    )
+
+
+def q30_dim_drift(
+    df: DataFrame, is_old: Column, v: Column
+) -> tuple[DataFrame, Column, Column]:
+    """Per-dimension drift of the mean of the double arrays `v` between
+    the rows where `is_old` holds and the rest, in integer Q1.30 space:
+    the aggregate `(dim, sold, n_old, snew, n_new)` (one scan, one
+    aggregation over the dims) and, over its rows, the columns `num` =
+    |snew·n_old − sold·n_new| and `den` = n_old·n_new, so `num / den`
+    is |mean_new − mean_old| in units of 2⁻³⁰.  The two columns are
+    returned, not projected: a projection under a caller's aggregate
+    or ratio stays in the plan as its own Project."""
+    agg = (
+        _q30_flat(df, is_old.alias("is_old"), v)
+        .groupBy("dim")
+        .agg(
+            F.coalesce(F.sum(F.when(F.col("is_old"), F.col("q"))), F.lit(0))
+            .cast("long")
+            .alias("sold"),
+            F.sum(F.when(F.col("is_old"), 1).otherwise(0)).cast("long").alias("n_old"),
+            F.coalesce(F.sum(F.when(~F.col("is_old"), F.col("q"))), F.lit(0))
+            .cast("long")
+            .alias("snew"),
+            F.sum(F.when(~F.col("is_old"), 1).otherwise(0)).cast("long").alias("n_new"),
+        )
+    )
+    num = F.abs(F.col("snew") * F.col("n_old") - F.col("sold") * F.col("n_new"))
+    return agg, num, F.col("n_old") * F.col("n_new")

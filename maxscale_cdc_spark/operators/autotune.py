@@ -51,7 +51,12 @@ from maxscale_cdc_spark.functions.sample import (
     hash_sample,
     sql_hash_sample_expr,
 )
-from maxscale_cdc_spark.functions.text import minhash_sig
+from maxscale_cdc_spark.functions.text import (
+    band_keys,
+    band_pairs,
+    minhash_sig,
+    set_overlap,
+)
 from maxscale_cdc_spark.operators import banding
 from maxscale_cdc_spark.operators.banding import (
     chooser_prefix_sql,  # noqa: F401 — re-exported for family oracles
@@ -188,23 +193,8 @@ def _class_exact_pairs(classes: DataFrame) -> DataFrame:
         .select(F.col("a.ckey").alias("ckey_a"), F.col("b.ckey").alias("ckey_b"))
         .distinct()
     )
-    sa = classes.select(
-        F.col("ckey").alias("ckey_a"),
-        F.col("shs").alias("shs_a"),
-        F.col("sz").alias("sz_a"),
-    )
-    sb = classes.select(
-        F.col("ckey").alias("ckey_b"),
-        F.col("shs").alias("shs_b"),
-        F.col("sz").alias("sz_b"),
-    )
-    ver = cand.join(sa, "ckey_a").join(sb, "ckey_b").select(
-        "ckey_a",
-        "ckey_b",
-        F.size(F.array_intersect("shs_a", "shs_b")).cast("long").alias("nc"),
-        (F.col("sz_a") + F.col("sz_b")).cast("long").alias("ss"),
-    )
-    jac = F.col("nc").cast("double") / (F.col("ss") - F.col("nc"))
+    ver = set_overlap(cand, classes, "ckey", "ckey_a", "ckey_b")
+    jac = F.col("n_common").cast("double") / (F.col("sz_sum") - F.col("n_common"))
     return ver.filter(jac >= _JACCARD_MIN).select("ckey_a", "ckey_b")
 
 
@@ -1064,26 +1054,9 @@ def _store_migrate_frame(
     def banded(classes: DataFrame, side: str, nb: int, rpb: int) -> DataFrame:
         # re-banding IS this projection: band keys derived from the
         # stored m0..m15, never from text
-        return classes.select(
-            F.concat(F.lit(side), "ckey").alias("skey"),
-            "rep",
-            "n_docs",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.concat(
-                                *[f"m{j}" for j in range(b * rpb, (b + 1) * rpb)]
-                            ).alias("key"),
-                        )
-                        for b in range(nb)
-                    ]
-                )
-            ).alias("bk"),
-        ).select(
-            "skey", "rep", "n_docs",
-            F.col("bk.band").alias("band"), F.col("bk.key").alias("key"),
+        return band_keys(
+            classes, nb, rpb,
+            F.concat(F.lit(side), "ckey").alias("skey"), "rep", "n_docs",
         )
 
     csets = (
@@ -1098,74 +1071,25 @@ def _store_migrate_frame(
         .localCheckpoint(eager=False)
     )
 
-    def verified_pairs(nb: int, rpb: int) -> DataFrame:
+    def cand_pairs(nb: int, rpb: int, **out: str) -> DataFrame:
         all_bands = banded(old_classes, "o", nb, rpb).unionByName(
             banded(new_classes, "n", nb, rpb)
         )
-        new_bands = banded(new_classes, "n", nb, rpb)
-        a, b = all_bands.alias("a"), new_bands.alias("b")
-        cpairs = (
-            a.join(
-                b,
-                (F.col("a.key") == F.col("b.key"))
-                & (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.rep") < F.col("b.rep")),
-            )
-            .select(
-                F.col("a.skey").alias("skey_a"),
-                F.col("b.skey").alias("skey_b"),
-                F.col("a.n_docs").alias("n_a"),
-                F.col("b.n_docs").alias("n_b"),
-            )
-            .distinct()
+        return band_pairs(
+            all_bands, banded(new_classes, "n", nb, rpb), "rep",
+            skey_a="a.skey", skey_b="b.skey", **out,
         )
-        sa = csets.select(
-            F.col("skey").alias("skey_a"), F.col("shs").alias("shs_a"),
-            F.col("sz").alias("sz_a"),
-        )
-        sb = csets.select(
-            F.col("skey").alias("skey_b"), F.col("shs").alias("shs_b"),
-            F.col("sz").alias("sz_b"),
-        )
-        ver = (
-            cpairs.join(sa, "skey_a")
-            .join(sb, "skey_b")
-            .select(
-                "skey_a",
-                "skey_b",
-                (F.col("n_a") * F.col("n_b")).cast("long").alias("npairs"),
-                F.size(F.array_intersect("shs_a", "shs_b"))
-                .cast("long")
-                .alias("n_common"),
-                (F.col("sz_a") + F.col("sz_b")).cast("long").alias("sz_sum"),
-            )
-        )
+
+    def verified_pairs(nb: int, rpb: int) -> DataFrame:
+        cpairs = cand_pairs(nb, rpb, n_a="a.n_docs", n_b="b.n_docs")
+        npairs = (F.col("n_a") * F.col("n_b")).cast("long").alias("npairs")
+        ver = set_overlap(cpairs, csets, "skey", "skey_a", "skey_b", npairs)
         jac = F.col("n_common").cast("double") / (
             F.col("sz_sum") - F.col("n_common")
         )
         return ver.filter(jac >= _JACCARD_MIN).select(
             "skey_a", "skey_b", "npairs"
         ).localCheckpoint(eager=False)
-
-    def cand_keys(nb: int, rpb: int) -> DataFrame:
-        all_bands = banded(old_classes, "o", nb, rpb).unionByName(
-            banded(new_classes, "n", nb, rpb)
-        )
-        new_bands = banded(new_classes, "n", nb, rpb)
-        a, b = all_bands.alias("a"), new_bands.alias("b")
-        return (
-            a.join(
-                b,
-                (F.col("a.key") == F.col("b.key"))
-                & (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.rep") < F.col("b.rep")),
-            )
-            .select(
-                F.col("a.skey").alias("skey_a"),
-                F.col("b.skey").alias("skey_b"),
-            )
-            .distinct()
-        )
 
     vs = verified_pairs(nb_s, rpb_s)
     vc = verified_pairs(nb_c, rpb_c)
@@ -1181,11 +1105,11 @@ def _store_migrate_frame(
     cnt_s = vs.agg(F.coalesce(F.sum("npairs"), F.lit(0)).cast("long").alias("x"))
     cnt_c = vc.agg(F.coalesce(F.sum("npairs"), F.lit(0)).cast("long").alias("y"))
     gained = (
-        vc.join(cand_keys(nb_s, rpb_s), ["skey_a", "skey_b"], "left_anti")
+        vc.join(cand_pairs(nb_s, rpb_s), ["skey_a", "skey_b"], "left_anti")
         .agg(F.coalesce(F.sum("npairs"), F.lit(0)).cast("long").alias("g"))
     )
     lost = (
-        vs.join(cand_keys(nb_c, rpb_c), ["skey_a", "skey_b"], "left_anti")
+        vs.join(cand_pairs(nb_c, rpb_c), ["skey_a", "skey_b"], "left_anti")
         .agg(F.coalesce(F.sum("npairs"), F.lit(0)).cast("long").alias("l"))
     )
     return (

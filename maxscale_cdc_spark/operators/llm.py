@@ -27,8 +27,11 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from maxscale_cdc_spark.functions.text import (
+    band_keys,
+    band_pairs,
     char_ngrams_md5_min,
     minhash_sig,
+    set_overlap,
     word_bigrams,
     word_trigrams,
     words,
@@ -247,39 +250,10 @@ def class_band_pairs(classes: DataFrame, nb: int, rpb: int) -> DataFrame:
     banding of the 8 minhashes: posexplode to (band, key) rows, bucket
     self-join, distinct.  Quadratic only within a band bucket of
     DISTINCT signatures — duplicate mass can no longer inflate it."""
-    bands = classes.select(
-        "ckey",
-        "rep",
-        "n_docs",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat(
-                            *[f"m{j}" for j in range(b * rpb, (b + 1) * rpb)]
-                        ).alias("key"),
-                    )
-                    for b in range(nb)
-                ]
-            )
-        ).alias("bk"),
-    ).select("ckey", "rep", "n_docs", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.rep") < F.col("b.rep")),
-        )
-        .select(
-            F.col("a.ckey").alias("ckey_a"),
-            F.col("b.ckey").alias("ckey_b"),
-            F.col("a.n_docs").alias("n_a"),
-            F.col("b.n_docs").alias("n_b"),
-        )
-        .distinct()
+    bands = band_keys(classes, nb, rpb, "ckey", "rep", "n_docs")
+    return band_pairs(
+        bands, bands, "rep",
+        ckey_a="a.ckey", ckey_b="b.ckey", n_a="a.n_docs", n_b="b.n_docs",
     )
 
 
@@ -287,28 +261,7 @@ def class_pair_jaccard(cpairs: DataFrame, classes: DataFrame) -> DataFrame:
     """Exact set-overlap stats per CLASS pair: (ckey_a, ckey_b, n_a,
     n_b, n_common, sz_sum).  The expensive array_intersect runs once
     per class pair — every member doc pair shares its verdict."""
-    sa = classes.select(
-        F.col("ckey").alias("ckey_a"),
-        F.col("shs").alias("shs_a"),
-        F.col("sz").alias("sz_a"),
-    )
-    sb = classes.select(
-        F.col("ckey").alias("ckey_b"),
-        F.col("shs").alias("shs_b"),
-        F.col("sz").alias("sz_b"),
-    )
-    return (
-        cpairs.join(sa, "ckey_a")
-        .join(sb, "ckey_b")
-        .select(
-            "ckey_a",
-            "ckey_b",
-            "n_a",
-            "n_b",
-            F.size(F.array_intersect("shs_a", "shs_b")).cast("long").alias("n_common"),
-            (F.col("sz_a") + F.col("sz_b")).cast("long").alias("sz_sum"),
-        )
-    )
+    return set_overlap(cpairs, classes, "ckey", "ckey_a", "ckey_b", "n_a", "n_b")
 
 
 def _intra_class_pairs(doc_map: DataFrame, classes: DataFrame) -> DataFrame:
@@ -1719,18 +1672,7 @@ def llm_dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    sets_a = tset.select(F.col("doc_id").alias("doc_a"), F.col("shs").alias("shs_a"))
-    sets_b = tset.select(F.col("doc_id").alias("doc_b"), F.col("shs").alias("shs_b"))
-    inter = (
-        cand.join(sets_a, "doc_a")
-        .join(sets_b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("shs_a", "shs_b")).cast("long").alias("n_common"),
-            (F.size("shs_a") + F.size("shs_b")).cast("long").alias("sz_sum"),
-        )
-    )
+    inter = set_overlap(cand, tset, "doc_id", "doc_a", "doc_b")
     jac = F.col("n_common").cast("double") / (F.col("sz_sum") - F.col("n_common"))
     return (
         inter.filter(jac >= _JACCARD_MIN)
@@ -2344,47 +2286,17 @@ def llm_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def banded(classes: DataFrame, side: str) -> DataFrame:
-        return classes.select(
-            F.concat(F.lit(side), "ckey").alias("skey"),
-            "rep",
-            "shs",
-            "sz",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.concat(
-                                *[f"m{j}" for j in range(b * rpb, (b + 1) * rpb)]
-                            ).alias("key"),
-                        )
-                        for b in range(nb)
-                    ]
-                )
-            ).alias("bk"),
-        ).select(
-            "skey", "rep", "shs", "sz",
-            F.col("bk.band").alias("band"), F.col("bk.key").alias("key"),
+        return band_keys(
+            classes, nb, rpb,
+            F.concat(F.lit(side), "ckey").alias("skey"), "rep", "shs", "sz",
         )
 
-    all_bands = banded(old_classes, "o").unionByName(banded(new_classes, "n"))
-    new_bands = banded(new_classes, "n")
-    a, b = all_bands.alias("a"), new_bands.alias("b")
     # class-pair candidates: b is a NEW class; a.rep < b.rep keeps
     # new-new pairs unique and admits every old-vs-new pair (old reps
     # are <= cut < new reps by construction)
-    cpairs = (
-        a.join(
-            b,
-            (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.rep") < F.col("b.rep")),
-        )
-        .select(
-            F.col("a.skey").alias("skey_a"),
-            F.col("b.skey").alias("skey_b"),
-        )
-        .distinct()
+    all_bands = banded(old_classes, "o").unionByName(banded(new_classes, "n"))
+    cpairs = band_pairs(
+        all_bands, banded(new_classes, "n"), "rep", skey_a="a.skey", skey_b="b.skey"
     )
     csets = (
         old_classes.select(
@@ -2396,24 +2308,7 @@ def llm_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    sa = csets.select(
-        F.col("skey").alias("skey_a"), F.col("shs").alias("shs_a"),
-        F.col("sz").alias("sz_a"),
-    )
-    sb = csets.select(
-        F.col("skey").alias("skey_b"), F.col("shs").alias("shs_b"),
-        F.col("sz").alias("sz_b"),
-    )
-    ver = (
-        cpairs.join(sa, "skey_a")
-        .join(sb, "skey_b")
-        .select(
-            "skey_a",
-            "skey_b",
-            F.size(F.array_intersect("shs_a", "shs_b")).cast("long").alias("n_common"),
-            (F.col("sz_a") + F.col("sz_b")).cast("long").alias("sz_sum"),
-        )
-    )
+    ver = set_overlap(cpairs, csets, "skey", "skey_a", "skey_b")
     jac_c = F.col("n_common").cast("double") / (F.col("sz_sum") - F.col("n_common"))
     dup = ver.filter(jac_c >= _JACCARD_MIN)
     members = (
@@ -2671,17 +2566,7 @@ def llm_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", F.lit(b).alias("band"), F.concat(*cols).alias("key")
         )
         bands = one if bands is None else bands.unionByName(one)
-    a, bb = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            bb,
-            (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = band_pairs(bands, bands, "doc_id", doc_a="a.doc_id", doc_b="b.doc_id")
     exact = llm_dedup_jaccard_prefix(spark, sf_dir).select("doc_a", "doc_b")
     n_exact = exact.agg(F.count("*").cast("long").alias("n_exact"))
     n_caught = exact.join(cand, ["doc_a", "doc_b"]).agg(
@@ -3395,22 +3280,9 @@ def llm_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.ck").alias("ck_a"), F.col("b.ck").alias("ck_b"))
         .distinct()
     )
-    sets_a = cls.select(
-        F.col("ck").alias("ck_a"), F.col("shs").alias("shs_a"), F.col("sz").alias("sz_a")
-    )
-    sets_b = cls.select(
-        F.col("ck").alias("ck_b"), F.col("shs").alias("shs_b"), F.col("sz").alias("sz_b")
-    )
     cross_cls = (
-        cand.join(sets_a.hint("merge"), "ck_a")
-        .join(sets_b.hint("merge"), "ck_b")
-        .select(
-            "ck_a",
-            "ck_b",
-            F.size(F.array_intersect("shs_a", "shs_b")).cast("long").alias("n_common"),
-            "sz_a",
-            "sz_b",
-        )
+        set_overlap(cand, cls.hint("merge"), "ck", "ck_a", "ck_b", "sz_a", "sz_b")
+        .select("ck_a", "ck_b", "n_common", "sz_a", "sz_b")
         .filter(10 * F.col("n_common") >= 9 * F.col("sz_a"))
     )
     # cross-class doc expansion: roles by class size, doc_id tiebreak

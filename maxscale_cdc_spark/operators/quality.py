@@ -25,7 +25,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from maxscale_cdc_spark.functions.text import minhash_sig, word_trigrams, words
+from maxscale_cdc_spark.functions.text import (
+    band_keys,
+    band_pairs,
+    minhash_sig,
+    word_trigrams,
+    words,
+)
+from maxscale_cdc_spark.operators.banding import bands_sql
 from maxscale_cdc_spark.registry import register
 from maxscale_cdc_spark.tables import table, wide_table
 
@@ -447,18 +454,7 @@ def _minhash_accuracy_frame(spark: SparkSession, sf_dir: str, stage: bool) -> Da
             "doc_id", F.lit(b).alias("band"), F.concat(*cols).alias("key")
         )
         bands = one if bands is None else bands.unionByName(one)
-    a = bands.alias("a")
-    bb = bands.alias("b")
-    cand = (
-        a.join(
-            bb,
-            (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = band_pairs(bands, bands, "doc_id", doc_a="a.doc_id", doc_b="b.doc_id")
     sa = sig.select(
         F.col("doc_id").alias("doc_a"),
         F.col("shs").alias("shs_a"),
@@ -571,30 +567,13 @@ def llm_minhash_bbit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("shs"),
     )
 
-    # signature lineage consumed four times (two band selects + both
+    # signature lineage consumed three times (the band keys + both
     # join-back sides) — staged once, the llm_minhash_accuracy rule
     sig = docw.select("doc_id", "shs", *minhash_sig("shs", _MH_K)).localCheckpoint(
         eager=False
     )
-    bands = None
-    for b in range(2):
-        cols = [f"m{j}" for j in range(b * 4, b * 4 + 4)]
-        one = sig.select(
-            "doc_id", F.lit(b).alias("band"), F.concat(*cols).alias("key")
-        )
-        bands = one if bands is None else bands.unionByName(one)
-    a = bands.alias("a")
-    bb = bands.alias("b")
-    cand = (
-        a.join(
-            bb,
-            (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    bands = band_keys(sig, 2, 4, "doc_id")
+    cand = band_pairs(bands, bands, "doc_id", doc_a="a.doc_id", doc_b="b.doc_id")
     sa = sig.select(
         F.col("doc_id").alias("doc_a"),
         F.col("shs").alias("shs_a"),
@@ -1275,16 +1254,6 @@ def llm_dedup_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LSH_CONFIGS = ((1, 8), (2, 4), (4, 2))
 
 
-def _lsh_bands_sql(nb: int, rpb: int) -> str:
-    parts = []
-    for b in range(nb):
-        key = " || ".join(f"m{j}" for j in range(b * rpb, (b + 1) * rpb))
-        parts.append(
-            f"SELECT doc_id, {b} AS band, {key} AS key FROM mh"
-        )
-    return "\nUNION ALL\n".join(parts)
-
-
 _LSH_TUNING_ORACLE = f"""
 WITH {{sh}},
   mh AS (SELECT doc_id, {{mh_cols}} FROM sh GROUP BY doc_id),
@@ -1319,7 +1288,7 @@ def _lsh_tuning_oracle() -> str:
         tag = f"c{nb}x{rpb}"
         config_ctes.append(
             f"""  bands_{tag} AS (
-{_lsh_bands_sql(nb, rpb)}
+{bands_sql("mh", "doc_id", nb, rpb, ord_col="doc_id")}
   ),
   cand_{tag} AS (
     SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b

@@ -37,6 +37,8 @@ from maxscale_cdc_spark.functions.vectors import (
     dot,
     nearest_centroid,
     norm_sq,
+    q30_cell_displacement,
+    q30_dim_drift,
     q30_mean_arrays,
     sql_cosine,
 )
@@ -1044,35 +1046,7 @@ def llm_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     comment): displacement in pure integer Q1.30 space."""
     cents, assigned, nassign = _ivf_batch_state(spark, sf_dir)
 
-    def flat(df: DataFrame) -> DataFrame:
-        return df.select("cid", F.posexplode("v").alias("dim0", "val")).select(
-            "cid",
-            (F.col("dim0") + 1).alias("dim"),
-            F.floor(F.col("val") * 1073741824.0).cast("long").alias("q"),
-        )
-
-    seed_flat = flat(assigned)
-    new_flat = flat(nassign)
-    seed_dim = seed_flat.groupBy("cid", "dim").agg(
-        F.sum("q").cast("long").alias("snum"),
-        F.count("*").cast("long").alias("n_old"),
-    )
-    all_dim = seed_flat.unionByName(new_flat).groupBy("cid", "dim").agg(
-        F.sum("q").cast("long").alias("cnum"),
-        F.count("*").cast("long").alias("n_all"),
-    )
-    disp = (
-        seed_dim.join(all_dim, ["cid", "dim"])
-        .groupBy("cid")
-        .agg(
-            F.sum(
-                F.abs(F.col("snum") * F.col("n_all") - F.col("cnum") * F.col("n_old"))
-            )
-            .cast("long")
-            .alias("disp_l1_num"),
-            F.max(F.col("n_old") * F.col("n_all")).cast("long").alias("disp_den"),
-        )
-    )
+    disp = q30_cell_displacement(assigned, nassign)
     cells = _ivf_cells(assigned, nassign)
     out = cells.join(disp, "cid", "left")
     return out.select(
@@ -1649,30 +1623,10 @@ def llm_ivf_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents, assigned = kmeans_cells_cached(spark, sf_dir)
     surv = assigned.filter(F.col("vec_id") % _FORGET_MOD != _FORGET_RES)
 
-    def flat(df: DataFrame) -> DataFrame:
-        return df.select("cid", F.posexplode("v").alias("dim0", "val")).select(
-            "cid",
-            (F.col("dim0") + 1).alias("dim"),
-            F.floor(F.col("val") * 1073741824.0).cast("long").alias("q"),
-        )
-
-    all_dim = flat(assigned).groupBy("cid", "dim").agg(
-        F.sum("q").cast("long").alias("anum"),
-        F.count("*").cast("long").alias("nb"),
-    )
-    surv_dim = flat(surv).groupBy("cid", "dim").agg(
-        F.sum("q").cast("long").alias("snum"),
-        F.count("*").cast("long").alias("na"),
-    )
-    disp = (
-        all_dim.join(surv_dim, ["cid", "dim"])
-        .groupBy("cid")
-        .agg(
-            F.sum(F.abs(F.col("anum") * F.col("na") - F.col("snum") * F.col("nb")))
-            .cast("long")
-            .alias("disp_l1_num"),
-            F.max(F.col("nb") * F.col("na")).cast("long").alias("disp_den"),
-        )
+    # the survivors are the seed, the deleted members the batch that
+    # grew them back into `assigned`: the displacement is symmetric
+    disp = q30_cell_displacement(
+        surv, assigned.filter(F.col("vec_id") % _FORGET_MOD == _FORGET_RES)
     )
     cb = assigned.groupBy("cid").agg(F.count("*").cast("long").alias("n_before"))
     ca = surv.groupBy("cid").agg(F.count("*").cast("long").alias("n_after"))
@@ -2178,31 +2132,11 @@ def llm_embedding_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan, one 64-group aggregation, zero driver reads."""
     e = wide_table(spark, sf_dir, "embeddings")
     cut = e.agg(F.expr("div(max(vec_id) * 4, 5)").alias("c"))
-    flat = (
-        e.crossJoin(F.broadcast(cut))
-        .select(
-            "vec_id",
-            (F.col("vec_id") <= F.col("c")).alias("is_old"),
-            F.posexplode(as_double("embedding")).alias("dim0", "val"),
-        )
-        .select(
-            "is_old",
-            (F.col("dim0") + 1).alias("dim"),
-            F.floor(F.col("val") * 1073741824.0).cast("long").alias("q"),
-        )
+    agg, num, den = q30_dim_drift(
+        e.crossJoin(F.broadcast(cut)),
+        F.col("vec_id") <= F.col("c"),
+        as_double("embedding"),
     )
-    agg = flat.groupBy("dim").agg(
-        F.coalesce(F.sum(F.when(F.col("is_old"), F.col("q"))), F.lit(0))
-        .cast("long")
-        .alias("sold"),
-        F.sum(F.when(F.col("is_old"), 1).otherwise(0)).cast("long").alias("n_old"),
-        F.coalesce(F.sum(F.when(~F.col("is_old"), F.col("q"))), F.lit(0))
-        .cast("long")
-        .alias("snew"),
-        F.sum(F.when(~F.col("is_old"), 1).otherwise(0)).cast("long").alias("n_new"),
-    )
-    num = F.abs(F.col("snew") * F.col("n_old") - F.col("sold") * F.col("n_new"))
-    den = F.col("n_old") * F.col("n_new")
     drift = num.cast("double") / den
     return agg.select(
         F.col("dim").cast("long").alias("dim"),
@@ -2940,61 +2874,10 @@ def llm_drift_reindex_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=True)
 
     # per-cell displacement (the llm_ivf_incremental integers)
-    def flat(df: DataFrame) -> DataFrame:
-        return df.select("cid", F.posexplode("v").alias("dim0", "val")).select(
-            "cid",
-            (F.col("dim0") + 1).alias("dim"),
-            F.floor(F.col("val") * 1073741824.0).cast("long").alias("q"),
-        )
-
-    seed_flat = flat(assigned)
-    seed_dim = seed_flat.groupBy("cid", "dim").agg(
-        F.sum("q").cast("long").alias("snum"),
-        F.count("*").cast("long").alias("n_old"),
-    )
-    all_dim = seed_flat.unionByName(flat(nassign)).groupBy("cid", "dim").agg(
-        F.sum("q").cast("long").alias("cnum"),
-        F.count("*").cast("long").alias("n_all"),
-    )
-    disp = (
-        seed_dim.join(all_dim, ["cid", "dim"])
-        .groupBy("cid")
-        .agg(
-            F.sum(
-                F.abs(F.col("snum") * F.col("n_all") - F.col("cnum") * F.col("n_old"))
-            )
-            .cast("long")
-            .alias("disp_l1_num"),
-            F.max(F.col("n_old") * F.col("n_all")).cast("long").alias("disp_den"),
-        )
-    )
+    disp = q30_cell_displacement(assigned, nassign)
     # corpus drift verdict (the monitor's tree at planner sensitivity)
-    dflat = (
-        e.select(
-            (F.col("vec_id") <= cut).alias("is_old"),
-            F.posexplode(as_double("embedding")).alias("dim0", "val"),
-        )
-        .select(
-            "is_old",
-            (F.col("dim0") + 1).alias("dim"),
-            F.floor(F.col("val") * 1073741824.0).cast("long").alias("q"),
-        )
-    )
-    dagg = dflat.groupBy("dim").agg(
-        F.coalesce(F.sum(F.when(F.col("is_old"), F.col("q"))), F.lit(0))
-        .cast("long")
-        .alias("sold"),
-        F.sum(F.when(F.col("is_old"), 1).otherwise(0)).cast("long").alias("n_old"),
-        F.coalesce(F.sum(F.when(~F.col("is_old"), F.col("q"))), F.lit(0))
-        .cast("long")
-        .alias("snew"),
-        F.sum(F.when(~F.col("is_old"), 1).otherwise(0)).cast("long").alias("n_new"),
-    )
-    ddrift = (
-        F.abs(F.col("snew") * F.col("n_old") - F.col("sold") * F.col("n_new"))
-        .cast("double")
-        / (F.col("n_old") * F.col("n_new"))
-    )
+    dagg, dnum, dden = q30_dim_drift(e, F.col("vec_id") <= cut, as_double("embedding"))
+    ddrift = dnum.cast("double") / dden
     dd = dagg.agg(
         F.coalesce(
             F.sum(

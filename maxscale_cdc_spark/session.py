@@ -71,12 +71,8 @@ def get_spark(app_name: str = "maxscale-cdc-spark") -> SparkSession:
         # genuinely tiny scalar stages fully coalesced while spreading
         # KB-per-row compute stages across cores.  Scale-adaptive: at
         # production volumes every partition exceeds any floor, so the
-        # knob is inert there; env-parameterised so a lower-core bench
-        # run compares like with like.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_AQE_MIN_PARTITION_SIZE", "64k"),
-        )
+        # floor is inert there.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -580,8 +580,7 @@ def build_cdc_datasource():
 
 
 def register(spark) -> None:
-    """Idempotently register the source on the session."""
-    try:
-        spark.dataSource.register(build_cdc_datasource())
-    except Exception:
-        pass
+    """Idempotently register the source on the session: a second call
+    replaces the first (Spark logs a WARN).  A failed class build or
+    registration raises here, not later as an unknown format."""
+    spark.dataSource.register(build_cdc_datasource())

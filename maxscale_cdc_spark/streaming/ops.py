@@ -25,8 +25,17 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from maxscale_cdc_spark.functions.numeric import dec
-from maxscale_cdc_spark.functions.text import minhash_sig
-from maxscale_cdc_spark.functions.vectors import nearest_centroid, q30_mean_arrays
+from maxscale_cdc_spark.functions.text import (
+    band_keys,
+    minhash_sig,
+    set_overlap,
+)
+from maxscale_cdc_spark.functions.vectors import (
+    nearest_centroid,
+    q30_cell_displacement,
+    q30_dim_drift,
+    q30_mean_arrays,
+)
 from maxscale_cdc_spark.functions.window import first_per
 from maxscale_cdc_spark.operators.cdc import _DML_CASE_SQL, _live_images
 from maxscale_cdc_spark.registry import oracle_splice, register
@@ -1730,23 +1739,7 @@ def _nearwin_result(
         F.expr(f"{base_ts} + make_dt_interval(0, 0, doc_id % 1048576, 0)").alias("ts"),
         shs.alias("shs"),
     ).select("doc_id", "ts", *minhash_sig("shs", K16))
-    bands = sig.select(
-        "doc_id",
-        "ts",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat(
-                            *[f"m{j}" for j in range(b * rpb, (b + 1) * rpb)]
-                        ).alias("key"),
-                    )
-                    for b in range(nb)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "ts", "bk.band", "bk.key")
+    bands = band_keys(sig, nb, rpb, "doc_id", "ts")
     staged = stage_as_stream(bands, cache_key=f"nearwin:{nb}x{rpb}:{sf_dir}")
     schema = "doc_id bigint, ts timestamp, band int, key string"
     new = read_stream(spark, staged, schema=schema).withWatermark(
@@ -1776,18 +1769,7 @@ def _nearwin_result(
     cand = run_to_files(pairs).distinct()
 
     docsets = d.select("doc_id", shs.alias("shs"))
-    sets_a = docsets.select(F.col("doc_id").alias("doc_a"), F.col("shs").alias("shs_a"))
-    sets_b = docsets.select(F.col("doc_id").alias("doc_b"), F.col("shs").alias("shs_b"))
-    inter = (
-        cand.join(sets_a, "doc_a")
-        .join(sets_b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("shs_a", "shs_b")).cast("long").alias("n_common"),
-            (F.size("shs_a") + F.size("shs_b")).cast("long").alias("sz_sum"),
-        )
-    )
+    inter = set_overlap(cand, docsets, "doc_id", "doc_a", "doc_b")
     jac = F.col("n_common").cast("double") / (F.col("sz_sum") - F.col("n_common"))
     return inter.filter(jac >= 0.5).select(
         "doc_a", "doc_b", "n_common", jac.alias("jaccard")
@@ -1882,23 +1864,7 @@ def _nearwin_prefiltered_result(
         )
         if prefilter:
             s = s.dropDuplicatesWithinWatermark(["doc_id"])
-        return s.select(
-            "doc_id",
-            "ts",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.concat(
-                                *[f"m{j}" for j in range(b * rpb, (b + 1) * rpb)]
-                            ).alias("key"),
-                        )
-                        for b in range(nb)
-                    ]
-                )
-            ).alias("bk"),
-        ).select("doc_id", "ts", "bk.band", "bk.key")
+        return band_keys(s, nb, rpb, "doc_id", "ts")
 
     n, o = side().alias("n"), side().alias("o")
     pairs = n.join(
@@ -1916,22 +1882,7 @@ def _nearwin_prefiltered_result(
     cand = run_to_files(pairs, progress_out=progress_out).distinct()
 
     docsets = d.select("doc_id", shs.alias("shs"))
-    sets_a = docsets.select(
-        F.col("doc_id").alias("doc_a"), F.col("shs").alias("shs_a")
-    )
-    sets_b = docsets.select(
-        F.col("doc_id").alias("doc_b"), F.col("shs").alias("shs_b")
-    )
-    inter = (
-        cand.join(sets_a, "doc_a")
-        .join(sets_b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("shs_a", "shs_b")).cast("long").alias("n_common"),
-            (F.size("shs_a") + F.size("shs_b")).cast("long").alias("sz_sum"),
-        )
-    )
+    inter = set_overlap(cand, docsets, "doc_id", "doc_a", "doc_b")
     jac = F.col("n_common").cast("double") / (F.col("sz_sum") - F.col("n_common"))
     return inter.filter(jac >= 0.5).select(
         "doc_a", "doc_b", "n_common", jac.alias("jaccard")
@@ -3550,61 +3501,15 @@ def str_drift_swap_splice(spark: SparkSession, sf_dir: str) -> DataFrame:
         vecs.filter((F.col("vec_id") > cut) & (F.col("vec_id") <= swap)), cents
     ).localCheckpoint(eager=False)
 
-    def flat(df: DataFrame) -> DataFrame:
-        return df.select("cid", F.posexplode("v").alias("dim0", "val")).select(
-            "cid",
-            (F.col("dim0") + 1).alias("dim"),
-            F.floor(F.col("val") * 1073741824.0).cast("long").alias("q"),
-        )
-
-    seed_flat = flat(assigned)
-    seed_dim = seed_flat.groupBy("cid", "dim").agg(
-        F.sum("q").cast("long").alias("snum"),
-        F.count("*").cast("long").alias("n_old"),
+    disp = q30_cell_displacement(assigned, npre).withColumnsRenamed(
+        {"disp_l1_num": "num", "disp_den": "den"}
     )
-    all_dim = seed_flat.unionByName(flat(npre)).groupBy("cid", "dim").agg(
-        F.sum("q").cast("long").alias("cnum"),
-        F.count("*").cast("long").alias("n_all"),
+    dagg, dnum, dden = q30_dim_drift(
+        e.filter(F.col("vec_id") <= swap),
+        F.col("vec_id") <= cut,
+        as_double("embedding"),
     )
-    disp = (
-        seed_dim.join(all_dim, ["cid", "dim"])
-        .groupBy("cid")
-        .agg(
-            F.sum(
-                F.abs(F.col("snum") * F.col("n_all") - F.col("cnum") * F.col("n_old"))
-            )
-            .cast("long")
-            .alias("num"),
-            F.max(F.col("n_old") * F.col("n_all")).cast("long").alias("den"),
-        )
-    )
-    dflat = (
-        e.filter(F.col("vec_id") <= swap)
-        .select(
-            (F.col("vec_id") <= cut).alias("is_old"),
-            F.posexplode(as_double("embedding")).alias("dim0", "val"),
-        )
-        .select(
-            "is_old",
-            (F.col("dim0") + 1).alias("dim"),
-            F.floor(F.col("val") * 1073741824.0).cast("long").alias("q"),
-        )
-    )
-    dagg = dflat.groupBy("dim").agg(
-        F.coalesce(F.sum(F.when(F.col("is_old"), F.col("q"))), F.lit(0))
-        .cast("long")
-        .alias("sold"),
-        F.sum(F.when(F.col("is_old"), 1).otherwise(0)).cast("long").alias("n_old"),
-        F.coalesce(F.sum(F.when(~F.col("is_old"), F.col("q"))), F.lit(0))
-        .cast("long")
-        .alias("snew"),
-        F.sum(F.when(~F.col("is_old"), 1).otherwise(0)).cast("long").alias("n_new"),
-    )
-    ddrift = (
-        F.abs(F.col("snew") * F.col("n_old") - F.col("sold") * F.col("n_new"))
-        .cast("double")
-        / (F.col("n_old") * F.col("n_new"))
-    )
+    ddrift = dnum.cast("double") / dden
     dd = dagg.agg(
         F.coalesce(
             F.sum(
@@ -3865,18 +3770,9 @@ def str_banding_swap_splice(spark: SparkSession, sf_dir: str) -> DataFrame:
         "gen bigint, bands bigint, rows_per_band bigint",
     )
     docsets = d.select("doc_id", shs.alias("shs"))
-    sets_a = docsets.select(F.col("doc_id").alias("doc_a"), F.col("shs").alias("shs_a"))
-    sets_b = docsets.select(F.col("doc_id").alias("doc_b"), F.col("shs").alias("shs_b"))
-    inter = (
-        cand.join(sets_a, "doc_a")
-        .join(sets_b, "doc_b")
-        .select(
-            "gen",
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("shs_a", "shs_b")).cast("long").alias("n_common"),
-            (F.size("shs_a") + F.size("shs_b")).cast("long").alias("sz_sum"),
-        )
+    # gen first: the column order this verify has always planned with
+    inter = set_overlap(cand, docsets, "doc_id", "doc_a", "doc_b", "gen").select(
+        "gen", "doc_a", "doc_b", "n_common", "sz_sum"
     )
     jac = F.col("n_common").cast("double") / (F.col("sz_sum") - F.col("n_common"))
     return (

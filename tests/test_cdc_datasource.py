@@ -406,3 +406,25 @@ def test_schema_from_spool_discovery(spark, tmp_path):
         "append",
     )
     assert "tag" not in out1.columns and "val" in out1.columns
+
+
+def test_register_failure_propagates():
+    """A failed registration raises out of `register` instead of
+    surfacing later as an unknown `maxscale_cdc` format."""
+    from types import SimpleNamespace
+
+    def refuse(_cls):
+        raise RuntimeError("registration refused")
+
+    fake = SimpleNamespace(dataSource=SimpleNamespace(register=refuse))
+    with pytest.raises(RuntimeError, match="registration refused"):
+        register(fake)
+
+
+def test_register_twice_still_reads(spark, spool):
+    """Re-registering replaces the source; the session still reads."""
+    from maxscale_cdc_spark.streaming.runners import run_to_memory
+
+    register(spark)
+    register(spark)
+    assert run_to_memory(_read(spark, spool, table="tests"), "append").count() == 20

@@ -1,8 +1,9 @@
 """The shared operator kernels in `maxscale_cdc_spark/functions/`
-(`minhash_sig`, `nearest_centroid`, `first_per`, `q30_mean_arrays`) on
-≤10-row frames, and a source scan that pins one definition of each (and
-of the CDC served-row projection) so hand-written copies cannot grow
-back."""
+(`minhash_sig`, `band_keys`, `band_pairs`, `set_overlap`,
+`nearest_centroid`, `first_per`, `q30_mean_arrays`,
+`q30_cell_displacement`, `q30_dim_drift`) on ≤10-row frames, and a
+source scan that pins one definition of each (and of the CDC served-row
+projection) so hand-written copies cannot grow back."""
 
 from __future__ import annotations
 
@@ -13,9 +14,20 @@ import re
 import duckdb
 from pyspark.sql import functions as F
 
-from maxscale_cdc_spark.functions.text import minhash_sig
-from maxscale_cdc_spark.functions.vectors import nearest_centroid, q30_mean_arrays
+from maxscale_cdc_spark.functions.text import (
+    band_keys,
+    band_pairs,
+    minhash_sig,
+    set_overlap,
+)
+from maxscale_cdc_spark.functions.vectors import (
+    nearest_centroid,
+    q30_cell_displacement,
+    q30_dim_drift,
+    q30_mean_arrays,
+)
 from maxscale_cdc_spark.functions.window import first_per
+from maxscale_cdc_spark.operators.banding import bands_sql, cand_sql
 
 PKG = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "maxscale_cdc_spark"
@@ -117,6 +129,134 @@ def test_q30_mean_arrays_composite_keys_equal_packed_key(spark):
     assert two[(1, 1)] == [1.0, 2.0]
 
 
+_Q = 1 << 30  # one Q1.30 unit
+
+
+def _duck(ddl: str, rows: list) -> duckdb.DuckDBPyConnection:
+    con = duckdb.connect()
+    con.execute(f"CREATE TABLE src ({ddl})")
+    marks = ", ".join("?" * len(rows[0]))
+    con.executemany(f"INSERT INTO src VALUES ({marks})", rows)
+    return con
+
+
+def test_band_keys_match_bands_sql(spark):
+    rows = [
+        (d, *[f"{chr(97 + (d * 7 + j) % 5)}{j}" for j in range(8)]) for d in range(1, 7)
+    ]
+    ms = [f"m{j}" for j in range(8)]
+    df = spark.createDataFrame(
+        rows, ", ".join(["doc_id long"] + [f"{m} string" for m in ms])
+    )
+    con = _duck(", ".join(["doc_id BIGINT"] + [f"{m} VARCHAR" for m in ms]), rows)
+    for nb, rpb in ((2, 4), (4, 2)):
+        out = band_keys(df, nb, rpb, "doc_id")
+        assert out.columns == ["doc_id", "band", "key"]
+        want = con.execute(
+            bands_sql("src", "doc_id", nb, rpb, ord_col="doc_id")
+        ).fetchall()
+        assert sorted(tuple(r) for r in out.collect()) == sorted(want)
+
+
+def test_band_pairs_match_cand_sql_with_order_tie(spark):
+    # ckey 1 and 2 share every band key AND their order value (rep 10):
+    # the strict a.rep < b.rep rule pairs neither way; 3 collides with
+    # both in band 0 only; 4 and 5 in both bands (one distinct pair)
+    rows = [
+        ("c1", 10, "x", "y", "p", "q"),
+        ("c2", 10, "x", "y", "p", "q"),
+        ("c3", 11, "x", "y", "r", "s"),
+        ("c4", 12, "u", "v", "u", "v"),
+        ("c5", 13, "u", "v", "u", "v"),
+        ("c6", 14, "w", "w", "w", "w"),
+    ]
+    df = spark.createDataFrame(
+        rows, "ckey string, rep long, m0 string, m1 string, m2 string, m3 string"
+    )
+    bands = band_keys(df, 2, 2, "ckey", "rep")
+    out = band_pairs(bands, bands, "rep", ckey_a="a.ckey", ckey_b="b.ckey")
+    assert out.columns == ["ckey_a", "ckey_b"]
+    got = sorted(tuple(r) for r in out.collect())
+    con = _duck(
+        "ckey VARCHAR, rep BIGINT, m0 VARCHAR, m1 VARCHAR, m2 VARCHAR, m3 VARCHAR", rows
+    )
+    want = con.execute(
+        f"WITH {cand_sql('src', 'ckey', 'ckey_a', 'ckey_b', 2, 2)} "
+        "SELECT ckey_a, ckey_b FROM cand_src_2x2"
+    ).fetchall()
+    assert got == sorted(want) == [("c1", "c3"), ("c2", "c3"), ("c4", "c5")]
+
+
+def test_set_overlap_matches_duckdb_list_intersect(spark):
+    sets = [
+        (1, ["a", "b", "c"]),
+        (2, ["b", "c", "d", "e"]),
+        (3, ["z"]),
+        (4, ["a", "b", "c"]),
+    ]
+    pairs = [(1, 2), (1, 3), (1, 4), (2, 4)]
+    sdf = spark.createDataFrame(sets, "doc_id long, shs array<string>")
+    pdf = spark.createDataFrame(pairs, "doc_a long, doc_b long")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE s (doc_id BIGINT, shs VARCHAR[])")
+    con.executemany("INSERT INTO s VALUES (?, ?)", sets)
+    con.execute("CREATE TABLE p (doc_a BIGINT, doc_b BIGINT)")
+    con.executemany("INSERT INTO p VALUES (?, ?)", pairs)
+    want = sorted(
+        con.execute(
+            "SELECT p.doc_a, p.doc_b, len(list_intersect(a.shs, b.shs)),"
+            " len(a.shs) + len(b.shs) FROM p"
+            " JOIN s a ON a.doc_id = p.doc_a JOIN s b ON b.doc_id = p.doc_b"
+        ).fetchall()
+    )
+    out = set_overlap(pdf, sdf, "doc_id", "doc_a", "doc_b")
+    assert out.columns == ["doc_a", "doc_b", "n_common", "sz_sum"]
+    assert sorted(tuple(r) for r in out.collect()) == want
+    # a precomputed `sz` gives the same sums
+    sized = sdf.withColumn("sz", F.size("shs").cast("long"))
+    out2 = set_overlap(pdf, sized, "doc_id", "doc_a", "doc_b")
+    assert sorted(tuple(r) for r in out2.collect()) == want
+    assert [f.dataType.simpleString() for f in out.schema.fields[2:]] == ["bigint"] * 2
+
+
+def test_q30_cell_displacement_hand_computed(spark):
+    seed = spark.createDataFrame(
+        [(1, [0.5, 0.25]), (1, [0.25, 0.0]), (3, [0.125, 0.125])],
+        "cid long, v array<double>",
+    )
+    new = spark.createDataFrame(
+        [(1, [1.0, -0.5]), (2, [0.5, 0.5])], "cid long, v array<double>"
+    )
+    got = {
+        r["cid"]: (r["disp_l1_num"], r["disp_den"])
+        for r in q30_cell_displacement(seed, new).collect()
+    }
+    # cell 1, n_seed 2, n_all 3:
+    #   dim 1: S_seed = .75Q, S_all = 1.75Q -> |.75Q·3 - 1.75Q·2| = 1.25Q
+    #   dim 2: S_seed = .25Q, S_all = -.25Q -> |.25Q·3 + .25Q·2|  = 1.25Q
+    # cell 3 is untouched (0 over 1·1); cell 2 has no seed centroid
+    assert got == {1: (5 * _Q // 2, 6), 3: (0, 1)}
+
+
+def test_q30_dim_drift_hand_computed(spark):
+    df = spark.createDataFrame(
+        [(1, [0.5, 0.0]), (2, [0.25, 1.0]), (3, [1.0, 0.5])],
+        "vec_id long, v array<double>",
+    )
+    agg, num, den = q30_dim_drift(df, F.col("vec_id") <= 2, F.col("v"))
+    got = sorted(
+        tuple(r)
+        for r in agg.select(
+            "dim", "sold", "n_old", "snew", "n_new", num.alias("n"), den.alias("d")
+        ).collect()
+    )
+    # dim 1: |Q·2 - .75Q·1| = 1.25Q over 2;  dim 2: |.5Q·2 - Q·1| = 0
+    assert got == [
+        (1, 3 * _Q // 4, 2, _Q, 1, 5 * _Q // 4, 2),
+        (2, _Q, 2, _Q // 2, 1, 0, 2),
+    ]
+
+
 # -- one definition per kernel ----------------------------------------------
 
 # Sites that keep a hand-written form, with the reason.  A new entry needs
@@ -133,6 +273,59 @@ _INLINE_SERVED_ROWS = {
     ),
     ("operators/cdc.py", "cdc_replay_idempotence"): (
         "exports the ts column as last_ts and joins on that name"
+    ),
+}
+_INLINE_BAND_KEYS = {
+    ("operators/llm.py", "llm_lsh_recall_audit"): (
+        "one select per band unioned: the explode of band_keys changes its plan"
+    ),
+    ("operators/quality.py", "_minhash_accuracy_frame"): (
+        "one select per band unioned: the explode of band_keys changes its plan"
+    ),
+}
+_INLINE_BAND_PAIRS = {
+    ("operators/llm.py", "llm_dedup_simhash_pairs"): (
+        "band-first equi-join on (band, bv), not (key, band)"
+    ),
+    ("operators/llm.py", "llm_dedup_embed"): (
+        "band-first equi-join on (band, sig) of sign-bit signatures"
+    ),
+    ("operators/llm.py", "llm_knn_graph"): (
+        "band-first equi-join on (band, sig) of sign-bit signatures"
+    ),
+    ("operators/multimodal.py", "mm_dedup_phash"): (
+        "band-first equi-join on (band, bv) of perceptual-hash chunks"
+    ),
+    ("streaming/ops.py", "_nearwin_result"): (
+        "event-time n/o stream-stream join: the order is in ts, within a horizon"
+    ),
+    ("streaming/ops.py", "_nearwin_prefiltered_result"): (
+        "event-time n/o stream-stream join: the order is in ts, within a horizon"
+    ),
+    ("streaming/ops.py", "str_banding_swap_splice"): (
+        "event-time n/o stream-stream join, keyed by generation too"
+    ),
+}
+_INLINE_SET_OVERLAP = {
+    ("operators/quality.py", "_minhash_accuracy_frame"): (
+        "joins the signature columns back beside the sets and exports "
+        "exact_jaccard over int sizes: set_overlap's BIGINT columns change the plan"
+    ),
+    ("operators/quality.py", "llm_minhash_bbit"): (
+        "joins the signature columns back beside the sets (the b-bit match "
+        "counts need them), which set_overlap's sides do not carry"
+    ),
+    ("operators/autotune.py", "llm_dedup_containment_sampled"): (
+        "small/big roles whose sides carry rep and n_docs beside the set"
+    ),
+    ("operators/autotune.py", "llm_dedup_containment_pairwise"): (
+        "small/big roles whose sides carry rep and n_docs beside the set"
+    ),
+}
+_INLINE_DIM_DRIFT = {
+    ("streaming/ops.py", "str_embed_drift_stream"): (
+        "per event-time window: a stream aggregate of the new side against "
+        "a broadcast batch baseline of the old"
     ),
 }
 _INLINE_CENTROID_SCAN = {
@@ -212,3 +405,30 @@ def test_q30_mean_written_once():
     assert _sites(r'F\.struct\("dim", "m"\)') == {
         ("functions/vectors.py", "q30_mean_arrays"): 1
     }
+
+
+def test_band_keys_written_once():
+    sites = _sites(r'F\.lit\(b\)\.alias\("band"\),\s*F\.concat\(')
+    assert sites.pop(("functions/text.py", "band_keys")) == 1
+    assert set(sites) == set(_INLINE_BAND_KEYS)
+
+
+def test_band_pairs_written_once():
+    sites = _sites(r'F\.col\("[an]\.band"\) == F\.col\("[bo]\.band"\)')
+    assert sites.pop(("functions/text.py", "band_pairs")) == 1
+    assert set(sites) == set(_INLINE_BAND_PAIRS)
+
+
+def test_set_overlap_written_once():
+    sites = _sites(r'array_intersect\("shs_[as]", "shs_b"\)')
+    assert sites.pop(("functions/text.py", "set_overlap")) == 1
+    assert set(sites) == set(_INLINE_SET_OVERLAP)
+
+
+def test_q30_drift_written_once():
+    assert _sites(r'alias\("snum"\)') == {
+        ("functions/vectors.py", "q30_cell_displacement"): 1
+    }
+    sites = _sites(r'alias\("sold"\)')
+    assert sites.pop(("functions/vectors.py", "q30_dim_drift")) == 1
+    assert set(sites) == set(_INLINE_DIM_DRIFT)
