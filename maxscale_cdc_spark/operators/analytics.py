@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from maxscale_cdc_spark.registry import register
+from maxscale_cdc_spark.session import stage
 from maxscale_cdc_spark.tables import table
 
 # ---------------------------------------------------------------------------
@@ -748,32 +749,31 @@ def rel_graph_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = raw.select(
         F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")
     ).distinct()
-    adj = edges.unionByName(
-        edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).localCheckpoint(eager=False)
+    adj = stage(
+        edges.unionByName(
+            edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
+        )
+    )
     seeds = (
         adj.select(F.col("a").alias("n"))
         .distinct()
         .filter(F.col("n") % 10 == 0)
         .select(F.col("n").alias("seed"))
     )
-    visited = seeds.select("seed", F.col("seed").alias("node")).localCheckpoint(
-        eager=False
-    )
+    visited = stage(seeds.select("seed", F.col("seed").alias("node")))
     frontier = visited
     levels = []
     for k in (1, 2, 3):
-        nxt = (
+        nxt = stage(
             frontier.join(adj, frontier.node == adj.a)
             .select("seed", F.col("b").alias("node"))
             .join(visited, ["seed", "node"], "left_anti")
             .distinct()
-            .localCheckpoint(eager=False)
         )
         levels.append(
             nxt.select("seed", F.lit(k).cast("long").alias("hops"), "node")
         )
-        visited = visited.unionByName(nxt).localCheckpoint(eager=False)
+        visited = stage(visited.unionByName(nxt))
         frontier = nxt
     lv = levels[0].unionByName(levels[1]).unionByName(levels[2])
     return lv.groupBy(F.col("seed").cast("long").alias("seed"), "hops").agg(

@@ -69,7 +69,7 @@ from maxscale_cdc_spark.operators.llm import (
     trigram_sets,
 )
 from maxscale_cdc_spark.registry import register
-from maxscale_cdc_spark.session import memo
+from maxscale_cdc_spark.session import memo, stage
 
 # Constants + oracle-SQL builders live in operators/banding.py (a leaf
 # module, so llm.py's family oracles can embed the chooser without an
@@ -93,7 +93,6 @@ _CAND_BUDGET_PER_DOC = banding.CAND_BUDGET_PER_DOC
 def trigram_classes16(
     spark: SparkSession,
     sf_dir: str,
-    stage: bool = True,
     doc_filter: F.Column | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """(doc_map, classes) over TRIGRAM shingle sets with a K=16 MinHash
@@ -104,7 +103,7 @@ def trigram_classes16(
     (session, sf_dir)."""
 
     def build():
-        base = trigram_sets(spark, sf_dir, stage=stage, doc_filter=doc_filter)
+        base = trigram_sets(spark, sf_dir, doc_filter=doc_filter)
         keyed = base.select(
             "doc_id", "shs", F.md5(F.concat_ws("\x1f", "shs")).alias("ckey")
         )
@@ -122,21 +121,20 @@ def trigram_classes16(
             F.size("shs").cast("long").alias("sz"),
             *minhash_sig("shs", _K16),
         )
-        if stage:
-            # Filtered (per-query) chains materialize EAGERLY: they are not
-            # family-cached, and a lazy checkpoint here is consumed by many
-            # CONCURRENT AQE query stages (truth prefix join + one band join
-            # per chooser config), which then race to materialize the same
-            # parent — measured r15 on llm_dedup_containment_pairwise as a
-            # convoy of 16-task stages blocked with runTime >> cpuTime and
-            # 6.8-19.7 s attempt swings; eager build serializes the staged
-            # table once (~2 s) and the consumers read cached blocks.  The
-            # unfiltered family chain stays lazy (first consumer pays under
-            # BENCH_COLD attribution, working rule 6).
-            classes = classes.localCheckpoint(eager=doc_filter is not None)
+        # Filtered (per-query) chains materialize EAGERLY: they are not
+        # family-cached, and a lazy checkpoint here is consumed by many
+        # CONCURRENT AQE query stages (truth prefix join + one band join
+        # per chooser config), which then race to materialize the same
+        # parent — measured r15 on llm_dedup_containment_pairwise as a
+        # convoy of 16-task stages blocked with runTime >> cpuTime and
+        # 6.8-19.7 s attempt swings; eager build serializes the staged
+        # table once (~2 s) and the consumers read cached blocks.  The
+        # unfiltered family chain stays lazy (first consumer pays under
+        # BENCH_COLD attribution, working rule 6).
+        classes = stage(classes, eager=doc_filter is not None)
         return doc_map, classes
 
-    if stage and doc_filter is None:
+    if doc_filter is None:
         return memo(spark, ("trigram_classes16", sf_dir), build, cold=True)
     return build()
 
@@ -214,9 +212,7 @@ def tuning_sample_pct(spark: SparkSession, sf_dir: str) -> int:
     return memo(spark, ("tuning_sample_pct", sf_dir), build, cold=True)
 
 
-def _banding_curve_frame(
-    spark: SparkSession, sf_dir: str, stage: bool = True
-) -> DataFrame:
+def _banding_curve_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-config recall/cost table on the deterministic hash sample:
     (bands, rows_per_band, k_hashes, n_true, n_caught, n_candidates,
     recall, meets_floor).  Counts are CROSS-CLASS pair counts — the
@@ -229,15 +225,13 @@ def _banding_curve_frame(
         _, classes = trigram_classes16(
             spark,
             sf_dir,
-            stage=stage,
             doc_filter=hash_sample("doc_id", tuning_sample_pct(spark, sf_dir)),
         )
         truth = _class_exact_pairs(classes)
-        if stage:
-            # eager: consumed by one recall join PER CONFIG — concurrent
-            # AQE stages raced to materialize it (the r14 convoy, still
-            # measured r15 at 8.3-15.1 s attempt swings when lazy)
-            truth = truth.localCheckpoint(eager=True)
+        # eager: consumed by one recall join PER CONFIG — concurrent
+        # AQE stages raced to materialize it (the r14 convoy, still
+        # measured r15 at 8.3-15.1 s attempt swings when lazy)
+        truth = stage(truth, eager=True)
         n_true = truth.agg(F.count("*").cast("long").alias("n_true"))
         # PRODUCTION-space (bigram class) lineage on the SAME sampled docs
         # — each config's candidate cost is counted where the dedup family
@@ -248,17 +242,15 @@ def _banding_curve_frame(
         bdoc_map, bclasses = shingle_classes(
             spark,
             sf_dir,
-            stage=stage,
             doc_filter=hash_sample("doc_id", tuning_sample_pct(spark, sf_dir)),
         )
         n_docs = bdoc_map.agg(F.count("*").cast("long").alias("n_docs"))
         out = None
         for nb, rpb in _AUTOTUNE_CONFIGS:
             cand = class_band_pairs(classes, nb, rpb).select("ckey_a", "ckey_b")
-            if stage:
-                # consumed twice below (cost count + recall join); eager
-                # for the same anti-convoy reason as `truth`
-                cand = cand.localCheckpoint(eager=True)
+            # consumed twice below (cost count + recall join); eager
+            # for the same anti-convoy reason as `truth`
+            cand = stage(cand, eager=True)
             counts = cand.agg(
                 F.count("*").cast("long").alias("n_candidates")
             ).crossJoin(
@@ -305,13 +297,9 @@ def _banding_curve_frame(
                 ).alias("within_budget"),
             )
         )
-        if stage:
-            curve = curve.localCheckpoint(eager=False)
-        return curve
+        return stage(curve)
 
-    if stage:
-        return memo(spark, ("banding_curve", sf_dir), build, cold=True)
-    return build()
+    return memo(spark, ("banding_curve", sf_dir), build, cold=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1059,7 +1047,7 @@ def _store_migrate_frame(
             F.concat(F.lit(side), "ckey").alias("skey"), "rep", "n_docs",
         )
 
-    csets = (
+    csets = stage(
         old_classes.select(
             F.concat(F.lit("o"), "ckey").alias("skey"), "shs", "sz"
         )
@@ -1068,7 +1056,6 @@ def _store_migrate_frame(
                 F.concat(F.lit("n"), "ckey").alias("skey"), "shs", "sz"
             )
         )
-        .localCheckpoint(eager=False)
     )
 
     def cand_pairs(nb: int, rpb: int, **out: str) -> DataFrame:
@@ -1087,9 +1074,9 @@ def _store_migrate_frame(
         jac = F.col("n_common").cast("double") / (
             F.col("sz_sum") - F.col("n_common")
         )
-        return ver.filter(jac >= _JACCARD_MIN).select(
-            "skey_a", "skey_b", "npairs"
-        ).localCheckpoint(eager=False)
+        return stage(
+            ver.filter(jac >= _JACCARD_MIN).select("skey_a", "skey_b", "npairs")
+        )
 
     vs = verified_pairs(nb_s, rpb_s)
     vc = verified_pairs(nb_c, rpb_c)

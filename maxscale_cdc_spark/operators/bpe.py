@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from maxscale_cdc_spark.functions.text import words
 from maxscale_cdc_spark.registry import register
-from maxscale_cdc_spark.session import memo
+from maxscale_cdc_spark.session import memo, stage
 from maxscale_cdc_spark.tables import wide_table
 
 # Fixed merge vocabulary: frequent English subwords, longest-match
@@ -324,7 +324,7 @@ def llm_bpe_learn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # top-1 (TakeOrdered, no single-partition window), and the merge
 # application is a broadcast of ONE row into a per-row fold.  K
 # iterations cost K vocab-sized jobs regardless of corpus size.
-# Lineage across iterations is staged with localCheckpoint(eager=False)
+# Lineage across iterations is staged with `session.stage` (lazy)
 # per the repo staging rule (iteration lineage consumed >2x).
 # ---------------------------------------------------------------------------
 
@@ -354,21 +354,19 @@ def _merge_fold(seg, ma, mb):
 # llm_bpe_tokenize_learned both consume the SAME staged learn pipeline;
 # caching the checkpointed DataFrames halves the cost when both run in
 # one session (the driver's sweep and bench both do).  Only the
-# staged, default-K variant is cached.
-def _learn_merges(
-    spark: SparkSession, sf_dir: str, stage: bool = True, k: int = _K_MERGES
-):
+# default-K variant is cached.
+def _learn_merges(spark: SparkSession, sf_dir: str, k: int = _K_MERGES):
     """Run K BPE training iterations; return (merges_df, final_seg_df).
 
     merges_df: (step, a, b, n) — the learned merge table in order.
     final_seg_df: (wd, mult, seg array<string>) — every distinct word
     segmented by the learned vocabulary (= the tokenizer's output).
 
-    `stage=False` exposes the un-checkpointed plan for plan-shape
-    tests (a checkpoint hides upstream operators from gates) — pair it
-    with a small `k`: iteration i references seg_{i-1} twice (argmax +
-    fold), so the UN-staged logical plan doubles per iteration; the
-    checkpoint is what makes K=16 linear."""
+    A plan gate built under `session.unstaged()` sees the
+    un-checkpointed plan — pair it with a small `k`: iteration i
+    references seg_{i-1} twice (argmax + fold), so the UN-staged logical
+    plan doubles per iteration; the checkpoint is what makes K=16
+    linear."""
 
     def build():
         d = wide_table(spark, sf_dir, "documents")
@@ -385,8 +383,7 @@ def _learn_merges(
                 lambda i: F.col("wd").substr(i, F.lit(1)),
             ),
         )
-        if stage:
-            seg = seg.localCheckpoint(eager=False)
+        seg = stage(seg)
         bests = []
         for step in range(1, k + 1):
             pairs = seg.filter(F.size("seg") >= 2).select(
@@ -408,8 +405,7 @@ def _learn_merges(
             # Global top-1 via TakeOrdered (the idiomatic argmax — no
             # single-partition row_number window; VERDICT r5 nit 1).
             best = agg.orderBy(F.col("n").desc(), "a", "b").limit(1)
-            if stage:
-                best = best.localCheckpoint(eager=False)
+            best = stage(best)
             bests.append(best.withColumn("step", F.lit(step).cast("long")))
             seg = (
                 seg.crossJoin(
@@ -422,14 +418,13 @@ def _learn_merges(
                 )
                 .drop("_ma", "_mb")
             )
-            if stage:
-                seg = seg.localCheckpoint(eager=False)
+            seg = stage(seg)
         merges = bests[0]
         for b in bests[1:]:
             merges = merges.unionAll(b)
         return merges, seg
 
-    if stage and k == _K_MERGES:
+    if k == _K_MERGES:
         return memo(spark, ("bpe_learn", sf_dir), build, cold=True)
     return build()
 

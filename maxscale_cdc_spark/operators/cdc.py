@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from maxscale_cdc_spark.functions.window import first_per
 from maxscale_cdc_spark.registry import oracle_splice, register
+from maxscale_cdc_spark.session import stage
 from maxscale_cdc_spark.sources.envelope import gtid_col
 from maxscale_cdc_spark.sources.schema_registry import decode_ddl
 from maxscale_cdc_spark.tables import table
@@ -2194,13 +2195,15 @@ def cdc_scd2_merge_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = images.filter(F.col("sequence") > F.col("cutoff")).drop("cutoff")
 
     w = W.partitionBy("pk").orderBy("sequence")
-    history = hist_src.select(
-        "pk",
-        "sequence",
-        "value",
-        F.col("ts_unix").alias("valid_from"),
-        F.lead("ts_unix").over(w).alias("valid_to"),
-    ).localCheckpoint(eager=False)  # the stored warehouse table
+    history = stage(
+        hist_src.select(
+            "pk",
+            "sequence",
+            "value",
+            F.col("ts_unix").alias("valid_from"),
+            F.lead("ts_unix").over(w).alias("valid_to"),
+        )
+    )  # the stored warehouse table
 
     batch_iv = batch.select(
         "pk",
@@ -3298,8 +3301,8 @@ def cdc_replay_idempotence(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    base_state = latest(cdc).localCheckpoint(eager=False)
-    dup_state = latest(dup).localCheckpoint(eager=False)
+    base_state = stage(latest(cdc))
+    dup_state = stage(latest(dup))
     matched = base_state.join(
         dup_state, ["pk", "last_seq", "last_value", "last_ts"]
     ).agg(F.count("*").cast("long").alias("n"))

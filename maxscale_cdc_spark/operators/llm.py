@@ -48,7 +48,7 @@ from maxscale_cdc_spark.functions.vectors import (
 from maxscale_cdc_spark.functions.window import first_per
 from maxscale_cdc_spark.operators import banding
 from maxscale_cdc_spark.registry import oracle_splice, register
-from maxscale_cdc_spark.session import memo
+from maxscale_cdc_spark.session import memo, stage
 from maxscale_cdc_spark.tables import table, wide_table
 
 # ---------------------------------------------------------------------------
@@ -180,7 +180,6 @@ WHERE CAST(n_common AS DOUBLE) / (sz_sum - n_common) >= {_JACCARD_MIN}
 def shingle_classes(
     spark: SparkSession,
     sf_dir: str,
-    stage: bool = True,
     doc_filter: F.Column | None = None,
 ):
     """(doc_map, classes) for the banded-LSH family.
@@ -189,14 +188,13 @@ def shingle_classes(
     shingle.  classes: (ckey, rep, n_docs, shs, sz, m0..m7) — ONE row
     per distinct shingle set, signature computed from the set.
 
-    Staging: the keyed doc table is localCheckpoint(eager=False)-pinned
-    once (shingling + md5 per doc — hash lineage consumed by the class
+    Staging: the keyed doc table is pinned once with `session.stage`
+    (shingling + md5 per doc — hash lineage consumed by the class
     aggregation AND the member-expansion joins), and the class table is
     pinned once (8 minhash transforms — consumed by every band config
-    and both verify sides).  `stage=False` exposes the full lineage for
-    plan gates.  `doc_filter` pre-filters documents (the deterministic
-    hash-sample knob tables).  The staged unfiltered lineage is cached
-    per (session, sf_dir) — see the comment above."""
+    and both verify sides).  `doc_filter` pre-filters documents (the
+    deterministic hash-sample knob tables).  The staged unfiltered
+    lineage is cached per (session, sf_dir) — see the comment above."""
 
     def build():
         d = wide_table(spark, sf_dir, "documents")
@@ -212,10 +210,9 @@ def shingle_classes(
         base = base.select(
             "doc_id", "shs", F.md5(F.concat_ws("\x1f", "shs")).alias("ckey")
         )
-        if stage:
-            # eager for filtered (per-query, non-cached) chains — the
-            # anti-convoy rule, see trigram_classes16 in autotune.py
-            base = base.localCheckpoint(eager=doc_filter is not None)
+        # eager for filtered (per-query, non-cached) chains — the
+        # anti-convoy rule, see trigram_classes16 in autotune.py
+        base = stage(base, eager=doc_filter is not None)
         doc_map = base.select("doc_id", "ckey")
         classes = base.groupBy("ckey").agg(
             F.min("doc_id").alias("rep"),
@@ -234,13 +231,12 @@ def shingle_classes(
             # tables (which band the first 8)
             *minhash_sig("shs", _K16),
         )
-        if stage:
-            # eager for filtered (per-query, non-cached) chains — the
-            # anti-convoy rule, see trigram_classes16 in autotune.py
-            classes = classes.localCheckpoint(eager=doc_filter is not None)
+        # eager for filtered (per-query, non-cached) chains — the
+        # anti-convoy rule, see trigram_classes16 in autotune.py
+        classes = stage(classes, eager=doc_filter is not None)
         return doc_map, classes
 
-    if stage and doc_filter is None:
+    if doc_filter is None:
         return memo(spark, ("shingle_classes", sf_dir), build, cold=True)
     return build()
 
@@ -959,8 +955,8 @@ def kmeans_cells_cached(
         e = wide_table(spark, sf_dir, "embeddings")
         cents, assigned = _kmeans_cells(e, n_cells)
         return (
-            cents.localCheckpoint(eager=False),
-            assigned.localCheckpoint(eager=False),
+            stage(cents),
+            stage(assigned),
         )
 
     return memo(spark, ("kmeans_cells", sf_dir, n_cells), build, cold=True)
@@ -987,8 +983,8 @@ def kmeans_cells_cached_cut(
             e.filter(F.col("vec_id") <= cut), n_cells
         )
         return (
-            cents.localCheckpoint(eager=False),
-            assigned.localCheckpoint(eager=False),
+            stage(cents),
+            stage(assigned),
             cut,
         )
 
@@ -1551,7 +1547,6 @@ WHERE CAST(n_common AS DOUBLE) / (sz_sum - n_common) >= {_JACCARD_MIN}
 def trigram_sets(
     spark: SparkSession,
     sf_dir: str,
-    stage: bool = True,
     doc_filter: F.Column | None = None,
 ) -> DataFrame:
     """(doc_id, shs) — SORTED distinct trigram-shingle set per document
@@ -1576,13 +1571,11 @@ def trigram_sets(
                 F.array_sort(F.array_distinct(word_trigrams(F.col("w0")))).alias("shs"),
             )
         )
-        if stage:
-            # eager for filtered (per-query, non-cached) chains — the
-            # anti-convoy rule, see trigram_classes16 in autotune.py
-            out = out.localCheckpoint(eager=doc_filter is not None)
-        return out
+        # eager for filtered (per-query, non-cached) chains — the
+        # anti-convoy rule, see trigram_classes16 in autotune.py
+        return stage(out, eager=doc_filter is not None)
 
-    if stage and doc_filter is None:
+    if doc_filter is None:
         return memo(spark, ("trigram_sets", sf_dir), build, cold=True)
     return build()
 
@@ -2555,10 +2548,7 @@ def llm_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hash lineage consumed by BOTH band-join sides and the audit join:
     # un-staged, each side recomputes all 16×|trigrams| md5s (the
     # measured 6× footgun, CLAUDE.md rule 5)
-    sigs = tset.select(
-        "doc_id",
-        *minhash_sig("shs", _K16),
-    ).localCheckpoint(eager=False)
+    sigs = stage(tset.select("doc_id", *minhash_sig("shs", _K16)))
     bands = None
     for b in range(nb):
         cols = [f"m{j}" for j in range(b * rpb, (b + 1) * rpb)]
@@ -3240,15 +3230,16 @@ def llm_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf1.0 otherwise (value-neutral; a stats-rich plan picks SMJ
     itself)."""
     tset = trigram_sets(spark, sf_dir)
-    keyed = tset.select(
-        "doc_id", "shs", F.md5(F.concat_ws("\x01", "shs")).alias("ck")
-    ).localCheckpoint(eager=False)
+    keyed = stage(
+        tset.select(
+            "doc_id", "shs", F.md5(F.concat_ws("\x01", "shs")).alias("ck")
+        )
+    )
     cmem = keyed.select("ck", "doc_id")
-    cls = (
+    cls = stage(
         keyed.select("ck", "shs")
         .dropDuplicates(["ck"])  # shs identical per ck: value-deterministic
         .withColumn("sz", F.size("shs").cast("long"))
-        .localCheckpoint(eager=False)
     )
     sh = cls.select("ck", "sz", F.explode("shs").alias("sh"))
     # class-level document frequency: the rare-first total order
@@ -3725,9 +3716,7 @@ def llm_dedup_store_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # surviving classes: key/set/signatures are store bytes, only the
     # member count is re-projected; vanished classes drop via the join
-    classes2 = classes.drop("n_docs").join(surv, "ckey").localCheckpoint(
-        eager=False
-    )
+    classes2 = stage(classes.drop("n_docs").join(surv, "ckey"))
     cpairs = class_band_pairs(classes2, nb, rpb)
     ver = class_pair_jaccard(cpairs, classes2)
     jac_c = F.col("n_common").cast("double") / (F.col("sz_sum") - F.col("n_common"))
@@ -3804,14 +3793,13 @@ def llm_license_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     reps = llm_dedup_cluster(spark, sf_dir).select("doc_id", "cluster_rep")
     d = table(spark, sf_dir, "documents").select("doc_id", "source")
     own_rank = (F.substring("source", 4, 10).cast("int") % 4).alias("own_rank")
-    lab = (
+    lab = stage(
         d.join(reps, "doc_id", "left")
         .select(
             "doc_id",
             F.coalesce("cluster_rep", "doc_id").alias("rep"),
             own_rank,
         )
-        .localCheckpoint(eager=False)
     )
     eff = lab.groupBy("rep").agg(F.max("own_rank").alias("eff_rank"))
 
@@ -3887,7 +3875,7 @@ def llm_optout_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-source audit ledger (see block comment)."""
     reps = llm_dedup_cluster(spark, sf_dir).select("doc_id", "cluster_rep")
     d = table(spark, sf_dir, "documents").select("doc_id", "source")
-    lab = (
+    lab = stage(
         d.join(reps, "doc_id", "left")
         .select(
             "doc_id",
@@ -3897,7 +3885,6 @@ def llm_optout_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "direct_optout"
             ),
         )
-        .localCheckpoint(eager=False)
     )
     dirty = lab.groupBy("rep").agg(
         F.max(F.col("direct_optout").cast("int")).cast("boolean").alias(

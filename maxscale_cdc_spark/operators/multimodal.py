@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from maxscale_cdc_spark.functions.window import first_per
 from maxscale_cdc_spark.registry import register
+from maxscale_cdc_spark.session import stage
 from maxscale_cdc_spark.tables import table
 
 
@@ -1178,17 +1179,10 @@ FROM tagg t FULL JOIN iagg i
 
 
 @register("mm_pack_interleaved", _MM_PACK_ORACLE)
-def mm_pack_interleaved(
-    spark: SparkSession, sf_dir: str, stage: bool = True
-) -> DataFrame:
+def mm_pack_interleaved(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interleaved text+image sequence packing: per-source 2048-token
     chunks with per-chunk modality accounting and the atomic-image
-    straddle audit (see block comment).
-
-    ``stage=False`` skips the run-offset checkpoint so plan gates can
-    see the packing window (CLAUDE.md rule 5); the default emits the
-    exact same staged plan as before the flag existed.
-    """
+    straddle audit (see block comment)."""
     d = table(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
@@ -1201,9 +1195,7 @@ def mm_pack_interleaved(
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
     total = F.col("tt") + _MM_PATCH * F.col("n_img")
-    runs = d.withColumn("ds", F.sum(total).over(w) - total)
-    if stage:
-        runs = runs.localCheckpoint(eager=False)
+    runs = stage(d.withColumn("ds", F.sum(total).over(w) - total))
     tx = runs.select(
         "source",
         F.explode(

@@ -34,6 +34,7 @@ from maxscale_cdc_spark.functions.text import (
 )
 from maxscale_cdc_spark.operators.banding import bands_sql
 from maxscale_cdc_spark.registry import register
+from maxscale_cdc_spark.session import stage
 from maxscale_cdc_spark.tables import table, wide_table
 
 # ---------------------------------------------------------------------------
@@ -410,10 +411,6 @@ JOIN sig sb ON sb.doc_id = c.doc_b
 
 @register("llm_minhash_accuracy", _MH_ACC_ORACLE)
 def llm_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _minhash_accuracy_frame(spark, sf_dir, stage=True)
-
-
-def _minhash_accuracy_frame(spark: SparkSession, sf_dir: str, stage: bool) -> DataFrame:
     """MinHash estimator audit over the LSH candidate set.
 
     Same single keyed aggregation that llm_dedup_near pays (signatures
@@ -441,12 +438,8 @@ def _minhash_accuracy_frame(spark: SparkSession, sf_dir: str, stage: bool) -> Da
     # the signature lineage is consumed FOUR times (two band selects in
     # the union, then both sides of the candidate join-back) — pin it
     # once so the 8×|shingles| MD5 pass runs once, not four times
-    # (A/B at sf0.1: 28.1 s → 2.1 s min-of-3).  stage=False keeps the
-    # full lineage visible for plan gates (a checkpoint hides upstream
-    # operators behind a LogicalRDD scan).
-    sig = docw.select("doc_id", "shs", *minhash_sig("shs", _MH_K))
-    if stage:
-        sig = sig.localCheckpoint(eager=False)
+    # (A/B at sf0.1: 28.1 s → 2.1 s min-of-3)
+    sig = stage(docw.select("doc_id", "shs", *minhash_sig("shs", _MH_K)))
     bands = None
     for b in range(2):
         cols = [f"m{j}" for j in range(b * 4, b * 4 + 4)]
@@ -569,9 +562,7 @@ def llm_minhash_bbit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # signature lineage consumed three times (the band keys + both
     # join-back sides) — staged once, the llm_minhash_accuracy rule
-    sig = docw.select("doc_id", "shs", *minhash_sig("shs", _MH_K)).localCheckpoint(
-        eager=False
-    )
+    sig = stage(docw.select("doc_id", "shs", *minhash_sig("shs", _MH_K)))
     bands = band_keys(sig, 2, 4, "doc_id")
     cand = band_pairs(bands, bands, "doc_id", doc_a="a.doc_id", doc_b="b.doc_id")
     sa = sig.select(
@@ -1318,7 +1309,6 @@ FROM cand_{tag} c JOIN ver v USING (doc_a, doc_b)"""
 def _lsh_tuning_frame(
     spark: SparkSession,
     sf_dir: str,
-    stage: bool = True,
     doc_filter=None,
 ) -> DataFrame:
     """Class-collapsed band-tuning table (shared by llm_lsh_tuning and
@@ -1343,9 +1333,7 @@ def _lsh_tuning_frame(
         shingle_classes,
     )
 
-    doc_map, classes = shingle_classes(
-        spark, sf_dir, stage=stage, doc_filter=doc_filter
-    )
+    doc_map, classes = shingle_classes(spark, sf_dir, doc_filter=doc_filter)
     intra = classes.agg(
         F.coalesce(F.sum(F.expr("div(n_docs * (n_docs - 1), 2)")), F.lit(0))
         .cast("long")
@@ -1355,7 +1343,7 @@ def _lsh_tuning_frame(
     cands = {}
     for nb, rpb in _LSH_CONFIGS:
         c = class_band_pairs(classes, nb, rpb)
-        cands[(nb, rpb)] = c.localCheckpoint(eager=False) if stage else c
+        cands[(nb, rpb)] = stage(c)
     allcand = None
     for c in cands.values():
         allcand = c if allcand is None else allcand.unionByName(c)
@@ -1364,8 +1352,7 @@ def _lsh_tuning_frame(
     verd = class_pair_jaccard(allcand, classes).select(
         "ckey_a", "ckey_b", (jac >= 0.5).alias("dup")
     )
-    if stage:
-        verd = verd.localCheckpoint(eager=False)
+    verd = stage(verd)
 
     out = None
     for (nb, rpb), c in cands.items():

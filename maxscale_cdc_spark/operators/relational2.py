@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from maxscale_cdc_spark.functions.numeric import dec
 from maxscale_cdc_spark.functions.window import first_per
 from maxscale_cdc_spark.registry import register
-from maxscale_cdc_spark.session import memo
+from maxscale_cdc_spark.session import memo, stage
 from maxscale_cdc_spark.tables import table
 
 DEC12 = "decimal(12,4)"
@@ -1664,9 +1664,11 @@ def rel_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # TakeOrdered top-100 FIRST; the rank window then runs over <= 100
     # rows (never the full key-count table)
     top100 = kc.orderBy(F.col("n").desc(), "k").limit(100)
-    ranked = top100.withColumn(
-        "rk", F.row_number().over(W.orderBy(F.col("n").desc(), "k"))
-    ).localCheckpoint(eager=False)
+    ranked = stage(
+        top100.withColumn(
+            "rk", F.row_number().over(W.orderBy(F.col("n").desc(), "k"))
+        )
+    )
     tot = kc.agg(
         F.sum("n").cast("long").alias("total_rows"),
         F.count("*").cast("long").alias("total_keys"),
@@ -2013,7 +2015,7 @@ def rel_ivm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderpriority", "price", "mult"
         )
 
-    v_old = j(o_old, l_old).localCheckpoint(eager=False)  # the stored view
+    v_old = stage(j(o_old, l_old))  # the stored view
     maintained = (
         v_old.unionByName(j(o_new, l_old))
         .unionByName(j(o_old, l_new))
@@ -2701,24 +2703,17 @@ def rel_dist_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY l_returnflag
     """,
 )
-def rel_hll_rollup_union(
-    spark: SparkSession, sf_dir: str, stage: bool = True
-) -> DataFrame:
+def rel_hll_rollup_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-cell HLL sketches unioned to a coarser rollup: re-merging
     the same partials is idempotent (at-least-once safety) and the
     merged estimate lands within tolerance of the exact distinct
-    count (see block comment for the error budget).
-
-    ``stage=False`` skips the per-cell-sketch checkpoint so plan gates
-    can see the sketch aggregation (CLAUDE.md rule 5); the default
-    emits the exact same staged plan as before the flag existed.
-    """
+    count (see block comment for the error budget)."""
     li = table(spark, sf_dir, "lineitem")
-    parts = li.groupBy("l_returnflag", "l_linestatus").agg(
-        F.hll_sketch_agg("l_orderkey", F.lit(14)).alias("sk")
+    parts = stage(
+        li.groupBy("l_returnflag", "l_linestatus").agg(
+            F.hll_sketch_agg("l_orderkey", F.lit(14)).alias("sk")
+        )
     )
-    if stage:
-        parts = parts.localCheckpoint(eager=False)
     merged = parts.groupBy("l_returnflag").agg(
         F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("merged_est")
     )
@@ -3908,9 +3903,8 @@ def rel_bloom_fpr_knob(spark: SparkSession, sf_dir: str) -> DataFrame:
     accounting (see block comment)."""
     c = table(spark, sf_dir, "customer")
     o = table(spark, sf_dir, "orders")
-    keys = c.select(F.col("c_custkey").alias("k")).distinct().localCheckpoint(
-        eager=False
-    )  # key set consumed 2× per m (build) + probes
+    # key set consumed 2× per m (build) + probes
+    keys = stage(c.select(F.col("c_custkey").alias("k")).distinct())
     probes = o.select(
         (F.col("o_custkey") + _BLOOM_SHIFT).alias("p")
     ).distinct()

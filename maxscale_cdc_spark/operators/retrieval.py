@@ -45,6 +45,7 @@ from maxscale_cdc_spark.functions.vectors import (
 from maxscale_cdc_spark.functions.window import first_per
 from maxscale_cdc_spark.operators.llm import _KMEANS_ITERS, _sql_kmeans_ctes
 from maxscale_cdc_spark.registry import register
+from maxscale_cdc_spark.session import stage
 from maxscale_cdc_spark.tables import table, wide_table
 
 # ---------------------------------------------------------------------------
@@ -257,10 +258,6 @@ def _sd_kmeans_cells(e: DataFrame) -> DataFrame:
 
 @register("llm_semdedup", _SEMDEDUP_ORACLE)
 def llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _semdedup_frame(spark, sf_dir, stage=True)
-
-
-def _semdedup_frame(spark: SparkSession, sf_dir: str, stage: bool) -> DataFrame:
     """SemDeDup: per-cluster semantic dedup verdicts.
 
     Same seeded Lloyd's k-means as llm_sim_ivf (broadcast-join
@@ -271,18 +268,12 @@ def _semdedup_frame(spark: SparkSession, sf_dir: str, stage: bool) -> DataFrame:
     cluster's lower-id members, so the quadratic term is Σ cell² —
     bounded by how K scales with the corpus, never N².  Keep-lowest-id
     is the deterministic greedy SemDeDup keeper rule; max_sim_lower is
-    the audit value a pipeline thresholds when tuning τ.
-
-    `stage=False` skips the localCheckpoint pin so plan gates can
-    assert on the FULL lineage (a checkpoint hides everything upstream
-    behind a LogicalRDD scan — see test_plans.py)."""
+    the audit value a pipeline thresholds when tuning τ."""
     e = wide_table(spark, sf_dir, "embeddings")
     # the self-join + cell-size window evaluate this lineage three
     # times; pin the (tiny: id, vector, nsq, cid) assignment once —
     # A/B-measured 5.7 s → 4.1 s at sf0.1 (min-of-3)
-    assigned = _sd_kmeans_cells(e)
-    if stage:
-        assigned = assigned.localCheckpoint(eager=True)
+    assigned = stage(_sd_kmeans_cells(e), eager=True)
     cells = assigned.withColumn(
         "n_cell", F.count("*").over(W.partitionBy("cid")).cast("long")
     )
@@ -440,10 +431,6 @@ LIMIT {_PQ_TOPK}
 
 @register("llm_sim_pq", _pq_oracle())
 def llm_sim_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sim_pq_frame(spark, sf_dir, stage=True)
-
-
-def _sim_pq_frame(spark: SparkSession, sf_dir: str, stage: bool) -> DataFrame:
     """PQ/ADC approximate nearest neighbors for query vector 0.
 
     Encoding is M independent (vector × K-codeword) assignments — each
@@ -458,11 +445,8 @@ def _sim_pq_frame(spark: SparkSession, sf_dir: str, stage: bool) -> DataFrame:
     operator's layout demonstrates."""
     e = wide_table(spark, sf_dir, "embeddings")
     # consumed 2M+1 times (per-subspace sub + cent, plus the spine) —
-    # pin the narrow (id, vector) frame once (4.1 → 1.8 s min-of-3;
-    # stage=False keeps the lineage visible for plan gates)
-    vecs = e.select("vec_id", as_double("embedding").alias("v"))
-    if stage:
-        vecs = vecs.localCheckpoint(eager=True)
+    # pin the narrow (id, vector) frame once (4.1 → 1.8 s min-of-3)
+    vecs = stage(e.select("vec_id", as_double("embedding").alias("v")), eager=True)
 
     def l2sq(a, b):
         return F.round(
@@ -767,11 +751,11 @@ def llm_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("cid", "crn")
     )
-    members = (
+    members = stage(
         assigned.join(F.broadcast(cellrank), "cid")
         .filter(F.col("vec_id") != 0)
-        .select("vec_id", "crn")
-        .localCheckpoint(eager=True)
+        .select("vec_id", "crn"),
+        eager=True,
     )
     scored = (
         e.filter(F.col("vec_id") != 0)
@@ -780,11 +764,11 @@ def llm_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", cosine(as_double("embedding"), F.col("qv")).alias("cos_sim")
         )
     )
-    exact = (
+    exact = stage(
         scored.orderBy(F.col("cos_sim").desc(), "vec_id")
         .limit(_RECALL_K)
-        .select("vec_id")
-        .localCheckpoint(eager=True)
+        .select("vec_id"),
+        eager=True,
     )
     out = None
     for np in _NPROBE_SWEEP:
@@ -850,11 +834,11 @@ def llm_ivf_nprobe_sweep_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("cid", "crn")
     )
-    members = (
+    members = stage(
         assigned.join(F.broadcast(cellrank), "cid")
         .filter(F.col("vec_id") != 0)
-        .select("vec_id", "crn")
-        .localCheckpoint(eager=True)
+        .select("vec_id", "crn"),
+        eager=True,
     )
     scored = (
         e.filter(F.col("vec_id") != 0)
@@ -863,11 +847,11 @@ def llm_ivf_nprobe_sweep_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", cosine(as_double("embedding"), F.col("qv")).alias("cos_sim")
         )
     )
-    exact = (
+    exact = stage(
         scored.orderBy(F.col("cos_sim").desc(), "vec_id")
         .limit(_RECALL_K)
-        .select("vec_id")
-        .localCheckpoint(eager=True)
+        .select("vec_id"),
+        eager=True,
     )
     out = None
     for np in _NPROBE_SWEEP:
@@ -1361,19 +1345,19 @@ def llm_ivf_rebalance_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     # eager (anti-convoy rule, see autotune.trigram_classes16): the
     # staged cents/assignments each feed several CONCURRENT downstream
     # stages (plan + split Lloyd + post reassignment + brute audit)
-    cents = cents.localCheckpoint(eager=True)
+    cents = stage(cents, eager=True)
     e = wide_table(spark, sf_dir, "embeddings")
     # same cutover scalar _ivf_batch_state derives (one config read)
     cut = int(
         e.agg(F.expr("div(max(vec_id) * 4, 5)").alias("c")).collect()[0]["c"]
     )
     vecs = e.select("vec_id", as_double("embedding").alias("v"))
-    assigned = nearest_centroid(
-        vecs.filter(F.col("vec_id") <= cut), cents
-    ).localCheckpoint(eager=True)
-    nassign = nearest_centroid(
-        vecs.filter(F.col("vec_id") > cut), cents
-    ).localCheckpoint(eager=True)
+    assigned = stage(
+        nearest_centroid(vecs.filter(F.col("vec_id") <= cut), cents), eager=True
+    )
+    nassign = stage(
+        nearest_centroid(vecs.filter(F.col("vec_id") > cut), cents), eager=True
+    )
     cells = _ivf_cells(assigned, nassign)
     tot = cells.agg(
         F.sum(F.col("n_seed") + F.col("n_new")).cast("long").alias("n"),
@@ -1772,9 +1756,9 @@ def llm_ivf_forget_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     from maxscale_cdc_spark.operators.llm import kmeans_cells_cached
 
     cents, assigned = kmeans_cells_cached(spark, sf_dir)
-    surv = assigned.filter(
-        F.col("vec_id") % _FORGET_MOD != _FORGET_RES
-    ).localCheckpoint(eager=True)
+    surv = stage(
+        assigned.filter(F.col("vec_id") % _FORGET_MOD != _FORGET_RES), eager=True
+    )
     cb = assigned.groupBy("cid").agg(F.count("*").cast("long").alias("n_before"))
     ca = surv.groupBy("cid").agg(F.count("*").cast("long").alias("n_after"))
     cells = cb.join(ca, "cid", "left").select(
@@ -1800,10 +1784,10 @@ def llm_ivf_forget_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cid",
         cosine(F.col("v"), F.col("cv")).alias("sim"),
     )
-    reass = (
+    reass = stage(
         first_per(scored, "vec_id", F.col("sim").desc(), "cid")
-        .select("vec_id", "pre_cid", "cid")
-        .localCheckpoint(eager=True)
+        .select("vec_id", "pre_cid", "cid"),
+        eager=True,
     )
     post = reass.groupBy("cid").agg(
         F.count("*").cast("long").alias("n_members"),
@@ -1977,9 +1961,7 @@ def llm_ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from maxscale_cdc_spark.operators.llm import kmeans_cells_cached
 
     e = wide_table(spark, sf_dir, "embeddings")
-    vecs = e.select("vec_id", as_double("embedding").alias("v")).localCheckpoint(
-        eager=False
-    )
+    vecs = stage(e.select("vec_id", as_double("embedding").alias("v")))
     # stage the Lloyd-iterated centroids once and re-derive the cell
     # assignment as a single broadcast pass over the staged vectors
     # (bit-identical to _kmeans_cells' returned assignment — it IS
@@ -1998,11 +1980,11 @@ def llm_ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") <= _IVFPQ_NPROBE)
         .select("cid")
     )
-    cand = (
+    cand = stage(
         assigned.join(F.broadcast(qcells), "cid")
         .filter(F.col("vec_id") != 0)
-        .select("vec_id", "v")
-        .localCheckpoint(eager=True)
+        .select("vec_id", "v"),
+        eager=True,
     )
 
     def l2sq(a, b):
@@ -2214,9 +2196,7 @@ def llm_ann_join_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from maxscale_cdc_spark.operators.llm import kmeans_cells_cached
 
     e = wide_table(spark, sf_dir, "embeddings")
-    vecs = e.select("vec_id", as_double("embedding").alias("v")).localCheckpoint(
-        eager=False
-    )
+    vecs = stage(e.select("vec_id", as_double("embedding").alias("v")))
     cents, _ = kmeans_cells_cached(spark, sf_dir)  # staged by the cache
     assigned = nearest_centroid(vecs, cents)
     qset = vecs.filter(F.col("vec_id") % _ANNJ_QMOD == 0).select(
@@ -2360,17 +2340,17 @@ def llm_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("qid", "vec_id", rel_u)
     )
     w0 = W.partitionBy("qid").orderBy(F.col("rel_u").desc(), "vec_id")
-    cand = (
+    cand = stage(
         scored.withColumn("r0", F.row_number().over(w0))
         .filter(F.col("r0") <= _MMR_C)
-        .select("qid", "vec_id", "rel_u")
-        .localCheckpoint(eager=True)
+        .select("qid", "vec_id", "rel_u"),
+        eager=True,
     )
     candv = cand.join(
         e.select("vec_id", as_double("embedding").alias("v")), "vec_id"
     ).select("qid", "vec_id", "v")
     a, b = candv.alias("a"), candv.alias("b")
-    sims = (
+    sims = stage(
         a.join(
             b,
             (F.col("a.qid") == F.col("b.qid"))
@@ -2383,11 +2363,11 @@ def llm_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(cosine(F.col("a.v"), F.col("b.v")) * 1000000.0)
             .cast("long")
             .alias("sim_u"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        eager=True,
     )
     w = W.partitionBy("qid").orderBy(F.col("rel_u").desc(), "vec_id")
-    selected = (
+    selected = stage(
         cand.withColumn("r", F.row_number().over(w))
         .filter(F.col("r") == 1)
         .select(
@@ -2396,8 +2376,8 @@ def llm_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rel_u",
             (7 * F.col("rel_u")).alias("score_u"),
             F.lit(1).cast("long").alias("rk"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        eager=True,
     )
     out = selected
     for k in range(2, _MMR_K + 1):
@@ -2423,7 +2403,7 @@ def llm_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(k).cast("long").alias("rk"),
             )
         )
-        selected = selected.unionByName(pick).localCheckpoint(eager=True)
+        selected = stage(selected.unionByName(pick), eager=True)
         out = selected
     return out.select("qid", "rk", "vec_id", "rel_u", "score_u")
 
@@ -2541,38 +2521,24 @@ SELECT qid, rk, vec_id, rel_u, score_u{kcol} FROM ({unions})
 
 
 def _ann_mmr_candidates(
-    spark: SparkSession, sf_dir: str, stage: bool = True, n_cells: int | None = None
+    spark: SparkSession, sf_dir: str, n_cells: int | None = None
 ) -> DataFrame:
     """The ANN candidate stage of llm_ann_mmr_e2e: IVF routing + the
     cid equi-join + per-query top-C.  Split out so tests/test_plans.py
-    can gate THIS plan with `stage=False` (the full K-stage MMR
-    lineage duplicates subplans thousands of times when unstaged; the
-    no-full-embedding-scan property lives entirely in this stage)."""
-    from maxscale_cdc_spark.operators.llm import (
-        _N_CELLS,
-        _kmeans_cells,
-        kmeans_cells_cached,
-    )
-
-    def st(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint(eager=True) if stage else df  # eager: anti-convoy (r15)
+    can gate THIS plan unstaged (the full K-stage MMR lineage
+    duplicates subplans thousands of times when unstaged; the
+    no-full-embedding-scan property lives entirely in this stage).
+    The centroids ride the family cache; under `session.unstaged()`
+    the cache builds the raw chain, so that gate never goes vacuous.
+    Every stage here is eager: anti-convoy (r15)."""
+    from maxscale_cdc_spark.operators.llm import _N_CELLS, kmeans_cells_cached
 
     e = wide_table(spark, sf_dir, "embeddings")
-    if stage:
-        # production path rides the family centroid cache (already
-        # staged); stage=False keeps the RAW chain visible so the
-        # no-full-embedding-scan plan gate never goes vacuous
-        cents, assigned = kmeans_cells_cached(
-            spark, sf_dir, _N_CELLS if n_cells is None else n_cells
-        )
-    else:
-        cents, assigned = (
-            _kmeans_cells(e)
-            if n_cells is None
-            else _kmeans_cells(e, n_cells=n_cells)
-        )
-    cents = st(cents)
-    assigned = st(assigned.select("vec_id", "v", "cid"))
+    cents, assigned = kmeans_cells_cached(
+        spark, sf_dir, _N_CELLS if n_cells is None else n_cells
+    )
+    cents = stage(cents, eager=True)
+    assigned = stage(assigned.select("vec_id", "v", "cid"), eager=True)
     qset = (
         e.filter(F.col("vec_id") % _ANNMMR_QMOD == 0)
         .select(F.col("vec_id").alias("qid"), as_double("embedding").alias("qv"))
@@ -2601,30 +2567,27 @@ def _ann_mmr_candidates(
         )
     )
     w0 = W.partitionBy("qid").orderBy(F.col("rel_u").desc(), "vec_id")
-    return st(
+    return stage(
         scored.withColumn("r0", F.row_number().over(w0))
         .filter(F.col("r0") <= _ANNMMR_C)
-        .select("qid", "vec_id", "rel_u")
+        .select("qid", "vec_id", "rel_u"),
+        eager=True,
     )
 
 
 def _ann_mmr_frame(
-    spark: SparkSession, sf_dir: str, stage: bool = True, n_cells: int | None = None
+    spark: SparkSession, sf_dir: str, n_cells: int | None = None
 ) -> DataFrame:
     """Plan builder for llm_ann_mmr_e2e (n_cells=None, byte-identical
-    plan) and llm_ann_mmr_e2e_scaled (raised-K index); `stage=False`
-    skips the localCheckpoints so tests can inspect lineage."""
-
-    def st(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint(eager=True) if stage else df  # eager: anti-convoy (r15)
-
+    plan) and llm_ann_mmr_e2e_scaled (raised-K index).  Every stage is
+    eager: anti-convoy (r15)."""
     e = wide_table(spark, sf_dir, "embeddings")
-    cand = _ann_mmr_candidates(spark, sf_dir, stage=stage, n_cells=n_cells)
+    cand = _ann_mmr_candidates(spark, sf_dir, n_cells=n_cells)
     candv = cand.join(
         e.select("vec_id", as_double("embedding").alias("v")), "vec_id"
     ).select("qid", "vec_id", "v")
     a, b = candv.alias("a"), candv.alias("b")
-    sims = st(
+    sims = stage(
         a.join(
             b,
             (F.col("a.qid") == F.col("b.qid"))
@@ -2636,10 +2599,11 @@ def _ann_mmr_frame(
             F.round(cosine(F.col("a.v"), F.col("b.v")) * 1000000.0)
             .cast("long")
             .alias("sim_u"),
-        )
+        ),
+        eager=True,
     )
     w1 = W.partitionBy("qid").orderBy(F.col("rel_u").desc(), "vec_id")
-    selected = st(
+    selected = stage(
         cand.withColumn("r", F.row_number().over(w1))
         .filter(F.col("r") == 1)
         .select(
@@ -2648,7 +2612,8 @@ def _ann_mmr_frame(
             "rel_u",
             (7 * F.col("rel_u")).alias("score_u"),
             F.lit(1).cast("long").alias("rk"),
-        )
+        ),
+        eager=True,
     )
     out = selected
     for k in range(2, _MMR_K + 1):
@@ -2675,7 +2640,7 @@ def _ann_mmr_frame(
                 F.lit(k).cast("long").alias("rk"),
             )
         )
-        selected = st(selected.unionByName(pick))
+        selected = stage(selected.unionByName(pick), eager=True)
         out = selected
     if n_cells is not None:
         return out.select(
@@ -2690,7 +2655,7 @@ def llm_ann_mmr_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Production retrieval end-to-end: IVF-routed ANN candidates →
     integer-MMR diversity selection, one composed plan (see block
     comment)."""
-    return _ann_mmr_frame(spark, sf_dir, stage=True)
+    return _ann_mmr_frame(spark, sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -2866,12 +2831,12 @@ def llm_drift_reindex_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumers (rm / post / qs / brute) and the recall joins — lazy,
     # those AQE stages raced to materialize the same parent (the r15
     # anti-convoy rule, see autotune.trigram_classes16)
-    assigned = nearest_centroid(
-        vecs.filter(F.col("vec_id") <= cut), cents
-    ).localCheckpoint(eager=True)
-    nassign = nearest_centroid(
-        vecs.filter(F.col("vec_id") > cut), cents
-    ).localCheckpoint(eager=True)
+    assigned = stage(
+        nearest_centroid(vecs.filter(F.col("vec_id") <= cut), cents), eager=True
+    )
+    nassign = stage(
+        nearest_centroid(vecs.filter(F.col("vec_id") > cut), cents), eager=True
+    )
 
     # per-cell displacement (the llm_ivf_incremental integers)
     disp = q30_cell_displacement(assigned, nassign)
@@ -2913,7 +2878,9 @@ def llm_drift_reindex_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cid",
     ).select("vec_id", "v", "cid")
     rcent = q30_mean_arrays(rm, "cid")
-    newcent = (
+    # eager: consumed by the post-assignment broadcast AND the final
+    # select (anti-convoy rule)
+    newcent = stage(
         cents.join(F.broadcast(plan.filter(F.col("action") != "recluster")), "cid")
         .select(F.col("cid").cast("long").alias("cid"), "action", "cv")
         .unionByName(
@@ -2922,21 +2889,18 @@ def llm_drift_reindex_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit("recluster").alias("action"),
                 "cv",
             )
-        )
-        # eager: consumed by the post-assignment broadcast AND the
-        # final select (anti-convoy rule)
-        .localCheckpoint(eager=True)
+        ),
+        eager=True,
     )
     post = (
         allv.select("vec_id", "v")
         .crossJoin(F.broadcast(newcent.select("cid", "cv")))
         .select("vec_id", "cid", cosine(F.col("v"), F.col("cv")).alias("sim"))
     )
-    post = (
-        first_per(post, "vec_id", F.col("sim").desc(), "cid")
-        .select("vec_id", "cid")
-        # eager: consumed by members + both recall joins (anti-convoy)
-        .localCheckpoint(eager=True)
+    # eager: consumed by members + both recall joins (anti-convoy)
+    post = stage(
+        first_per(post, "vec_id", F.col("sim").desc(), "cid").select("vec_id", "cid"),
+        eager=True,
     )
     members = post.groupBy("cid").agg(F.count("*").cast("long").alias("n_members"))
     qs = allv.filter(
@@ -3051,7 +3015,7 @@ def llm_ann_join_topk_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = wide_table(spark, sf_dir, "embeddings")
     cents, assigned = kmeans_cells_cached(spark, sf_dir, _ANNJ_K_SCALED)
-    assigned = assigned.select("vec_id", "v", "cid").localCheckpoint(eager=True)
+    assigned = stage(assigned.select("vec_id", "v", "cid"), eager=True)
     qset = (
         e.filter(F.col("vec_id") % _ANNJ_QMOD == 0)
         .select(F.col("vec_id").alias("qid"), as_double("embedding").alias("qv"))
@@ -3117,7 +3081,7 @@ _ANNMMR_K_SCALED = _ANNJ_K_SCALED  # ride the SAME raised-K production index
 def llm_ann_mmr_e2e_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """llm_ann_mmr_e2e on the K=32 raised-K index (see block
     comment)."""
-    return _ann_mmr_frame(spark, sf_dir, stage=True, n_cells=_ANNMMR_K_SCALED)
+    return _ann_mmr_frame(spark, sf_dir, n_cells=_ANNMMR_K_SCALED)
 
 
 # ---------------------------------------------------------------------------
@@ -3227,16 +3191,13 @@ WHERE r.rk <= {_GS_TOPK}
 """
 
 
-def _knn_graph_search_plan(
-    spark: SparkSession, sf_dir: str, stage: bool = True
-) -> DataFrame:
-    """Builder for llm_knn_graph_search; `stage=False` skips the
-    localCheckpoint staging so the plan gate can see the whole raw
-    lineage (CLAUDE.md rule 5)."""
+@register("llm_knn_graph_search", _knn_graph_search_oracle())
+def llm_knn_graph_search(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Beam search (width 3, 3 hops) over the k-NN graph from the
+    deterministic entry point, visited-pool top-5 per probe query with
+    the brute-force recall audit (see block comment).  Every stage is
+    eager: anti-convoy (r15)."""
     from maxscale_cdc_spark.operators.llm import llm_knn_graph
-
-    def st(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint(eager=True) if stage else df  # eager: anti-convoy (r15)
 
     e = table(spark, sf_dir, "embeddings")
     vecs = e.select("vec_id", as_double("embedding").alias("v"))
@@ -3245,7 +3206,7 @@ def _knn_graph_search_plan(
         F.col("vec_id").alias("qid"), F.col("v").alias("qv")
     )
     # the graph, staged once: all hops consume it (iterated lineage)
-    edges = st(llm_knn_graph(spark, sf_dir).select("src", "dst"))
+    edges = stage(llm_knn_graph(spark, sf_dir).select("src", "dst"), eager=True)
     entry = vecs.agg(F.min("vec_id").alias("node"))
     beam = (
         qs.crossJoin(F.broadcast(entry))
@@ -3261,10 +3222,11 @@ def _knn_graph_search_plan(
             .unionByName(beam.select("qid", "node"))
             .distinct()
         )
-        scored = st(
+        scored = stage(
             cand.join(vn, "node")
             .join(F.broadcast(qs), "qid")
-            .select("qid", "node", cosine(F.col("v"), F.col("qv")).alias("cs"))
+            .select("qid", "node", cosine(F.col("v"), F.col("qv")).alias("cs")),
+            eager=True,
         )
         pool_parts.append(scored)
         beam = (
@@ -3302,13 +3264,6 @@ def _knn_graph_search_plan(
         F.coalesce("hit", F.lit(False)).alias("in_exact_topk"),
     )
 
-
-@register("llm_knn_graph_search", _knn_graph_search_oracle())
-def llm_knn_graph_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Beam search (width 3, 3 hops) over the k-NN graph from the
-    deterministic entry point, visited-pool top-5 per probe query with
-    the brute-force recall audit (see block comment)."""
-    return _knn_graph_search_plan(spark, sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -3396,12 +3351,15 @@ def llm_ann_binary_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"CASE WHEN element_at(embedding, i) > 0D THEN shiftleft(1L, i - {off}) "
         f"ELSE 0L END)"
     )
-    v0 = e.select(
-        "vec_id",
-        as_double("embedding").alias("v"),
-        pack(1, 32, 1).alias("lo"),
-        pack(33, 64, 33).alias("hi"),
-    ).localCheckpoint(eager=True)  # packed+float lineage consumed 3×
+    v0 = stage(
+        e.select(
+            "vec_id",
+            as_double("embedding").alias("v"),
+            pack(1, 32, 1).alias("lo"),
+            pack(33, 64, 33).alias("hi"),
+        ),
+        eager=True,
+    )  # packed+float lineage consumed 3×
     q = v0.filter(F.col("vec_id") % _BH_QMOD == 0).select(
         F.col("vec_id").alias("qid"),
         F.col("v").alias("qv"),

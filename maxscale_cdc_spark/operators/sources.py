@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from maxscale_cdc_spark.operators.cdc import CDC_SQL, cdc_view
 from maxscale_cdc_spark.registry import register
-from maxscale_cdc_spark.session import memo
+from maxscale_cdc_spark.session import memo, stage
 from maxscale_cdc_spark.sources import avro_ocf, proto_wire
 from maxscale_cdc_spark.sources.cdc_source import classify_lines, parse_dml
 from maxscale_cdc_spark.streaming.runners import run_to_memory
@@ -1532,7 +1532,7 @@ def str_avro_tail_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     and resumes the recovered window state (see block comment)."""
     from maxscale_cdc_spark.streaming.runners import run_bounded
 
-    env = _binary_envelope(cdc_view(spark, sf_dir)).localCheckpoint(eager=False)
+    env = stage(_binary_envelope(cdc_view(spark, sf_dir)))
     row = env.agg(
         F.min("ts_unix").alias("lo"), F.max("ts_unix").alias("hi")
     ).collect()[0]

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from maxscale_cdc_spark.operators.tpch import _REV_SQL, _rev
 from maxscale_cdc_spark.registry import register
+from maxscale_cdc_spark.session import stage
 from maxscale_cdc_spark.tables import table
 
 DEC18 = "decimal(18,4)"
@@ -426,7 +427,7 @@ def tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     # derive the threshold FROM per_part (~|parts| rows) instead of
     # re-running the lineitem⋈supplier⋈nation join a second time — at
     # 100 TB that second fact-table pass is the whole query's cost.
-    per_part = per_part.localCheckpoint(eager=False)
+    per_part = stage(per_part)
     total = per_part.agg((F.sum("sv").cast("double") * F.lit(0.001)).alias("thr"))
     return (
         per_part.join(F.broadcast(total))

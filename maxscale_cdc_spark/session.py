@@ -8,10 +8,11 @@ timestamp semantics match the DuckDB oracle.
 
 from __future__ import annotations
 
+import contextlib
 import os
-from typing import Callable, TypeVar
+from typing import Callable, Iterator, TypeVar
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # The `file:` scheme's FileSystem and AbstractFileSystem, fork-free
 # subclasses of Hadoop's local ones (source beside the jar, built by
@@ -141,7 +142,10 @@ T = TypeVar("T")
 def memo(spark: SparkSession, key: tuple, build: Callable[[], T], *, cold: bool) -> T:
     """`build()` memoized under (applicationId, *key).  The value is
     stored only after `build()` returns (a raise stores nothing), and no
-    lock is held across it: a build may call `memo` again."""
+    lock is held across it: a build may call `memo` again.  Under
+    `unstaged()` a `cold=True` entry holding a DataFrame is neither
+    served nor stored (it would be staged lineage); scalar entries
+    still are."""
     global _memo_app
     app = spark.sparkContext.applicationId
     if app != _memo_app:
@@ -151,8 +155,10 @@ def memo(spark: SparkSession, key: tuple, build: Callable[[], T], *, cold: bool)
     entries = _COLD if cold else _KEPT
     full = (app, *key)
     got = entries.get(full, _MISS)
-    if got is _MISS:
-        got = entries[full] = build()
+    if got is _MISS or (cold and _unstaged and _holds_frame(got)):
+        got = build()
+        if not (cold and _unstaged and _holds_frame(got)):
+            entries[full] = got
     return got
 
 
@@ -161,7 +167,38 @@ def reset_family_caches() -> None:
     _COLD.clear()
 
 
-import contextlib
+# The one staging call.  `localCheckpoint` cuts a lineage that is
+# consumed more than once (or iterated) so it computes once; it also
+# hides everything upstream behind a `Scan ExistingRDD`, which is why
+# the plan gates build their frames under `unstaged()`.  The policy
+# (what to stage, eager or lazy) stays at each call site — CLAUDE.md
+# rule 5 and SCALING.md "Staging (localCheckpoint) is NOT free".
+_unstaged = False
+
+
+def stage(df: DataFrame, *, eager: bool = False) -> DataFrame:
+    """`df` pinned by a local checkpoint (built now if `eager`), or `df`
+    itself under `unstaged()`."""
+    return df if _unstaged else df.localCheckpoint(eager=eager)
+
+
+@contextlib.contextmanager
+def unstaged() -> Iterator[None]:
+    """Build frames with their full lineage visible: `stage` returns its
+    input and `memo` skips cold DataFrame entries (a plan gate's
+    switch; scalar entries such as the chosen banding still serve)."""
+    global _unstaged
+    prior, _unstaged = _unstaged, True
+    try:
+        yield
+    finally:
+        _unstaged = prior
+
+
+def _holds_frame(value: object) -> bool:
+    return isinstance(value, DataFrame) or (
+        isinstance(value, tuple) and any(isinstance(v, DataFrame) for v in value)
+    )
 
 
 @contextlib.contextmanager

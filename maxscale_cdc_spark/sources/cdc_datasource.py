@@ -73,6 +73,7 @@ pickled class graph must not reference module globals.
 from __future__ import annotations
 
 from maxscale_cdc_spark.sources.envelope import ENVELOPE_FIELDS, WIRE_TYPES
+from maxscale_cdc_spark.sources.schema_registry import _UNSIGNED_WIDEN
 
 SOURCE_NAME = "maxscale_cdc"
 
@@ -88,7 +89,8 @@ def build_cdc_datasource():
     """Create the DataSource class, fully self-contained (no references
     to this module's globals — see IMPLEMENTATION NOTE above).  The
     envelope spec and the wire-type table are bound here as plain
-    tuples, strings and dicts."""
+    tuples, strings and dicts, and so is the schema registry's unsigned
+    widening (`_UNSIGNED_WIDEN`, as Spark DDL strings)."""
     from pyspark.sql.datasource import (
         DataSource,
         DataSourceStreamReader,
@@ -100,6 +102,9 @@ def build_cdc_datasource():
     envelope_ddl = _ENVELOPE_DDL
     source_schema = SOURCE_SCHEMA
     wire_types = dict(WIRE_TYPES)  # wire type -> (spark ddl, pyarrow type)
+    # unsigned wire type -> widened spark ddl ("int" -> "bigint", "bigint"
+    # -> "decimal(20,0)"): the registry's table is the one source
+    unsigned_widen = {k: t.simpleString() for k, t in _UNSIGNED_WIDEN.items()}
 
     def _spool_files(path):
         """The sorted burst listing — the offset space."""
@@ -447,7 +452,14 @@ def build_cdc_datasource():
         field-type decode (event.go:58-137) reduced to the wire types
         the avrorouter emits.  Latest version wins unless pinned.
         Self-contained: the planner worker cannot import the package,
-        so this mirrors (not imports) sources/schema_registry.py."""
+        so this mirrors (not imports) sources/schema_registry.py.  An
+        `unsigned` union field widens as the registry's `decode_ddl`
+        types it (`int` → bigint, `bigint` → decimal(20,0)), so the
+        full value domain decodes exactly.  The other type differences
+        with the registry stay: `decimal` reads as double (the wire
+        JSON renders it as a number) and `date`/`datetime`/`bytes` as
+        strings — pyarrow 16.1's JSON reader rejects a date string for
+        a `date32` column."""
         import json
         import os
 
@@ -505,6 +517,9 @@ def build_cdc_datasource():
                 wire = f.get("real_type") or (
                     non_null[0] if non_null and isinstance(non_null[0], str) else "string"
                 )
+                if f.get("unsigned") and str(wire).lower() in unsigned_widen:
+                    cols.append((name, unsigned_widen[str(wire).lower()]))
+                    continue
             else:                           # enum object (or unknown)
                 wire = "string"
             spark_ddl = wire_types.get(str(wire).lower(), ("string",))[0]

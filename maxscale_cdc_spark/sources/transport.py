@@ -41,9 +41,8 @@ from maxscale_cdc_spark.sources.cdc_source import (
     format_register_command,
     format_request_data_command,
 )
+from maxscale_cdc_spark.sources.envelope import MAX_EVENT_BYTES
 from maxscale_cdc_spark.tmputil import land_atomic
-
-MAX_EVENT_BYTES = 1 << 20  # maxScanTokenSize (client.go:17)
 
 
 def next_burst(spool_dir: str, ext: str) -> int:

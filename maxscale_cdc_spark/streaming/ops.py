@@ -39,6 +39,7 @@ from maxscale_cdc_spark.functions.vectors import (
 from maxscale_cdc_spark.functions.window import first_per
 from maxscale_cdc_spark.operators.cdc import _DML_CASE_SQL, _live_images
 from maxscale_cdc_spark.registry import oracle_splice, register
+from maxscale_cdc_spark.session import stage
 from maxscale_cdc_spark.sources import avro_ocf
 from maxscale_cdc_spark.streaming.runners import (
     read_stream,
@@ -469,6 +470,44 @@ def _read_back_schema(df: DataFrame) -> T.StructType:
     return _nullable(df.drop("b").schema).add("b", T.IntegerType())
 
 
+class _ReadSchema:
+    """A sink's parquet read schema with its drift guard (VERDICT r14
+    #4).  Schema inference is a Spark job (~0.1-0.5 s) per read, and an
+    explicit read schema silently null-fills / drops columns if the
+    files ever drifted, where inference + unionByName used to fail
+    loudly.  Every schema seen passes `expect`: the first one sets the
+    read schema, every later one must equal it.  `read` infers (and
+    checks) until a second observation matched, then reads with the
+    schema — plans are byte-identical either way.  A dir that only
+    ever holds one write (`appended=False`, a sink generation) counts
+    once; a dir that grows by appends (the SCD2 closed log) counts
+    again on its next read."""
+
+    def __init__(self, spark: SparkSession, what: str, appended: bool = False):
+        self.spark, self.what, self.appended = spark, what, appended
+        self.schema: T.StructType | None = None
+        self.first: str | None = None
+        self.checked = False
+
+    def expect(self, schema: T.StructType, path: str) -> None:
+        if self.schema is None:
+            self.schema, self.first = schema, path
+        elif schema != self.schema:
+            raise RuntimeError(
+                f"{self.what} schema drifted in {path}: "
+                f"{schema.simpleString()} != {self.schema.simpleString()}"
+            )
+        elif self.appended or path != self.first:
+            self.checked = True
+
+    def read(self, path: str) -> DataFrame:
+        if self.checked or (path == self.first and not self.appended):
+            return self.spark.read.schema(self.schema).parquet(path)
+        df = self.spark.read.parquet(path)
+        self.expect(df.schema, path)
+        return df
+
+
 class StaleWriterError(RuntimeError):
     """A fenced-out writer attempted to publish: a newer writer epoch
     exists (or a concurrent publish already claimed this manifest
@@ -580,15 +619,12 @@ class ManifestedUpsertSink:
         if fenced:
             self.epoch = self._acquire_epoch()
         # Generation-read schema: every generation is written by the same
-        # pipeline (unionByName merges would fail otherwise), and schema
-        # inference is a Spark job (~0.1-0.5 s) per read.  `_expect`
-        # keeps it: the first schema seen (the frame `stage` writes, via
-        # `_read_back_schema` — equal to the inferred one, so plans are
-        # byte-identical — or one dir inferred by `_read_gen`) is the
-        # read schema of every generation.
-        self._gen_schema = None
-        self._gen_schema_dir = None
-        self._gen_schema_checked = False
+        # pipeline (unionByName merges would fail otherwise).  The first
+        # schema seen (the frame `stage` writes, via `_read_back_schema`
+        # — equal to the inferred one — or one dir inferred on read) is
+        # the read schema of every generation.  A live sink checks its
+        # own writes; a sink started on existing generations infers two.
+        self._gen = _ReadSchema(spark, "generation")
         # (generation dir, bucket) → rows, read once from the footers
         self._rows: dict[tuple[str, int], int] = {}
         names = self._manifest_names()
@@ -751,7 +787,7 @@ class ManifestedUpsertSink:
         gen_dir = os.path.join(
             self.root, f"gen_{epoch_id}_{uuid.uuid4().hex[:8]}"
         )
-        self._expect(_read_back_schema(new), gen_dir)
+        self._gen.expect(_read_back_schema(new), gen_dir)
         fold = sorted(self.deltas)
         delta_rows = sum(
             self._bucket_rows(g, b) for b in fold for g in self.deltas[b]
@@ -820,7 +856,7 @@ class ManifestedUpsertSink:
             for g, gen in enumerate([base, *deltas.get(b, [])]):
                 by_gen[(gen, g)].append(b)
         parts = [
-            (g, self._read_gen(gen).filter(F.col("b").isin(bs)))
+            (g, self._gen.read(gen).filter(F.col("b").isin(bs)))
             for (gen, g), bs in by_gen.items()
         ]
         if not any(deltas.values()):
@@ -832,36 +868,6 @@ class ManifestedUpsertSink:
             lambda a, x: a.unionByName(x), [p for g, p in tagged if g > 0]
         )
         return _mor_alive(data, dels, "_g").select(*cols)
-
-    def _expect(self, schema: T.StructType, gen_dir: str) -> None:
-        """The drift guard (VERDICT r14 #4): an explicit read schema
-        silently null-fills / drops columns if a generation's schema
-        ever drifted, where inference + unionByName used to fail
-        loudly.  Every schema seen — of each frame `stage` writes, and
-        of a dir `_read_gen` infers — passes here: the first one sets
-        the sink's read schema, every later one must equal it.  Once a
-        second dir matched, reads stop inferring."""
-        if self._gen_schema is None:
-            self._gen_schema, self._gen_schema_dir = schema, gen_dir
-        elif schema != self._gen_schema:
-            raise RuntimeError(
-                f"generation schema drifted in {gen_dir}: "
-                f"{schema.simpleString()} != {self._gen_schema.simpleString()}"
-            )
-        elif gen_dir != self._gen_schema_dir:
-            self._gen_schema_checked = True
-
-    def _read_gen(self, gen_dir: str) -> DataFrame:
-        """Read one generation dir (base or delta) with the sink's
-        schema (see __init__ — byte-identical plans, no inference job).
-        Until a second dir matched the schema, any other dir is read by
-        inference and checked (`_expect`): a live sink checks its own
-        writes, a sink started on existing generations infers two."""
-        if self._gen_schema_checked or gen_dir == self._gen_schema_dir:
-            return self.spark.read.schema(self._gen_schema).parquet(gen_dir)
-        df = self.spark.read.parquet(gen_dir)
-        self._expect(df.schema, gen_dir)
-        return df
 
     def compact(self) -> list[str]:
         """Fold every bucket: rewrite the reconciled state into ONE new
@@ -1259,32 +1265,8 @@ class Scd2HistorySink:
         self.closed_dir = os.path.join(root, "closed")
         os.makedirs(self.closed_dir, exist_ok=True)
         self.open_sink = ManifestedUpsertSink(spark, os.path.join(root, "open"))
-        # closed-log read schema, captured on first read (same rationale
-        # and byte-identical-plan property as ManifestedUpsertSink.
-        # _read_gen — the log's rows are deterministic 5-col intervals)
-        self._closed_schema = None
-        self._closed_schema_checked = False
-
-    def _read_closed(self) -> DataFrame:
-        if self._closed_schema is None:
-            df = self.spark.read.parquet(self.closed_dir)
-            self._closed_schema = df.schema
-            return df
-        if not self._closed_schema_checked:
-            # drift guard (VERDICT r14 #4): one post-capture inference
-            # keeps the loud failure an explicit schema would mask
-            inferred = self.spark.read.parquet(self.closed_dir)
-            if inferred.schema != self._closed_schema:
-                raise RuntimeError(
-                    f"closed-log schema drifted: "
-                    f"{inferred.schema.simpleString()} != "
-                    f"{self._closed_schema.simpleString()}"
-                )
-            self._closed_schema_checked = True
-            return inferred
-        return self.spark.read.schema(self._closed_schema).parquet(
-            self.closed_dir
-        )
+        # the log's rows are deterministic 5-col intervals, appended
+        self._closed = _ReadSchema(spark, "closed-log", appended=True)
 
     def _has_closed(self) -> bool:
         import os
@@ -1304,7 +1286,7 @@ class Scd2HistorySink:
             "value",
             F.unix_timestamp("ts").alias("ts_unix"),
         )
-        imgs = imgs.localCheckpoint(eager=True)  # consumed 3x below
+        imgs = stage(imgs, eager=True)  # consumed 3x below
         if imgs.isEmpty():
             return
         w = W.partitionBy("pk").orderBy("sequence")
@@ -1367,7 +1349,7 @@ class Scd2HistorySink:
         # eager pin BEFORE writing: the write targets the directory the
         # lineage reads from ("cannot write to a path being read")
         compacted = (
-            self._read_closed()
+            self._closed.read(self.closed_dir)
             .select("pk", "sequence", "value", "valid_from", "valid_to")
             .distinct()
             .localCheckpoint(eager=True)
@@ -1387,7 +1369,7 @@ class Scd2HistorySink:
         parts = []
         if self._has_closed():
             parts.append(
-                self._read_closed().select(
+                self._closed.read(self.closed_dir).select(
                     "pk", "sequence", "value", "valid_from", "valid_to"
                 )
             )
@@ -2568,12 +2550,12 @@ def str_ivf_swap_splice(spark: SparkSession, sf_dir: str) -> DataFrame:
     if _cut != cut:  # same expr both reads; survives python -O
         raise RuntimeError(f"cut drift: {_cut} != {cut}")
     vecs = e.select("vec_id", as_double("embedding").alias("v"))
-    assigned = nearest_centroid(
-        vecs.filter(F.col("vec_id") <= cut), cents
-    ).localCheckpoint(eager=False)
-    npre = nearest_centroid(
-        vecs.filter((F.col("vec_id") > cut) & (F.col("vec_id") <= swap)), cents
-    ).localCheckpoint(eager=False)
+    assigned = stage(nearest_centroid(vecs.filter(F.col("vec_id") <= cut), cents))
+    npre = stage(
+        nearest_centroid(
+            vecs.filter((F.col("vec_id") > cut) & (F.col("vec_id") <= swap)), cents
+        )
+    )
     # surgery over the swap-time state (seed + pre-swap arrivals)
     cells = _ivf_cells(assigned, npre)
     tot = cells.agg(
@@ -2594,7 +2576,7 @@ def str_ivf_swap_splice(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cid",
     ).select("vec_id", "v", "cid")
     scents = _split_cells_lloyd(sm)
-    newcent = (
+    newcent = stage(
         cents.join(
             F.broadcast(plan.filter(F.col("action") == "keep").select("cid")),
             "cid",
@@ -2606,7 +2588,6 @@ def str_ivf_swap_splice(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "cv",
             )
         )
-        .localCheckpoint(eager=False)
     )
     # the two-generation broadcast centroid table: the swap is DATA
     allcent = (
@@ -2855,7 +2836,7 @@ def snk_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     comment)."""
     from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
 
-    cdc = _cdc_log(table(spark, sf_dir, "events")).localCheckpoint(eager=False)
+    cdc = stage(_cdc_log(table(spark, sf_dir, "events")))
     sink = ManifestedUpsertSink(spark, _mkdtemp(prefix="snk_tt_"))
     for k, (lo, hi) in enumerate(_seq_cuts(cdc, 3)):
         sink.merge(_state_asof(cdc, lo, hi), epoch_id=k)
@@ -2944,17 +2925,16 @@ def snk_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     comment)."""
     from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
 
-    cdc = _cdc_log(table(spark, sf_dir, "events")).localCheckpoint(eager=False)
+    cdc = stage(_cdc_log(table(spark, sf_dir, "events")))
     sink = ManifestedUpsertSink(spark, _mkdtemp(prefix="snk_cdf_"))
     for k, (lo, hi) in enumerate(_seq_cuts(cdc, 3)):
         sink.merge(_state_asof(cdc, lo, hi), epoch_id=k)
 
     def alive_asof(seq: int) -> DataFrame:
-        return (
+        return stage(
             read_state_asof(spark, sink.root, seq)
             .filter(F.col("last_dml") != "delete")
             .select("pk", "last_seq", "last_value")
-            .localCheckpoint(eager=False)
         )
 
     s1 = alive_asof(1)
@@ -2969,7 +2949,7 @@ def snk_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("last_seq").alias("after_seq"),
         F.col("last_value").alias("after_value"),
     )
-    feed = (
+    feed = stage(
         a.join(b, a["pk1"] == b["pk2"], "full")
         .filter(
             F.col("pk1").isNull()
@@ -2987,7 +2967,6 @@ def snk_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
             "before_value",
             "after_value",
         )
-        .localCheckpoint(eager=False)
     )
     # sufficiency audit: v1 ⊕ feed must reproduce v2 exactly
     touched_pks = feed.select("pk")
@@ -3273,7 +3252,7 @@ def snk_manifest_gc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
 
-    cdc = _cdc_log(table(spark, sf_dir, "events")).localCheckpoint(eager=False)
+    cdc = stage(_cdc_log(table(spark, sf_dir, "events")))
     sink = ManifestedUpsertSink(
         spark, _mkdtemp(prefix="snk_gc_"), retain_manifests=1
     )
@@ -3494,12 +3473,12 @@ def str_drift_swap_splice(spark: SparkSession, sf_dir: str) -> DataFrame:
     if _cut != cut:  # same expr both reads; survives python -O
         raise RuntimeError(f"cut drift: {_cut} != {cut}")
     vecs = e.select("vec_id", as_double("embedding").alias("v"))
-    assigned = nearest_centroid(
-        vecs.filter(F.col("vec_id") <= cut), cents
-    ).localCheckpoint(eager=False)
-    npre = nearest_centroid(
-        vecs.filter((F.col("vec_id") > cut) & (F.col("vec_id") <= swap)), cents
-    ).localCheckpoint(eager=False)
+    assigned = stage(nearest_centroid(vecs.filter(F.col("vec_id") <= cut), cents))
+    npre = stage(
+        nearest_centroid(
+            vecs.filter((F.col("vec_id") > cut) & (F.col("vec_id") <= swap)), cents
+        )
+    )
 
     disp = q30_cell_displacement(assigned, npre).withColumnsRenamed(
         {"disp_l1_num": "num", "disp_den": "den"}
@@ -3545,11 +3524,10 @@ def str_drift_swap_splice(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cid",
     ).select("vec_id", "v", "cid")
     rcent = q30_mean_arrays(rm, "cid")
-    newcent = (
+    newcent = stage(
         cents.join(F.broadcast(plan.filter(F.col("action") != "recluster")), "cid")
         .select(F.col("cid").cast("long").alias("cell"), "cv")
         .unionByName(rcent.select(F.col("cid").cast("long").alias("cell"), "cv"))
-        .localCheckpoint(eager=False)
     )
     allcent = (
         cents.select(
@@ -3833,7 +3811,7 @@ def snk_fenced_failover(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal the whole-log latest state (see block comment)."""
     from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
 
-    cdc = _cdc_log(table(spark, sf_dir, "events")).localCheckpoint(eager=False)
+    cdc = stage(_cdc_log(table(spark, sf_dir, "events")))
     cuts = _seq_cuts(cdc, 3)
     root = _mkdtemp(prefix="snk_fence_")
 
@@ -4095,7 +4073,7 @@ def snk_vacuum_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
 
-    cdc = _cdc_log(table(spark, sf_dir, "events")).localCheckpoint(eager=False)
+    cdc = stage(_cdc_log(table(spark, sf_dir, "events")))
     sink = ManifestedUpsertSink(spark, _mkdtemp(prefix="snk_vac_"))
     for k, (lo, hi) in enumerate(_seq_cuts(cdc, 3)):
         sink.merge(_state_asof(cdc, lo, hi), epoch_id=k)
@@ -4305,7 +4283,7 @@ def snk_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
 
-    cdc = _cdc_log(table(spark, sf_dir, "events")).localCheckpoint(eager=False)
+    cdc = stage(_cdc_log(table(spark, sf_dir, "events")))
     cuts = _seq_cuts(cdc, 4)
     m2, m3 = cuts[1][1], cuts[2][1]  # the 1/2 and 3/4 cut points
     sink = ManifestedUpsertSink(spark, _mkdtemp(prefix="snk_wap_"))
@@ -5072,9 +5050,11 @@ def str_mor_stream_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
 
     ev = table(spark, sf_dir, "events")
-    quarters = ev.withColumn(
-        "__b", F.ntile(4).over(W.orderBy("event_id"))
-    ).localCheckpoint(eager=False)
+    quarters = stage(
+        ev.withColumn(
+            "__b", F.ntile(4).over(W.orderBy("event_id"))
+        )
+    )
     src = _mkdtemp(prefix="mor_restart_src_")
     ckpt = _mkdtemp(prefix="mor_restart_ckpt_")
     root = _mkdtemp(prefix="mor_restart_")
@@ -5183,7 +5163,7 @@ def snk_branch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     comment).  Oracle: whole-log latest state."""
     from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
 
-    cdc = _cdc_log(table(spark, sf_dir, "events")).localCheckpoint(eager=False)
+    cdc = stage(_cdc_log(table(spark, sf_dir, "events")))
     cuts = _seq_cuts(cdc, 4)
 
     # main: epochs 1,2
@@ -5675,7 +5655,7 @@ def str_two_sink_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
         if batch_df.isEmpty():
             return
         seen.append(int(epoch_id))
-        staged_b = batch_df.localCheckpoint(eager=True)  # one compute, two writes
+        staged_b = stage(batch_df, eager=True)  # one compute, two writes
         # sink A: the raw epoch log (epoch-keyed OVERWRITE = idempotent)
         staged_b.write.mode("overwrite").parquet(
             os.path.join(log_dir, f"epoch={epoch_id}")

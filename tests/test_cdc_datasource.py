@@ -408,6 +408,47 @@ def test_schema_from_spool_discovery(spark, tmp_path):
     assert "tag" not in out1.columns and "val" in out1.columns
 
 
+def test_schema_from_spool_widens_unsigned_ints(spark, tmp_path):
+    """schemaFromSpool types an `unsigned` column as the schema registry
+    does: `int unsigned` as bigint and `bigint unsigned` as
+    decimal(20,0), so both columns' maximum values read exactly."""
+    import json
+    from decimal import Decimal
+
+    from maxscale_cdc_spark.sources.cdc_source import render_ddl_line
+    from maxscale_cdc_spark.sources.schema_registry import decode_ddl
+    from maxscale_cdc_spark.streaming.runners import run_to_memory
+
+    ddl = json.loads(render_ddl_line(
+        "test", "tests", 1, "0-3000-1",
+        [("id", "int"), ("u32", "int"), ("u64", "bigint")],
+    ))
+    for f in ddl["fields"]:
+        if f["name"] in ("u32", "u64"):
+            f["unsigned"] = True
+    d = str(tmp_path / "spool")
+    write_stream_files([
+        json.dumps(ddl),
+        render_dml_line("test", "tests", 0, 3000, 1, 1, 1693300000, "insert",
+                        {"id": 1, "u32": 4294967295, "u64": 18446744073709551615}),
+        render_dml_line("test", "tests", 0, 3000, 2, 1, 1693300001, "insert",
+                        {"id": 2, "u32": 3000000000, "u64": 0}),
+    ], d)
+    out = run_to_memory(
+        _read(spark, d, table="tests", database="test", schemaFromSpool="true"),
+        "append",
+    )
+    registry = {f.name: f.dataType for f in decode_ddl(ddl).payload_struct()}
+    types = {f.name: f.dataType for f in out.schema}
+    assert types["u32"] == registry["u32"] and types["u32"].simpleString() == "bigint"
+    assert types["u64"] == registry["u64"]
+    assert types["u64"].simpleString() == "decimal(20,0)"
+    rows = {r["sequence"]: r for r in out.collect()}
+    assert rows[1]["u32"] == 4294967295
+    assert rows[1]["u64"] == Decimal("18446744073709551615")
+    assert rows[2]["u32"] == 3000000000 and rows[2]["u64"] == Decimal(0)
+
+
 def test_register_failure_propagates():
     """A failed registration raises out of `register` instead of
     surfacing later as an unknown `maxscale_cdc` format."""

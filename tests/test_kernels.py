@@ -279,7 +279,7 @@ _INLINE_BAND_KEYS = {
     ("operators/llm.py", "llm_lsh_recall_audit"): (
         "one select per band unioned: the explode of band_keys changes its plan"
     ),
-    ("operators/quality.py", "_minhash_accuracy_frame"): (
+    ("operators/quality.py", "llm_minhash_accuracy"): (
         "one select per band unioned: the explode of band_keys changes its plan"
     ),
 }
@@ -307,7 +307,7 @@ _INLINE_BAND_PAIRS = {
     ),
 }
 _INLINE_SET_OVERLAP = {
-    ("operators/quality.py", "_minhash_accuracy_frame"): (
+    ("operators/quality.py", "llm_minhash_accuracy"): (
         "joins the signature columns back beside the sets and exports "
         "exact_jaccard over int sizes: set_overlap's BIGINT columns change the plan"
     ),

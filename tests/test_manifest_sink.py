@@ -275,7 +275,7 @@ def test_live_sink_reads_without_schema_inference(spark):
     assert _jobs(spark, s.state) == 0
     s2 = ManifestedUpsertSink(spark, root, n_buckets=4)
     assert _jobs(spark, s2.state) > 0
-    assert s2._gen_schema == s._gen_schema
+    assert s2._gen.schema == s._gen.schema
     s2.merge(_batch(spark, [(99, 99, "insert", 3.0)]), 2)  # checked, no drift
     assert _state_dict(s2)[99] == (99, "insert", 3.0)
     s3 = ManifestedUpsertSink(spark, root, n_buckets=4)
@@ -456,14 +456,14 @@ def test_read_gen_schema_drift_raises(spark):
     root = tempfile.mkdtemp(prefix="msink_drift_")
     s = ManifestedUpsertSink(spark, root, n_buckets=4)
     s.merge(_batch(spark, [(1, 10, "insert", 1.0)]), 0)
-    s.state().collect()  # captures _gen_schema from the r0 generation
+    s.state().collect()  # captures the read schema from the r0 generation
     # forge a drifted generation dir and point one bucket at it
     bad_dir = os.path.join(root, "gen_forged_drift")
     spark.createDataFrame(
         [(1, 99, 0)], "pk bigint, last_seq bigint, b int"
     ).write.mode("overwrite").partitionBy("b").parquet(bad_dir)
     with pytest.raises(RuntimeError, match="schema drifted"):
-        s._read_gen(bad_dir).collect()
+        s._gen.read(bad_dir).collect()
     shutil.rmtree(root)
 
 
@@ -480,7 +480,7 @@ def test_read_gen_same_schema_gen_passes_drift_check(spark):
         2: (11, "insert", 2.0),
     }
     # state() read a post-capture generation dir → the check ran once
-    assert s._gen_schema_checked
+    assert s._gen.checked
     assert _state_dict(s) == {
         1: (12, "update_after", 1.5),
         2: (11, "insert", 2.0),

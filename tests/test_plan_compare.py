@@ -87,3 +87,26 @@ def test_changed_lambda_body_compares_different(tmp_path):
     diff = cp.compare_dirs(str(tmp_path))[qid]
     assert any(line.startswith("+") and " + lambda y_N" in line for line in diff)
     assert cp.compare_main(str(tmp_path)) == 1
+
+
+def test_checkpoint_call_sites_compare_identical(tmp_path):
+    """Spark records a `localCheckpoint` RDD's call site by where in the
+    session the id ran (`<unknown>:0` or `NativeMethodAccessorImpl.java:0`):
+    the same plan must compare identical either way."""
+    cp = _capture_plans()
+    src = PLAN_DIRS[0]
+    site = "at localCheckpoint at <unknown>:0"
+    qid = next(
+        name[: -len("_before.txt")]
+        for name in sorted(os.listdir(src))
+        if name.endswith("_before.txt")
+        and site in open(os.path.join(src, name)).read()
+    )
+    shutil.copy(os.path.join(src, f"{qid}_before.txt"), tmp_path)
+    with open(os.path.join(src, f"{qid}_before.txt")) as fh:
+        after = fh.read().replace(
+            site, "at localCheckpoint at NativeMethodAccessorImpl.java:0"
+        )
+    (tmp_path / f"{qid}_after.txt").write_text(after)
+    assert cp.compare_dirs(str(tmp_path))[qid] == []
+    assert cp.compare_main(str(tmp_path)) == 0

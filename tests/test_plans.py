@@ -15,6 +15,7 @@ from maxscale_cdc_spark.plans.inspect import (
     read_schema,
     simple_plan,
 )
+from maxscale_cdc_spark.session import unstaged
 
 
 def _q(name, spark, sf_dir):
@@ -343,9 +344,10 @@ def test_minhash_accuracy_no_python_banded(spark, sf_dir):
     signature table via localCheckpoint, which hides everything
     upstream behind a LogicalRDD scan and would make these assertions
     vacuous for the 8-permutation MD5 stage."""
-    from maxscale_cdc_spark.operators.quality import _minhash_accuracy_frame
+    from maxscale_cdc_spark.operators.quality import llm_minhash_accuracy
 
-    df = _minhash_accuracy_frame(spark, sf_dir, stage=False)
+    with unstaged():
+        df = llm_minhash_accuracy(spark, sf_dir)
     plan = formatted_plan(df)
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert not has_cartesian(df), plan
@@ -369,9 +371,10 @@ def test_semdedup_cell_keyed_join_no_python(spark, sf_dir):
     broadcast) — only a true CartesianProduct is a failure.  Assert on
     the UNSTAGED lineage so the Lloyd rounds are visible (the
     registered query's localCheckpoint hides them)."""
-    from maxscale_cdc_spark.operators.retrieval import _semdedup_frame
+    from maxscale_cdc_spark.operators.retrieval import llm_semdedup
 
-    df = _semdedup_frame(spark, sf_dir, stage=False)
+    with unstaged():
+        df = llm_semdedup(spark, sf_dir)
     plan = formatted_plan(df)
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "CartesianProduct" not in plan, plan
@@ -443,9 +446,10 @@ def test_sim_pq_broadcast_codebooks_no_python(spark, sf_dir):
     subspace); the encode aggs are keyed min-structs, no window, no
     cartesian, all JVM-side.  Unstaged lineage (the registered query
     pins the vector frame behind a localCheckpoint)."""
-    from maxscale_cdc_spark.operators.retrieval import _sim_pq_frame
+    from maxscale_cdc_spark.operators.retrieval import llm_sim_pq
 
-    df = _sim_pq_frame(spark, sf_dir, stage=False)
+    with unstaged():
+        df = llm_sim_pq(spark, sf_dir)
     plan = formatted_plan(df)
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "CartesianProduct" not in plan, plan
@@ -652,14 +656,15 @@ def test_event_size_profile_windows_share_class_key(spark, sf_dir):
 
 
 def test_bpe_learn_vocab_broadcast_merges_no_python(spark, sf_dir):
-    """The learn loop (stage=False + k=2 exposes the un-checkpointed
+    """The learn loop (unstaged + k=2 exposes the un-checkpointed
     plan; the full K doubles per iteration without staging): every
     merge application is a 1-row BROADCAST into a fold — no
     CartesianProduct, no Python anywhere, and the argmax is
     TakeOrdered (no single-partition row_number window)."""
     from maxscale_cdc_spark.operators.bpe import _learn_merges
 
-    merges, seg = _learn_merges(spark, sf_dir, stage=False, k=2)
+    with unstaged():
+        merges, seg = _learn_merges(spark, sf_dir, k=2)
     plan = formatted_plan(seg)
     assert "EvalPython" not in plan, plan
     assert "CartesianProduct" not in plan, plan
@@ -763,7 +768,7 @@ def test_importance_resample_windows_share_partitioning(spark, sf_dir):
 
 
 def test_shingle_classes_lineage_jvm_only(spark, sf_dir):
-    """The class-collapsed LSH lineage (stage=False so the full plan is
+    """The class-collapsed LSH lineage (unstaged so the full plan is
     visible below the checkpoints): no Python, no cartesian, exactly
     one keyed aggregation family building the classes."""
     from maxscale_cdc_spark.operators.llm import (
@@ -772,7 +777,8 @@ def test_shingle_classes_lineage_jvm_only(spark, sf_dir):
         shingle_classes,
     )
 
-    doc_map, classes = shingle_classes(spark, sf_dir, stage=False)
+    with unstaged():
+        doc_map, classes = shingle_classes(spark, sf_dir)
     cp = class_band_pairs(classes, 2, 4)
     ver = class_pair_jaccard(cp, classes)
     plan = formatted_plan(ver)
@@ -788,9 +794,10 @@ def test_lsh_tuning_sampled_filter_reaches_scan(spark, sf_dir):
     from maxscale_cdc_spark.operators.llm import shingle_classes
     from maxscale_cdc_spark.functions.sample import hash_sample
 
-    doc_map, _ = shingle_classes(
-        spark, sf_dir, stage=False, doc_filter=hash_sample("doc_id", 40)
-    )
+    with unstaged():
+        doc_map, _ = shingle_classes(
+            spark, sf_dir, doc_filter=hash_sample("doc_id", 40)
+        )
     plan = formatted_plan(doc_map)
     assert "conv(substring(md5" in plan.replace(" ", "").lower() or "conv" in plan, plan
     assert "EvalPython" not in plan, plan
@@ -896,7 +903,8 @@ def test_ann_mmr_candidates_no_full_embedding_scan(spark, sf_dir):
 
     from maxscale_cdc_spark.operators.retrieval import _ann_mmr_candidates
 
-    df = _ann_mmr_candidates(spark, sf_dir, stage=False)
+    with unstaged():
+        df = _ann_mmr_candidates(spark, sf_dir)
     plan = formatted_plan(df)
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
@@ -929,7 +937,8 @@ def test_ann_mmr_scaled_candidates_no_full_embedding_scan(spark, sf_dir):
         _ann_mmr_candidates,
     )
 
-    df = _ann_mmr_candidates(spark, sf_dir, stage=False, n_cells=_ANNMMR_K_SCALED)
+    with unstaged():
+        df = _ann_mmr_candidates(spark, sf_dir, n_cells=_ANNMMR_K_SCALED)
     plan = formatted_plan(df)
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
@@ -1083,11 +1092,12 @@ def test_hll_rollup_jvm_side_and_single_scan_per_agg(spark, sf_dir):
     """Sketch aggregation runs as JVM (object) hash aggregation —
     never Python — and the tiny per-flag tables broadcast.  The
     production plan checkpoints the per-cell sketches (hiding the
-    sketch agg behind Scan ExistingRDD) — gate the stage=False plan
+    sketch agg behind Scan ExistingRDD) — gate the unstaged plan
     so the hll_sketch_agg node is actually visible (CLAUDE.md rule 5)."""
     from maxscale_cdc_spark.operators.relational2 import rel_hll_rollup_union
 
-    df = rel_hll_rollup_union(spark, sf_dir, stage=False)
+    with unstaged():
+        df = rel_hll_rollup_union(spark, sf_dir)
     plan = formatted_plan(df)
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
@@ -1262,11 +1272,12 @@ def test_pack_interleaved_bounded_explode(spark, sf_dir):
     row per image) and the packing window is per-source — no global
     unpartitioned window, no Python.  The production plan checkpoints
     the run offsets, which hides the window node (CLAUDE.md rule 5) —
-    gate the stage=False plan and require the window to be FOUND, so
+    gate the unstaged plan and require the window to be FOUND, so
     the partitioning assertion can never go vacuous again."""
     from maxscale_cdc_spark.operators.multimodal import mm_pack_interleaved
 
-    df = mm_pack_interleaved(spark, sf_dir, stage=False)
+    with unstaged():
+        df = mm_pack_interleaved(spark, sf_dir)
     plan = formatted_plan(df)
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan

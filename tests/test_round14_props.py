@@ -105,11 +105,11 @@ def test_knn_graph_search_plan_has_no_cartesian(spark, sf_dir):
     (frontier⋈edges on src, scoring on node/qid) — no CartesianProduct
     anywhere in the RAW (unstaged) lineage; the only nested-loop joins
     are broadcast-of-scalar/probe tables."""
-    from maxscale_cdc_spark.operators.retrieval import (
-        _knn_graph_search_plan,
-    )
+    from maxscale_cdc_spark.operators.retrieval import llm_knn_graph_search
+    from maxscale_cdc_spark.session import unstaged
 
-    df = _knn_graph_search_plan(spark, sf_dir, stage=False)
+    with unstaged():
+        df = llm_knn_graph_search(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
 

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
 from maxscale_cdc_spark.plans.inspect import formatted_plan
+from maxscale_cdc_spark.session import unstaged
 
 
 def _q(name, spark, sf_dir):
@@ -15,7 +16,7 @@ def _q(name, spark, sf_dir):
 
 
 def test_trigram_classes16_lineage_jvm_only(spark, sf_dir):
-    """The K=16 class lineage (stage=False so the full plan is visible
+    """The K=16 class lineage (unstaged so the full plan is visible
     below the checkpoints): no Python, no cartesian, hashing present."""
     from maxscale_cdc_spark.operators.autotune import trigram_classes16
     from maxscale_cdc_spark.operators.llm import (
@@ -23,7 +24,8 @@ def test_trigram_classes16_lineage_jvm_only(spark, sf_dir):
         class_pair_jaccard,
     )
 
-    doc_map, classes = trigram_classes16(spark, sf_dir, stage=False)
+    with unstaged():
+        doc_map, classes = trigram_classes16(spark, sf_dir)
     cp = class_band_pairs(classes, 8, 2)
     ver = class_pair_jaccard(cp, classes)
     plan = formatted_plan(ver)
@@ -38,9 +40,10 @@ def test_banding_sample_filter_reaches_scan(spark, sf_dir):
     from maxscale_cdc_spark.functions.sample import hash_sample
     from maxscale_cdc_spark.operators.autotune import trigram_classes16
 
-    doc_map, _ = trigram_classes16(
-        spark, sf_dir, stage=False, doc_filter=hash_sample("doc_id", 40)
-    )
+    with unstaged():
+        doc_map, _ = trigram_classes16(
+            spark, sf_dir, doc_filter=hash_sample("doc_id", 40)
+        )
     plan = formatted_plan(doc_map)
     assert "conv" in plan, plan
     assert "EvalPython" not in plan, plan
@@ -71,12 +74,12 @@ def test_class_exact_pairs_complete_vs_bruteforce(spark, sf_dir):
         trigram_classes16,
     )
 
-    _, classes = trigram_classes16(
-        spark,
-        "/root/testdata/sf0.001",
-        stage=False,
-        doc_filter=hash_sample("doc_id", _AT_SAMPLE_PCT),
-    )
+    with unstaged():
+        _, classes = trigram_classes16(
+            spark,
+            "/root/testdata/sf0.001",
+            doc_filter=hash_sample("doc_id", _AT_SAMPLE_PCT),
+        )
     got = {
         (r["ckey_a"], r["ckey_b"])
         for r in _class_exact_pairs(classes).collect()

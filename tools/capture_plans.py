@@ -16,7 +16,10 @@ the bench warmup, so the plan reflects the bench path.
 `<id>_after.txt` in `after_dir` (default: the same dir), diffs them
 after normalizing the per-instance counters (expression ids `#12L`,
 `RDD[34]`, `plan_id=5`, the per-JVM numbering of higher-order-function
-lambda variables `lambda x_175`) and `/tmp/...` paths, prints one line
+lambda variables `lambda x_175`), the call site Spark records for an
+RDD (`MapPartitionsRDD[7] at localCheckpoint at <unknown>:0` in one
+capture, `... at NativeMethodAccessorImpl.java:0` in another, by where
+in the session the id ran) and `/tmp/...` paths, prints one line
 per id (plus the diff when they differ) and exits 1 if any pair
 differs or an after capture is missing.
 """
@@ -33,6 +36,7 @@ import sys
 _COUNTERS = (
     (re.compile(r"#\d+L?"), "#N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"(RDD\[N\] at \w+) at [^\s,]+:\d+"), r"\1 at <call site>"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"lambda ([xyz])_\d+"), r"lambda \1_N"),
     (re.compile(r"/tmp/[^\s,\]]*"), "/tmp/..."),
@@ -40,8 +44,9 @@ _COUNTERS = (
 
 
 def normalize_plan(text: str) -> str:
-    """The plan text with its per-instance counters and tmp paths
-    replaced by fixed tokens: equal iff the plans are the same shape."""
+    """The plan text with its per-instance counters, RDD call sites and
+    tmp paths replaced by fixed tokens: equal iff the plans are the same
+    shape."""
     for pattern, token in _COUNTERS:
         text = pattern.sub(token, text)
     return text
