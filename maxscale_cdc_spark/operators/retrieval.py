@@ -3265,7 +3265,6 @@ def llm_knn_graph_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
 # ---------------------------------------------------------------------------
 # llm_ann_binary_hamming — BINARY-QUANTIZED retrieval: the 32×
 # compression storage knob (sign-bit binarization, Jégou-family

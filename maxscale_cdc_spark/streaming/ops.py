@@ -5050,11 +5050,7 @@ def str_mor_stream_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     from maxscale_cdc_spark.tmputil import mkdtemp as _mkdtemp
 
     ev = table(spark, sf_dir, "events")
-    quarters = stage(
-        ev.withColumn(
-            "__b", F.ntile(4).over(W.orderBy("event_id"))
-        )
-    )
+    quarters = stage(ev.withColumn("__b", F.ntile(4).over(W.orderBy("event_id"))))
     src = _mkdtemp(prefix="mor_restart_src_")
     ckpt = _mkdtemp(prefix="mor_restart_ckpt_")
     root = _mkdtemp(prefix="mor_restart_")
